@@ -17,22 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r14: let AQE size post-shuffle partitions INSIDE cached-plan
-      // builds too (off by default) — the iterative graph/dedup loops
-      // pin |E|-row caches whose 32/64-task fixed layouts were pure
-      // per-task overhead at bench scale; AQE derives the count from
-      // the data instead (guide §2.2), at any SF
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // same session shape as Verify: functions + optimizer rules
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // JIT/codegen warm-up so the first timed query doesn't absorb JVM
     // startup: touch the aggregate/join/shuffle machinery once, plus
     // the embeddings/documents parquet footers and one custom kernel
@@ -47,7 +32,6 @@ object Bench {
         .collect()
       val w = spark.read.parquet(s"$sfDir/region.parquet")
       w.join(w.limit(1), Seq("r_regionkey"), "left_semi").count()
-      GraftExtensions.register(spark)
       spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64)
         .selectExpr("cosine_sim(embedding, embedding)").count()
       spark.read.parquet(s"$sfDir/documents.parquet").limit(64)

@@ -11,12 +11,10 @@ import graft.functions._
   * the engine's function surface is reachable from pure-SQL callers,
   * not only the Scala DSL.
   *
-  * Usage:
-  * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)           // Scala
-  *   // or spark.sql.extensions=graft.GraftExtensions  (config)
-  * }}}
+  * Usage: every [[GraftSession.local]] session carries them. Sessions
+  * built elsewhere add them with `spark.sql.extensions=graft.GraftExtensions`,
+  * or [[GraftExtensions.register]] on a running session (SQL functions
+  * only).
   */
 object GraftExtensions {
 
@@ -119,9 +117,9 @@ object GraftExtensions {
       org.apache.spark.sql.catalyst.expressions.Cast(args(1),
         org.apache.spark.sql.types.LongType))))
 
-  /** Register on an already-running session (new sessions: prefer
-    * `.withExtensions(new GraftExtensions)` or the
-    * `spark.sql.extensions` config).
+  /** Register the SQL functions on an already-running session built
+    * without the extensions (a [[GraftSession.local]] session needs no
+    * call).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     sqlFunctions.foreach { case (name, b) =>

@@ -2,14 +2,31 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine: the settings every entry
-  * point (Verify, Bench, tests, user code) needs, in one place.
+/** Session factory for the graft engine: the one place a graft session
+  * is built. Every entry point (Verify, Bench, RunSync, the tools, the
+  * tests) and user code get the same session shape from it.
   */
 object GraftSession {
 
-  /** Local session sized to `cores`, with the testdata-required
-    * configuration (UTC, nanos handling) and shuffle parallelism
-    * matched to cores (never the 200 default in local mode).
+  /** Local session sized to `cores`. It sets:
+    *  - master `local[cores]` and app name `appName`;
+    *  - `spark.sql.shuffle.partitions` = `cores` (never the 200
+    *    default in local mode);
+    *  - AQE on, plus `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`:
+    *    AQE also sizes post-shuffle partitions inside cached-plan
+    *    builds (off by default). The iterative graph/dedup loops pin
+    *    |E|-row caches whose 32/64-task fixed layouts were pure
+    *    per-task overhead at bench scale; AQE derives the count from
+    *    the data instead, at any scale;
+    *  - the Spark UI off;
+    *  - session time zone UTC and [[Tables.requiredConf]] (nanos
+    *    handling), which the testdata needs;
+    *  - [[GraftExtensions]]: the graft SQL functions and the optimizer
+    *    rules (broadcast demotion, contains-OR collapse);
+    *  - log level WARN.
+    *
+    * A session that already exists in the JVM is returned as is
+    * (`getOrCreate`), with only the runtime SQL confs applied.
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
@@ -18,13 +35,13 @@ object GraftSession {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
-      // r14: adaptive partition sizing applies to cached-plan builds
-      // too (see Bench.scala)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions) // SQL fns + broadcast safety net
-    Tables.requiredConf.foldLeft(
+    val spark = Tables.requiredConf.foldLeft(
       b.config("spark.sql.session.timeZone", "UTC")
     ) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -44,22 +44,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r14: same adaptive cached-plan partitioning as Bench — one
-      // session shape everywhere (see Bench.scala for the rationale)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // the engine's production session shape: SQL functions + the
-      // optimizer rules (broadcast demotion, contains-OR → Aho-
-      // Corasick collapse) are active in the driver-checked path, so
-      // `blocklist_declared` is verified THROUGH the rewrite
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the production session shape: the optimizer rules (broadcast
+    // demotion, contains-OR → Aho-Corasick collapse) are active in the
+    // oracle-checked path, so `blocklist_declared` is verified THROUGH
+    // the rewrite
+    val spark = GraftSession.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated filter for targeted local runs (the
     // driver leaves it unset and dumps everything)

@@ -1542,8 +1542,8 @@ object TextQueries {
     * as the naive per-pattern `contains` OR-chain — the form users
     * and SQL generators produce — and left to the session's
     * [[graft.plans.CollapseContainsOr]] rule to collapse into the
-    * one-pass Aho–Corasick automaton (Verify/Bench/GraftSession all
-    * register it). Semantics are rewrite-independent (the oracle IS
+    * one-pass Aho–Corasick automaton (every [[graft.GraftSession]]
+    * session carries it). Semantics are rewrite-independent (the oracle IS
     * the naive chain), so the driver hash-checks the query THROUGH
     * the rewrite; CollapseContainsOrSpec separately pins that the
     * rewrite fires and that results are identical with it disabled.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
@@ -21,17 +20,8 @@ object Explain {
     val (dirs, names0) = args.toSeq.partition(_.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.001")
     val names = names0
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // same session shape as Verify/Bench: the printed plans include
-      // the injected optimizer rules' effects
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    // the printed plans include the injected optimizer rules' effects
+    val spark = graft.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     if (names.contains("jsonapi")) {

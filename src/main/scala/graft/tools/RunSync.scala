@@ -32,7 +32,6 @@ object RunSync {
       .getOrElse(LocalDate.now(java.time.ZoneOffset.UTC))
 
     val spark = GraftSession.local(appName = "graft-sync")
-    spark.sparkContext.setLogLevel("WARN")
     try {
       resources.foreach { r =>
         val path = OutreachPipeline.sync(spark, OutreachPipeline.SyncConfig(

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -104,20 +103,13 @@ object ShuffleProfile {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Parquet's Hadoop vectored-IO range reads bypass
-      // FileSystem.Statistics, so data-page bytes vanish from
-      // inputMetrics (only footers get counted). Profiling wants true
-      // input bytes, so route reads through the classic stream here.
-      .config("spark.hadoop.parquet.hadoop.vectored.io.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
+    // Parquet's Hadoop vectored-IO range reads bypass
+    // FileSystem.Statistics, so data-page bytes vanish from
+    // inputMetrics (only footers get counted). Profiling wants true
+    // input bytes, so route reads through the classic stream here.
+    spark.sparkContext.hadoopConfiguration
+      .set("parquet.hadoop.vectored.io.enabled", "false")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 

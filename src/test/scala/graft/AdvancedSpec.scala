@@ -110,8 +110,6 @@ class AdvancedSpec extends AnyFunSuite {
 
   test("DemoteOversizedBroadcasts strips hints past the size bound") {
     val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.DemoteOversizedBroadcasts(spark))
     try {
       // disable auto-broadcast so the HINT alone decides the strategy
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -131,7 +129,6 @@ class AdvancedSpec extends AnyFunSuite {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
       spark.conf.unset("graft.broadcast.demoteBytes")
-      spark.experimental.extraOptimizations = Nil
     }
   }
 
@@ -213,11 +210,44 @@ class AdvancedSpec extends AnyFunSuite {
   }
 
   test("GraftSession.local builds a usable session") {
-    // same JVM: getOrCreate returns the shared session; just assert
-    // the required confs are applied to the builder path
-    val s = GraftSession.local(2, "graft-test-factory")
-    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
-    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    // the shared test session IS a GraftSession.local session: assert
+    // its production shape instead of calling the factory again (a
+    // second getOrCreate would reuse it and overwrite its runtime confs)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    // graft SQL functions come from the extensions, not from
+    // GraftExtensions.register: a child session (fresh function
+    // registry, same extensions) resolves them
+    val c = spark.newSession()
+      .sql("SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F))")
+      .head().getDouble(0)
+    assert(math.abs(c - 1.0) < 1e-12)
+    val rules = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.optimizer.extendedOperatorOptimizationRules
+    assert(rules.exists(_.isInstanceOf[graft.plans.DemoteOversizedBroadcasts]),
+      rules)
+    assert(rules.exists(_.isInstanceOf[graft.plans.CollapseContainsOr]), rules)
+  }
+
+  test("GraftSession.scala is the only source that calls SparkSession.builder") {
+    // one session factory: a second builder call anywhere under src/
+    // (comments and scaladoc aside) is a copy that will drift
+    val src = new java.io.File("src")
+    assert(src.isDirectory, s"run from the repo root: ${src.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(files)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
+    val callers = files(src).filter { f =>
+      val code = java.nio.file.Files.readString(f.toPath)
+        .replaceAll("(?s)/\\*.*?\\*/", "")
+        .replaceAll("//[^\n]*", "")
+      builderCall.findFirstIn(code).isDefined
+    }.map(_.getName)
+    assert(callers == Seq("GraftSession.scala"), callers)
   }
 
   test("percentile gate: exact rank percentiles, sketch within bound") {

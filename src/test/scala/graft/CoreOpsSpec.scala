@@ -9,20 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Conform, Flatten, Incremental}
 
+/** The suite's one shared session: the production shape from
+  * [[GraftSession.local]], extensions included. The warehouse dir is a
+  * fresh temp dir per test run (`Test / javaOptions` in build.sbt).
+  */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // r14: match the Bench/Verify session shape (adaptive cached-plan
-    // partitioning) so plan-pinned tests see the production planner
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4, "graft-test")
 }
 
 class CoreOpsSpec extends AnyFunSuite {

@@ -94,7 +94,6 @@ class HilbertSpec extends AnyFunSuite {
 
   test("hilbert_key is reachable through the SQL function surface " +
       "and matches the kernel") {
-    graft.GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT hilbert_key(3, 5) AS h1, hilbert_key(0, 0) AS h2").head()
     assert(r.getLong(0) == Kernels.hilbert2(3, 5))

@@ -191,7 +191,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("new kernels are reachable through the SQL function surface") {
-    graft.GraftExtensions.register(spark)
     // NOTE: Spark's chr() is mod-256 ASCII (unlike DuckDB's codepoint
     // chr), so the combining acute rides in as a string literal
     val acute = "́"
@@ -330,7 +329,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("video kernels are reachable through the SQL function surface") {
-    graft.GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT video_header(make_video_header(2, 1, 90000, 8589934592, 2))
            AS v""").head()
