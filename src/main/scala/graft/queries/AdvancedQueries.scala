@@ -417,33 +417,19 @@ object AdvancedQueries {
     * model-selection signal current without re-scanning history.
     */
   def streamSeasonal(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val store = java.nio.file.Files
       .createTempDirectory("graft_seasonal").toString
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val persistBatch: (DataFrame, Long) => Unit = (batch, id) => {
-      val cells = batch
+    graft.streaming.IncrementalStream.runForeachBatch("stream_seasonal",
+        stream, minBatches = 2) { (batch, id) =>
+      graft.ops.Manifest.writeBatchCells(batch
         .groupBy(col("event_type").as("et"),
           to_date(Tables.eventTimeOf(schema, "ts")).as("day"))
-        .agg(count(lit(1)).as("n")).persist()
-      try {
-        if (cells.count() > 0) batches.incrementAndGet()
-        graft.ops.Manifest.writeBatchCells(cells, store, id)
-      } finally cells.unpersist()
+        .agg(count(lit(1)).as("n")), store, id)
     }
-    val q = stream.writeStream.foreachBatch(persistBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    require(batches.get() >= 2,
-      s"stream_seasonal expected >=2 non-empty micro-batches, got " +
-        batches.get())
     val daily = s.read.parquet(store)
       .groupBy(col("et"), col("day")).agg(sum(col("n")).as("n"))
     // pin before deleting the temp cell store (same store-lifetime
@@ -472,32 +458,18 @@ object AdvancedQueries {
     * cells per batch.
     */
   def streamDistinct(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val store = java.nio.file.Files
       .createTempDirectory("graft_hllstore").toString
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val persistBatch: (DataFrame, Long) => Unit = (batch, id) => {
-      val cells = graft.ops.Hll.registers(
+    graft.streaming.IncrementalStream.runForeachBatch("stream_distinct",
+        stream, minBatches = 2) { (batch, id) =>
+      graft.ops.Manifest.writeBatchCells(graft.ops.Hll.registers(
         batch.select(col("event_type"), col("user_id")),
-        Seq("event_type"), col("user_id"), salt = 777000L).persist()
-      try {
-        if (cells.count() > 0) batches.incrementAndGet()
-        graft.ops.Manifest.writeBatchCells(cells, store, id)
-      } finally cells.unpersist()
+        Seq("event_type"), col("user_id"), salt = 777000L), store, id)
     }
-    val q = stream.writeStream.foreachBatch(persistBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    require(batches.get() >= 2,
-      s"stream_distinct expected >=2 non-empty micro-batches, got " +
-        batches.get())
     val regs = s.read.parquet(store)
       .groupBy(col("event_type"), col("bucket")).agg(max(col("r")).as("r"))
     val est = graft.ops.Hll.estimate(regs, Seq("event_type"),
@@ -526,39 +498,25 @@ object AdvancedQueries {
     * never re-scanned.
     */
   def streamQuantile(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val store = java.nio.file.Files
       .createTempDirectory("graft_qhist").toString
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val persistBatch: (DataFrame, Long) => Unit = (batch, id) => {
+    graft.streaming.IncrementalStream.runForeachBatch("stream_quantile",
+        stream, minBatches = 2) { (batch, id) =>
       // FLOOR division (not Spark's trunc-toward-zero DIV): division
       // by a power of two is exact in doubles, so floor(x/512.0)
       // equals DuckDB's integer `//` for NEGATIVE cents too — the
       // engines would diverge under DIV if values ever went negative
-      val cells = batch
+      graft.ops.Manifest.writeBatchCells(batch
         .select(col("event_type"),
           floor(col("value") * 100 + 0.5).cast("long").as("cents"))
         .groupBy(col("event_type"),
           floor(col("cents") / lit(512.0)).cast("long").as("bin"))
-        .agg(count(lit(1)).as("c")).persist()
-      try {
-        if (cells.count() > 0) batches.incrementAndGet()
-        graft.ops.Manifest.writeBatchCells(cells, store, id)
-      } finally cells.unpersist()
+        .agg(count(lit(1)).as("c")), store, id)
     }
-    val q = stream.writeStream.foreachBatch(persistBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    require(batches.get() >= 2,
-      s"stream_quantile expected >=2 non-empty micro-batches, got " +
-        batches.get())
     val counts = s.read.parquet(store)
       .groupBy(col("event_type"), col("bin")).agg(sum(col("c")).as("c"))
     val cum = counts
@@ -599,34 +557,20 @@ object AdvancedQueries {
     * percentiles (`stream_quantile`), leaders (this).
     */
   def streamTopk(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    // 3-batch contract (r12): the cell-merge algebra is batch-count
-    // invariant, so a third real micro-batch strengthens the proof at
-    // one spin-up's cost
+    // the cell-merge algebra is batch-count invariant, so a third real
+    // micro-batch strengthens the proof at one spin-up's cost
     val stage = stageEventsTimeSplit(s, dir, n = 3)
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val store = java.nio.file.Files
       .createTempDirectory("graft_topkstore").toString
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val persistBatch: (DataFrame, Long) => Unit = (batch, id) => {
-      val cells = batch.groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("n")).persist()
-      try {
-        if (cells.count() > 0) batches.incrementAndGet()
-        graft.ops.Manifest.writeBatchCells(cells, store, id)
-      } finally cells.unpersist()
+    graft.streaming.IncrementalStream.runForeachBatch("stream_topk",
+        stream, minBatches = 3) { (batch, id) =>
+      graft.ops.Manifest.writeBatchCells(
+        batch.groupBy(col("event_type"), col("user_id"))
+          .agg(count(lit(1)).as("n")), store, id)
     }
-    val q = stream.writeStream.foreachBatch(persistBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    require(batches.get() >= 3,
-      s"stream_topk expected >=3 non-empty micro-batches, got " +
-        batches.get())
     val merged = s.read.parquet(store)
       .groupBy(col("event_type"), col("user_id"))
       .agg(sum(col("n")).as("n"))
@@ -1110,7 +1054,7 @@ object AdvancedQueries {
     * merge consistency (old ⊕ Δ ≡ one pass) and cross-engine
     * replayability of every per-month ESTIMATE — strictly stronger
     * than the old pinned-flag gate form. Accuracy stays a loud
-    * in-engine contract (`require`, the requireMultiBatch style):
+    * in-engine contract (`require`, like the stream batch checks):
     * mean per-month relative error ≤ 5% (measured ≤ 2.1% at every
     * test SF; individual small months run up to ~9% ≈ 2.8σ at
     * m = 1024, which is why the semantic bound is on the mean).
@@ -2229,32 +2173,18 @@ object AdvancedQueries {
     * artifact current without re-scanning history.
     */
   def streamManifest(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val store = java.nio.file.Files
       .createTempDirectory("graft_manifest").toString
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val persistBatch: (DataFrame, Long) => Unit = (batch, id) => {
-      val cells = graft.ops.Manifest.dayCells(batch,
+    graft.streaming.IncrementalStream.runForeachBatch("stream_manifest",
+        stream, minBatches = 2) { (batch, id) =>
+      graft.ops.Manifest.writeBatchCells(graft.ops.Manifest.dayCells(batch,
         to_date(Tables.eventTimeOf(schema, "ts")), col("event_id"),
-        salt = 424242L).persist()
-      try {
-        if (cells.count() > 0) batches.incrementAndGet()
-        graft.ops.Manifest.writeBatchCells(cells, store, id)
-      } finally cells.unpersist()
+        salt = 424242L), store, id)
     }
-    val q = stream.writeStream.foreachBatch(persistBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    require(batches.get() >= 2,
-      s"stream_manifest expected >=2 non-empty micro-batches, got " +
-        batches.get())
     // pin the merged manifest BEFORE deleting the temp cell store: the
     // un-pinned frame would lazily re-read the store at the caller's
     // action, silently depending on the directory surviving — and an
@@ -2526,8 +2456,8 @@ object AdvancedQueries {
   }
 
   /** Stage `events` as `n` TIME-CONTIGUOUS single-file parquet splits
-    * (`ev_0000.parquet` earliest, strictly increasing modification
-    * times) so a file-source stream with `maxFilesPerTrigger = 1`
+    * ([[graft.streaming.IncrementalStream.stageSlices]], earliest split
+    * first) so a file-source stream with `maxFilesPerTrigger = 1`
     * replays the table as `n` REAL micro-batches in event-time order.
     * This is what makes the driver-visible stream queries exercise
     * watermark advance and state-store hand-off ACROSS batches under
@@ -2540,8 +2470,8 @@ object AdvancedQueries {
     * 0) keep the split deterministic. Staging cost is three filtered
     * scans of the SMALL events table in a test harness — the
     * production analogue is files simply arriving over time.
-    */
-  /** Staged split dirs are cached per (sfDir, n) for the session: four
+    *
+    * Staged split dirs are cached per (sfDir, n) for the session: four
     * stream queries × best-of-N bench runs would otherwise re-write
     * identical split files eight times per bench. The staged files are
     * immutable inputs (checkpoints stay per-invocation), so sharing is
@@ -2552,47 +2482,20 @@ object AdvancedQueries {
 
   private def stageEventsTimeSplit(s: SparkSession, dir: String,
                                    n: Int): java.nio.file.Path =
-    stageCache.getOrElseUpdate((graft.Tables.versioned(dir), n),
-      stageEventsTimeSplitUncached(s, dir, n))
-
-  private def stageEventsTimeSplitUncached(s: SparkSession, dir: String,
-                                           n: Int): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val stage = Files.createTempDirectory("graft_stream")
-    val ev = Tables.raw(s, dir, "events")
-    val withUs = ev.withColumn("__us", Tables.microsOf(ev, "ts"))
-    // epoch-micros fit a Double's 53-bit mantissa exactly (≈1.8e15 ≪ 9e15)
-    val bounds = withUs.stat
-      .approxQuantile("__us", (1 until n).map(_.toDouble / n).toArray, 0.0)
-      .map(_.toLong)
-    val base = System.currentTimeMillis() - n * 60000L
-    for (i <- 0 until n) {
-      val lo = if (i == 0) lit(true) else col("__us") > bounds(i - 1)
-      val hi = if (i == n - 1) lit(true) else col("__us") <= bounds(i)
-      val tmp = stage.resolve(s"__tmp_$i")
-      withUs.filter(lo && hi).drop("__us")
-        .coalesce(1).write.parquet(tmp.toString)
-      val part = Files.list(tmp).filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst().get()
-      val dest = stage.resolve(f"ev_$i%04d.parquet")
-      Files.move(part, dest)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-    }
-    stage
-  }
-
-  /** Multi-batch proof: fail loudly if a stream query that staged a
-    * split directory did NOT actually run ≥2 non-empty micro-batches
-    * (e.g. a future edit dropping maxFilesPerTrigger would silently
-    * fall back to one batch and stop exercising cross-batch state).
-    */
-  private def requireMultiBatch(
-      q: org.apache.spark.sql.streaming.StreamingQuery, what: String): Unit = {
-    val n = q.recentProgress.count(_.numInputRows > 0)
-    require(n >= 2, s"$what expected >=2 non-empty micro-batches, got $n")
-  }
+    stageCache.getOrElseUpdate((graft.Tables.versioned(dir), n), {
+      val ev = Tables.raw(s, dir, "events")
+      val withUs = ev.withColumn("__us", Tables.microsOf(ev, "ts"))
+      // epoch-micros fit a Double's 53-bit mantissa exactly (≈1.8e15 ≪ 9e15)
+      val bounds = withUs.stat
+        .approxQuantile("__us", (1 until n).map(_.toDouble / n).toArray, 0.0)
+        .map(_.toLong)
+      graft.streaming.IncrementalStream.stageSlices(
+        (0 until n).map { i =>
+          val lo = if (i == 0) lit(true) else col("__us") > bounds(i - 1)
+          val hi = if (i == n - 1) lit(true) else col("__us") <= bounds(i)
+          withUs.filter(lo && hi).drop("__us")
+        })
+    })
 
   /** Run a stream query body with state-partition count sized to the
     * LOCAL replay: every micro-batch commits one state-store instance
@@ -2625,8 +2528,6 @@ object AdvancedQueries {
   private def stageEventsLateSplit(s: SparkSession,
                                    dir: String): java.nio.file.Path =
     stageCache.getOrElseUpdate((graft.Tables.versioned(dir) + ":late", 4), {
-      import java.nio.file.Files
-      val stage = Files.createTempDirectory("graft_stream_late")
       val ev = Tables.raw(s, dir, "events")
       val withUs = ev.withColumn("__us", Tables.microsOf(ev, "ts"))
       val dayUs = 86400000000L
@@ -2639,20 +2540,8 @@ object AdvancedQueries {
         col("__us") >= cut && col("__us") < mid && col("event_id") % 4 =!= 0,
         col("__us") < mid && col("event_id") % 4 === 0,
         col("__us") >= mid)
-      val base = System.currentTimeMillis() - parts.size * 60000L
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val tmp = stage.resolve(s"__tmp_$i")
-        withUs.filter(p).drop("__us")
-          .coalesce(1).write.parquet(tmp.toString)
-        val part = Files.list(tmp).filter(f =>
-          f.getFileName.toString.startsWith("part-")).findFirst().get()
-        val dest = stage.resolve(f"ev_$i%04d.parquet")
-        Files.move(part, dest)
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-      }
-      stage
+      graft.streaming.IncrementalStream.stageSlices(
+        parts.map(p => withUs.filter(p).drop("__us")))
     })
 
   /** The NINETEENTH driver-visible stream shape — WATERMARK LATE-DATA
@@ -2686,29 +2575,16 @@ object AdvancedQueries {
     */
   def streamLate(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name =
-      s"stream_late_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stage = stageEventsLateSplit(s, dir)
     val src = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
       .withColumn("ts", Tables.eventTimeOf(schema, "ts"))
     val counts = graft.streaming.IncrementalStream
       .dailyCounts(src, "ts", "event_type", watermark = "36 hours")
-    val q = counts.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_late")
-    val emitted = s.table(name)
-      .withColumnRenamed("n", "n_stream")
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    val emitted = graft.streaming.IncrementalStream.runToMemory(
+      "stream_late", counts, "append", minBatches = 2)(
+      _.withColumnRenamed("n", "n_stream"))
     val ev = Tables.raw(s, dir, "events")
     val statics = ev
       .select(Tables.eventTimeOf(schema, "ts").as("ts"), col("event_type"))
@@ -2741,44 +2617,29 @@ object AdvancedQueries {
     */
   def streamDq(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    // 3-batch contract (r12) — see streamTopk
     val stage = stageEventsTimeSplit(s, dir, n = 3)
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val store = java.nio.file.Files
       .createTempDirectory("graft_dqstore").toString
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     def ruleCells(batch: DataFrame, rule: String,
                   fail: org.apache.spark.sql.Column): DataFrame =
       batch.agg(count(lit(1)).as("n_rows"),
           sum(when(fail, 1L).otherwise(0L)).as("n_fail"))
         .select(lit(rule).as("rule"),
           col("n_rows"), coalesce(col("n_fail"), lit(0L)).as("n_fail"))
-    val persistBatch: (DataFrame, Long) => Unit = (batch, id) => {
-      val cells = ruleCells(batch, "event_type_in_domain",
+    graft.streaming.IncrementalStream.runForeachBatch("stream_dq",
+        stream, minBatches = 3) { (batch, id) =>
+      graft.ops.Manifest.writeBatchCells(
+        ruleCells(batch, "event_type_in_domain",
           !col("event_type").isin("click", "view", "purchase",
             "signup", "error"))
-        .unionByName(ruleCells(batch, "user_id_not_null",
-          col("user_id").isNull))
-        .unionByName(ruleCells(batch, "value_in_0_50",
-          col("value") < 0 || col("value") > 50))
-        .persist()
-      try {
-        if (cells.agg(sum(col("n_rows"))).head().getLong(0) > 0)
-          batches.incrementAndGet()
-        graft.ops.Manifest.writeBatchCells(cells, store, id)
-      } finally cells.unpersist()
+          .unionByName(ruleCells(batch, "user_id_not_null",
+            col("user_id").isNull))
+          .unionByName(ruleCells(batch, "value_in_0_50",
+            col("value") < 0 || col("value") > 50)), store, id)
     }
-    val q = stream.writeStream.foreachBatch(persistBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    require(batches.get() >= 3,
-      s"stream_dq expected >=3 non-empty micro-batches, got ${batches.get()}")
     val out = graft.ops.Dedup.materialize(
       s.read.parquet(store)
         .groupBy(col("rule"))
@@ -2800,11 +2661,8 @@ object AdvancedQueries {
     */
   def streamDailyCounts(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name = s"stream_daily_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
-    // the file source streams a DIRECTORY: stage the table as three
+    // the file source streams a DIRECTORY: stage the table as two
     // time-contiguous files so this runs as two real micro-batches
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     val stream = graft.streaming.IncrementalStream
@@ -2812,22 +2670,11 @@ object AdvancedQueries {
       .withColumn("ts", Tables.eventTimeOf(schema, "ts"))
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_daily")
-    val out = s.table(name)
-      .select(unix_micros(col("day").cast("timestamp")).as("day_us"),
-        col("event_type"), col("n"))
-      .orderBy(col("day_us"), col("event_type"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    // stage dir is session-cached (stageCache) — not deleted per query
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_daily", stream,
+        "complete", minBatches = 2)(
+      _.select(unix_micros(col("day").cast("timestamp")).as("day_us"),
+          col("event_type"), col("n"))
+        .orderBy(col("day_us"), col("event_type")))
   }
 
   /** Stream–static enrichment join — the fourth streaming shape
@@ -2840,10 +2687,7 @@ object AdvancedQueries {
     */
   def streamEnrich(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name = s"stream_enrich_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     val dim = broadcast(t(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment")))
@@ -2852,20 +2696,9 @@ object AdvancedQueries {
       .join(dim, col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_enrich")
-    val out = s.table(name)
-      .orderBy(col("c_mktsegment"), col("event_type"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    // stage dir is session-cached (stageCache) — not deleted per query
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_enrich", stream,
+        "complete", minBatches = 2)(
+      _.orderBy(col("c_mktsegment"), col("event_type")))
   }
 
   /** Driver-visible STATEFUL streaming: gap-based sessionization via
@@ -2886,10 +2719,7 @@ object AdvancedQueries {
     */
   def streamSessionize(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name = s"stream_sess_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     val src = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
@@ -2897,20 +2727,9 @@ object AdvancedQueries {
     val sessions = graft.streaming.IncrementalStream
       .sessionizeStream(src, "user_id", "ts",
         gapMs = 30L * 60000L, watermark = "3650 days")
-    val q = sessions.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_sessionize")
-    val out = s.table(name)
-      .orderBy(col("user_id"), col("session_id"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    // stage dir is session-cached (stageCache) — not deleted per query
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_sessionize",
+        sessions, "append", minBatches = 2)(
+      _.orderBy(col("user_id"), col("session_id")))
   }
 
   /** Driver-visible STREAM-STREAM join: click events joined to the
@@ -2938,10 +2757,7 @@ object AdvancedQueries {
     */
   def streamEma(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name = s"stream_ema_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     val src = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
@@ -2951,20 +2767,8 @@ object AdvancedQueries {
         floor(col("value") * lit(1e6) + lit(0.5)).cast("long").as("v_e6"))
     val smoothed = graft.streaming.IncrementalStream
       .emaStream(src, aNum = 1, aDen = 4)
-    val q = smoothed.writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_ema")
-    val out = s.table(name)
-      .orderBy(col("user_id"), col("rn"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    // stage dir is session-cached (stageCache) — not deleted per query
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_ema", smoothed,
+        "update", minBatches = 2)(_.orderBy(col("user_id"), col("rn")))
   }
 
   /** The TENTH driver-visible stream shape — STREAMING anomaly
@@ -2982,10 +2786,7 @@ object AdvancedQueries {
     */
   def streamAnomaly(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name = s"stream_anomaly_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     val src = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
@@ -2996,28 +2797,13 @@ object AdvancedQueries {
     val flagged = graft.streaming.IncrementalStream
       .anomalyStream(src, aNum = 1, aDen = 4, kNum = 5, kDen = 2,
         minDevE6 = 500000L, warmup = 3L)
-    val q = flagged.writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_anomaly")
-    val out = s.table(name)
-      .orderBy(col("user_id"), col("rn"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    // stage dir is session-cached (stageCache) — not deleted per query
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_anomaly", flagged,
+        "update", minBatches = 2)(_.orderBy(col("user_id"), col("rn")))
   }
 
   def streamJoin(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name = s"stream_join_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     // two independent sources (not a self-join of one frame), the
     // shape real pipelines have: clicks and purchases arrive as
@@ -3038,20 +2824,9 @@ object AdvancedQueries {
       .select(col("user_id"), col("click_id"), col("buy_id"),
         unix_micros(col("click_ts").cast("timestamp")).as("click_us"),
         unix_micros(col("buy_ts").cast("timestamp")).as("buy_us"))
-    val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_join")
-    val out = s.table(name)
-      .orderBy(col("user_id"), col("click_id"), col("buy_id"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    // stage dir is session-cached (stageCache) — not deleted per query
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_join", joined,
+        "append", minBatches = 2)(
+      _.orderBy(col("user_id"), col("click_id"), col("buy_id")))
   }
 
   /** The ELEVENTH driver-visible stream shape — stream-stream LEFT
@@ -3072,10 +2847,7 @@ object AdvancedQueries {
     */
   def streamOuterJoin(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name = s"stream_ojoin_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     def side(evType: String): DataFrame = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
@@ -3093,20 +2865,9 @@ object AdvancedQueries {
       .select(col("user_id"), col("click_id"), col("buy_id"),
         unix_micros(col("click_ts").cast("timestamp")).as("click_us"),
         unix_micros(col("buy_ts").cast("timestamp")).as("buy_us"))
-    val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_outer_join")
-    val out = s.table(name)
-      .orderBy(col("user_id"), col("click_id"), col("buy_id"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    // stage dir is session-cached (stageCache) — not deleted per query
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_outer_join",
+        joined, "append", minBatches = 2)(
+      _.orderBy(col("user_id"), col("click_id"), col("buy_id")))
   }
 
   /** Driver-visible STREAMING DEDUPLICATION — the fifth streaming
@@ -3128,10 +2889,7 @@ object AdvancedQueries {
     */
   def streamDedup(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.raw(s, dir, "events").schema
-    val name = s"stream_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     val src = graft.streaming.IncrementalStream
       .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
@@ -3142,20 +2900,9 @@ object AdvancedQueries {
         Seq("user_id", "event_type", "day"))
       .select(col("user_id"), col("event_type"),
         unix_micros(col("day").cast("timestamp")).as("day_us"))
-    val q = deduped.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_dedup")
-    val out = s.table(name)
-      .orderBy(col("user_id"), col("event_type"), col("day_us"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    // stage dir is session-cached (stageCache) — not deleted per query
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_dedup", deduped,
+        "append", minBatches = 2)(
+      _.orderBy(col("user_id"), col("event_type"), col("day_us")))
   }
 
   /** SIXTH driver-visible stream shape: streaming CDC apply — each
@@ -3177,10 +2924,8 @@ object AdvancedQueries {
     */
   def streamCdc(s: SparkSession, dir: String): DataFrame =
       withStreamStatePartitions(s) {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.Row
     val schema = Tables.raw(s, dir, "events").schema
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val snapRoot = java.nio.file.Files.createTempDirectory("graft_cdc")
     val stage = stageEventsTimeSplit(s, dir, n = 2)
     val targetSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -3198,7 +2943,10 @@ object AdvancedQueries {
     current.set(snapRoot.resolve("v0").toString)
     s.createDataFrame(java.util.Collections.emptyList[Row](), targetSchema)
       .write.parquet(current.get)
-    val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
+    graft.streaming.IncrementalStream.runForeachBatch("stream_cdc",
+        graft.streaming.IncrementalStream.readAppendStream(s, stage.toString,
+          schema, maxFilesPerTrigger = Some(1)),
+        minBatches = 2) { (batch, batchId) =>
       // per-user latest event IN THIS BATCH (event_id breaks ts ties)
       val changes = batch
         .withColumn("ts_us", Tables.microsOf(batch, "ts"))
@@ -3214,19 +2962,11 @@ object AdvancedQueries {
         .write.parquet(next)
       current.set(next)
     }
-    val q = graft.streaming.IncrementalStream
-      .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-      .writeStream.foreachBatch(applyBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    requireMultiBatch(q, "stream_cdc")
     val out = s.read.parquet(current.get)
       .select(col("user_id"), col("event_id"), col("etype"), col("ts_us"),
         round(col("value"), 4).as("value_r"))
       .orderBy(col("user_id"))
       .localCheckpoint(true) // pin: snapshot files are deleted below
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     org.apache.commons.io.FileUtils.deleteQuietly(snapRoot.toFile)
     out
   }

@@ -3395,23 +3395,10 @@ object ScaleQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def embStage(s: SparkSession, dir: String): String =
     embStageCache.computeIfAbsent(graft.Tables.versioned(dir), _ => {
-      import java.nio.file.Files
-      val stage = Files.createTempDirectory("graft_stream_emb")
       val emb = t(s, dir, "embeddings")
-      val base = System.currentTimeMillis() - 10 * 60000L
-      for (i <- 0 until 2) {
-        val tmp = stage.resolve(s"__tmp_$i")
-        emb.filter(pmod(col("vec_id"), lit(2)) === i)
-          .coalesce(1).write.parquet(tmp.toString)
-        val part = Files.list(tmp).filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        val dest = stage.resolve(f"emb_$i%04d.parquet")
-        Files.move(part, dest)
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-      }
-      stage.toString
+      graft.streaming.IncrementalStream.stageSlices(
+        (0 until 2).map(i => emb.filter(pmod(col("vec_id"), lit(2)) === i)))
+        .toString
     })
 
   /** The TWELFTH driver-visible stream shape — INDEX STATISTICS
@@ -3429,17 +3416,16 @@ object ScaleQueries {
     * keeping its normalization statistics current as shards arrive.
     */
   def streamMoments(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val stage = embStage(s, dir)
     val schema = s.read.parquet(stage).schema
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage, schema, maxFilesPerTrigger = Some(1))
     var acc: (Long, Array[BigInt], Array[Array[BigInt]]) =
       (0L, Array.empty, Array.empty)
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Int, Long, Long)]
-    val collectBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
+    graft.streaming.IncrementalStream.runForeachBatch("stream_moments", stream,
+        minBatches = 2) { (batch, batchId) =>
       val st = graft.ops.Pca.rawStatsFused(
         graft.ops.Pca.quantized(batch, "vec_id", "embedding"))
       buf.synchronized {
@@ -3451,14 +3437,6 @@ object ScaleQueries {
         }
       }
     }
-    val q = stream.writeStream.foreachBatch(collectBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    val batches = buf.map(_._1).distinct
-    require(batches.size >= 2,
-      s"stream_moments expected >=2 micro-batches, got ${batches.size}")
     import s.implicits._
     buf.toSeq.sortBy(r => (r._1, r._2))
       .toDF("batch", "d", "mu_e6", "sd_e6")

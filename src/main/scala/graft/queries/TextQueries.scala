@@ -2153,23 +2153,10 @@ object TextQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docStage(s: SparkSession, dir: String): String =
     docStageCache.computeIfAbsent(graft.Tables.versioned(dir), _ => {
-      import java.nio.file.Files
-      val stage = Files.createTempDirectory("graft_stream_docs")
       val docs = t(s, dir, "documents")
-      val base = System.currentTimeMillis() - 10 * 60000L
-      for (i <- 0 until 2) {
-        val tmp = stage.resolve(s"__tmp_$i")
-        docs.filter(pmod(col("doc_id"), lit(2)) === i)
-          .coalesce(1).write.parquet(tmp.toString)
-        val part = Files.list(tmp).filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        val dest = stage.resolve(f"docs_$i%04d.parquet")
-        Files.move(part, dest)
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-      }
-      stage.toString
+      graft.streaming.IncrementalStream.stageSlices(
+        (0 until 2).map(i => docs.filter(pmod(col("doc_id"), lit(2)) === i)))
+        .toString
     })
 
   /** STREAMING deployment of the trained quality filter — the seventh
@@ -2185,31 +2172,15 @@ object TextQueries {
     * whole train-then-serve path is hash-checked.
     */
   def streamClassify(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val w = qtTrained(s, dir)._1
     val stage = docStage(s, dir)
     val schema = s.read.parquet(stage).schema
-    val name =
-      s"stream_classify_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage, schema, maxFilesPerTrigger = Some(1))
     val scored = graft.ops.Classifier.score(
       graft.ops.Classifier.features(stream, "doc_id", "text", "lang"), w)
-    val q = scored.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"stream_classify expected >=2 non-empty micro-batches, got $batches")
-    val out = s.table(name).orderBy(col("id"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name) // release the memory sink's rows
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_classify", scored,
+      "append", minBatches = 2)(_.orderBy(col("id")))
   }
 
   /** The SEVENTEENTH driver-visible stream shape — PERCEPTUAL image
@@ -2231,13 +2202,9 @@ object TextQueries {
     * (first-arrival-wins would depend on the file split).
     */
   def streamDhash(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.functions.dsl._
     val stage = docStage(s, dir)
     val schema = s.read.parquet(stage).schema
-    val name =
-      s"stream_dhash_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage, schema, maxFilesPerTrigger = Some(1))
     val media = stream.select(col("doc_id").cast("long").as("media_id"),
@@ -2252,24 +2219,12 @@ object TextQueries {
         col("media_id"))
     val deduped = graft.streaming.IncrementalStream
       .canonicalDedupStream(sigs, "media_id", "sig")
-    val q = deduped.writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches >= 2,
-      s"stream_dhash expected >=2 non-empty micro-batches, got $batches")
-    val out = s.table(name)
-      .groupBy(col("key_digest"))
-      .agg(min(col("keep_id")).as("keep_id"),
-        max(col("n_copies")).as("n_copies"))
-      .orderBy(col("key_digest"))
-      .localCheckpoint(true) // pin: the memory table dies with the query
-    q.stop()
-    s.catalog.dropTempView(name)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    out
+    graft.streaming.IncrementalStream.runToMemory("stream_dhash", deduped,
+        "update", minBatches = 2)(
+      _.groupBy(col("key_digest"))
+        .agg(min(col("keep_id")).as("keep_id"),
+          max(col("n_copies")).as("n_copies"))
+        .orderBy(col("key_digest")))
   }
 
   /** The (score_e6, y) frame the evaluation metrics consume: raw
@@ -2536,15 +2491,14 @@ object TextQueries {
     * cells exactly (GROUP BY doc_id % 2).
     */
   def streamEval(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val stage = docStage(s, dir)
     val schema = s.read.parquet(stage).schema
-    val ckpt = graft.streaming.IncrementalStream.localCkptDir(s)
     val stream = graft.streaming.IncrementalStream
       .readAppendStream(s, stage, schema, maxFilesPerTrigger = Some(1))
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long, Long)]
-    val collectBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
+    graft.streaming.IncrementalStream.runForeachBatch("stream_eval", stream,
+        minBatches = 2) { (batch, batchId) =>
       val r = graft.ops.Eval.confusion(langidScores(batch)).head()
       // an EMPTY micro-batch (a 0-row staged file) aggregates to one
       // all-NULL row — skip it rather than unbox NULL→0 and divide by
@@ -2555,13 +2509,6 @@ object TextQueries {
           r.getAs[Long]("fn"), r.getAs[Long]("tn")))
       }
     }
-    val q = stream.writeStream.foreachBatch(collectBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    require(buf.size >= 2,
-      s"stream_eval expected >=2 micro-batches, got ${buf.size}")
     import s.implicits._
     buf.toSeq.sortBy(_._1).map { case (b, tp, fp, fn, tn) =>
       // exact integer accuracy, same arithmetic as Eval.confusion —

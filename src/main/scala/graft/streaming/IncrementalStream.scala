@@ -1,8 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming adapter for the reference's incremental
@@ -18,32 +22,6 @@ import org.apache.spark.sql.types.StructType
   * tests, not the oracle).
   */
 object IncrementalStream {
-
-  /** Fresh throwaway LOCAL checkpoint directory for a driver-visible
-    * stream query, with the session's checkpoint file manager switched
-    * to the FileSystem-based implementation. Motivation (measured,
-    * r14): the default FileContext-based manager's rename path on a
-    * local filesystem goes through Hadoop's
-    * `RawLocalFileSystem.getFileLinkStatus`, which FORKS A SHELL
-    * (`readlink`) per renamed checkpoint file — and a micro-batch of a
-    * stream-stream join renames dozens of files (offset log, commit
-    * log, 4 state stores × state partitions). Thread dumps showed the
-    * stream execution thread and every state-store task parked in
-    * `Shell.runCommand`; switching managers cut stream_join from
-    * ~4.2-5.1 s to ~2.7-3.6 s steady-state. Both managers write
-    * temp-file + rename and local-FS rename is atomic at the OS level,
-    * so recovery semantics for these throwaway local checkpoints are
-    * unchanged. DURABLE production checkpoints on HDFS/S3 should keep
-    * Spark's default manager (set the conf back, or never route their
-    * sessions through this helper) — the FileContext manager's
-    * stricter rename-with-options semantics matter there.
-    */
-  def localCkptDir(spark: SparkSession): String = {
-    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      "org.apache.spark.sql.execution.streaming.checkpointing." +
-        "FileSystemBasedCheckpointFileManager")
-    java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-  }
 
   /** File-based streaming read of an append-only directory (each
     * micro-batch = newly arrived files; the reference's "new pages
@@ -373,6 +351,104 @@ object IncrementalStream {
         keyEq && col(rTs) >= col(lTs) &&
           col(rTs) <= col(lTs) + expr(s"INTERVAL $window"),
         "leftOuter")
+
+  /** Stage `slices` in a fresh temp directory as ONE parquet file each
+    * (`slice_0000.parquet` first), with strictly ascending modification
+    * times in slice order. The file source admits the oldest files
+    * first, so a stream read with `maxFilesPerTrigger = 1` replays the
+    * slices as that many REAL micro-batches, in slice order — the
+    * production analogue is files simply arriving over time.
+    */
+  def stageSlices(slices: Seq[DataFrame]): Path = {
+    val stage = Files.createTempDirectory("graft_stream")
+    val base = System.currentTimeMillis() - slices.size * 60000L
+    slices.zipWithIndex.foreach { case (slice, i) =>
+      val tmp = stage.resolve(s"__tmp_$i")
+      slice.coalesce(1).write.parquet(tmp.toString)
+      val part = Files.list(tmp).filter(p =>
+        p.getFileName.toString.startsWith("part-")).findFirst().get()
+      val dest = stage.resolve(f"slice_$i%04d.parquet")
+      Files.move(part, dest)
+      FileUtils.deleteQuietly(tmp.toFile)
+      Files.setLastModifiedTime(dest, FileTime.fromMillis(base + i * 60000L))
+    }
+    stage
+  }
+
+  private val CkptManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Run `stream` to a memory sink under `Trigger.AvailableNow` and
+    * return `result` of the sink's table, pinned with
+    * [[graft.ops.Dedup.materialize]] (the memory table dies with the
+    * query). See [[run]] for the batch check and the cleanup.
+    */
+  def runToMemory(name: String, stream: DataFrame, outputMode: String,
+                  minBatches: Int)(result: DataFrame => DataFrame): DataFrame = {
+    val view = s"${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val spark = stream.sparkSession
+    try run(name, minBatches, spark, stream.writeStream.format("memory")
+        .queryName(view).outputMode(outputMode)) {
+      graft.ops.Dedup.materialize(result(spark.table(view)))
+    } finally spark.catalog.dropTempView(view)
+  }
+
+  /** Run `stream` through the caller's `foreachBatch` function under
+    * `Trigger.AvailableNow`. See [[run]] for the batch check and the
+    * cleanup.
+    */
+  def runForeachBatch(name: String, stream: DataFrame, minBatches: Int)(
+      f: (DataFrame, Long) => Unit): Unit =
+    run(name, minBatches, stream.sparkSession,
+      stream.writeStream.foreachBatch(f))(())
+
+  /** The one stream runner: start `writer` on a fresh throwaway local
+    * checkpoint under `Trigger.AvailableNow` (the cron-run equivalent),
+    * wait for it, require at least `minBatches` NON-EMPTY micro-batches
+    * — a staging regression (say a dropped `maxFilesPerTrigger`) would
+    * otherwise fall back to one batch silently and stop exercising
+    * cross-batch state — then evaluate `body`. Whether the check, the
+    * query or `body` throws, the query is stopped, the checkpoint is
+    * deleted and the session's checkpoint-manager conf is restored.
+    *
+    * The run uses the FileSystem-based checkpoint file manager.
+    * Motivation (measured, r14): the default FileContext-based
+    * manager's rename path on a local filesystem goes through Hadoop's
+    * `RawLocalFileSystem.getFileLinkStatus`, which FORKS A SHELL
+    * (`readlink`) per renamed checkpoint file — and a micro-batch of a
+    * stream-stream join renames dozens of files (offset log, commit
+    * log, 4 state stores × state partitions). Thread dumps showed the
+    * stream execution thread and every state-store task parked in
+    * `Shell.runCommand`; switching managers cut stream_join from
+    * ~4.2-5.1 s to ~2.7-3.6 s steady-state. Both managers write
+    * temp-file + rename and local-FS rename is atomic at the OS level,
+    * so recovery semantics for these throwaway local checkpoints are
+    * unchanged. The switch is scoped to the run (set before `start`,
+    * the caller's value or its absence restored after): a DURABLE
+    * checkpoint on HDFS/S3 started later in the same session keeps
+    * Spark's default manager, whose stricter rename-with-options
+    * semantics matter there.
+    */
+  private def run[T](name: String, minBatches: Int, spark: SparkSession,
+                     writer: DataStreamWriter[Row])(body: => T): T = {
+    val prev = spark.conf.getOption(CkptManagerKey)
+    val ckpt = Files.createTempDirectory(s"graft_ckpt_${name}_").toString
+    var q: StreamingQuery = null
+    try {
+      spark.conf.set(CkptManagerKey, "org.apache.spark.sql.execution." +
+        "streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      q = writer.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val n = q.recentProgress.count(_.numInputRows > 0)
+      require(n >= minBatches,
+        s"$name expected >=$minBatches non-empty micro-batches, got $n")
+      body
+    } finally {
+      if (q != null) q.stop()
+      prev.fold(spark.conf.unset(CkptManagerKey))(spark.conf.set(CkptManagerKey, _))
+      FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
+  }
 
   /** Run a streaming frame to a parquet sink with checkpointing,
     * processing everything currently available (the cron-run

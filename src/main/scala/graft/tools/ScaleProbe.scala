@@ -714,36 +714,24 @@ object ScaleProbe {
     // the family's bench total can't drop below ~16 × this number;
     // SCALE.md records the split into fixed vs marginal cost.
     if (only.isEmpty || only.exists(_.contains("stream_noop"))) {
-      import org.apache.spark.sql.streaming.Trigger
-      val stage = java.nio.file.Files.createTempDirectory("graft_noop_in")
+      import graft.streaming.IncrementalStream
       val tiny = spark.range(0, 128)
         .select(col("id"), (col("id") % 7).as("k"))
-      for (i <- 0 until 2) {
-        val tmp = stage.resolve(s"__tmp_$i")
-        tiny.filter(col("id") % 2 === i).coalesce(1)
-          .write.parquet(tmp.toString)
-        val part = java.nio.file.Files.list(tmp).filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        java.nio.file.Files.move(part, stage.resolve(f"f_$i%04d.parquet"))
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-      }
+      val stage = IncrementalStream.stageSlices(
+        (0 until 2).map(i => tiny.filter(col("id") % 2 === i)))
+      // the same runner (checkpoint manager, trigger, batch check,
+      // cleanup) every stream_* query pays
       def noopStream(): Long = {
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_noop_ckpt").toString
-        val sink: (DataFrame, Long) => Unit = (b, _) => { b.count(); () }
-        val q = spark.readStream.schema(tiny.schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage.toString)
-          .writeStream.foreachBatch(sink)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(ckpt))
+        IncrementalStream.runForeachBatch("stream_noop",
+            IncrementalStream.readAppendStream(spark, stage.toString,
+              tiny.schema, maxFilesPerTrigger = Some(1)),
+            minBatches = 2) { (b, _) => b.count(); () }
         0L
       }
       noopStream() // JIT/codegen warm-up, untimed
       val tNoop = (1 to 3).map(_ => timeOnce(noopStream())).min
       println(f"""{"probe":"stream_noop_spinup","t_s":$tNoop%.3f,"batches":2,"warm_failed":$warmFailed}""")
+      org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
     }
     // r13: the labeled layout at 10× LABELS — the small-files cliff
     // the (label, list_grp) compaction exists for (VERDICT r12 task

@@ -864,4 +864,80 @@ class StreamingSpec extends AnyFunSuite {
       "batch-id replay must be idempotent")
   }
 
+  private val ckptManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+
+  test("a stream query leaves the session's checkpoint-manager conf " +
+      "as it found it") {
+    // start from Spark's default (unset), whatever earlier suites did
+    spark.conf.unset(ckptManagerKey)
+    assert(queries.AdvancedQueries.streamDedup(spark, sf).count() > 0)
+    assert(spark.conf.getOption(ckptManagerKey).isEmpty,
+      "the FileSystem-based manager must not outlive the stream run")
+  }
+
+  test("runner: a throwing batch function rethrows after stopping the " +
+      "query, deleting the checkpoint and restoring the conf") {
+    val label = "runner_throw_probe"
+    val stage = IncrementalStream.stageSlices(
+      (0 until 3).map(i => spark.range(i * 10L, i * 10L + 10L).toDF("id")))
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckptDirs: Set[String] = tmpRoot.list().toSet
+      .filter(_.startsWith(s"graft_ckpt_${label}_"))
+    val leftBefore = ckptDirs // a crashed earlier JVM may have left some
+    val callerValue = "org.apache.spark.sql.execution.streaming." +
+      "checkpointing.FileContextBasedCheckpointFileManager"
+    val confInRun = new java.util.concurrent.atomic.AtomicReference[Option[String]]
+    val dirsInRun = new java.util.concurrent.atomic.AtomicReference[Set[String]]
+    spark.conf.set(ckptManagerKey, callerValue)
+    try {
+      val err = intercept[Exception] {
+        IncrementalStream.runForeachBatch(label,
+            IncrementalStream.readAppendStream(spark, stage.toString,
+              spark.read.parquet(stage.toString).schema,
+              maxFilesPerTrigger = Some(1)),
+            minBatches = 2) { (batch, id) =>
+          confInRun.set(spark.conf.getOption(ckptManagerKey))
+          dirsInRun.set(ckptDirs)
+          if (id == 1L) throw new IllegalStateException("planted batch failure")
+          batch.count()
+        }
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null)
+        .exists(e => Option(e.getMessage).exists(_.contains("planted"))),
+        s"the batch function's failure must surface: $err")
+      assert((dirsInRun.get -- leftBefore).size == 1,
+        s"the run's checkpoint must exist while it runs: ${dirsInRun.get}")
+      assert(confInRun.get.exists(
+        _.endsWith("FileSystemBasedCheckpointFileManager")))
+      assert(spark.streams.active.isEmpty)
+      assert(ckptDirs == leftBefore, s"checkpoint left behind: $ckptDirs")
+      assert(spark.conf.getOption(ckptManagerKey).contains(callerValue))
+    } finally {
+      spark.conf.unset(ckptManagerKey)
+      org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
+    }
+  }
+
+  test("runner: a one-file memory-sink run fails the batch check and " +
+      "drops its view") {
+    val label = "runner_one_batch_probe"
+    val stage = IncrementalStream.stageSlices(
+      Seq(spark.range(0L, 10L).toDF("id")))
+    try {
+      val err = intercept[IllegalArgumentException] {
+        IncrementalStream.runToMemory(label,
+          IncrementalStream.readAppendStream(spark, stage.toString,
+            spark.read.parquet(stage.toString).schema,
+            maxFilesPerTrigger = Some(1)),
+          "append", minBatches = 2)(identity)
+      }
+      assert(err.getMessage.contains(
+        "expected >=2 non-empty micro-batches"), err.getMessage)
+      assert(!spark.catalog.listTables().collect()
+        .exists(_.name.startsWith(label)), "memory view left behind")
+      assert(spark.streams.active.isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
+  }
 }
