@@ -140,5 +140,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // declarative blocklists: contains() OR-chains over one column
     // collapse into a single Aho-Corasick pass (see the rule's scaladoc)
     e.injectOptimizerRule(graft.plans.CollapseContainsOr)
+    // small one-partition DSv2 scans plan as SinglePartition, so the
+    // keyed operator above needs no shuffle (see the rule's scaladoc)
+    e.injectQueryPostPlannerStrategyRule(_ => graft.plans.CoalesceSinglePartitionScan)
   }
 }

@@ -21,8 +21,10 @@ object GraftSession {
     *  - the Spark UI off;
     *  - session time zone UTC and [[Tables.requiredConf]] (nanos
     *    handling), which the testdata needs;
-    *  - [[GraftExtensions]]: the graft SQL functions and the optimizer
-    *    rules (broadcast demotion, contains-OR collapse);
+    *  - [[GraftExtensions]]: the graft SQL functions, the optimizer
+    *    rules (broadcast demotion, contains-OR collapse) and the AQE
+    *    physical rule that plans a small one-partition scan as one
+    *    partition;
     *  - log level WARN.
     *
     * A session that already exists in the JVM is returned as is

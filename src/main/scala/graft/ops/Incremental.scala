@@ -142,9 +142,12 @@ object Incremental {
     * the pick total-order deterministic when timestamps collide.
     *
     * One shuffle on the key; at scale this is the canonical
-    * window-dedup and AQE handles key skew. For streaming the same
-    * semantics come from `dropDuplicates` + watermark
-    * (graft.streaming.IncrementalStream).
+    * window-dedup and AQE handles key skew. A small one-partition
+    * input (the HTTP cursor-chain scan of a daily sync) runs without
+    * that shuffle: [[graft.plans.CoalesceSinglePartitionScan]] plans
+    * it as a single partition, which already holds every key together.
+    * For streaming the same semantics come from `dropDuplicates` +
+    * watermark (graft.streaming.IncrementalStream).
     */
   def dedupLatest(df: DataFrame, keys: Seq[String], tsCol: String,
                   tieBreak: Seq[String] = Seq.empty): DataFrame = {

@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   * Where the reference loops page-by-page in one process and defers
   * dedup/upsert to the warehouse, this plan scans pages in parallel,
   * dedups with one keyed shuffle, and commits partitions atomically.
+  * A small one-partition source (the opaque-cursor chain of a
+  * `previous_day` HTTP sync) skips that shuffle: the whole sync runs
+  * as one Spark job of one task
+  * ([[graft.plans.CoalesceSinglePartitionScan]]).
   */
 object OutreachPipeline {
 

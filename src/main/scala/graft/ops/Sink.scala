@@ -28,14 +28,6 @@ object Sink {
     */
   def tableName(base: String, endpoint: String): String = s"${base}_$endpoint"
 
-  /** Order-independent table digest: (row count, Σ xxhash64(row) as
-    * DECIMAL(38,0)). Partition- and sort-invariant (a commutative sum
-    * of per-row hashes), so two copies of a table compare equal no
-    * matter how either side was shuffled or file-split — the
-    * replication-validation primitive a sync pipeline runs after a
-    * warehouse load. DECIMAL(38,0) accumulation cannot overflow below
-    * ~10¹⁸ rows (38 digits vs 19-digit terms).
-    */
   /** Per-row digest that is NOT null-blind: Spark's multi-arg
     * `xxhash64` folds a NULL input as a no-op, so (v, NULL) and
     * (NULL, v) would collide. Pre-hashing each column first maps NULL
@@ -48,6 +40,14 @@ object Sink {
     xxhash64(cols.map(c => xxhash64(col(c))): _*)
   }
 
+  /** Order-independent table digest: (row count, Σ xxhash64(row) as
+    * DECIMAL(38,0)). Partition- and sort-invariant (a commutative sum
+    * of per-row hashes), so two copies of a table compare equal no
+    * matter how either side was shuffled or file-split — the
+    * replication-validation primitive a sync pipeline runs after a
+    * warehouse load. DECIMAL(38,0) accumulation cannot overflow below
+    * ~10¹⁸ rows (38 digits vs 19-digit terms).
+    */
   def tableChecksum(df: DataFrame): (Long, java.math.BigDecimal) = {
     val row = df.select(
       rowDigest(df.columns.sorted.toSeq)
@@ -108,7 +108,6 @@ object Sink {
     checksumFromObs(obs)
   }
 
-  /** Plain append load — the reference's default BigQuery semantics. */
   /** CDC-style snapshot diff: classify every key as added / removed /
     * changed / unchanged between two versions of a table. ONE full
     * outer join on the key with both sides reduced to (key, row
@@ -148,6 +147,7 @@ object Sink {
           .otherwise("changed").as("status"): _*)
   }
 
+  /** Plain append load — the reference's default BigQuery semantics. */
   def appendLoad(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).parquet(path)
 

@@ -230,6 +230,12 @@ class AdvancedSpec extends AnyFunSuite {
     assert(rules.exists(_.isInstanceOf[graft.plans.DemoteOversizedBroadcasts]),
       rules)
     assert(rules.exists(_.isInstanceOf[graft.plans.CollapseContainsOr]), rules)
+    // the physical rule runs inside AQE, which the factory turns on
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val postPlanner = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.adaptiveRulesHolder.queryPostPlannerStrategyRules
+    assert(postPlanner.contains(graft.plans.CoalesceSinglePartitionScan),
+      postPlanner)
   }
 
   test("GraftSession.scala is the only source that calls SparkSession.builder") {

@@ -155,4 +155,54 @@ class PipelineSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS b_users")
     }
   }
+
+  test("one-partition HTTP sync and multi-file sync commit equal tables") {
+    // id 10's later version sits on another page; ids 11 and 12 tie
+    // on updatedAt and are told apart by `type` (the greater wins)
+    val pages = Seq(
+      Seq((10L, "prospect", "2019-06-03T08:00:00Z", "old"),
+        (11L, "account", "2019-06-04T09:00:00Z", "tie-lo"),
+        (12L, "prospect", "2019-06-05T10:00:00Z", "keep")),
+      Seq((11L, "prospect", "2019-06-04T09:00:00Z", "tie-hi"),
+        (13L, "prospect", "2019-06-04T11:00:00Z", "plain")),
+      Seq((10L, "prospect", "2019-06-05T07:00:00Z", "new"),
+        (12L, "account", "2019-06-05T10:00:00Z", "drop")))
+    val dir = TestPages.write(pages)
+    val base = cfg("").copy(today = LocalDate.of(2020, 1, 1))
+
+    val fromFiles = Files.createTempDirectory("graft-eq-files").toString
+    val filesPlan = SparkRun(spark) {
+      OutreachPipeline.sync(spark, base.copy(pagesDir = dir, outDir = fromFiles))
+    }
+    graft.sources.JsonApiToken.clear()
+    val server = new graft.sources.FixtureApiServer("prospects", dir)
+    val fromChain = Files.createTempDirectory("graft-eq-chain").toString
+    val chainPlan = try SparkRun(spark) {
+      val conformed = OutreachPipeline.conformedFrom(
+        spark.read.format("graft.sources.JsonApiSource")
+          .option("resource", "prospects").options(server.sourceOptions).load(),
+        base.copy(outDir = fromChain))
+      Sink.partitionedWindowLoad(conformed, "updatedAt",
+        s"$fromChain/outreach_prospects")
+    } finally server.stop()
+    // the two sides ran different plans: shuffle vs one partition
+    assert(filesPlan.jobs >= 2 && chainPlan.jobs == 1,
+      s"jobs: files ${filesPlan.jobs}, chain ${chainPlan.jobs}")
+
+    def perDs(root: String): Map[String, (Long, java.math.BigDecimal)] = {
+      val t = spark.read.parquet(s"$root/outreach_prospects")
+      t.select(col("ds").cast("string")).distinct().collect()
+        .map(_.getString(0)).map(d =>
+          d -> Sink.tableChecksum(t.filter(col("ds").cast("string") === d)))
+        .toMap
+    }
+    val files = perDs(fromFiles)
+    assert(files == perDs(fromChain))
+    assert(files.keySet == Set("2019-06-04", "2019-06-05"), files)
+    val kept = spark.read.parquet(s"$fromChain/outreach_prospects")
+      .select("id", "firstName").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(kept == Map(10L -> "new", 11L -> "tie-hi", 12L -> "keep",
+      13L -> "plain"), kept)
+  }
 }

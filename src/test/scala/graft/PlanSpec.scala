@@ -1,8 +1,19 @@
 package graft
 
+import java.time.LocalDate
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.ops.{Incremental, OutreachPipeline, Sink}
+import graft.plans.CoalesceSinglePartitionScan
+import graft.sources.{FixtureApiServer, JsonApiToken}
 
 /** Plan-shape regression gate for the at-scale invariants the engine
   * claims in SCALE.md/PLANS.md. Each assertion pins a property that
@@ -15,7 +26,7 @@ import graft.SparkEntry
   * been caught here: an un-pushable cast above the scan drops the
   * PushedFilters line this spec requires.)
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSession.spark
 
   private val sf = "/root/testdata/sf0.001"
@@ -686,5 +697,177 @@ class PlanSpec extends AnyFunSuite {
       s"expected partial+final aggregate pair, found $hashAggs:\n" +
         plan.take(2000))
     assert(!plan.contains("Join"))
+  }
+
+  // --- CoalesceSinglePartitionScan ------------------------------------
+
+  private def hashExchanges(plans: Seq[SparkPlan]): Seq[SparkPlan] =
+    plans.flatMap(p => collect(p) {
+      case e: ShuffleExchangeLike
+          if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    })
+
+  /** `CoalesceExec(1)` nodes over a DSv2 scan unit. */
+  private def coalesced(plans: Seq[SparkPlan]): Seq[CoalesceExec] =
+    plans.flatMap(p => collect(p) {
+      case c: CoalesceExec
+          if c.numPartitions == 1 && c.child.exists(_.isInstanceOf[BatchScanExec]) => c
+    })
+
+  private def dailyCfg(out: String) = OutreachPipeline.SyncConfig(
+    resource = "prospects", pagesDir = "", outDir = out,
+    replicationType = "previous_day", today = LocalDate.of(2019, 7, 5))
+
+  private def jsonapi(options: Map[String, String]): DataFrame =
+    spark.read.format("graft.sources.JsonApiSource")
+      .option("resource", "prospects").options(options).load()
+
+  /** The checked-in prospects pages behind [[FixtureApiServer]]'s
+    * opaque-cursor chain: one sequential scan partition.
+    */
+  private def overChain[T](f: DataFrame => T): T = {
+    JsonApiToken.clear()
+    val server = new FixtureApiServer("prospects",
+      getClass.getResource("/jsonapi_sync/prospects").getPath)
+    try f(jsonapi(server.sourceOptions)) finally server.stop()
+  }
+
+  test("CoalesceSinglePartitionScan: a previous_day sync over the opaque " +
+      "cursor chain writes in ONE job with no Exchange") {
+    val out = java.nio.file.Files.createTempDirectory("graft-daily").toString
+    val table = s"$out/outreach_prospects"
+    val run = overChain { pages =>
+      SparkRun(spark) {
+        Sink.partitionedWindowLoad(
+          OutreachPipeline.conformedFrom(pages, dailyCfg(out)), "updatedAt", table)
+      }
+    }
+    assert(coalesced(run.plans).size == 1, run.plans.mkString("\n"))
+    assert(hashExchanges(run.plans).isEmpty, run.plans.mkString("\n"))
+    // walk, dedup and write in one job; the shuffle plan ran two
+    assert(run.jobs == 1, s"jobs: ${run.jobs}")
+    assert(run.stageTasks == Seq(1), run.stageTasks)
+    // id 2's 2019-07-04 version is the one row of that day
+    val rows = spark.read.parquet(table).select("id", "ds").collect()
+      .map(r => (r.getLong(0), r.get(1).toString)).toSeq
+    assert(rows == Seq((2L, "2019-07-04")), rows)
+  }
+
+  test("CoalesceSinglePartitionScan: a page directory of several files " +
+      "keeps its hash Exchange") {
+    val dir = getClass.getResource("/jsonapi/prospects").getPath
+    val run = SparkRun(spark) {
+      OutreachPipeline.conformedFrom(jsonapi(Map("path" -> dir)),
+        dailyCfg("").copy(today = LocalDate.of(2019, 6, 4))).collect()
+    }
+    assert(run.value.map(_.getAs[Long]("id")).toSeq == Seq(2L))
+    assert(coalesced(run.plans).isEmpty, run.plans.mkString("\n"))
+    assert(hashExchanges(run.plans).nonEmpty, run.plans.mkString("\n"))
+  }
+
+  test("CoalesceSinglePartitionScan: a scan larger than the advisory " +
+      "partition size keeps its hash Exchange") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    overChain { pages =>
+      val sized = pages.queryExecution.sparkPlan.collectFirst {
+        case s: BatchScanExec => s.scan
+      }.get.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      val bytes = sized.estimateStatistics().sizeInBytes().getAsLong
+      assert(bytes > 1L, s"reported size: $bytes")
+      def dedupRun() = SparkRun(spark) {
+        Incremental.dedupLatest(pages, Seq("id"), "attributes_updatedAt",
+          Seq("type")).collect()
+      }
+      val fits = dedupRun()
+      assert(coalesced(fits.plans).size == 1, fits.plans.mkString("\n"))
+      try {
+        spark.conf.set(key, (bytes - 1).toString)
+        val over = dedupRun()
+        assert(coalesced(over.plans).isEmpty, over.plans.mkString("\n"))
+        assert(hashExchanges(over.plans).nonEmpty, over.plans.mkString("\n"))
+        assert(over.value.toSet == fits.value.toSet)
+      } finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  test("CoalesceSinglePartitionScan: applying the rule twice wraps the " +
+      "scan once") {
+    val dir = TestPages.write(Seq(Seq(
+      (1L, "prospect", "2019-06-01T00:00:00Z", "a"),
+      (1L, "prospect", "2019-06-02T00:00:00Z", "b"))))
+    val planned = Incremental.dedupLatest(jsonapi(Map("path" -> dir)),
+      Seq("id"), "attributes_updatedAt").queryExecution.sparkPlan
+    val once = CoalesceSinglePartitionScan(planned)
+    val twice = CoalesceSinglePartitionScan(once)
+    assert(coalesced(Seq(once)).size == 1, once)
+    assert(twice.collect { case c: CoalesceExec => c }.size == 1, twice)
+    assert(twice.fastEquals(once))
+  }
+
+  test("CoalesceSinglePartitionScan: the coalesce sits above the scan's " +
+      "UnsafeRow projection, with or without whole-stage codegen") {
+    val dir = TestPages.write(Seq(Seq(
+      (1L, "prospect", "2019-06-01T00:00:00Z", "a"),
+      (1L, "prospect", "2019-06-02T00:00:00Z", "b"),
+      (2L, "account", "2019-06-02T00:00:00Z", "c"))))
+    val key = "spark.sql.codegen.wholeStage"
+    val prev = spark.conf.getOption(key)
+    try Seq("true", "false").foreach { codegen =>
+      spark.conf.set(key, codegen)
+      // every scan column and a filter the source cannot take: the
+      // planner's Project over the Filter is an identity, kept only
+      // because the row-based scan needs it
+      val run = SparkRun(spark) {
+        Incremental.dedupLatest(jsonapi(Map("path" -> dir))
+          .filter(org.apache.spark.sql.functions.col("attributes_firstName")
+            .rlike("^[ac]$")),
+          Seq("id"), "attributes_updatedAt").collect()
+      }
+      assert(run.value.map(_.getAs[String]("attributes_firstName")).sorted
+        .toSeq == Seq("a", "c"), s"codegen=$codegen")
+      val units = coalesced(run.plans)
+      assert(units.size == 1, run.plans.mkString("\n"))
+      assert(units.head.child.isInstanceOf[ProjectExec], units.head)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("CoalesceSinglePartitionScan: a coalesced scan joined to a " +
+      "multi-partition parquet table is re-shuffled, not collapsed") {
+    import org.apache.spark.sql.functions._
+    val recs = (1L to 40L).map(i =>
+      (i, "prospect", f"2019-06-${i % 28 + 1}%02dT00:00:00Z", s"p$i"))
+    val onePage = TestPages.write(Seq(recs))
+    val threePages = TestPages.write(recs.grouped(14).toSeq)
+    val facts = java.nio.file.Files.createTempDirectory("graft-facts").toString
+    spark.range(1L, 61L).select(col("id"), (col("id") * 10).as("v"))
+      .repartition(4).write.mode("overwrite").parquet(facts)
+    def joined(dir: String): DataFrame =
+      jsonapi(Map("path" -> dir)).select("id", "attributes_firstName")
+        .join(spark.read.parquet(facts), "id")
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      assert(spark.read.parquet(facts).rdd.getNumPartitions > 1)
+      val one = SparkRun(spark)(joined(onePage).collect())
+      val many = joined(threePages).collect()
+      assert(coalesced(one.plans).size == 1, one.plans.mkString("\n"))
+      assert(one.value.length == 40)
+      assert(one.value.toSet == many.toSet)
+      // EnsureRequirements ran after the rule: the join stage (the
+      // last to complete) runs at the shuffle's partition count
+      assert(one.stageTasks.last > 1, one.stageTasks)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }
