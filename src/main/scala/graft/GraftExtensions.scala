@@ -142,6 +142,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(graft.plans.CollapseContainsOr)
     // small one-partition DSv2 scans plan as SinglePartition, so the
     // keyed operator above needs no shuffle (see the rule's scaladoc)
-    e.injectQueryPostPlannerStrategyRule(_ => graft.plans.CoalesceSinglePartitionScan)
+    e.injectQueryPostPlannerStrategyRule(graft.plans.CoalesceSinglePartitionScan)
   }
 }

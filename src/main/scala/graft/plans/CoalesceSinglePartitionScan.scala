@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.read.SupportsReportStatistics
@@ -15,12 +16,14 @@ import org.apache.spark.sql.internal.SQLConf
   * exactly one input partition — the JSON:API source's opaque-cursor
   * walk always does. Every keyed consumer above it then gets a hash
   * `Exchange`, and under AQE that exchange costs a shuffle-map job, a
-  * re-plan and a second job, all to redistribute rows that AQE's
-  * partition coalescing folds back into one partition anyway. This
-  * rule puts such a scan under `CoalesceExec(1)`, which reports
-  * `SinglePartition`; that satisfies any `ClusteredDistribution`, so
-  * a daily sync (walk → rename → latest-row dedup → `ds` → one-day
-  * overwrite) runs as one job and one task.
+  * re-plan and a second job. When the shuffle is small enough that
+  * AQE's partition coalescing folds it back into one partition, that
+  * second job runs one task over everything the scan read — the same
+  * layout this rule plans up front. The rule puts such a scan under
+  * `CoalesceExec(1)`, which reports `SinglePartition`; that satisfies
+  * any `ClusteredDistribution`, so a daily sync (walk → rename →
+  * latest-row dedup → `ds` → one-day overwrite) runs as one job and one
+  * task.
   *
   * The coalesce goes above the scan's planner unit — the scan plus the
   * `Filter`/`Project` the DSv2 strategy puts on it — not between them.
@@ -35,10 +38,24 @@ import org.apache.spark.sql.internal.SQLConf
   *  - its output partitioning is not key-grouped (storage-partitioned
   *    joins keep their layout);
   *  - it reports `SupportsReportStatistics.sizeInBytes`, and that size
-  *    is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes` —
-  *    the size under which AQE would coalesce the shuffle's output to
-  *    one partition. A larger or unsized one-partition scan keeps its
-  *    shuffle and the parallelism after it.
+  *    is at most [[onePartitionBytes]]: AQE's own target size for a
+  *    coalesced partition under the session's conf, so a shuffle of
+  *    that size is read as one partition anyway. With Spark's defaults
+  *    (`coalescePartitions.parallelismFirst` on, more than one core)
+  *    that is `coalescePartitions.minPartitionSize`, 1 MB, not
+  *    `advisoryPartitionSizeInBytes`: AQE splits larger shuffles for
+  *    parallelism, so a larger or unsized scan keeps its shuffle and
+  *    the parallel tasks after it. (AQE never closes a partition below
+  *    `minPartitionSize`, so it still reads up to twice that as one
+  *    partition; the rule does not count on it.)
+  *
+  * The bound is compared with what the source reports, before any row
+  * is read, while AQE measures the shuffle it wrote. A source whose
+  * estimate runs low can therefore have a scan wrapped that AQE would
+  * have split. The JSON:API source sizes a record by its JSON text,
+  * which spells out every key and so is usually larger than the
+  * shuffled row, and reports no size for a `meta.count` it can tell is
+  * stale; a stale count it cannot tell still understates.
   *
   * The check costs no I/O beyond planning: `BatchScanExec` has already
   * planned its input partitions, and the JSON:API scan memoizes the
@@ -54,7 +71,37 @@ import org.apache.spark.sql.internal.SQLConf
   * is re-shuffled to the other side's partitioning, and a broadcast
   * join keeps the streamed side's tasks.
   */
-object CoalesceSinglePartitionScan extends Rule[SparkPlan] {
+case class CoalesceSinglePartitionScan(spark: SparkSession) extends Rule[SparkPlan] {
+
+  /** The size, in bytes, up to which AQE's `CoalesceShufflePartitions`
+    * reads a shuffle as one partition under the session's conf; None
+    * when it does not coalesce at all.
+    *
+    * Spark coalesces toward the target `max(min(total / minPartitions,
+    * advisory), minPartitionSize)`, where `minPartitions` is
+    * `coalescePartitions.minPartitionNum`, else the default parallelism
+    * when `parallelismFirst` is on, else 1 (and, in Spark's test mode,
+    * `minPartitionSize` is capped at a fifth of `advisory`). A total no
+    * larger than its target is one partition. For `minPartitions` of 1
+    * that holds up to `max(advisory, minPartitionSize)`; for more, only
+    * up to `minPartitionSize`.
+    */
+  def onePartitionBytes: Option[Long] =
+    if (!conf.coalesceShufflePartitionsEnabled) None
+    else {
+      val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val minSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      // org.apache.spark.util.SparkEnvUtils.isTesting
+      val testing = sys.env.contains("SPARK_TESTING") || sys.props.contains("spark.testing")
+      val floor = if (testing) minSize.min(advisory / 5) else minSize
+      val minPartitions = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+        .getOrElse {
+          if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+            spark.sparkContext.defaultParallelism
+          else 1
+        }
+      Some(if (minPartitions <= 1) advisory.max(floor) else floor)
+    }
 
   private def fitsOnePartition(scan: BatchScanExec): Boolean =
     scan.inputPartitions.length == 1 &&
@@ -62,8 +109,7 @@ object CoalesceSinglePartitionScan extends Rule[SparkPlan] {
       (scan.scan match {
         case s: SupportsReportStatistics =>
           val size = s.estimateStatistics().sizeInBytes()
-          size.isPresent &&
-            size.getAsLong <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+          size.isPresent && onePartitionBytes.exists(size.getAsLong <= _)
         case _ => false
       })
 

@@ -464,28 +464,40 @@ class JsonApiScan(opts: JsonApiOptions, fullSchema: StructType,
   }
 
   /** `meta.count` (outreach_etl.py:120/186) lets the planner size this
-    * source for join-strategy choices (broadcast vs shuffle). File
-    * mode reads the first page file's envelope; HTTP mode reuses the
-    * page-1 fetch.
+    * source for join-strategy choices (broadcast vs shuffle) and for
+    * [[graft.plans.CoalesceSinglePartitionScan]]. A record is sized by
+    * page 1's JSON text per record, at least the schema's default row
+    * width: the text spells out every key and quotes every value, so it
+    * is usually larger than the record's shuffled form and the estimate
+    * errs high. File mode reads the first page file; HTTP mode reuses the
+    * page-1 fetch. In HTTP mode a count no larger than page 1 while
+    * page 1 has a `links.next` is known to be stale (the chain is
+    * walked past it), and the size is reported as unknown.
     */
   override def estimateStatistics(): Statistics = {
-    val count: Option[Long] = opts.url match {
+    val page: Option[(JsonNode, Long)] = opts.url match {
       case Some(_) =>
-        firstPage.map(_._1.path("meta").path("count").asLong(-1L))
-          .filter(_ >= 0L)
-      case None =>
-        pageFiles.headOption.flatMap { f =>
-          val meta = new ObjectMapper().readTree(f).path("meta").path("count")
-          if (meta.isNumber) Some(meta.asLong()) else None
+        firstPage.map { case (root, body) =>
+          (root, body.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong)
         }
+      case None =>
+        pageFiles.headOption.map(f => (new ObjectMapper().readTree(f), f.length))
     }
-    val rowWidth = fullSchema.defaultSize.toLong
+    val sized: Option[(Long, Long)] = page.flatMap { case (root, bytes) =>
+      val count = root.path("meta").path("count").asLong(-1L)
+      val records = root.path("data").size().toLong
+      val stale = opts.url.isDefined &&
+        root.path("links").path("next").isTextual && count <= records
+      if (count < 0L || stale) None
+      else Some((count, (bytes / records.max(1L)).max(fullSchema.defaultSize.toLong)))
+    }
     new Statistics {
       override def sizeInBytes(): OptionalLong =
-        count.map(c => OptionalLong.of(c * rowWidth))
+        sized.map { case (c, w) => OptionalLong.of(c * w) }
           .getOrElse(OptionalLong.empty())
       override def numRows(): OptionalLong =
-        count.map(OptionalLong.of).getOrElse(OptionalLong.empty())
+        sized.map { case (c, _) => OptionalLong.of(c) }
+          .getOrElse(OptionalLong.empty())
     }
   }
 

@@ -4,8 +4,9 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.connector.read.{Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.execution.{CoalesceExec, ProjectExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
@@ -714,6 +715,27 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           if c.numPartitions == 1 && c.child.exists(_.isInstanceOf[BatchScanExec]) => c
     })
 
+  /** Runs `body` with session confs set, then restores each one. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private val MinPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+  private val Advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+  private val ParallelismFirst = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+
+  /** The statistics a DSv2 scan in `df`'s plan reports. */
+  private def reported(df: DataFrame): Statistics =
+    df.queryExecution.sparkPlan.collectFirst { case s: BatchScanExec => s.scan }.get
+      .asInstanceOf[SupportsReportStatistics].estimateStatistics()
+
+  private def reportedBytes(df: DataFrame): Long = reported(df).sizeInBytes().getAsLong
+
   private def dailyCfg(out: String) = OutreachPipeline.SyncConfig(
     resource = "prospects", pagesDir = "", outDir = out,
     replicationType = "previous_day", today = LocalDate.of(2019, 7, 5))
@@ -722,15 +744,19 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.read.format("graft.sources.JsonApiSource")
       .option("resource", "prospects").options(options).load()
 
-  /** The checked-in prospects pages behind [[FixtureApiServer]]'s
+  /** The prospects pages in `dir` behind [[FixtureApiServer]]'s
     * opaque-cursor chain: one sequential scan partition.
     */
-  private def overChain[T](f: DataFrame => T): T = {
+  private def overServer[T](dir: String)(f: DataFrame => T): T = {
     JsonApiToken.clear()
-    val server = new FixtureApiServer("prospects",
-      getClass.getResource("/jsonapi_sync/prospects").getPath)
+    val server = new FixtureApiServer("prospects", dir)
     try f(jsonapi(server.sourceOptions)) finally server.stop()
   }
+
+  private val fixturePages = getClass.getResource("/jsonapi_sync/prospects").getPath
+
+  /** The checked-in prospects pages over the chain. */
+  private def overChain[T](f: DataFrame => T): T = overServer(fixturePages)(f)
 
   test("CoalesceSinglePartitionScan: a previous_day sync over the opaque " +
       "cursor chain writes in ONE job with no Exchange") {
@@ -765,31 +791,108 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(hashExchanges(run.plans).nonEmpty, run.plans.mkString("\n"))
   }
 
-  test("CoalesceSinglePartitionScan: a scan larger than the advisory " +
-      "partition size keeps its hash Exchange") {
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prev = spark.conf.getOption(key)
+  test("CoalesceSinglePartitionScan: a scan over AQE's one-partition " +
+      "bound keeps its hash Exchange") {
     overChain { pages =>
-      val sized = pages.queryExecution.sparkPlan.collectFirst {
-        case s: BatchScanExec => s.scan
-      }.get.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
-      val bytes = sized.estimateStatistics().sizeInBytes().getAsLong
+      val bytes = reportedBytes(pages)
       assert(bytes > 1L, s"reported size: $bytes")
       def dedupRun() = SparkRun(spark) {
         Incremental.dedupLatest(pages, Seq("id"), "attributes_updatedAt",
           Seq("type")).collect()
       }
+      def isCoalesced(run: SparkRun[_]): Boolean = {
+        val kept = hashExchanges(run.plans).nonEmpty
+        assert(coalesced(run.plans).nonEmpty != kept, run.plans.mkString("\n"))
+        !kept
+      }
       val fits = dedupRun()
-      assert(coalesced(fits.plans).size == 1, fits.plans.mkString("\n"))
-      try {
-        spark.conf.set(key, (bytes - 1).toString)
-        val over = dedupRun()
-        assert(coalesced(over.plans).isEmpty, over.plans.mkString("\n"))
-        assert(hashExchanges(over.plans).nonEmpty, over.plans.mkString("\n"))
-        assert(over.value.toSet == fits.value.toSet)
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+      assert(isCoalesced(fits))
+      val under = (bytes - 1).toString
+      // above minPartitionSize but far below the advisory size: over
+      // the bound of AQE's default, parallelism-first coalescing
+      val over = withConfs(MinPartitionSize -> under)(dedupRun())
+      assert(!isCoalesced(over))
+      assert(over.value.toSet == fits.value.toSet)
+      // without parallelism-first, AQE folds up to the advisory size
+      withConfs(ParallelismFirst -> "false", MinPartitionSize -> under) {
+        assert(isCoalesced(dedupRun()))
+        assert(!withConfs(Advisory -> under)(isCoalesced(dedupRun())))
+      }
+      withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        assert(!isCoalesced(dedupRun()))
+      }
+    }
+  }
+
+  test("CoalesceSinglePartitionScan: the JSON:API chain reports at least " +
+      "the bytes it shuffles, and no size when its count is stale") {
+    val rnd = new scala.util.Random(7)
+    // long, incompressible values: the schema's default width (about
+    // 3.6 KB for the 207 prospects columns) understates these rows
+    val recs = (1L to 30L).map(i => (i % 20, "prospect",
+      f"2019-06-${i % 28 + 1}%02dT00:00:00Z", Seq.fill(8000)(rnd.nextInt(16).toHexString).mkString))
+    def dedupRun(pages: DataFrame) = SparkRun(spark) {
+      Incremental.dedupLatest(pages, Seq("id"), "attributes_updatedAt").collect()
+    }
+    Seq(fixturePages, TestPages.write(recs.grouped(15).toSeq)).foreach { dir =>
+      overServer(dir) { pages =>
+        val bytes = reportedBytes(pages)
+        // with coalescing off the shuffle stays, and AQE measures it
+        val run = withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+          dedupRun(pages)
+        }
+        val written = run.plans.flatMap(p => collect(p) {
+          case s: ShuffleQueryStageExec => s.mapStats.get.bytesByPartitionId.sum
+        })
+        assert(written.size == 1 && written.head <= bytes, s"$dir: $written B vs $bytes B")
+      }
+    }
+    // a count no larger than page 1 while a next page exists is stale:
+    // the size is unknown, so the chain keeps its shuffle
+    overServer(TestPages.write(recs.grouped(15).toSeq, count = Some(15))) { pages =>
+      val stats = reported(pages)
+      assert(!stats.sizeInBytes().isPresent && !stats.numRows().isPresent)
+      val run = dedupRun(pages)
+      assert(coalesced(run.plans).isEmpty && hashExchanges(run.plans).nonEmpty,
+        run.plans.mkString("\n"))
+      assert(run.value.length == 20)
+    }
+  }
+
+  test("CoalesceSinglePartitionScan: AQE reads a shuffle within the rule's " +
+      "bound as one partition") {
+    import org.apache.spark.sql.functions._
+    // (partitions AQE read the shuffle as, bytes the shuffle wrote)
+    def shuffled(): (Int, Long) = {
+      val df = spark.range(0L, 20000L)
+        .select(col("id"), sha2(col("id").cast("string"), 256).as("h"))
+        .repartition(col("id"))
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val stage = collect(plan) { case s: ShuffleQueryStageExec => s }.head
+      val parts = collect(plan) { case r: AQEShuffleReadExec => r.partitionSpecs.size }
+        .headOption.getOrElse(stage.shuffle.numPartitions)
+      (parts, stage.mapStats.get.bytesByPartitionId.sum)
+    }
+    val total = shuffled()._2
+    // (confs, whether the shuffle is within the bound); each case over
+    // the bound is one where AQE splits the shuffle too
+    val cases = Seq(
+      Seq(MinPartitionSize -> s"$total") -> true,
+      Seq(MinPartitionSize -> s"${total / 5}") -> false,
+      Seq(ParallelismFirst -> "false", MinPartitionSize -> s"${total / 2}") -> true,
+      Seq(ParallelismFirst -> "false", Advisory -> s"${total / 3}",
+        MinPartitionSize -> s"${total / 8}") -> false,
+      Seq("spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "1",
+        MinPartitionSize -> s"${total / 2}") -> true,
+      Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false") -> false)
+    cases.foreach { case (confs, one) =>
+      withConfs(confs: _*) {
+        val bound = CoalesceSinglePartitionScan(spark).onePartitionBytes
+        val (parts, bytes) = shuffled()
+        assert(bytes == total)
+        assert(bound.exists(_ >= bytes) == one, s"$confs: bound $bound, $bytes B")
+        assert((parts == 1) == one, s"$confs: AQE read $parts partitions of $bytes B")
       }
     }
   }
@@ -801,8 +904,8 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (1L, "prospect", "2019-06-02T00:00:00Z", "b"))))
     val planned = Incremental.dedupLatest(jsonapi(Map("path" -> dir)),
       Seq("id"), "attributes_updatedAt").queryExecution.sparkPlan
-    val once = CoalesceSinglePartitionScan(planned)
-    val twice = CoalesceSinglePartitionScan(once)
+    val once = CoalesceSinglePartitionScan(spark)(planned)
+    val twice = CoalesceSinglePartitionScan(spark)(once)
     assert(coalesced(Seq(once)).size == 1, once)
     assert(twice.collect { case c: CoalesceExec => c }.size == 1, twice)
     assert(twice.fastEquals(once))
@@ -814,27 +917,23 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (1L, "prospect", "2019-06-01T00:00:00Z", "a"),
       (1L, "prospect", "2019-06-02T00:00:00Z", "b"),
       (2L, "account", "2019-06-02T00:00:00Z", "c"))))
-    val key = "spark.sql.codegen.wholeStage"
-    val prev = spark.conf.getOption(key)
-    try Seq("true", "false").foreach { codegen =>
-      spark.conf.set(key, codegen)
-      // every scan column and a filter the source cannot take: the
-      // planner's Project over the Filter is an identity, kept only
-      // because the row-based scan needs it
-      val run = SparkRun(spark) {
-        Incremental.dedupLatest(jsonapi(Map("path" -> dir))
-          .filter(org.apache.spark.sql.functions.col("attributes_firstName")
-            .rlike("^[ac]$")),
-          Seq("id"), "attributes_updatedAt").collect()
+    Seq("true", "false").foreach { codegen =>
+      withConfs("spark.sql.codegen.wholeStage" -> codegen) {
+        // every scan column and a filter the source cannot take: the
+        // planner's Project over the Filter is an identity, kept only
+        // because the row-based scan needs it
+        val run = SparkRun(spark) {
+          Incremental.dedupLatest(jsonapi(Map("path" -> dir))
+            .filter(org.apache.spark.sql.functions.col("attributes_firstName")
+              .rlike("^[ac]$")),
+            Seq("id"), "attributes_updatedAt").collect()
+        }
+        assert(run.value.map(_.getAs[String]("attributes_firstName")).sorted
+          .toSeq == Seq("a", "c"), s"codegen=$codegen")
+        val units = coalesced(run.plans)
+        assert(units.size == 1, run.plans.mkString("\n"))
+        assert(units.head.child.isInstanceOf[ProjectExec], units.head)
       }
-      assert(run.value.map(_.getAs[String]("attributes_firstName")).sorted
-        .toSeq == Seq("a", "c"), s"codegen=$codegen")
-      val units = coalesced(run.plans)
-      assert(units.size == 1, run.plans.mkString("\n"))
-      assert(units.head.child.isInstanceOf[ProjectExec], units.head)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -846,16 +945,17 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val onePage = TestPages.write(Seq(recs))
     val threePages = TestPages.write(recs.grouped(14).toSeq)
     val facts = java.nio.file.Files.createTempDirectory("graft-facts").toString
-    spark.range(1L, 61L).select(col("id"), (col("id") * 10).as("v"))
+    spark.range(1L, 20001L)
+      .select(col("id"), sha2(col("id").cast("string"), 256).as("v"))
       .repartition(4).write.mode("overwrite").parquet(facts)
     def joined(dir: String): DataFrame =
       jsonapi(Map("path" -> dir)).select("id", "attributes_firstName")
         .join(spark.read.parquet(facts), "id")
-    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    // the one-page scan is within the rule's bound; the join's shuffle,
+    // which carries the facts too, is several times over it
+    val bound = reportedBytes(jsonapi(Map("path" -> onePage)))
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        MinPartitionSize -> bound.toString) {
       assert(spark.read.parquet(facts).rdd.getNumPartitions > 1)
       val one = SparkRun(spark)(joined(onePage).collect())
       val many = joined(threePages).collect()
@@ -865,9 +965,6 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       // EnsureRequirements ran after the rule: the join stage (the
       // last to complete) runs at the shuffle's partition count
       assert(one.stageTasks.last > 1, one.stageTasks)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -52,21 +52,22 @@ object SparkRun {
 /** JSON:API page envelopes written to a directory, one file per page,
   * for tests that need records the checked-in fixtures lack. Each
   * record is (id, type, updatedAt, firstName); `meta.count` is the
-  * total over all pages, as a server reports it.
+  * total over all pages, as a server reports it, unless `count` says
+  * otherwise.
   */
 object TestPages {
   type Rec = (Long, String, String, String)
 
-  def write(pages: Seq[Seq[Rec]]): String = {
+  def write(pages: Seq[Seq[Rec]], count: Option[Int] = None): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-pages")
-    val count = pages.map(_.size).sum
+    val metaCount = count.getOrElse(pages.map(_.size).sum)
     pages.zipWithIndex.foreach { case (recs, i) =>
       val data = recs.map { case (id, tpe, ts, name) =>
         s"""{"id": $id, "type": "$tpe", "attributes": """ +
           s"""{"firstName": "$name", "updatedAt": "$ts"}}"""
       }.mkString("[", ",\n", "]")
       java.nio.file.Files.writeString(dir.resolve(f"page${i + 1}%03d.json"),
-        s"""{"data": $data, "meta": {"count": $count}, "links": {}}""")
+        s"""{"data": $data, "meta": {"count": $metaCount}, "links": {}}""")
     }
     dir.toString
   }
