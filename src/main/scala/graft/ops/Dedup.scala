@@ -78,51 +78,37 @@ object Dedup {
     */
   def materialize(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
-  /** [[materialize]] that also returns the row count, measured DURING
-    * the checkpoint job via an [[org.apache.spark.sql.Observation]]
-    * (CollectMetrics rides the plan as a pass-through; the eager
-    * localCheckpoint is the action that populates it). The iterative
-    * loops ([[Graph]]) paid materialize + count = TWO driver actions
-    * per round for one round's data — at bench scale each extra action
-    * is pure planning/scheduling floor (guide §1.2: remove passes), at
-    * cluster scale it is a full extra job submission per round. Row
-    * counts are what gate the loops' broadcast decisions, so the fold
-    * keeps the measured-cardinality contract with half the actions.
+  /** [[materialize]] that also returns the row count, observed in the
+    * checkpoint job ([[materializeObserved]]). The iterative loops
+    * ([[Graph]]) paid materialize + count = TWO driver actions per
+    * round; row counts gate the loops' broadcast decisions.
     */
   def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, count(lit(1)).as("__n"))
-      .localCheckpoint(eager = true)
-    (cp, obs.get("__n").asInstanceOf[Long])
+    val (cp, m) = materializeObserved(df, count(lit(1)).as("__n"))
+    (cp, m("__n").asInstanceOf[Long])
   }
 
-  /** [[materializeCounted]] that additionally observes `max(c)` in the
-    * SAME checkpoint job. For loops whose per-round renormalization
-    * needs a global scalar over the round's table ([[Graph.hitsE6]]'s
-    * max-norm), the scalar used to ride the NEXT consumer's plan as a
-    * broadcast 1-row cross join — one extra aggregate stage plus a
-    * broadcast build per round. Observed during the materialize, it is
-    * a driver literal by the time the consumer plans: same rows, same
-    * max, zero extra stages (guide §1.2: remove passes). Returns None
-    * for the max when the table is empty (count 0) — callers decide
-    * whether that is an error.
+  /** [[materializeCounted]] that also observes `max(c)` in the same
+    * job, for loops whose per-round renormalization needs a global
+    * scalar over the round's table ([[Graph.hitsE6]]'s max-norm): a
+    * driver literal by the time the consumer plans, instead of a
+    * broadcast 1-row cross join per round. The max is None when the
+    * table is empty (count 0) — callers decide whether that is an
+    * error.
     */
   def materializeCountedMax(df: DataFrame, c: String)
       : (DataFrame, Long, Option[Long]) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, count(lit(1)).as("__n"), max(col(c)).as("__mx"))
-      .localCheckpoint(eager = true)
-    val m = obs.get
+    val (cp, m) = materializeObserved(df,
+      count(lit(1)).as("__n"), max(col(c)).as("__mx"))
     (cp, m("__n").asInstanceOf[Long],
       Option(m("__mx")).map(_.asInstanceOf[Long]))
   }
 
-  /** [[materializeCounted]] generalized to arbitrary observed metrics:
-    * every aggregate in `metrics` is measured DURING the checkpoint job
-    * (CollectMetrics pass-through, same rows) instead of as its own
-    * scan+action afterwards (guide §1.2: remove passes). The metric
-    * expressions are the callers' own, verbatim — same aggregate over
-    * the same rows, so gate flags derived from them cannot move.
+  /** Eagerly [[materialize]] `df` and return every aggregate in
+    * `metrics` measured DURING the checkpoint job (an
+    * [[org.apache.spark.sql.Observation]]: CollectMetrics rides the
+    * plan as a pass-through, same rows) instead of as its own
+    * scan+action afterwards (guide §1.2: remove passes).
     *
     * PLACEMENT CONSTRAINT (measured): the metrics attach at the TOP of
     * the checkpointed plan, and that is the only placement that works —

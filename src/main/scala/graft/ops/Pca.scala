@@ -268,9 +268,9 @@ object Pca {
     }
   }
 
-  /** Train once per (session-agnostic) corpus: means + full mirrored
-    * covariance + trajectory. Keyed by the versioned dir upstream
-    * (the bpeMergeCache pattern) — this method itself is pure.
+  /** Train once per corpus: means + full mirrored covariance +
+    * trajectory. Memoized upstream ([[graft.Memo]]) — this method
+    * itself is pure.
     */
   def train(emb: DataFrame, idCol: String, vecCol: String, iters: Int)
       : (Array[Long], Seq[Array[Long]]) =

@@ -628,30 +628,29 @@ object ScaleQueries {
 
   /** The pinned matryoshka candidate table — ONE |Q|·n brute join
     * computing every curve point's prefix similarity per pair —
-    * memoized per (session, dir) because it is BOTH the curve's data
+    * memoized because it is BOTH the curve's data
     * ([[embedMatryoshka]]) and the exact-prefix ground truth the
     * truncated-dims IVF serving path gates against ([[annIvfMrl]]):
     * the exact harness is priced once, not once per consumer.
     */
   private def matryoshkaCand(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"mrl-cand:${graft.Tables.versioned(dir)}", {
-        val emb = t(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val corpus = graft.ops.Dedup.spread(
-          emb.select(col("vec_id").as("cid"), col("embedding").as("cv")))
-        val joined = graft.ops.Hints.chunkedBroadcastThetaJoin(
-          corpus, queries,
-          chunkKey = col("qid"), cond = col("qid") =!= col("cid"))
-        graft.ops.Dedup.materialize(
-          mrlDims.foldLeft(joined) { (df, d) =>
-            df.withColumn(s"sim_$d",
-              round(cosine_sim(slice(col("qv"), 1, d),
-                slice(col("cv"), 1, d)), 4))
-          }.select(col("qid") +: col("cid") +:
-            mrlDims.map(d => col(s"sim_$d")): _*))
-      })
+    graft.Memo.frame(s, dir, "mrl-cand") {
+      val emb = t(s, dir, "embeddings")
+      val queries = emb.filter(col("vec_id") % 20 === 0)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val corpus = graft.ops.Dedup.spread(
+        emb.select(col("vec_id").as("cid"), col("embedding").as("cv")))
+      val joined = graft.ops.Hints.chunkedBroadcastThetaJoin(
+        corpus, queries,
+        chunkKey = col("qid"), cond = col("qid") =!= col("cid"))
+      graft.ops.Dedup.materialize(
+        mrlDims.foldLeft(joined) { (df, d) =>
+          df.withColumn(s"sim_$d",
+            round(cosine_sim(slice(col("qv"), 1, d),
+              slice(col("cv"), 1, d)), 4))
+        }.select(col("qid") +: col("cid") +:
+          mrlDims.map(d => col(s"sim_$d")): _*))
+    }
 
   /** Exact prefix-similarity top-3 at truncation `d` over the pinned
     * candidate table — the per-curve-point ranking shared by the
@@ -1045,7 +1044,7 @@ object ScaleQueries {
   private def labeledIvfIndex(s: SparkSession, dir: String): String = {
     val emb = t(s, dir, "embeddings")
     val (_, codebook) = fullIvfIndex(s, dir)
-    memoCodebook(s"ivf-labeled:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "ivf-labeled") {
       val p = java.nio.file.Files
         .createTempDirectory("graft_ivf_labeled").toString
       Similarity.ivfIndexWriteLabeled(emb, "vec_id", "label",
@@ -1109,7 +1108,7 @@ object ScaleQueries {
     val (_, codebook) = fullIvfIndex(s, dir)
     val basePath = labeledIvfIndex(s, dir)
     val path =
-      memoCodebook(s"ivf-labeled-forget:${graft.Tables.versioned(dir)}") {
+      graft.Memo.value(dir, "ivf-labeled-forget") {
         val p = java.nio.file.Files
           .createTempDirectory("graft_ivf_labeled_forget").toString
         Similarity.ivfIndexDeriveLabeled(s, basePath, p, lit(true))
@@ -1146,7 +1145,7 @@ object ScaleQueries {
     val (_, codebook) = fullIvfIndex(s, dir)
     val basePath = labeledIvfIndex(s, dir)
     val path =
-      memoCodebook(s"ivf-labeled-delta:${graft.Tables.versioned(dir)}") {
+      graft.Memo.value(dir, "ivf-labeled-delta") {
         val p = java.nio.file.Files
           .createTempDirectory("graft_ivf_labeled_delta").toString
         Similarity.ivfIndexDeriveLabeled(s, basePath, p,
@@ -1181,28 +1180,27 @@ object ScaleQueries {
     * gate and any future filtered variants share it.
     */
   private def exactFilteredTop3(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"ann-filtered-exact:${graft.Tables.versioned(dir)}", {
-        val emb = t(s, dir, "embeddings")
-        val queries = emb.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-            col("embedding").as("qv"))
-        val corpus = graft.ops.Dedup.spread(
-          emb.select(col("vec_id").as("cid"), col("label").as("clabel"),
-            col("embedding").as("cv")))
-        graft.ops.Dedup.materialize(
-          graft.ops.Hints.chunkedBroadcastThetaJoin(corpus, queries,
-              chunkKey = col("qid"),
-              cond = col("qid") =!= col("cid") &&
-                col("clabel") === col("qlabel"))
-            .withColumn("sim_r",
-              round(cosine_sim(col("qv"), col("cv")), 4))
-            .withColumn("rnk", row_number().over(
-              Window.partitionBy(col("qid"))
-                .orderBy(col("sim_r").desc, col("cid"))))
-            .filter(col("rnk") <= 3)
-            .select(col("qid"), col("cid")))
-      })
+    graft.Memo.frame(s, dir, "ann-filtered-exact") {
+      val emb = t(s, dir, "embeddings")
+      val queries = emb.filter(col("vec_id") % 20 === 0)
+        .select(col("vec_id").as("qid"), col("label").as("qlabel"),
+          col("embedding").as("qv"))
+      val corpus = graft.ops.Dedup.spread(
+        emb.select(col("vec_id").as("cid"), col("label").as("clabel"),
+          col("embedding").as("cv")))
+      graft.ops.Dedup.materialize(
+        graft.ops.Hints.chunkedBroadcastThetaJoin(corpus, queries,
+            chunkKey = col("qid"),
+            cond = col("qid") =!= col("cid") &&
+              col("clabel") === col("qlabel"))
+          .withColumn("sim_r",
+            round(cosine_sim(col("qv"), col("cv")), 4))
+          .withColumn("rnk", row_number().over(
+            Window.partitionBy(col("qid"))
+              .orderBy(col("sim_r").desc, col("cid"))))
+          .filter(col("rnk") <= 3)
+          .select(col("qid"), col("cid")))
+    }
 
   /** Driver-visible recall gate for [[annFiltered]] — the
     * `ann_ivf_recall` contract under the metadata predicate. Floor 80
@@ -1361,8 +1359,7 @@ object ScaleQueries {
     * certification pair and their exact ground truths.
     */
   private def clusteredEmb(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"clustered-emb:${graft.Tables.versioned(dir)}",
+    graft.Memo.frame(s, dir, "clustered-emb")(
       graft.ops.Dedup.materialize(
         t(s, dir, "embeddings").select(col("vec_id"),
           transform(sequence(lit(0), lit(63)), d => {
@@ -1381,23 +1378,22 @@ object ScaleQueries {
     * [[exactGroundTruth]].
     */
   private def clusteredExactTop3(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"clustered-exact:${graft.Tables.versioned(dir)}", {
-        val emb = clusteredEmb(s, dir)
-        val queries = emb.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val corpus = graft.ops.Dedup.spread(
-          emb.select(col("vec_id").as("cid"), col("embedding").as("cv")))
-        graft.ops.Dedup.materialize(
-          graft.ops.Hints.chunkedBroadcastThetaJoin(corpus, queries,
-              chunkKey = col("qid"), cond = col("qid") =!= col("cid"))
-            .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
-            .withColumn("rnk", row_number().over(
-              Window.partitionBy(col("qid"))
-                .orderBy(col("sim_r").desc, col("cid"))))
-            .filter(col("rnk") <= 3)
-            .select(col("qid"), col("cid")))
-      })
+    graft.Memo.frame(s, dir, "clustered-exact") {
+      val emb = clusteredEmb(s, dir)
+      val queries = emb.filter(col("vec_id") % 20 === 0)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val corpus = graft.ops.Dedup.spread(
+        emb.select(col("vec_id").as("cid"), col("embedding").as("cv")))
+      graft.ops.Dedup.materialize(
+        graft.ops.Hints.chunkedBroadcastThetaJoin(corpus, queries,
+            chunkKey = col("qid"), cond = col("qid") =!= col("cid"))
+          .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
+          .withColumn("rnk", row_number().over(
+            Window.partitionBy(col("qid"))
+              .orderBy(col("sim_r").desc, col("cid"))))
+          .filter(col("rnk") <= 3)
+          .select(col("qid"), col("cid")))
+    }
 
   /** Shared recall-accounting row for the clustered certifications:
     * (nlist, nprobe, n_exact, hits, recall_e6, floor_met) — the
@@ -1440,13 +1436,13 @@ object ScaleQueries {
     * recall arithmetic all recompute in DuckDB.
     */
   /** The planted corpus's √n-stride codebook, collected ONCE per dir
-    * (memoCodebook — plain data) and shared by all three clustered
-    * certifications; a per-query re-collect would duplicate the
-    * corpus filter + orderBy + driver collect every invocation.
+    * and shared by all three clustered certifications; a per-query
+    * re-collect would duplicate the corpus filter + orderBy + driver
+    * collect every invocation.
     */
   private def clusteredCodebook(s: SparkSession, dir: String)
       : Array[(Long, Seq[Float])] =
-    memoCodebook(s"clustered-cb:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "clustered-cb") {
       val emb = clusteredEmb(s, dir)
       graft.ops.Similarity.sampledCodebook(emb, "vec_id", "embedding",
         graft.ops.Similarity.sqrtStride(emb.count()))
@@ -1470,8 +1466,7 @@ object ScaleQueries {
     */
   private def clusteredExactMaxsim3(s: SparkSession, dir: String)
       : DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"clustered-maxsim:${graft.Tables.versioned(dir)}",
+    graft.Memo.frame(s, dir, "clustered-maxsim")(
       graft.ops.Dedup.materialize(
         maxsimRankOver(clusteredEmb(s, dir))
           .select(col("qid"), col("cid"))))
@@ -1519,27 +1514,26 @@ object ScaleQueries {
     */
   private def clusteredExactFiltered3(s: SparkSession, dir: String)
       : DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"clustered-filtered-exact:${graft.Tables.versioned(dir)}", {
-        val emb = clusteredEmbLabeled(s, dir)
-        val queries = emb.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-            col("embedding").as("qv"))
-        val corpus = graft.ops.Dedup.spread(
-          emb.select(col("vec_id").as("cid"), col("label").as("clabel"),
-            col("embedding").as("cv")))
-        graft.ops.Dedup.materialize(
-          graft.ops.Hints.chunkedBroadcastThetaJoin(corpus, queries,
-              chunkKey = col("qid"),
-              cond = col("qid") =!= col("cid") &&
-                col("clabel") === col("qlabel"))
-            .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
-            .withColumn("rnk", row_number().over(
-              Window.partitionBy(col("qid"))
-                .orderBy(col("sim_r").desc, col("cid"))))
-            .filter(col("rnk") <= 3)
-            .select(col("qid"), col("cid")))
-      })
+    graft.Memo.frame(s, dir, "clustered-filtered-exact") {
+      val emb = clusteredEmbLabeled(s, dir)
+      val queries = emb.filter(col("vec_id") % 20 === 0)
+        .select(col("vec_id").as("qid"), col("label").as("qlabel"),
+          col("embedding").as("qv"))
+      val corpus = graft.ops.Dedup.spread(
+        emb.select(col("vec_id").as("cid"), col("label").as("clabel"),
+          col("embedding").as("cv")))
+      graft.ops.Dedup.materialize(
+        graft.ops.Hints.chunkedBroadcastThetaJoin(corpus, queries,
+            chunkKey = col("qid"),
+            cond = col("qid") =!= col("cid") &&
+              col("clabel") === col("qlabel"))
+          .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
+          .withColumn("rnk", row_number().over(
+            Window.partitionBy(col("qid"))
+              .orderBy(col("sim_r").desc, col("cid"))))
+          .filter(col("rnk") <= 3)
+          .select(col("qid"), col("cid")))
+    }
 
   /** The FILTERED-search budget collapse on clustered data, certified
     * — [[Similarity.filteredNprobe]]'s scaladoc claims the filtered
@@ -1662,40 +1656,14 @@ object ScaleQueries {
 
   /** The exact brute-force scan is the most expensive join in the
     * suite and BOTH ANN recall gates need the same k=3 ground truth,
-    * so it is computed once per (session, dataset) and pinned via
+    * so it is computed once per dataset and pinned via
     * localCheckpoint — the materialized table is tiny (|queries|·k
     * rows), only the scan that builds it is big. `ann_topk` itself
     * stays uncached: it IS the headline exact query being timed.
     */
   private def exactGroundTruth(s: SparkSession, dir: String, k: Int): DataFrame =
-    graft.SessionMemo.getOrCompute(s, s"ann-exact:${graft.Tables.versioned(dir)}:$k",
+    graft.Memo.frame(s, dir, s"ann-exact:$k")(
       graft.ops.Dedup.materialize(exactTopK(s, dir, k)))
-
-  /** Train-once memos (the bpeMergeCache pattern): each trained
-    * codebook is deterministic plain data keyed by corpus dir —
-    * exactly how a real pipeline treats a quantizer (fit once, reuse
-    * everywhere), so `ann_ivf_trained` and its recall gate (and the
-    * PQ / SemDeDup query+gate pairs) train ONE codebook per dir
-    * instead of one per consumer. Keys carry
-    * [[graft.Tables.versioned]]'s dir fingerprint (r8): an in-place
-    * parquet regen retrains instead of serving stale codebooks.
-    * Plain arrays, not DataFrames — session identity is irrelevant.
-    */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  // NOT computeIfAbsent: memo blocks nest (an index memo computes the
-  // stats/codebook memos it depends on), and a nested computeIfAbsent
-  // whose key hashes to the same bin throws "Recursive update" —
-  // bin-dependent, so it surfaced only for some (key, SF) pairs. The
-  // get/putIfAbsent two-step is reentrant; a concurrent duplicate
-  // compute is benign because every memoized value is deterministic.
-  private def memoCodebook[T <: AnyRef](key: String)(f: => T): T = {
-    val cached = codebookCache.get(key)
-    if (cached != null) return cached.asInstanceOf[T]
-    val v = f
-    val prev = codebookCache.putIfAbsent(key, v)
-    (if (prev != null) prev else v).asInstanceOf[T]
-  }
 
   /** Shared recall-gate core: join an approximate top-k result against
     * the exact one and emit (n_queries, recall_floor_pct, floor_met).
@@ -1877,7 +1845,7 @@ object ScaleQueries {
     */
   def annIvfTrained(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val codebook = memoCodebook(s"ivf-trained:${graft.Tables.versioned(dir)}") {
+    val codebook = graft.Memo.value(dir, "ivf-trained") {
       val nlist = math.max(4, (emb.count() / 149).toInt)
       val (cents, _) = Similarity.kmeansTrain(
         emb, "vec_id", "embedding", k = nlist, iters = 4)
@@ -1908,7 +1876,7 @@ object ScaleQueries {
     */
   def annIvfpq(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val cbs = memoCodebook(s"pq:${graft.Tables.versioned(dir)}:16:16:2") {
+    val cbs = graft.Memo.value(dir, "pq:16:16:2") {
       Similarity.kmeansTrainMulti(emb, "vec_id", "embedding",
         m = 16, k = 16, iters = 2)._1
     }
@@ -1947,7 +1915,7 @@ object ScaleQueries {
     */
   private def fullIvfIndex(s: SparkSession, dir: String)
       : (String, Array[(Long, Seq[Float])]) =
-    memoCodebook(s"ivf-index:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "ivf-index") {
       val p = java.nio.file.Files
         .createTempDirectory("graft_ivf_index").toString
       val cb = Similarity.ivfIndexWrite(t(s, dir, "embeddings"),
@@ -2001,7 +1969,7 @@ object ScaleQueries {
                                  fullPath: String,
                                  codebook: Array[(Long, Seq[Float])])
       : String =
-    memoCodebook(s"ivf-delta:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "ivf-delta") {
       val emb = t(s, dir, "embeddings")
       val p = java.nio.file.Files
         .createTempDirectory("graft_ivf_delta").toString
@@ -2051,7 +2019,7 @@ object ScaleQueries {
   def annIndexForget(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val (fullPath, codebook) = fullIvfIndex(s, dir)
-    val path = memoCodebook(s"ivf-forget:${graft.Tables.versioned(dir)}") {
+    val path = graft.Memo.value(dir, "ivf-forget") {
       val p = java.nio.file.Files
         .createTempDirectory("graft_ivf_forget").toString
       Similarity.ivfIndexDerive(s, fullPath, p, lit(true))
@@ -2106,9 +2074,9 @@ object ScaleQueries {
     */
   private def fullIvfpqIndex(s: SparkSession, dir: String)
       : (String, Array[(Long, Seq[Float])], Array[Array[Array[Float]]]) =
-    memoCodebook(s"ivfpq-index:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "ivfpq-index") {
       val emb = t(s, dir, "embeddings")
-      val cbs = memoCodebook(s"pq:${graft.Tables.versioned(dir)}:16:16:2") {
+      val cbs = graft.Memo.value(dir, "pq:16:16:2") {
         Similarity.kmeansTrainMulti(emb, "vec_id", "embedding",
           m = 16, k = 16, iters = 2)._1
       }
@@ -2164,7 +2132,7 @@ object ScaleQueries {
     val emb = t(s, dir, "embeddings")
     val (fullPath, coarse, cbs) = fullIvfpqIndex(s, dir)
     val deltaPath =
-      memoCodebook(s"ivfpq-delta:${graft.Tables.versioned(dir)}") {
+      graft.Memo.value(dir, "ivfpq-delta") {
         val p = java.nio.file.Files
           .createTempDirectory("graft_ivfpq_delta").toString
         // base = filter-copy of the memoized full code index (codes
@@ -2211,7 +2179,7 @@ object ScaleQueries {
     val emb = t(s, dir, "embeddings")
     val (fullPath, coarse, cbs) = fullIvfpqIndex(s, dir)
     val path =
-      memoCodebook(s"ivfpq-forget:${graft.Tables.versioned(dir)}") {
+      graft.Memo.value(dir, "ivfpq-forget") {
         val p = java.nio.file.Files
           .createTempDirectory("graft_ivfpq_forget").toString
         // filter-copy of the memoized full code index — see
@@ -2261,7 +2229,7 @@ object ScaleQueries {
     */
   private def sqStatsMemo(s: SparkSession, dir: String)
       : (Array[Double], Array[Double]) =
-    memoCodebook(s"sq-stats:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "sq-stats") {
       Similarity.sqStats(t(s, dir, "embeddings"), "embedding")
     }
 
@@ -2274,7 +2242,7 @@ object ScaleQueries {
   private def fullIvfsqIndex(s: SparkSession, dir: String)
       : (String, Array[(Long, Seq[Float])],
          (Array[Double], Array[Double])) =
-    memoCodebook(s"ivfsq-index:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "ivfsq-index") {
       val emb = t(s, dir, "embeddings")
       val coarse = Similarity.sampledCodebook(emb, "vec_id", "embedding",
         Similarity.sqrtStride(emb.count()))
@@ -2332,7 +2300,7 @@ object ScaleQueries {
     val emb = t(s, dir, "embeddings")
     val (fullPath, coarse, (mns, mxs)) = fullIvfsqIndex(s, dir)
     val deltaPath =
-      memoCodebook(s"ivfsq-delta:${graft.Tables.versioned(dir)}") {
+      graft.Memo.value(dir, "ivfsq-delta") {
         val p = java.nio.file.Files
           .createTempDirectory("graft_ivfsq_delta").toString
         // base = filter-copy of the memoized full SQ code index
@@ -2379,7 +2347,7 @@ object ScaleQueries {
     val emb = t(s, dir, "embeddings")
     val (fullPath, coarse, (mns, mxs)) = fullIvfsqIndex(s, dir)
     val path =
-      memoCodebook(s"ivfsq-forget:${graft.Tables.versioned(dir)}") {
+      graft.Memo.value(dir, "ivfsq-forget") {
         val p = java.nio.file.Files
           .createTempDirectory("graft_ivfsq_forget").toString
         // filter-copy of the memoized full code index — see
@@ -2480,7 +2448,7 @@ object ScaleQueries {
     * contract gated by `semdedup_gate`.
     */
   private def semCents(s: SparkSession, dir: String): Array[Array[Float]] =
-    memoCodebook(s"sem:${graft.Tables.versioned(dir)}:16:2") {
+    graft.Memo.value(dir, "sem:16:2") {
       Similarity.kmeansTrain(t(s, dir, "embeddings"),
         "vec_id", "embedding", k = 16, iters = 2)._1
     }
@@ -2564,7 +2532,7 @@ object ScaleQueries {
     */
   private def pq8Codebooks(s: SparkSession, dir: String)
       : Array[Array[Array[Float]]] =
-    memoCodebook(s"pq:${graft.Tables.versioned(dir)}:8:16:2") {
+    graft.Memo.value(dir, "pq:8:16:2") {
       Similarity.kmeansTrainMulti(t(s, dir, "embeddings"),
         "vec_id", "embedding", m = 8, k = 16, iters = 2)._1
     }
@@ -2720,8 +2688,7 @@ object ScaleQueries {
     * discipline applied to the exact kernel).
     */
   private def exactWindowPairs(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"ccexact-pairs:${graft.Tables.versioned(dir)}",
+    graft.Memo.frame(s, dir, "ccexact-pairs")(
       Dedup.materialize(
         Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
           n = 3, window = 20, threshold = 0.5)
@@ -2737,8 +2704,7 @@ object ScaleQueries {
     * [[Similarity.ivfIndexDerive]] at the pair-graph layer.
     */
   private def exactBaseLabels7(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"ccexact-base7:${graft.Tables.versioned(dir)}",
+    graft.Memo.frame(s, dir, "ccexact-base7")(
       Dedup.materialize(Dedup.connectedComponents(
         exactWindowPairs(s, dir)
           .filter(col("id_a") % 7 =!= 0 && col("id_b") % 7 =!= 0))))
@@ -2995,8 +2961,7 @@ object ScaleQueries {
     * by the whole maintained-label family.
     */
   private def lshIncrPairs(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"cclsh:${graft.Tables.versioned(dir)}",
+    graft.Memo.frame(s, dir, "cclsh")(
       Dedup.minhashPairsIncremental(t(s, dir, "documents"),
         "doc_id", "text", deltaOf = c => pmod(c, lit(10)) === 9,
         shingleN = 3, bands = 16, rowsPerBand = 8, threshold = 0.7))
@@ -3007,8 +2972,7 @@ object ScaleQueries {
     * against.
     */
   private def lshBaseLabels(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"cclsh-labels:${graft.Tables.versioned(dir)}",
+    graft.Memo.frame(s, dir, "cclsh-labels")(
       Dedup.materialize(Dedup.connectedComponents(
         lshIncrPairs(s, dir).filter(col("src") === "base")
           .select(col("id_a"), col("id_b")))))
@@ -3022,17 +2986,16 @@ object ScaleQueries {
     * consumers, not recomputed per query.
     */
   private def lshMaintainedLabels(s: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s,
-      s"cclsh-full:${graft.Tables.versioned(dir)}", {
-        val oldLabels = lshBaseLabels(s, dir)
-        val star = oldLabels.filter(col("id") =!= col("cluster_id"))
-          .select(col("cluster_id").as("id_a"), col("id").as("id_b"))
-        val deltaEdges = lshIncrPairs(s, dir)
-          .filter(col("src") === "delta")
-          .select(col("id_a"), col("id_b"))
-        Dedup.materialize(
-          Dedup.connectedComponents(star.unionByName(deltaEdges)))
-      })
+    graft.Memo.frame(s, dir, "cclsh-full") {
+      val oldLabels = lshBaseLabels(s, dir)
+      val star = oldLabels.filter(col("id") =!= col("cluster_id"))
+        .select(col("cluster_id").as("id_a"), col("id").as("id_b"))
+      val deltaEdges = lshIncrPairs(s, dir)
+        .filter(col("src") === "delta")
+        .select(col("id_a"), col("id_b"))
+      Dedup.materialize(
+        Dedup.connectedComponents(star.unionByName(deltaEdges)))
+    }
 
   /** CC label maintenance under DELETION — the direction star
     * contraction alone cannot absorb: forgetting a document can SPLIT
@@ -3241,13 +3204,11 @@ object ScaleQueries {
   }
 
   /** PCA trained once per corpus ([[graft.ops.Pca]], 3 power
-    * iterations) — the memoCodebook pattern: deterministic plain
-    * arrays keyed by the versioned dir.
+    * iterations).
     */
   private def pcaTrained(s: SparkSession, dir: String)
       : (Array[Long], Seq[Array[Long]]) =
-    memoCodebook[(Array[Long], Seq[Array[Long]])](
-      s"pca:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "pca") {
       graft.ops.Pca.trainFromStats(pcaStats(s, dir), iters = 3)
     }
 
@@ -3269,8 +3230,7 @@ object ScaleQueries {
     */
   private def pcaStats(s: SparkSession, dir: String)
       : (Long, Array[BigInt], Array[Array[BigInt]]) =
-    memoCodebook[(Long, Array[BigInt], Array[Array[BigInt]])](
-      s"pcastats:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "pcastats") {
       graft.ops.Pca.rawStatsFused(graft.ops.Pca.quantized(
         t(s, dir, "embeddings"), "vec_id", "embedding"))
     }
@@ -3369,8 +3329,7 @@ object ScaleQueries {
     */
   def pcaIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val baseStats = memoCodebook[(Long, Array[BigInt], Array[Array[BigInt]])](
-      s"pcaraw:${graft.Tables.versioned(dir)}") {
+    val baseStats = graft.Memo.value(dir, "pcaraw") {
       graft.ops.Pca.rawStatsFused(graft.ops.Pca.quantized(
         t(s, dir, "embeddings").filter(pmod(col("vec_id"), lit(10)) =!= 9),
         "vec_id", "embedding"))
@@ -3387,19 +3346,17 @@ object ScaleQueries {
       .orderBy(col("iter"), col("d"))
   }
 
-  /** Per-session parity-split staging of `embeddings` for the moment
-    * stream (the docStage pattern: two single-file splits in mtime
-    * order, so a file source replays them as two real micro-batches).
+  /** Parity-split staging of `embeddings` for the moment stream: two
+    * single-file splits in mtime order, so a file source replays them
+    * as two real micro-batches.
     */
-  private val embStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def embStage(s: SparkSession, dir: String): String =
-    embStageCache.computeIfAbsent(graft.Tables.versioned(dir), _ => {
+    graft.Memo.value(dir, "emb-stage") {
       val emb = t(s, dir, "embeddings")
       graft.streaming.IncrementalStream.stageSlices(
         (0 until 2).map(i => emb.filter(pmod(col("vec_id"), lit(2)) === i)))
         .toString
-    })
+    }
 
   /** The TWELFTH driver-visible stream shape — INDEX STATISTICS
     * maintained from a stream: embeddings replayed as ≥2 real
@@ -3520,8 +3477,7 @@ object ScaleQueries {
     */
   private def pcaDeflated(s: SparkSession, dir: String)
       : Seq[Array[Long]] =
-    memoCodebook[Seq[Array[Long]]](
-      s"pcadefl:${graft.Tables.versioned(dir)}") {
+    graft.Memo.value(dir, "pcadefl") {
       val stats = pcaStats(s, dir)
       val (mu, traj) = pcaTrained(s, dir)
       graft.ops.Pca.powerTrajectoryDeflated(

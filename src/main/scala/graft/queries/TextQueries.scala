@@ -1740,25 +1740,15 @@ object TextQueries {
     */
   private val BpeMerges = 8
 
-  /** Train-once memo: `bpe_merges`, `bpe_encode`, and `bpe_roundtrip`
+  /** Train-once: `bpe_merges`, `bpe_encode`, and `bpe_roundtrip`
     * all need the SAME deterministic merge table for a corpus dir —
     * exactly how a real pipeline treats a tokenizer (fit once, reuse
-    * everywhere). Keyed by (dir, nMerges); training is deterministic
-    * (lexicographic tie-break), so a cached result is byte-identical
-    * to a retrain and correctness cannot depend on cache state.
-    *
-    * Keys carry [[graft.Tables.versioned]]'s (name, size, mtime)
-    * fingerprint of the dir (r8, closing the r6/r7 fixed-data caveat):
-    * a dir whose parquet is regenerated in place within one JVM gets a
-    * new version and RETRAINS instead of being served merges trained
-    * on the old bytes (BpeSpec pins it). Unlike the session-bound
-    * frame memos ([[graft.SessionMemo]]) the cached value here is
-    * plain data, so session identity is irrelevant.
+    * everywhere). Training is deterministic (lexicographic tie-break),
+    * so a cached result is byte-identical to a retrain and correctness
+    * cannot depend on cache state.
     */
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Bpe.Merge]]()
   private def trainedMerges(s: SparkSession, dir: String): Seq[Bpe.Merge] =
-    bpeMergeCache.computeIfAbsent((graft.Tables.versioned(dir), BpeMerges), _ =>
+    graft.Memo.value(dir, "bpe")(
       Bpe.train(Bpe.wordDict(t(s, dir, "documents"), "text"), BpeMerges))
 
   /** BPE tokenizer training over the corpus (Bpe.train): the first
@@ -1793,11 +1783,10 @@ object TextQueries {
     */
   def bpeDrift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = bpeMergeCache.computeIfAbsent(
-      (graft.Tables.versioned(dir) + ":base", BpeMerges), _ =>
-        Bpe.train(Bpe.wordDict(
-          t(s, dir, "documents").filter(col("doc_id") % 7 =!= 0),
-          "text"), BpeMerges))
+    val base = graft.Memo.value(dir, "bpe-base")(
+      Bpe.train(Bpe.wordDict(
+        t(s, dir, "documents").filter(col("doc_id") % 7 =!= 0),
+        "text"), BpeMerges))
     val full = trainedMerges(s, dir)
     (1 to BpeMerges).map { i =>
       val b = base.lift(i - 1)
@@ -2026,15 +2015,11 @@ object TextQueries {
   private val QtIters = 3
   private val QtLr = 0.5
 
-  /** Train-once memo for the classifier weights (plain doubles, the
-    * bpeMergeCache pattern incl. its fixed-data assumption): the
-    * trajectory query and the scorer share one training per dir.
+  /** The classifier weights, trained once per dir: the trajectory
+    * query and the scorer share one training.
     */
-  private val qtCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Array[Double], Seq[(Int, Array[Double], Long, Long)])]()
   private def qtTrained(s: SparkSession, dir: String) =
-    qtCache.computeIfAbsent(graft.Tables.versioned(dir), _ =>
+    graft.Memo.value(dir, "qt")(
       graft.ops.Classifier.train(
         graft.ops.Classifier.features(
           t(s, dir, "documents"), "doc_id", "text", "lang"),
@@ -2104,17 +2089,13 @@ object TextQueries {
     * update's weights hash-compare bit-exactly too.
     */
   /** Base-corpus (90%) feature frame + its trained weights, shared by
-    * the incremental trainer and the holdout evaluation (the qtCache
-    * pattern incl. its fixed-data assumption).
+    * the incremental trainer and the holdout evaluation.
     */
-  private val qtBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Array[Double], Seq[(Int, Array[Double], Long, Long)])]()
   private def qtFeaturesAll(s: SparkSession, dir: String): DataFrame =
     graft.ops.Classifier.features(
       t(s, dir, "documents"), "doc_id", "text", "lang")
   private def qtBaseTrained(s: SparkSession, dir: String) =
-    qtBaseCache.computeIfAbsent(graft.Tables.versioned(dir), _ =>
+    graft.Memo.value(dir, "qt-base")(
       graft.ops.Classifier.train(
         qtFeaturesAll(s, dir).filter(pmod(col("id"), lit(10)) =!= 9),
         iters = QtIters, lr = QtLr))
@@ -2144,20 +2125,17 @@ object TextQueries {
         qtTrained(s, dir)._1)
       .orderBy(col("id"))
 
-  /** Per-dir staged copy of `documents` as two id-split parquet files
-    * with ordered mtimes, so a file-source stream replays it as two
-    * REAL micro-batches (the events stage-cache pattern; dir-keyed,
-    * fixed-data assumption as everywhere).
+  /** Staged copy of `documents` as two id-split parquet files with
+    * ordered mtimes, so a file-source stream replays it as two REAL
+    * micro-batches.
     */
-  private val docStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docStage(s: SparkSession, dir: String): String =
-    docStageCache.computeIfAbsent(graft.Tables.versioned(dir), _ => {
+    graft.Memo.value(dir, "doc-stage") {
       val docs = t(s, dir, "documents")
       graft.streaming.IncrementalStream.stageSlices(
         (0 until 2).map(i => docs.filter(pmod(col("doc_id"), lit(2)) === i)))
         .toString
-    })
+    }
 
   /** STREAMING deployment of the trained quality filter — the seventh
     * driver-visible stream shape: documents replayed through a file

@@ -232,10 +232,9 @@ object ScaleProbe {
     }
     // third field: time COLD (single run) instead of best-of-2 — the
     // trained-family queries memoize their training per (dir, version)
-    // ([[graft.queries.ScaleQueries]] codebook cache, qtCache), so a
-    // second run times only the post-training apply and would fake a
-    // near-zero exponent; the training pass IS the scaling story being
-    // measured (r7 VERDICT task 7).
+    // ([[graft.Memo]]), so a second run times only the post-training
+    // apply and would fake a near-zero exponent; the training pass IS
+    // the scaling story being measured (r7 VERDICT task 7).
     val targets: Seq[(String, (SparkSession, String) => DataFrame, Boolean)] = Seq(
       ("dedup_minhash", graft.queries.ScaleQueries.queries("dedup_minhash"), false),
       ("ann_lsh", graft.queries.ScaleQueries.queries("ann_lsh"), false),
@@ -243,7 +242,7 @@ object ScaleProbe {
       ("ann_ivfpq", graft.queries.ScaleQueries.queries("ann_ivfpq"), true),
       ("quality_train", graft.queries.TextQueries.queries("quality_train"), true),
       // r8 continuation: the evaluation family (cold — quality_auc
-      // trains via the shared qtCache memo, and the training pass is
+      // trains via the shared classifier memo, and the training pass is
       // part of its cost story), the Bellman–Ford rounds, and the
       // bounded-aggregator sampler (both warm — no trained state)
       ("quality_auc", graft.queries.TextQueries.queries("quality_auc"), true),

@@ -238,22 +238,47 @@ class AdvancedSpec extends AnyFunSuite {
       postPlanner)
   }
 
-  test("GraftSession.scala is the only source that calls SparkSession.builder") {
-    // one session factory: a second builder call anywhere under src/
-    // (comments and scaladoc aside) is a copy that will drift
-    val src = new java.io.File("src")
-    assert(src.isDirectory, s"run from the repo root: ${src.getAbsolutePath}")
+  /** (file name, code) of every .scala file under `root`, with
+    * comments and scaladoc stripped: the source scans below check what
+    * the code does, not what its comments mention.
+    */
+  private def sourcesUnder(root: String): Seq[(String, String)] = {
+    val dir = new java.io.File(root)
+    assert(dir.isDirectory, s"run from the repo root: ${dir.getAbsolutePath}")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(files)
       else Seq(f).filter(_.getName.endsWith(".scala"))
-    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
-    val callers = files(src).filter { f =>
-      val code = java.nio.file.Files.readString(f.toPath)
+    files(dir).map { f =>
+      f.getName -> java.nio.file.Files.readString(f.toPath)
         .replaceAll("(?s)/\\*.*?\\*/", "")
         .replaceAll("//[^\n]*", "")
-      builderCall.findFirstIn(code).isDefined
-    }.map(_.getName)
+    }
+  }
+
+  test("GraftSession.scala is the only source that calls SparkSession.builder") {
+    // one session factory: a second builder call anywhere under src/
+    // is a copy that will drift
+    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
+    val callers = sourcesUnder("src").collect {
+      case (name, code) if builderCall.findFirstIn(code).isDefined => name
+    }
     assert(callers == Seq("GraftSession.scala"), callers)
+  }
+
+  test("Memo.scala is the only memo: no hand-built version key or cache map") {
+    // a memo key built outside Memo, or a second cache map in the
+    // queries, is a second memo contract that will drift
+    val versionedCall = """\bversioned\s*\(""".r
+    val keyed = sourcesUnder("src").collect {
+      case (name, code) if versionedCall.findFirstIn(code).isDefined => name
+    }
+    assert(keyed.sorted == Seq("Memo.scala", "Tables.scala"), keyed)
+    val cacheCall =
+      """SessionMemo|computeIfAbsent|getOrElseUpdate|putIfAbsent""".r
+    val caches = sourcesUnder("src/main/scala/graft/queries").flatMap {
+      case (name, code) => cacheCall.findAllIn(code).map(m => s"$name: $m")
+    }
+    assert(caches.isEmpty, caches)
   }
 
   test("percentile gate: exact rank percentiles, sketch within bound") {
