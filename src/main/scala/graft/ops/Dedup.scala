@@ -1,7 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.CollectMetricsExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftColumnShim
 
 import graft.functions.dsl._
 
@@ -75,34 +79,9 @@ object Dedup {
     * `localCheckpoint` for a reliable `checkpoint` dir (localCheckpoint
     * partitions die with their executor); the blocks here are reclaimed
     * by the ContextCleaner once the frame is unreferenced.
+    * The returned frame's size is the bytes its blocks hold ([[Hints]]).
     */
-  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-
-  /** [[materialize]] that also returns the row count, observed in the
-    * checkpoint job ([[materializeObserved]]). The iterative loops
-    * ([[Graph]]) paid materialize + count = TWO driver actions per
-    * round; row counts gate the loops' broadcast decisions.
-    */
-  def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    val (cp, m) = materializeObserved(df, count(lit(1)).as("__n"))
-    (cp, m("__n").asInstanceOf[Long])
-  }
-
-  /** [[materializeCounted]] that also observes `max(c)` in the same
-    * job, for loops whose per-round renormalization needs a global
-    * scalar over the round's table ([[Graph.hitsE6]]'s max-norm): a
-    * driver literal by the time the consumer plans, instead of a
-    * broadcast 1-row cross join per round. The max is None when the
-    * table is empty (count 0) — callers decide whether that is an
-    * error.
-    */
-  def materializeCountedMax(df: DataFrame, c: String)
-      : (DataFrame, Long, Option[Long]) = {
-    val (cp, m) = materializeObserved(df,
-      count(lit(1)).as("__n"), max(col(c)).as("__mx"))
-    (cp, m("__n").asInstanceOf[Long],
-      Option(m("__mx")).map(_.asInstanceOf[Long]))
-  }
+  def materialize(df: DataFrame): DataFrame = materializeObserved(df)._1
 
   /** Eagerly [[materialize]] `df` and return every aggregate in
     * `metrics` measured DURING the checkpoint job (an
@@ -110,20 +89,39 @@ object Dedup {
     * plan as a pass-through, same rows) instead of as its own
     * scan+action afterwards (guide §1.2: remove passes).
     *
-    * PLACEMENT CONSTRAINT (measured): the metrics attach at the TOP of
-    * the checkpointed plan, and that is the only placement that works —
-    * under AQE a CollectMetrics below an exchange/join never delivers
-    * (the stage is re-planned and the registered accumulator is
-    * rebuilt; the Observation then returns zeros or an empty map). Do
-    * not thread an observed frame INTO an operator that shuffles it.
+    * PLACEMENT CONSTRAINT (measured): under AQE a CollectMetrics below
+    * an exchange never delivers (the stage is re-planned and the
+    * registered accumulator is rebuilt; the Observation then returns
+    * zeros or an empty map). The metrics attach at the TOP of the plan;
+    * a plan with an observer below an exchange throws before it runs,
+    * an observation that lacks a requested metric after it.
     */
   def materializeObserved(df: DataFrame, metrics: Column*)
       : (DataFrame, Map[String, Any]) = {
     val obs = new org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, metrics.head, metrics.tail: _*)
-      .localCheckpoint(eager = true)
-    (cp, obs.get)
+    val observed =
+      if (metrics.isEmpty) df else df.observe(obs, metrics.head, metrics.tail: _*)
+    requireFinalStageObservers(observed)
+    val cp = GraftColumnShim.sizedLeaf(observed.localCheckpoint(eager = true), None)
+    val m = if (metrics.isEmpty) Map.empty[String, Any] else obs.get
+    if (m.size != metrics.size)
+      throw new IllegalStateException(s"observation returned ${m.keys.mkString(", ")} " +
+        s"for the requested metrics ${metrics.mkString(", ")}")
+    (cp, m)
   }
+
+  private def requireFinalStageObservers(df: DataFrame): Unit =
+    df.queryExecution.executedPlan match {
+      case aqe: AdaptiveSparkPlanExec =>
+        val hidden = aqe.executedPlan.collect { case e: Exchange => e }
+          .flatMap(_.collect { case m: CollectMetricsExec => m.name })
+        if (hidden.nonEmpty)
+          throw new IllegalStateException(
+            s"observation ${hidden.distinct.mkString(", ")} sits below an " +
+              "exchange, where AQE drops its metrics; observe the frame " +
+              "after the shuffle, at the top of the plan")
+      case _ =>
+    }
 
   /** Lowercased word tokens, empty tokens removed — the native kernel
     * form of `filter(split(lower(text), "\\W+"), len > 0)` (the HOF
@@ -220,41 +218,27 @@ object Dedup {
     }
   }
 
-  /** Candidate-pair row bound under which the verification joins
-    * broadcast the candidate side. Rows, not bytes, because the gated
-    * tables are 2 long columns (and, for the second join, one attached
-    * shingle array per CANDIDATE — still candidate-bounded, never
-    * corpus-bounded); production tunes it to executor memory.
+  /** Bytes of one (id_a, id_b, sh_a) row, the outer verification
+    * join's build side: Spark's row width counts one array element,
+    * this 64 hashes per set (sf0.1 mean: 52). The gate: ≈125k pairs.
     */
-  private[graft] def maxPairBroadcastRows: Long =
-    sys.props.get("graft.pair.bcast.rows")
-      .orElse(sys.env.get("SPARK_GRAFT_PAIR_BCAST_ROWS"))
-      .getOrElse((1L << 20).toString).toLong
+  private val CandidateShingleRowBytes: Long = 8L + 8L + 8L + 8L * 64
 
   /** Attach both endpoints' shingle sets to a candidate pair table —
-    * the LSH verification join, with the candidate side broadcast when
-    * its MEASURED count fits (r15, guide §2.3 "shuffle fewer bytes" /
-    * §3.1). Catalyst can never make this call itself: candidates
-    * descend from a band self-join, so their size estimate is a join
-    * PRODUCT and auto-broadcast never fires — both verify joins then
-    * exchanged the corpus-sized (id, sh) table, the FATTEST rows in
-    * the pipeline, by id_a and again by id_b. The eager localCheckpoint
-    * measures the true pair count (and roots the plan in an RDD, so
-    * [[graft.plans.DemoteOversizedBroadcasts]] has no bogus estimate
-    * to strip the hint on — the Graph.bcastIfFits precedent); under
-    * the bound both joins build on the candidate side and the shingle
-    * table is probed in place off its cache. Over the bound, the
-    * unchanged shuffle joins return. Results identical either way
-    * (inner equi-joins).
+    * the LSH verification join, with both joins building on the
+    * candidate side when it fits (r15, guide §2.3 / §3.1): the shingle
+    * table, the FATTEST rows in the pipeline, is then probed in place
+    * off its cache instead of exchanged by id_a and again by id_b. The
+    * outer side (candidates with `sh_a`) is bounded by the candidate
+    * count. Over a bound that join shuffles, with identical results.
     */
   private def verifyJoin(candidates: DataFrame, sets: DataFrame): DataFrame = {
-    val (candM, nCand) = materializeCounted(candidates)
+    val (candM, m) = materializeObserved(candidates, count(lit(1)).as("__n"))
     val setsA = sets.withColumnsRenamed(Map("id" -> "id_a", "sh" -> "sh_a"))
     val setsB = sets.withColumnsRenamed(Map("id" -> "id_b", "sh" -> "sh_b"))
-    if (nCand <= maxPairBroadcastRows)
-      broadcast(broadcast(candM).join(setsA, "id_a")).join(setsB, "id_b")
-    else
-      candM.join(setsA, "id_a").join(setsB, "id_b")
+    Hints.maybeBroadcast(Hints.maybeBroadcast(candM).join(setsA, "id_a"),
+        m("__n").asInstanceOf[Long], CandidateShingleRowBytes)
+      .join(setsB, "id_b")
   }
 
   /** MinHash + banded LSH near-duplicate pairs.
@@ -635,7 +619,6 @@ object Dedup {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(edges)).persist(StorageLevel.MEMORY_AND_DISK)
       val nsig = probe(next)      // also materializes `next`
       persisted.foreach(_.unpersist())
@@ -644,9 +627,6 @@ object Dedup {
       converged = sig.contains(nsig) || nsig._1 == 0L
       sig = Some(nsig)
       iter += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[graft.cc] round $iter edges=${nsig._1} " +
-          s"converged=$converged ms=${(System.nanoTime() - t0) / 1000000}")
       // the frontier only shrinks: as soon as it fits the local budget,
       // finish there instead of paying more driver-synchronized rounds
       if (!converged && localFinishEdges > 0 && integralIds &&

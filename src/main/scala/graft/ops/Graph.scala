@@ -28,44 +28,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
-  /** Broadcast gate for the per-round NODE tables the iterative loops
-    * join into their pinned edge set — r14 optimization (guide §3.1).
-    * Catalyst's estimate cannot make this call: the node tables
-    * descend from the caller's edge build (typically a join), whose
-    * size estimate is the input-size PRODUCT (measured 1.1e12 "bytes"
-    * for a 15k-row materialized degree table at sf0.1), and
-    * `localCheckpoint` keeps the origin plan's stats — so
-    * `autoBroadcastJoinThreshold` / [[Hints.maybeBroadcast]] never
-    * fire on them and every round re-shuffled the |E| edge cache. The
-    * loops instead gate on MEASURED cardinality (each already pays a
-    * count or an eager materialize): under `maxBroadcastRows` the node
-    * table broadcasts and the edge cache is never exchanged; over it,
-    * the join falls back to the shuffle path unchanged — results are
-    * identical either way (equi/semi/anti joins + order-independent
-    * aggregates). The bound is rows, not bytes, because these tables
-    * are 2-3 int64 columns wide: the 2²¹ default ≈ 50 MB framed, the
-    * same order as [[Hints.DefaultBroadcastBytes]]; production tunes
-    * it to executor memory via SPARK_GRAFT_GRAPH_BCAST_ROWS.
-    */
-  private[graft] val maxBroadcastRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_GRAPH_BCAST_ROWS",
-      (1L << 21).toString).toLong
-
-  private def bcastIfFits(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= maxBroadcastRows) {
-      // Route the hinted side through an RDD-rooted frame: the node
-      // tables inherit join-PRODUCT size estimates, which the
-      // [[graft.plans.DemoteOversizedBroadcasts]] safety net reads as
-      // known-oversized and strips the hint right back off. An
-      // RDD-rooted plan has UNKNOWN stats, which that rule (by
-      // documented design) skips — correct here because the measured
-      // row count just gated the decision, and the count is ground
-      // truth where the estimate is an artifact. Conversion cost is
-      // one external-row round-trip over ≤ maxBroadcastRows rows of
-      // 2-3 int64 columns, paid only on the broadcast build.
-      val s = df.sparkSession
-      broadcast(s.createDataFrame(df.rdd, df.schema))
-    } else df
+  // The loops broadcast their per-round NODE tables into the pinned
+  // edge set when they fit ([[Hints]]), so the |E| cache is probed in
+  // place instead of exchanged every round (r14, guide §3.1); over the
+  // bound the shuffle join returns, with identical results.
+  import Hints.maybeBroadcast
 
   /** Make a directed edge list symmetric (every node then has
     * out-degree ≥ 1, so there are no dangling nodes and no rank-mass
@@ -130,19 +97,17 @@ object Graph {
     for (i <- 1 to iters) {
       // disjoint column names on each side: ranks descends from e, so
       // unqualified src/dst references would be ambiguous self-joins.
-      // Both per-round joins gate on the measured |V| (= n, counted
-      // once above): broadcasting the rank messages means the pinned
-      // |E| cache is scanned in place (map-side partial agg) instead
-      // of being exchanged every round, and broadcasting the inflow
-      // makes the rank update exchange-free too — the only shuffle
-      // left per round is the ≤|V| aggregate output (r14, guide §3.1).
-      val inflow = bcastIfFits(ranks
+      // Both per-round sides are derived through joins and bounded by
+      // |V| (= n): broadcasting the messages scans the pinned |E| cache
+      // in place, broadcasting the inflow makes the rank update
+      // exchange-free — the only shuffle left is the ≤|V| aggregate.
+      val inflow = maybeBroadcast(ranks
           .select(col("id").as("msg_id"), expr("rank_e12 DIV deg").as("c")), n)
         .join(e, col("msg_id") === col("src"))
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("inflow"))
         .withColumnRenamed("dst", "id")
-      ranks = deg.join(bcastIfFits(inflow, n), Seq("id"), "left")
+      ranks = deg.join(maybeBroadcast(inflow, n), Seq("id"), "left")
         .select(col("id"), col("deg"),
           (lit(reset) + expr("(85 * coalesce(inflow, 0L)) DIV 100"))
             .as("rank_e12"))
@@ -183,7 +148,7 @@ object Graph {
     * times (measured: 16 s for 2 iterations at sf0.1 vs 1.4 s
     * synchronized). So each half-step materializes its raw sums ONCE
     * (one bounded action) and the max is OBSERVED during that same
-    * checkpoint job ([[Dedup.materializeCountedMax]] — r15): the
+    * checkpoint job ([[Dedup.materializeObserved]] — r15): the
     * normalization divisor is a driver literal by the time the next
     * half-step plans, so the renormalization is a pure projection —
     * no per-half-step max-aggregate stage, no broadcast build (the
@@ -196,51 +161,45 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e = edges.select(col("src"), col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the hub seed is materialized so its cardinality (= #hubs, the
-    // broadcast gate for every subsequent half-step join) is measured,
-    // not estimated — see bcastIfFits on why estimates are useless
-    // here; the empty-edge-set guard rides the same measured count
-    // (an empty e ⇒ zero hub seeds) instead of a separate isEmpty
-    // action (r15, guide §1.2)
-    var (h, nH) = Dedup.materializeCounted(
+    // the empty-edge-set guard rides the hub seed's checkpoint job as
+    // an observed count (an empty e ⇒ zero hub seeds) instead of a
+    // separate isEmpty action (r15, guide §1.2)
+    val (seed, mSeed) = Dedup.materializeObserved(
       e.select(col("src").as("id")).distinct()
-        .withColumn("s", lit(1000000L)))
-    require(nH > 0, "hitsE6 over an empty edge set")
+        .withColumn("s", lit(1000000L)),
+      count(lit(1)).as("__n"))
+    require(mSeed("__n").asInstanceOf[Long] > 0, "hitsE6 over an empty edge set")
+    var h = seed
     var a: DataFrame = null
-    var nA = 0L
-    def normalized(raw: DataFrame): (DataFrame, Long) = {
-      // count AND the max-norm scalar folded into the materialize
-      // action (one job per half-step — r15, guide §1.2): the max used
-      // to ride the NEXT half-step's plan as a broadcast 1-row cross
+    def normalized(raw: DataFrame): DataFrame = {
+      // the max-norm scalar is observed during the materialize action
+      // (one job per half-step — r15, guide §1.2): the max used to
+      // ride the NEXT half-step's plan as a broadcast 1-row cross
       // join, i.e. one aggregate stage + one broadcast build per
       // half-step; observed during the checkpoint it is a driver
       // literal over the SAME rows, so the normalization is a pure
       // projection and the scores are bit-identical
-      val (m, n, mxOpt) = Dedup.materializeCountedMax(raw, "raw")
-      // explicit all-zero-vector guard, now driver-side and eager:
-      // louder than the old in-plan assert_true (which only fired when
-      // the projection was executed) and immune to ansi.enabled=false
-      val mx = mxOpt.getOrElse(0L)
+      val (m, obs) = Dedup.materializeObserved(raw, max(col("raw")).as("__mx"))
+      // explicit all-zero-vector guard, driver-side and eager: louder
+      // than an in-plan assert_true (which only fires when the
+      // projection is executed) and immune to ansi.enabled=false. An
+      // empty table observes a NULL max.
+      val mx = Option(obs("__mx")).map(_.asInstanceOf[Long]).getOrElse(0L)
       require(mx > 0,
         "hitsE6: all-zero score vector — HITS undefined")
-      (m.select(col("id"), expr(s"(raw * 1000000) DIV ${mx}L").as("s")), n)
+      m.select(col("id"), expr(s"(raw * 1000000) DIV ${mx}L").as("s"))
     }
     for (_ <- 1 to iters) {
-      // score side gated on its measured count: under the bound the
-      // pinned |E| cache is probed in place instead of exchanged every
-      // half-step (r14, guide §3.1); over it, the shuffle join returns
-      val (aN, cA) = normalized(
-        e.join(bcastIfFits(h.select(col("id").as("mid"), col("s")), nH),
+      a = normalized(
+        e.join(maybeBroadcast(h.select(col("id").as("mid"), col("s"))),
             col("src") === col("mid"))
           .groupBy(col("dst")).agg(sum(col("s")).as("raw"))
           .withColumnRenamed("dst", "id"))
-      a = aN; nA = cA
-      val (hN, cH) = normalized(
-        e.join(bcastIfFits(a.select(col("id").as("mid"), col("s")), nA),
+      h = normalized(
+        e.join(maybeBroadcast(a.select(col("id").as("mid"), col("s"))),
             col("dst") === col("mid"))
           .groupBy(col("src")).agg(sum(col("s")).as("raw"))
           .withColumnRenamed("src", "id"))
-      h = hN; nH = cH
     }
     // the output union is a pure projection over the two CHECKPOINTED
     // score tables — independent of the unpersisted edge cache, so no
@@ -265,16 +224,14 @@ object Graph {
     */
   def triangleCountIdOriented(edges: DataFrame): DataFrame = {
     // materialize once: the edge set is read three times (both wedge
-    // sides + the closing semi-join), and its measured count gates the
-    // broadcasts — the wedge table (the one genuinely large
-    // intermediate) is then never exchanged (r14, guide §3.1)
-    val (e, nE) = Dedup.materializeCounted(
-      edges.select(col("id_a"), col("id_b")))
+    // sides + the closing semi-join), and the wedge table (the one
+    // genuinely large intermediate) is then never exchanged
+    val e = Dedup.materialize(edges.select(col("id_a"), col("id_b")))
     val wedges = e.select(col("id_a").as("a"), col("id_b").as("b"))
-      .join(bcastIfFits(
-        e.select(col("id_a").as("b"), col("id_b").as("c")), nE), Seq("b"))
+      .join(maybeBroadcast(
+        e.select(col("id_a").as("b"), col("id_b").as("c"))), Seq("b"))
     wedges.join(
-        bcastIfFits(e.select(col("id_a").as("a"), col("id_b").as("c")), nE),
+        maybeBroadcast(e.select(col("id_a").as("a"), col("id_b").as("c"))),
         Seq("a", "c"), "left_semi")
       .agg(count(lit(1)).as("n_triangles"))
   }
@@ -318,10 +275,12 @@ object Graph {
       edges.unpersist()
     }
     while (rounds < maxRounds) {
-      val (keep, n) = Dedup.materializeCounted(
+      val (keep, m) = Dedup.materializeObserved(
         edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k)
-          .select(col("src").as("id"), col("deg")))
+          .select(col("src").as("id"), col("deg")),
+        count(lit(1)).as("__n"))
+      val n = m("__n").asInstanceOf[Long]
       // the degree job above just materialized `edges`' cache, so the
       // previous generation can go now
       if (pinned != null) { pinned.unpersist(); pinned = null }
@@ -331,14 +290,12 @@ object Graph {
       }
       prev = n
       val ids = keep.select(col("id"))
-      // survivor set gated on its measured count (n, just read): under
-      // the bound both semi-joins broadcast and the round's only
-      // shuffle is the map-side-combined degree aggregate — the edge
-      // cache is never exchanged (r14, guide §3.1)
+      // under the bound the round's only shuffle is the
+      // map-side-combined degree aggregate
       val next = edges
-        .join(bcastIfFits(ids.select(col("id").as("src")), n),
+        .join(maybeBroadcast(ids.select(col("id").as("src"))),
           Seq("src"), "left_semi")
-        .join(bcastIfFits(ids.select(col("id").as("dst")), n),
+        .join(maybeBroadcast(ids.select(col("id").as("dst"))),
           Seq("dst"), "left_semi")
         .persist(StorageLevel.MEMORY_AND_DISK)
       pinned = edges
@@ -375,31 +332,24 @@ object Graph {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // frontier/visited counts are measured DURING the materialize
-    // action ([[Dedup.materializeCounted]] — one job per hop, not two)
-    // and gate the per-round broadcasts: under the bound the |E| cache
-    // is probed in place by the semi-join and the anti-join builds on
-    // the visited set — no edge exchange per hop (r14, guide §3.1);
-    // over it, the shuffle joins return
-    var (visited, nVisited) = Dedup.materializeCounted(
+    // pinned per hop: under the bound the |E| cache is probed in place
+    // by the semi-join and the anti-join builds on the visited set
+    var visited = Dedup.materialize(
       seeds.select(col("id")).distinct().withColumn("hop", lit(0)))
     var frontier = visited.select(col("id"))
-    var nFrontier = nVisited
     for (h <- 1 to maxHops) {
-      val (next, nNext) = Dedup.materializeCounted(
-        e.join(bcastIfFits(frontier.select(col("id").as("src")), nFrontier),
+      val next = Dedup.materialize(
+        e.join(maybeBroadcast(frontier.select(col("id").as("src"))),
             Seq("src"), "left_semi")
           .select(col("dst").as("id")).distinct()
-          .join(bcastIfFits(visited, nVisited), Seq("id"), "left_anti")
+          .join(maybeBroadcast(visited), Seq("id"), "left_anti")
           .withColumn("hop", lit(h)))
-      nFrontier = nNext
       // visited stays a LAZY union of the per-hop CHECKPOINTS (≤
       // maxHops+1 disjoint tables): every hop's rows are already
       // materialized once, so re-checkpointing the union was a second
       // copy of the same data every round — the anti-join/broadcast
       // build scans the same ≤|V| bytes either way (r15, guide §1.2)
       visited = visited.union(next)
-      nVisited += nFrontier
       frontier = next.select(col("id"))
     }
     e.unpersist()
@@ -428,8 +378,8 @@ object Graph {
     * lazy vs 2.63 s with per-round materialization + the broadcast
     * gate, sf0.1 best-of-2; the duplicated leaves were the seed
     * derivation's orders⋈lineitem aggregate). The
-    * materialized table's measured count also gates a broadcast of the
-    * distance side into the pinned edge cache (see [[bcastIfFits]]),
+    * materialized table's stored size also gates a broadcast of the
+    * distance side into the pinned edge cache,
     * so under the bound a round's only exchange is the ≤|reached|
     * min-aggregate output. Unlike bfsHops, the full distance table
     * joins each round rather than a shrinking frontier: a weighted
@@ -444,18 +394,15 @@ object Graph {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val e = edges.select(col("src"), col("dst"), col("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // per-round count folded into the materialize action
-    // ([[Dedup.materializeCounted]] — one job per round, not two)
-    var (dist, nDist) = Dedup.materializeCounted(
+    var dist = Dedup.materialize(
       seeds.select(col("id")).distinct().withColumn("dist", lit(0L)))
     for (_ <- 1 to rounds) {
-      val relaxed = bcastIfFits(dist
-          .select(col("id").as("src"), col("dist").as("d0")), nDist)
+      val relaxed = maybeBroadcast(dist
+          .select(col("id").as("src"), col("dist").as("d0")))
         .join(e, Seq("src"))
         .select(col("dst").as("id"), (col("d0") + col("w")).as("dist"))
-      val (d2, n2) = Dedup.materializeCounted(dist.union(relaxed)
+      dist = Dedup.materialize(dist.union(relaxed)
         .groupBy(col("id")).agg(min(col("dist")).as("dist")))
-      dist = d2; nDist = n2
     }
     e.unpersist()
     dist
@@ -482,16 +429,16 @@ object Graph {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // |V| measured once off the materialized seed labels (the label
-    // table keeps exactly |V| rows every round) gates the per-round
-    // broadcast: under the bound the pinned |E| cache is probed in
-    // place instead of exchanged each round (r14, guide §3.1)
-    val (seedLabels, nV) = Dedup.materializeCounted(
+    // |V|, observed once off the seed labels, bounds the label table
+    // every round: the row bound of its per-round broadcast
+    val (seedLabels, m) = Dedup.materializeObserved(
       e.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lab")))
+        .select(col("id"), col("id").as("lab")),
+      count(lit(1)).as("__n"))
+    val nV = m("__n").asInstanceOf[Long]
     var labels = seedLabels
     for (_ <- 1 to rounds) {
-      labels = e.join(bcastIfFits(
+      labels = e.join(maybeBroadcast(
           labels.withColumnRenamed("id", "nid"), nV),
           col("dst") === col("nid"))
         .groupBy(col("src"), col("lab")).agg(count(lit(1)).as("cnt"))
@@ -518,24 +465,21 @@ object Graph {
     * global sort). This is the variant to ship on power-law graphs.
     */
   def triangleCountDegreeOriented(edges: DataFrame): DataFrame = {
-    val (und, nE) = Dedup.materializeCounted(
-      edges.select(col("id_a"), col("id_b")))
-    // degree table is |V| rows — materialized so its measured count
-    // gates broadcasting it into BOTH orientation joins, which then
-    // probe the edge set in place; the closing semi-join's right side
-    // is the |E| oriented set, gated on nE (r14, guide §3.1)
-    val (deg, nV) = Dedup.materializeCounted(
+    val und = Dedup.materialize(edges.select(col("id_a"), col("id_b")))
+    // the |V|-row degree table is pinned so it broadcasts into BOTH
+    // orientation joins, which then probe the edge set in place
+    val deg = Dedup.materialize(
       und.select(col("id_a").as("id"))
         .union(und.select(col("id_b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("deg")))
     val lowFirst = col("deg_a") < col("deg_b") ||
       (col("deg_a") === col("deg_b") && col("id_a") < col("id_b"))
     val oriented = Dedup.materialize(und
-      .join(bcastIfFits(
-        deg.select(col("id").as("id_a"), col("deg").as("deg_a")), nV),
+      .join(maybeBroadcast(
+        deg.select(col("id").as("id_a"), col("deg").as("deg_a"))),
         Seq("id_a"))
-      .join(bcastIfFits(
-        deg.select(col("id").as("id_b"), col("deg").as("deg_b")), nV),
+      .join(maybeBroadcast(
+        deg.select(col("id").as("id_b"), col("deg").as("deg_b"))),
         Seq("id_b"))
       .select(
         when(lowFirst, col("id_a")).otherwise(col("id_b")).as("src"),
@@ -546,14 +490,14 @@ object Graph {
     val wedges = oriented
       .select(col("src").as("u"), col("dst").as("v"),
         col("dst_deg").as("v_deg"))
-      .join(bcastIfFits(
+      .join(maybeBroadcast(
         oriented.select(col("src").as("u"), col("dst").as("w"),
-          col("dst_deg").as("w_deg")), nE), Seq("u"))
+          col("dst_deg").as("w_deg"))), Seq("u"))
       .filter(col("v_deg") < col("w_deg") ||
         (col("v_deg") === col("w_deg") && col("v") < col("w")))
     wedges.join(
-        bcastIfFits(
-          oriented.select(col("src").as("v"), col("dst").as("w")), nE),
+        maybeBroadcast(
+          oriented.select(col("src").as("v"), col("dst").as("w"))),
         Seq("v", "w"), "left_semi")
       .agg(count(lit(1)).as("n_triangles"))
   }

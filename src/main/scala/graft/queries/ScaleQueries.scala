@@ -2492,9 +2492,11 @@ object ScaleQueries {
     val pairs = Dedup.materialize(
       Similarity.withinClusterPairs(assigned, threshold = 0.3))
     val dropped = pairs.select(col("id_b").as("id")).distinct()
-    val (kept, nKept) = Dedup.materializeCounted(
+    val (kept, mK) = Dedup.materializeObserved(
       assigned.join(dropped, Seq("id"), "left_anti")
-        .select(col("id"), col("cluster")))
+        .select(col("id"), col("cluster")),
+      count(lit(1)).as("__n"))
+    val nKept = mK("__n").asInstanceOf[Long]
     val keptIds = kept.select(col("id"))
     // the two witness checks run in ONE action via a tagged union —
     // both join pipelines execute inside a single job (guide §1.2)

@@ -124,8 +124,10 @@ object TextQueries {
     val totKgrams = dRow.getLong(2)
     // pinned: coverage and the density count both read the pair set —
     // without it the winnow explode runs once per aggregate
-    val (fps, totFps) = graft.ops.Dedup.materializeCounted(
-      TextOps.winnowingFingerprints(docs, "doc_id", "text", k, w))
+    val (fps, mF) = graft.ops.Dedup.materializeObserved(
+      TextOps.winnowingFingerprints(docs, "doc_id", "text", k, w),
+      count(lit(1)).as("__n"))
+    val totFps = mF("__n").asInstanceOf[Long]
     val covered = fps.select(col("id")).distinct().count()
     Seq((nDocs,
         if (covered == nDocs) 1 else 0,

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.storage.RDDBlockId
 
 /** Bridge between graft's custom Catalyst expressions and the public
   * `Column` API. Spark 4 moved Column to a ColumnNode representation
@@ -24,4 +27,30 @@ object GraftColumnShim {
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
+
+  /** `df` as an RDD-rooted leaf whose statistics report `sizeInBytes`,
+    * by default the bytes a checkpointed frame's blocks hold in memory
+    * and on disk (the block manager master's record: no job, no wait
+    * for a listener event). A frame that is not a checkpoint becomes a
+    * leaf over its own rows; under AQE making that RDD runs its shuffle
+    * stages, as a SQL execution of its own so listeners see the plan.
+    */
+  def sizedLeaf(df: DataFrame, sizeInBytes: Option[BigInt]): DataFrame = {
+    val ds = df.asInstanceOf[Dataset[_]]
+    val session = ds.sparkSession
+    val leaf = ds.logicalPlan match {
+      case r: LogicalRDD =>
+        val id = r.rdd.id
+        lazy val stored = r.rdd.sparkContext.env.blockManager.master.getStorageStatus
+          .iterator.flatMap(_.rddBlocks.iterator)
+          .collect { case (RDDBlockId(`id`, _), b) => b.memSize + b.diskSize }.sum
+        r.copy()(session, Some(Statistics(sizeInBytes.getOrElse(stored))), None)
+      case plan =>
+        require(sizeInBytes.isDefined, s"no stored size for an uncheckpointed $plan")
+        val qe = ds.queryExecution
+        val rdd = SQLExecution.withNewExecutionId(qe, Some("sizedLeaf"))(qe.toRdd)
+        LogicalRDD(plan.output, rdd)(session, Some(Statistics(sizeInBytes.get)), None)
+    }
+    Dataset.ofRows(session, leaf)
+  }
 }

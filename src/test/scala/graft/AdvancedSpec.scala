@@ -265,6 +265,17 @@ class AdvancedSpec extends AnyFunSuite {
     assert(callers == Seq("GraftSession.scala"), callers)
   }
 
+  test("no knobs in the operator layer: ops/ reads no env var or system property") {
+    // an operator's behavior comes from its arguments and the session
+    // confs; a process-wide knob under ops/ is a second, hidden API
+    val knobRead =
+      """\bsys\s*\.\s*(env|props)\b|\bSystem\s*\.\s*(getenv|getProperty)\b""".r
+    val reads = sourcesUnder("src/main/scala/graft/ops").flatMap {
+      case (name, code) => knobRead.findAllIn(code).map(m => s"$name: $m")
+    }
+    assert(reads.isEmpty, reads)
+  }
+
   test("Memo.scala is the only memo: no hand-built version key or cache map") {
     // a memo key built outside Memo, or a second cache map in the
     // queries, is a second memo contract that will drift

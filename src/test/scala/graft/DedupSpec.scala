@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.dsl._
 import graft.ops.Dedup
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -484,26 +488,74 @@ class DedupSpec extends AnyFunSuite {
     assert(exact.toSet == Set((2L, 1L)), s"got ${exact.toSet}")
   }
 
+  /** The LSH verification joins in `plans` (every join keyed on id_a
+    * or id_b), each as (key, join operator, whether it builds on the
+    * candidate side: the side that carries both ids).
+    */
+  private def verifyJoins(plans: Seq[SparkPlan]): Seq[(String, String, Boolean)] =
+    plans.flatMap(p => collect(p) {
+      case j: BaseJoinExec
+          if j.leftKeys.flatMap(_.references).map(_.name) == Seq("id_a") ||
+            j.leftKeys.flatMap(_.references).map(_.name) == Seq("id_b") =>
+        val buildsCandidates = j match {
+          case b: BroadcastHashJoinExec =>
+            val build = if (b.buildSide == BuildLeft) b.left else b.right
+            Set("id_a", "id_b").subsetOf(build.output.map(_.name).toSet)
+          case _ => false
+        }
+        (j.leftKeys.flatMap(_.references).map(_.name).head, j.nodeName,
+          buildsCandidates)
+    })
+
+  test("minhashPairs: both verification joins broadcast the candidate side") {
+    // the candidates descend from the band self-join, so their
+    // checkpoint used to keep a join-product estimate (1.8e16 B at
+    // sf0.01): the broadcast-demotion rule stripped the candidate
+    // hint and the inner join broadcast the shingle table instead
+    val docs = Tables(spark, "/root/testdata/sf0.01", "documents")
+    val run = SparkRun(spark) {
+      Dedup.minhashPairs(docs, "doc_id", "text").count()
+    }
+    val joins = verifyJoins(run.plans)
+    assert(joins.map(_._1).toSet == Set("id_a", "id_b"), joins)
+    assert(joins.forall { case (_, op, cand) => op == "BroadcastHashJoin" && cand },
+      joins)
+    assert(run.value > 0)
+  }
+
   test("minhashPairs verify-join broadcast gate is result-invariant " +
       "(broadcast path == shuffle fallback)") {
-    // r15: the verification joins broadcast the candidate pairs when
-    // their MEASURED count fits (graft.pair.bcast.rows); forcing the
-    // bound to 0 exercises the shuffle fallback. Both paths must emit
-    // the identical pair set - this pins the gate the same way the
-    // salted-path invariance test pins keyPairs.
+    // r15: the verification joins broadcast the candidate side when it
+    // fits; with hint demotion and auto-broadcast both off, every hint
+    // is stripped (each hinted side reports a known size) and the
+    // shuffle fallback runs. Both paths must emit the identical pair
+    // set - this pins the gate the same way the salted-path invariance
+    // test pins keyPairs.
     val docs = Tables(spark, sf, "documents")
-    def run() = Dedup.minhashPairs(docs, "doc_id", "text",
-        shingleN = 3, bands = 16, rowsPerBand = 8, threshold = 0.7)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val viaBroadcast = run() // default bound: tiny candidate sets fit
-    System.setProperty("graft.pair.bcast.rows", "0")
-    try {
-      val viaShuffle = run()
-      assert(viaBroadcast == viaShuffle,
-        s"broadcast path ${viaBroadcast.size} pairs vs shuffle " +
-          s"fallback ${viaShuffle.size}")
-      assert(viaBroadcast.nonEmpty)
-    } finally System.clearProperty("graft.pair.bcast.rows")
+    def run() = SparkRun(spark) {
+      Dedup.minhashPairs(docs, "doc_id", "text",
+          shingleN = 3, bands = 16, rowsPerBand = 8, threshold = 0.7)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSet
+    }
+    val viaBroadcast = run()
+    val fallback = Seq("graft.broadcast.demoteBytes" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val saved = fallback.map { case (k, _) => k -> spark.conf.getOption(k) }
+    fallback.foreach { case (k, v) => spark.conf.set(k, v) }
+    val viaShuffle = try run() finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(verifyJoins(viaBroadcast.plans).forall(_._2 == "BroadcastHashJoin"),
+      verifyJoins(viaBroadcast.plans))
+    // the fallback really ran: both verify joins, neither broadcast
+    val shuffled = verifyJoins(viaShuffle.plans)
+    assert(shuffled.map(_._1).toSet == Set("id_a", "id_b"), shuffled)
+    assert(shuffled.forall(_._2 != "BroadcastHashJoin"), shuffled)
+    assert(viaBroadcast.value == viaShuffle.value,
+      s"broadcast path ${viaBroadcast.value.size} pairs vs shuffle " +
+        s"fallback ${viaShuffle.value.size}")
+    assert(viaBroadcast.value.nonEmpty)
   }
 }

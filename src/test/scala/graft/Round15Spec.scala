@@ -81,6 +81,27 @@ class Round15Spec extends AnyFunSuite {
       df.orderBy("id").collect().toSeq)
   }
 
+  test("materializeObserved: an observer below an exchange, or a " +
+      "metric missing from the observation, throws") {
+    val df = spark.range(0, 100, 1, 4).toDF("id")
+      .withColumn("k", col("id") % 7)
+    // the observer sits below the aggregate's shuffle, where AQE drops
+    // its metrics: refused before the checkpoint runs
+    val misplaced = df.observe(new org.apache.spark.sql.Observation("misplaced"),
+        count(lit(1)).as("__n"))
+      .groupBy(col("k")).agg(sum(col("id")).as("s"))
+    val e = intercept[IllegalStateException](graft.ops.Dedup.materialize(misplaced))
+    assert(e.getMessage.contains("misplaced"), e.getMessage)
+    // two metrics under one name: the observation holds one of them
+    val e2 = intercept[IllegalStateException](graft.ops.Dedup.materializeObserved(
+      df, count(lit(1)).as("__n"), sum(col("id")).as("__n")))
+    assert(e2.getMessage.contains("__n"), e2.getMessage)
+    // the same observer at the top of the plan delivers
+    val (_, m) = graft.ops.Dedup.materializeObserved(
+      df.groupBy(col("k")).agg(sum(col("id")).as("s")), count(lit(1)).as("__n"))
+    assert(m("__n") == 7L)
+  }
+
   test("bloom_prune scalar fold: count(*)/count(key) over a left join " +
       "against DISTINCT keys equal the standalone count + semi-join " +
       "count (null fact keys, duplicate fact rows, duplicate keys)") {
