@@ -14,9 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Two scopes:
   *  - [[value]] is JVM-wide: every session sees the same entry. It
-  *    holds plain driver-side data and the paths of files the
-  *    computation wrote under `java.io.tmpdir`. Nothing deletes those
-  *    files; they outlive the JVM.
+  *    holds plain driver-side data and the paths of dirs the
+  *    computation wrote with [[TempDirs.create]]; those dirs live
+  *    until the JVM exits, under [[TempDirs.root]].
   *  - [[frame]] is per session, keyed on the live session object
   *    through identity (a WeakHashMap), so a new session never sees a
   *    frame pinned (`localCheckpoint`) in another. A cached frame

@@ -30,11 +30,12 @@ object Dedup {
     * parquet inputs arrive as one partition; without this every
     * signature/shingle computation runs on one core. At real scale
     * the source is already multi-partition and this is a cheap no-op
-    * rebalance.
+    * rebalance. `df.rdd` would register a SQL execution of its own
+    * just to report the count its physical RDD already has.
     */
   def spread(df: DataFrame): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
+    if (df.queryExecution.toRdd.getNumPartitions >= n) df else df.repartition(n)
   }
 
   /** [[spread]] for CPU-dense intermediates that sit BEHIND a shuffle:

@@ -419,25 +419,21 @@ object AdvancedQueries {
   def streamSeasonal(s: SparkSession, dir: String): DataFrame = {
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_seasonal").toString
-    val stream = graft.streaming.IncrementalStream
-      .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    graft.streaming.IncrementalStream.runForeachBatch("stream_seasonal",
-        stream, minBatches = 2) { (batch, id) =>
-      graft.ops.Manifest.writeBatchCells(batch
-        .groupBy(col("event_type").as("et"),
-          to_date(Tables.eventTimeOf(schema, "ts")).as("day"))
-        .agg(count(lit(1)).as("n")), store, id)
+    graft.TempDirs.using("graft_seasonal") { storePath =>
+      val store = storePath.toString
+      val stream = graft.streaming.IncrementalStream
+        .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
+      graft.streaming.IncrementalStream.runForeachBatch("stream_seasonal",
+          stream, minBatches = 2) { (batch, id) =>
+        graft.ops.Manifest.writeBatchCells(batch
+          .groupBy(col("event_type").as("et"),
+            to_date(Tables.eventTimeOf(schema, "ts")).as("day"))
+          .agg(count(lit(1)).as("n")), store, id)
+      }
+      val daily = s.read.parquet(store)
+        .groupBy(col("et"), col("day")).agg(sum(col("n")).as("n"))
+      graft.ops.Dedup.materialize(seasonalityFrom(daily))
     }
-    val daily = s.read.parquet(store)
-      .groupBy(col("et"), col("day")).agg(sum(col("n")).as("n"))
-    // pin before deleting the temp cell store (same store-lifetime
-    // rule as stream_manifest: no lazy read of a deleted directory,
-    // no leaked disk per run)
-    val out = graft.ops.Dedup.materialize(seasonalityFrom(daily))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    out
   }
 
   /** The FIFTEENTH driver-visible stream shape — approximate
@@ -460,28 +456,25 @@ object AdvancedQueries {
   def streamDistinct(s: SparkSession, dir: String): DataFrame = {
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_hllstore").toString
-    val stream = graft.streaming.IncrementalStream
-      .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    graft.streaming.IncrementalStream.runForeachBatch("stream_distinct",
-        stream, minBatches = 2) { (batch, id) =>
-      graft.ops.Manifest.writeBatchCells(graft.ops.Hll.registers(
-        batch.select(col("event_type"), col("user_id")),
-        Seq("event_type"), col("user_id"), salt = 777000L), store, id)
+    graft.TempDirs.using("graft_hllstore") { storePath =>
+      val store = storePath.toString
+      val stream = graft.streaming.IncrementalStream
+        .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
+      graft.streaming.IncrementalStream.runForeachBatch("stream_distinct",
+          stream, minBatches = 2) { (batch, id) =>
+        graft.ops.Manifest.writeBatchCells(graft.ops.Hll.registers(
+          batch.select(col("event_type"), col("user_id")),
+          Seq("event_type"), col("user_id"), salt = 777000L), store, id)
+      }
+      val regs = s.read.parquet(store)
+        .groupBy(col("event_type"), col("bucket")).agg(max(col("r")).as("r"))
+      val est = graft.ops.Hll.estimate(regs, Seq("event_type"),
+        "approx_users")
+      val exact = t(s, dir, "events").groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("exact_users"))
+      graft.ops.Dedup.materialize(
+        est.join(exact, Seq("event_type")).orderBy(col("event_type")))
     }
-    val regs = s.read.parquet(store)
-      .groupBy(col("event_type"), col("bucket")).agg(max(col("r")).as("r"))
-    val est = graft.ops.Hll.estimate(regs, Seq("event_type"),
-      "approx_users")
-    val exact = t(s, dir, "events").groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("exact_users"))
-    // pin before deleting the temp cell store (the stream_manifest
-    // store-lifetime rule)
-    val out = graft.ops.Dedup.materialize(
-      est.join(exact, Seq("event_type")).orderBy(col("event_type")))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    out
   }
 
   /** The SIXTEENTH driver-visible stream shape — the quantile
@@ -500,42 +493,41 @@ object AdvancedQueries {
   def streamQuantile(s: SparkSession, dir: String): DataFrame = {
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_qhist").toString
-    val stream = graft.streaming.IncrementalStream
-      .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    graft.streaming.IncrementalStream.runForeachBatch("stream_quantile",
-        stream, minBatches = 2) { (batch, id) =>
-      // FLOOR division (not Spark's trunc-toward-zero DIV): division
-      // by a power of two is exact in doubles, so floor(x/512.0)
-      // equals DuckDB's integer `//` for NEGATIVE cents too — the
-      // engines would diverge under DIV if values ever went negative
-      graft.ops.Manifest.writeBatchCells(batch
-        .select(col("event_type"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        .groupBy(col("event_type"),
-          floor(col("cents") / lit(512.0)).cast("long").as("bin"))
-        .agg(count(lit(1)).as("c")), store, id)
+    graft.TempDirs.using("graft_qhist") { storePath =>
+      val store = storePath.toString
+      val stream = graft.streaming.IncrementalStream
+        .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
+      graft.streaming.IncrementalStream.runForeachBatch("stream_quantile",
+          stream, minBatches = 2) { (batch, id) =>
+        // FLOOR division (not Spark's trunc-toward-zero DIV): division
+        // by a power of two is exact in doubles, so floor(x/512.0)
+        // equals DuckDB's integer `//` for NEGATIVE cents too — the
+        // engines would diverge under DIV if values ever went negative
+        graft.ops.Manifest.writeBatchCells(batch
+          .select(col("event_type"),
+            floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+          .groupBy(col("event_type"),
+            floor(col("cents") / lit(512.0)).cast("long").as("bin"))
+          .agg(count(lit(1)).as("c")), store, id)
+      }
+      val counts = s.read.parquet(store)
+        .groupBy(col("event_type"), col("bin")).agg(sum(col("c")).as("c"))
+      val cum = counts
+        .withColumn("cum", sum(col("c"))
+          .over(Window.partitionBy(col("event_type")).orderBy(col("bin"))))
+        .withColumn("n", sum(col("c"))
+          .over(Window.partitionBy(col("event_type"))))
+      graft.ops.Dedup.materialize(cum.groupBy(col("event_type"))
+        .agg(max(col("n")).as("n"),
+          min(when(col("cum") >= expr("(n + 1) DIV 2"), col("bin")))
+            .as("b50"),
+          min(when(col("cum") >= expr("(9 * n + 9) DIV 10"), col("bin")))
+            .as("b90"))
+        .select(col("event_type"), col("n"),
+          (col("b50") * 512).as("p50_bin_cents"),
+          (col("b90") * 512).as("p90_bin_cents"))
+        .orderBy(col("event_type")))
     }
-    val counts = s.read.parquet(store)
-      .groupBy(col("event_type"), col("bin")).agg(sum(col("c")).as("c"))
-    val cum = counts
-      .withColumn("cum", sum(col("c"))
-        .over(Window.partitionBy(col("event_type")).orderBy(col("bin"))))
-      .withColumn("n", sum(col("c"))
-        .over(Window.partitionBy(col("event_type"))))
-    val out = graft.ops.Dedup.materialize(cum.groupBy(col("event_type"))
-      .agg(max(col("n")).as("n"),
-        min(when(col("cum") >= expr("(n + 1) DIV 2"), col("bin")))
-          .as("b50"),
-        min(when(col("cum") >= expr("(9 * n + 9) DIV 10"), col("bin")))
-          .as("b90"))
-      .select(col("event_type"), col("n"),
-        (col("b50") * 512).as("p50_bin_cents"),
-        (col("b90") * 512).as("p90_bin_cents"))
-      .orderBy(col("event_type")))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    out
   }
 
   /** The EIGHTEENTH driver-visible stream shape — a TOP-K dashboard
@@ -561,30 +553,27 @@ object AdvancedQueries {
     // the cell-merge algebra is batch-count invariant, so a third real
     // micro-batch strengthens the proof at one spin-up's cost
     val stage = stageEventsTimeSplit(s, dir, n = 3)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_topkstore").toString
-    val stream = graft.streaming.IncrementalStream
-      .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    graft.streaming.IncrementalStream.runForeachBatch("stream_topk",
-        stream, minBatches = 3) { (batch, id) =>
-      graft.ops.Manifest.writeBatchCells(
-        batch.groupBy(col("event_type"), col("user_id"))
-          .agg(count(lit(1)).as("n")), store, id)
+    graft.TempDirs.using("graft_topkstore") { storePath =>
+      val store = storePath.toString
+      val stream = graft.streaming.IncrementalStream
+        .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
+      graft.streaming.IncrementalStream.runForeachBatch("stream_topk",
+          stream, minBatches = 3) { (batch, id) =>
+        graft.ops.Manifest.writeBatchCells(
+          batch.groupBy(col("event_type"), col("user_id"))
+            .agg(count(lit(1)).as("n")), store, id)
+      }
+      val merged = s.read.parquet(store)
+        .groupBy(col("event_type"), col("user_id"))
+        .agg(sum(col("n")).as("n"))
+      val w = Window.partitionBy(col("event_type"))
+        .orderBy(col("n").desc, col("user_id"))
+      graft.ops.Dedup.materialize(merged
+        .withColumn("rnk", row_number().over(w).cast("long"))
+        .filter(col("rnk") <= 3)
+        .select(col("event_type"), col("rnk"), col("user_id"), col("n"))
+        .orderBy(col("event_type"), col("rnk")))
     }
-    val merged = s.read.parquet(store)
-      .groupBy(col("event_type"), col("user_id"))
-      .agg(sum(col("n")).as("n"))
-    val w = Window.partitionBy(col("event_type"))
-      .orderBy(col("n").desc, col("user_id"))
-    // pin before deleting the temp cell store (the stream_manifest
-    // store-lifetime rule)
-    val out = graft.ops.Dedup.materialize(merged
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .select(col("event_type"), col("rnk"), col("user_id"), col("n"))
-      .orderBy(col("event_type"), col("rnk")))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    out
   }
 
   def movingSum7d(s: SparkSession, dir: String): DataFrame = {
@@ -938,8 +927,7 @@ object AdvancedQueries {
     */
   private def dppStage(s: SparkSession, dir: String): String =
     graft.Memo.value(dir, "dpp-stage") {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_dpp").toString
+      val out = graft.TempDirs.create("graft_dpp").toString
       t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"))
@@ -1705,8 +1693,8 @@ object AdvancedQueries {
     val ct = s"$db.customer_b_$ver"
     bktLock.synchronized {
       if (!s.catalog.databaseExists(db))
-        s.sql(s"CREATE DATABASE $db LOCATION '" +
-          java.nio.file.Files.createTempDirectory("graft_bkt") + "'")
+        s.sql(s"CREATE DATABASE $db LOCATION " +
+          s"'${graft.TempDirs.create("graft_bkt")}'")
       if (!s.catalog.tableExists(ot))
         graft.ops.Sink.bucketedSave(
           t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
@@ -2021,19 +2009,15 @@ object AdvancedQueries {
   def syncChecksum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val li = t(s, dir, "lineitem")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_sync_gate").toString
     // the source digest rides the load job itself (Observation over
     // the written rows — [[Sink.overwriteLoadChecksummed]]): digest
     // scan + write were two full passes over the same table for one
     // gate (r15, guide §1.2); same digest expression, same value
-    val (nSrc, ckSrc) =
-      graft.ops.Sink.overwriteLoadChecksummed(li, s"$out/lineitem")
-    val back = s.read.parquet(s"$out/lineitem")
-    val (nBack, ckBack) = graft.ops.Sink.tableChecksum(back)
-    // both digests are computed by now; the result below is a local
-    // relation, so the round-trip files can go
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    val ((nSrc, ckSrc), (nBack, ckBack)) =
+      graft.TempDirs.using("graft_sync_gate") { out =>
+        (graft.ops.Sink.overwriteLoadChecksummed(li, s"$out/lineitem"),
+          graft.ops.Sink.tableChecksum(s.read.parquet(s"$out/lineitem")))
+      }
     Seq((nSrc,
         if (nBack == nSrc) 1 else 0,
         if (ckBack.compareTo(ckSrc) == 0) 1 else 0,
@@ -2162,24 +2146,19 @@ object AdvancedQueries {
   def streamManifest(s: SparkSession, dir: String): DataFrame = {
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_manifest").toString
-    val stream = graft.streaming.IncrementalStream
-      .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    graft.streaming.IncrementalStream.runForeachBatch("stream_manifest",
-        stream, minBatches = 2) { (batch, id) =>
-      graft.ops.Manifest.writeBatchCells(graft.ops.Manifest.dayCells(batch,
-        to_date(Tables.eventTimeOf(schema, "ts")), col("event_id"),
-        salt = 424242L), store, id)
+    graft.TempDirs.using("graft_manifest") { storePath =>
+      val store = storePath.toString
+      val stream = graft.streaming.IncrementalStream
+        .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
+      graft.streaming.IncrementalStream.runForeachBatch("stream_manifest",
+          stream, minBatches = 2) { (batch, id) =>
+        graft.ops.Manifest.writeBatchCells(graft.ops.Manifest.dayCells(batch,
+          to_date(Tables.eventTimeOf(schema, "ts")), col("event_id"),
+          salt = 424242L), store, id)
+      }
+      graft.ops.Dedup.materialize(
+        graft.ops.Manifest.current(s, store).orderBy(col("day")))
     }
-    // pin the merged manifest BEFORE deleting the temp cell store: the
-    // un-pinned frame would lazily re-read the store at the caller's
-    // action, silently depending on the directory surviving — and an
-    // undeleted store leaks disk per run
-    val out = graft.ops.Dedup.materialize(
-      graft.ops.Manifest.current(s, store).orderBy(col("day")))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    out
   }
 
   /** Manifest DIFF — the reconciliation DECISION the manifest exists
@@ -2295,39 +2274,37 @@ object AdvancedQueries {
     */
   def compactRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString
-    val staged = s"$base/events_small"
-    val src = t(s, dir, "events")
-    // the source digest rides the staging write (Observation BEFORE
-    // the repartition — same rows, same digest expression as the
-    // separate tableChecksum(src) pass it replaces; r15, guide §1.2)
-    val srcObs = new org.apache.spark.sql.Observation()
-    graft.ops.Sink.observeChecksum(src, srcObs)
-      .repartition(64).write.parquet(staged)
-    val hPath = new Path(staged)
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def nDataFiles: Int = {
-      val it = fs.listFiles(hPath, true)
-      var n = 0
-      while (it.hasNext) {
-        if (!it.next().getPath.getName.startsWith("_")) n += 1
+    graft.TempDirs.using("graft_compact") { base =>
+      val staged = s"$base/events_small"
+      val src = t(s, dir, "events")
+      // the source digest rides the staging write (Observation BEFORE
+      // the repartition — same rows, same digest expression as the
+      // separate tableChecksum(src) pass it replaces; r15, guide §1.2)
+      val srcObs = new org.apache.spark.sql.Observation()
+      graft.ops.Sink.observeChecksum(src, srcObs)
+        .repartition(64).write.parquet(staged)
+      val hPath = new Path(staged)
+      val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      def nDataFiles: Int = {
+        val it = fs.listFiles(hPath, true)
+        var n = 0
+        while (it.hasNext) {
+          if (!it.next().getPath.getName.startsWith("_")) n += 1
+        }
+        n
       }
-      n
+      val filesBefore = nDataFiles
+      graft.ops.Sink.compact(s, staged)
+      val filesAfter = nDataFiles
+      val (nSrc, digSrc) = graft.ops.Sink.checksumFromObs(srcObs)
+      val (nOut, digOut) =
+        graft.ops.Sink.tableChecksum(s.read.parquet(staged))
+      import s.implicits._
+      Seq((nOut,
+        if (nSrc == nOut && digSrc.compareTo(digOut) == 0) 1 else 0,
+        if (filesAfter < filesBefore) 1 else 0))
+        .toDF("n_rows", "checksum_match", "files_reduced")
     }
-    val filesBefore = nDataFiles
-    graft.ops.Sink.compact(s, staged)
-    val filesAfter = nDataFiles
-    val (nSrc, digSrc) = graft.ops.Sink.checksumFromObs(srcObs)
-    val (nOut, digOut) =
-      graft.ops.Sink.tableChecksum(s.read.parquet(staged))
-    org.apache.commons.io.FileUtils
-      .deleteQuietly(new java.io.File(base))
-    import s.implicits._
-    Seq((nOut,
-      if (nSrc == nOut && digSrc.compareTo(digOut) == 0) 1 else 0,
-      if (filesAfter < filesBefore) 1 else 0))
-      .toDF("n_rows", "checksum_match", "files_reduced")
   }
 
   /** MERGE / CDC-apply (see [[graft.ops.Merge.upsert]]): a
@@ -2374,8 +2351,6 @@ object AdvancedQueries {
   def formatRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val src = t(s, dir, "orders")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_fmt_gate").toString
     val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     // r15 (guide §1.2 + §2.6): the source digest rides the CSV write
     // job (Observation — was a separate full scan), and the three
@@ -2392,7 +2367,7 @@ object AdvancedQueries {
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
     val (nCsv, ckCsv, nJson, ckJson, nOrc, ckOrc) =
-      try {
+      try graft.TempDirs.using("graft_fmt_gate") { out =>
         // distinct NULL token: the default CSV read maps empty fields
         // to NULL, which would silently corrupt empty strings
         // (unit-pinned with hostile strings in AdvancedSpec; orders
@@ -2429,7 +2404,6 @@ object AdvancedQueries {
         (a, b, c, d, e, f)
       } finally pool.shutdown()
     val (nSrc, ckSrc) = graft.ops.Sink.checksumFromObs(srcObs)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     Seq((nSrc,
         if (nCsv == nSrc) 1 else 0,
         if (ckCsv.compareTo(ckSrc) == 0) 1 else 0,
@@ -2602,35 +2576,34 @@ object AdvancedQueries {
       withStreamStatePartitions(s) {
     val schema = Tables.raw(s, dir, "events").schema
     val stage = stageEventsTimeSplit(s, dir, n = 3)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_dqstore").toString
-    val stream = graft.streaming.IncrementalStream
-      .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
-    def ruleCells(batch: DataFrame, rule: String,
-                  fail: org.apache.spark.sql.Column): DataFrame =
-      batch.agg(count(lit(1)).as("n_rows"),
-          sum(when(fail, 1L).otherwise(0L)).as("n_fail"))
-        .select(lit(rule).as("rule"),
-          col("n_rows"), coalesce(col("n_fail"), lit(0L)).as("n_fail"))
-    graft.streaming.IncrementalStream.runForeachBatch("stream_dq",
-        stream, minBatches = 3) { (batch, id) =>
-      graft.ops.Manifest.writeBatchCells(
-        ruleCells(batch, "event_type_in_domain",
-          !col("event_type").isin("click", "view", "purchase",
-            "signup", "error"))
-          .unionByName(ruleCells(batch, "user_id_not_null",
-            col("user_id").isNull))
-          .unionByName(ruleCells(batch, "value_in_0_50",
-            col("value") < 0 || col("value") > 50)), store, id)
+    graft.TempDirs.using("graft_dqstore") { storePath =>
+      val store = storePath.toString
+      val stream = graft.streaming.IncrementalStream
+        .readAppendStream(s, stage.toString, schema, maxFilesPerTrigger = Some(1))
+      def ruleCells(batch: DataFrame, rule: String,
+                    fail: org.apache.spark.sql.Column): DataFrame =
+        batch.agg(count(lit(1)).as("n_rows"),
+            sum(when(fail, 1L).otherwise(0L)).as("n_fail"))
+          .select(lit(rule).as("rule"),
+            col("n_rows"), coalesce(col("n_fail"), lit(0L)).as("n_fail"))
+      graft.streaming.IncrementalStream.runForeachBatch("stream_dq",
+          stream, minBatches = 3) { (batch, id) =>
+        graft.ops.Manifest.writeBatchCells(
+          ruleCells(batch, "event_type_in_domain",
+            !col("event_type").isin("click", "view", "purchase",
+              "signup", "error"))
+            .unionByName(ruleCells(batch, "user_id_not_null",
+              col("user_id").isNull))
+            .unionByName(ruleCells(batch, "value_in_0_50",
+              col("value") < 0 || col("value") > 50)), store, id)
+      }
+      graft.ops.Dedup.materialize(
+        s.read.parquet(store)
+          .groupBy(col("rule"))
+          .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_fail")).as("n_fail"))
+          .withColumn("fail_e6", expr("n_fail * 1000000 DIV n_rows"))
+          .orderBy(col("rule")))
     }
-    val out = graft.ops.Dedup.materialize(
-      s.read.parquet(store)
-        .groupBy(col("rule"))
-        .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_fail")).as("n_fail"))
-        .withColumn("fail_e6", expr("n_fail * 1000000 DIV n_rows"))
-        .orderBy(col("rule")))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    out
   }
 
   /** Driver-visible Structured Streaming gate: the events table
@@ -2909,49 +2882,47 @@ object AdvancedQueries {
       withStreamStatePartitions(s) {
     import org.apache.spark.sql.Row
     val schema = Tables.raw(s, dir, "events").schema
-    val snapRoot = java.nio.file.Files.createTempDirectory("graft_cdc")
     val stage = stageEventsTimeSplit(s, dir, n = 2)
-    val targetSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        schema("user_id").dataType, nullable = false),
-      org.apache.spark.sql.types.StructField("event_id",
-        schema("event_id").dataType, nullable = true),
-      org.apache.spark.sql.types.StructField("etype",
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("ts_us",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType, nullable = true)))
-    val current = new java.util.concurrent.atomic.AtomicReference[String]
-    current.set(snapRoot.resolve("v0").toString)
-    s.createDataFrame(java.util.Collections.emptyList[Row](), targetSchema)
-      .write.parquet(current.get)
-    graft.streaming.IncrementalStream.runForeachBatch("stream_cdc",
-        graft.streaming.IncrementalStream.readAppendStream(s, stage.toString,
-          schema, maxFilesPerTrigger = Some(1)),
-        minBatches = 2) { (batch, batchId) =>
-      // per-user latest event IN THIS BATCH (event_id breaks ts ties)
-      val changes = batch
-        .withColumn("ts_us", Tables.microsOf(batch, "ts"))
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("ts_us"), col("event_id"),
-          col("event_type"), col("value"))).as("m"))
-        .select(col("user_id"), col("m.event_id").as("event_id"),
-          col("m.event_type").as("etype"), col("m.ts_us").as("ts_us"),
-          col("m.value").as("value"),
-          (col("m.event_type") === "error").as("_deleted"))
-      val next = snapRoot.resolve(s"v${batchId + 1}").toString
-      graft.ops.Merge.upsert(s.read.parquet(current.get), changes, "user_id")
-        .write.parquet(next)
-      current.set(next)
+    graft.TempDirs.using("graft_cdc") { snapRoot =>
+      val targetSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("user_id",
+          schema("user_id").dataType, nullable = false),
+        org.apache.spark.sql.types.StructField("event_id",
+          schema("event_id").dataType, nullable = true),
+        org.apache.spark.sql.types.StructField("etype",
+          org.apache.spark.sql.types.StringType, nullable = true),
+        org.apache.spark.sql.types.StructField("ts_us",
+          org.apache.spark.sql.types.LongType, nullable = true),
+        org.apache.spark.sql.types.StructField("value",
+          org.apache.spark.sql.types.DoubleType, nullable = true)))
+      val current = new java.util.concurrent.atomic.AtomicReference[String]
+      current.set(snapRoot.resolve("v0").toString)
+      s.createDataFrame(java.util.Collections.emptyList[Row](), targetSchema)
+        .write.parquet(current.get)
+      graft.streaming.IncrementalStream.runForeachBatch("stream_cdc",
+          graft.streaming.IncrementalStream.readAppendStream(s, stage.toString,
+            schema, maxFilesPerTrigger = Some(1)),
+          minBatches = 2) { (batch, batchId) =>
+        // per-user latest event IN THIS BATCH (event_id breaks ts ties)
+        val changes = batch
+          .withColumn("ts_us", Tables.microsOf(batch, "ts"))
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("ts_us"), col("event_id"),
+            col("event_type"), col("value"))).as("m"))
+          .select(col("user_id"), col("m.event_id").as("event_id"),
+            col("m.event_type").as("etype"), col("m.ts_us").as("ts_us"),
+            col("m.value").as("value"),
+            (col("m.event_type") === "error").as("_deleted"))
+        val next = snapRoot.resolve(s"v${batchId + 1}").toString
+        graft.ops.Merge.upsert(s.read.parquet(current.get), changes, "user_id")
+          .write.parquet(next)
+        current.set(next)
+      }
+      graft.ops.Dedup.materialize(s.read.parquet(current.get)
+        .select(col("user_id"), col("event_id"), col("etype"), col("ts_us"),
+          round(col("value"), 4).as("value_r"))
+        .orderBy(col("user_id")))
     }
-    val out = s.read.parquet(current.get)
-      .select(col("user_id"), col("event_id"), col("etype"), col("ts_us"),
-        round(col("value"), 4).as("value_r"))
-      .orderBy(col("user_id"))
-      .localCheckpoint(true) // pin: snapshot files are deleted below
-    org.apache.commons.io.FileUtils.deleteQuietly(snapRoot.toFile)
-    out
   }
 
   /** Full outer join coverage (§2.7 — the one join shape broadcast

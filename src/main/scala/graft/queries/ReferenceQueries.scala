@@ -937,23 +937,22 @@ object ReferenceQueries {
 
   /** Checked-in JSON:API fixture pages for [[jsonapiSync]] — resolved
     * from the main classpath (exploded classes dir in the harness;
-    * extracted to a temp dir if ever run from a jar) so the query is
-    * location-independent.
+    * extracted to a [[graft.TempDirs.create]] dir if ever run from a
+    * jar) so the query is location-independent.
     */
   private def fixtureDirFor(sub: String, files: Seq[String]): String = {
     val res = getClass.getResource(s"/jsonapi_sync/$sub")
     if (res != null && res.getProtocol == "file")
       new java.io.File(res.toURI).getAbsolutePath
     else {
-      val tmp = java.nio.file.Files.createTempDirectory("jsonapi_sync").toFile
-      tmp.deleteOnExit()
+      val tmp = graft.TempDirs.create("jsonapi_sync")
       files.foreach { p =>
         val in = getClass.getResourceAsStream(s"/jsonapi_sync/$sub/$p")
         require(in != null, s"fixture $p missing from classpath")
-        try java.nio.file.Files.copy(in, new java.io.File(tmp, p).toPath)
+        try java.nio.file.Files.copy(in, tmp.resolve(p))
         finally in.close()
       }
-      tmp.getAbsolutePath
+      tmp.toString
     }
   }
 
@@ -1053,7 +1052,7 @@ object ReferenceQueries {
           today = java.time.LocalDate.of(2020, 1, 1)))
       // pin: materialize while the server is up (the frame is lazy;
       // the caller's action would otherwise hit a stopped server)
-      val out = prospectsSyncSelect(conformed).localCheckpoint(true)
+      val out = graft.ops.Dedup.materialize(prospectsSyncSelect(conformed))
       if (flaky) require(server.flakyFailures >= 3,
         s"retry path did not engage: only ${server.flakyFailures} " +
           "URLs took their transient 500 (expected one per page)")

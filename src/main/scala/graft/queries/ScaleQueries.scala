@@ -278,13 +278,13 @@ object ScaleQueries {
     val emb = t(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"))
-    val top = emb.filter(col("vec_id") =!= 0)
+    // 20 rows pinned; read twice below
+    val top = Dedup.materialize(emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id").as("cid"), col("embedding").as("cv"),
         round(cosine_sim(col("embedding"), col("qv")) * 10000)
           .cast("long").as("rel_e4"))
-      .orderBy(col("rel_e4").desc, col("cid")).limit(20)
-      .localCheckpoint(true) // 20 rows pinned; read twice below
+      .orderBy(col("rel_e4").desc, col("cid")).limit(20))
     val a = top.select(col("cid").as("i"), col("cv").as("iv"))
     val b = top.select(col("cid").as("j"), col("cv").as("jv"))
     // all 380 candidate-pair sims through the SAME kernel the
@@ -1045,8 +1045,7 @@ object ScaleQueries {
     val emb = t(s, dir, "embeddings")
     val (_, codebook) = fullIvfIndex(s, dir)
     graft.Memo.value(dir, "ivf-labeled") {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivf_labeled").toString
+      val p = graft.TempDirs.create("graft_ivf_labeled").toString
       Similarity.ivfIndexWriteLabeled(emb, "vec_id", "label",
         "embedding", p, codebook)
       p
@@ -1109,8 +1108,7 @@ object ScaleQueries {
     val basePath = labeledIvfIndex(s, dir)
     val path =
       graft.Memo.value(dir, "ivf-labeled-forget") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivf_labeled_forget").toString
+        val p = graft.TempDirs.create("graft_ivf_labeled_forget").toString
         Similarity.ivfIndexDeriveLabeled(s, basePath, p, lit(true))
         Similarity.ivfIndexForgetLabeled(s, p, codebook,
           emb.filter(col("vec_id") % 13 === 5),
@@ -1146,8 +1144,7 @@ object ScaleQueries {
     val basePath = labeledIvfIndex(s, dir)
     val path =
       graft.Memo.value(dir, "ivf-labeled-delta") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivf_labeled_delta").toString
+        val p = graft.TempDirs.create("graft_ivf_labeled_delta").toString
         Similarity.ivfIndexDeriveLabeled(s, basePath, p,
           col("cid") % 7 =!= 0)
         Similarity.ivfIndexAppendDeltaLabeled(s, p, codebook,
@@ -1916,8 +1913,7 @@ object ScaleQueries {
   private def fullIvfIndex(s: SparkSession, dir: String)
       : (String, Array[(Long, Seq[Float])]) =
     graft.Memo.value(dir, "ivf-index") {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivf_index").toString
+      val p = graft.TempDirs.create("graft_ivf_index").toString
       val cb = Similarity.ivfIndexWrite(t(s, dir, "embeddings"),
         "vec_id", "embedding", p)
       (p, cb)
@@ -1971,8 +1967,7 @@ object ScaleQueries {
       : String =
     graft.Memo.value(dir, "ivf-delta") {
       val emb = t(s, dir, "embeddings")
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivf_delta").toString
+      val p = graft.TempDirs.create("graft_ivf_delta").toString
       Similarity.ivfIndexDerive(s, fullPath, p, col("cid") % 7 =!= 0)
       Similarity.ivfIndexAppendDelta(s, p, codebook,
         emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding")
@@ -2020,8 +2015,7 @@ object ScaleQueries {
     val emb = t(s, dir, "embeddings")
     val (fullPath, codebook) = fullIvfIndex(s, dir)
     val path = graft.Memo.value(dir, "ivf-forget") {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivf_forget").toString
+      val p = graft.TempDirs.create("graft_ivf_forget").toString
       Similarity.ivfIndexDerive(s, fullPath, p, lit(true))
       Similarity.ivfIndexForget(s, p, codebook,
         emb.filter(col("vec_id") % 13 === 5), "vec_id", "embedding")
@@ -2082,8 +2076,7 @@ object ScaleQueries {
       }
       val coarse = Similarity.sampledCodebook(emb, "vec_id", "embedding",
         Similarity.sqrtStride(emb.count()))
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_index").toString
+      val p = graft.TempDirs.create("graft_ivfpq_index").toString
       Similarity.ivfpqIndexWrite(emb, "vec_id", "embedding", p, coarse, cbs)
       (p, coarse, cbs)
     }
@@ -2133,8 +2126,7 @@ object ScaleQueries {
     val (fullPath, coarse, cbs) = fullIvfpqIndex(s, dir)
     val deltaPath =
       graft.Memo.value(dir, "ivfpq-delta") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivfpq_delta").toString
+        val p = graft.TempDirs.create("graft_ivfpq_delta").toString
         // base = filter-copy of the memoized full code index (codes
         // depend only on (vector, codebooks) — re-encoding 6/7 of the
         // corpus would reproduce these rows bit-identically)
@@ -2180,8 +2172,7 @@ object ScaleQueries {
     val (fullPath, coarse, cbs) = fullIvfpqIndex(s, dir)
     val path =
       graft.Memo.value(dir, "ivfpq-forget") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivfpq_forget").toString
+        val p = graft.TempDirs.create("graft_ivfpq_forget").toString
         // filter-copy of the memoized full code index — see
         // annIndexForget; the forget loop under test is unchanged
         Similarity.ivfIndexDerive(s, fullPath, p, lit(true))
@@ -2247,8 +2238,7 @@ object ScaleQueries {
       val coarse = Similarity.sampledCodebook(emb, "vec_id", "embedding",
         Similarity.sqrtStride(emb.count()))
       val stats = sqStatsMemo(s, dir)
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivfsq_index").toString
+      val p = graft.TempDirs.create("graft_ivfsq_index").toString
       Similarity.ivfsqIndexWrite(emb, "vec_id", "embedding", p, coarse,
         stats._1, stats._2)
       (p, coarse, stats)
@@ -2301,8 +2291,7 @@ object ScaleQueries {
     val (fullPath, coarse, (mns, mxs)) = fullIvfsqIndex(s, dir)
     val deltaPath =
       graft.Memo.value(dir, "ivfsq-delta") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivfsq_delta").toString
+        val p = graft.TempDirs.create("graft_ivfsq_delta").toString
         // base = filter-copy of the memoized full SQ code index
         // (codes are fit-once affine arithmetic — a 6/7 re-encode
         // reproduces these rows bit-identically)
@@ -2348,8 +2337,7 @@ object ScaleQueries {
     val (fullPath, coarse, (mns, mxs)) = fullIvfsqIndex(s, dir)
     val path =
       graft.Memo.value(dir, "ivfsq-forget") {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivfsq_forget").toString
+        val p = graft.TempDirs.create("graft_ivfsq_forget").toString
         // filter-copy of the memoized full code index — see
         // annIndexForget; the forget loop under test is unchanged
         Similarity.ivfIndexDerive(s, fullPath, p, lit(true))

@@ -352,15 +352,16 @@ object IncrementalStream {
           col(rTs) <= col(lTs) + expr(s"INTERVAL $window"),
         "leftOuter")
 
-  /** Stage `slices` in a fresh temp directory as ONE parquet file each
+  /** Stage `slices` in `stage` (by default a fresh JVM-lifetime
+    * [[graft.TempDirs.create]] dir) as ONE parquet file each
     * (`slice_0000.parquet` first), with strictly ascending modification
     * times in slice order. The file source admits the oldest files
     * first, so a stream read with `maxFilesPerTrigger = 1` replays the
     * slices as that many REAL micro-batches, in slice order — the
     * production analogue is files simply arriving over time.
     */
-  def stageSlices(slices: Seq[DataFrame]): Path = {
-    val stage = Files.createTempDirectory("graft_stream")
+  def stageSlices(slices: Seq[DataFrame],
+                  stage: Path = graft.TempDirs.create("graft_stream")): Path = {
     val base = System.currentTimeMillis() - slices.size * 60000L
     slices.zipWithIndex.foreach { case (slice, i) =>
       val tmp = stage.resolve(s"__tmp_$i")
@@ -431,22 +432,22 @@ object IncrementalStream {
   private def run[T](name: String, minBatches: Int, spark: SparkSession,
                      writer: DataStreamWriter[Row])(body: => T): T = {
     val prev = spark.conf.getOption(CkptManagerKey)
-    val ckpt = Files.createTempDirectory(s"graft_ckpt_${name}_").toString
-    var q: StreamingQuery = null
-    try {
-      spark.conf.set(CkptManagerKey, "org.apache.spark.sql.execution." +
-        "streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      q = writer.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val n = q.recentProgress.count(_.numInputRows > 0)
-      require(n >= minBatches,
-        s"$name expected >=$minBatches non-empty micro-batches, got $n")
-      body
-    } finally {
-      if (q != null) q.stop()
-      prev.fold(spark.conf.unset(CkptManagerKey))(spark.conf.set(CkptManagerKey, _))
-      FileUtils.deleteQuietly(new java.io.File(ckpt))
+    graft.TempDirs.using(s"graft_ckpt_${name}_") { ckpt =>
+      var q: StreamingQuery = null
+      try {
+        spark.conf.set(CkptManagerKey, "org.apache.spark.sql.execution." +
+          "streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+        q = writer.option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        val n = q.recentProgress.count(_.numInputRows > 0)
+        require(n >= minBatches,
+          s"$name expected >=$minBatches non-empty micro-batches, got $n")
+        body
+      } finally {
+        if (q != null) q.stop()
+        prev.fold(spark.conf.unset(CkptManagerKey))(spark.conf.set(CkptManagerKey, _))
+      }
     }
   }
 

@@ -716,21 +716,22 @@ object ScaleProbe {
       import graft.streaming.IncrementalStream
       val tiny = spark.range(0, 128)
         .select(col("id"), (col("id") % 7).as("k"))
-      val stage = IncrementalStream.stageSlices(
-        (0 until 2).map(i => tiny.filter(col("id") % 2 === i)))
-      // the same runner (checkpoint manager, trigger, batch check,
-      // cleanup) every stream_* query pays
-      def noopStream(): Long = {
-        IncrementalStream.runForeachBatch("stream_noop",
-            IncrementalStream.readAppendStream(spark, stage.toString,
-              tiny.schema, maxFilesPerTrigger = Some(1)),
-            minBatches = 2) { (b, _) => b.count(); () }
-        0L
+      graft.TempDirs.using("graft_stream_noop") { dir =>
+        val stage = IncrementalStream.stageSlices(
+          (0 until 2).map(i => tiny.filter(col("id") % 2 === i)), dir)
+        // the same runner (checkpoint manager, trigger, batch check,
+        // cleanup) every stream_* query pays
+        def noopStream(): Long = {
+          IncrementalStream.runForeachBatch("stream_noop",
+              IncrementalStream.readAppendStream(spark, stage.toString,
+                tiny.schema, maxFilesPerTrigger = Some(1)),
+              minBatches = 2) { (b, _) => b.count(); () }
+          0L
+        }
+        noopStream() // JIT/codegen warm-up, untimed
+        val tNoop = (1 to 3).map(_ => timeOnce(noopStream())).min
+        println(f"""{"probe":"stream_noop_spinup","t_s":$tNoop%.3f,"batches":2,"warm_failed":$warmFailed}""")
       }
-      noopStream() // JIT/codegen warm-up, untimed
-      val tNoop = (1 to 3).map(_ => timeOnce(noopStream())).min
-      println(f"""{"probe":"stream_noop_spinup","t_s":$tNoop%.3f,"batches":2,"warm_failed":$warmFailed}""")
-      org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
     }
     // r13: the labeled layout at 10× LABELS — the small-files cliff
     // the (label, list_grp) compaction exists for (VERDICT r12 task
@@ -758,22 +759,21 @@ object ScaleProbe {
         val relabeled = emb10.select(col("vec_id"), col("embedding"),
           pmod(graft.functions.dsl.shuffle_key(col("vec_id"), 5L),
             lit(nLabels.toLong)).as("label"))
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft_labels_$nLabels").toString
-        val tBuild = timeOnce {
-          Similarity.ivfIndexWriteLabeled(relabeled, "vec_id", "label",
-            "embedding", dir, cb); 0L
+        graft.TempDirs.using(s"graft_labels_$nLabels") { dirPath =>
+          val dir = dirPath.toString
+          val tBuild = timeOnce {
+            Similarity.ivfIndexWriteLabeled(relabeled, "vec_id", "label",
+              "embedding", dir, cb); 0L
+          }
+          val files = leafFiles(dir)
+          val fleet = relabeled.filter(col("vec_id") % 20 === 0)
+            .select(col("vec_id").as("qid"), col("label").as("qlabel"),
+              col("embedding").cast("array<float>").as("qv"))
+          val tFleet = bestOf2(
+            Similarity.ivfIndexedBatchSearchLabeled(spark, dir, cb,
+              fleet, Similarity.filteredNprobe(cb.length), 3).count())
+          println(f"""{"probe":"labels_layout","n_labels":$nLabels,"nlist":${cb.length},"leaf_files":$files,"t_build_s":$tBuild%.3f,"t_fleet_s":$tFleet%.3f,"warm_failed":$warmFailed}""")
         }
-        val files = leafFiles(dir)
-        val fleet = relabeled.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-            col("embedding").cast("array<float>").as("qv"))
-        val tFleet = bestOf2(
-          Similarity.ivfIndexedBatchSearchLabeled(spark, dir, cb,
-            fleet, Similarity.filteredNprobe(cb.length), 3).count())
-        println(f"""{"probe":"labels_layout","n_labels":$nLabels,"nlist":${cb.length},"leaf_files":$files,"t_build_s":$tBuild%.3f,"t_fleet_s":$tFleet%.3f,"warm_failed":$warmFailed}""")
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(dir))
       }
     }
     spark.stop()

@@ -292,6 +292,16 @@ class AdvancedSpec extends AnyFunSuite {
     assert(caches.isEmpty, caches)
   }
 
+  test("TempDirs.scala is the only source that makes or schedules temp files") {
+    // one owner for the engine's own files: a temp dir made anywhere
+    // else under src/main picks its own place and lifetime, and leaks
+    val tempCall = """\b(createTempDirectory|createTempFile|deleteOnExit)\b""".r
+    val owners = sourcesUnder("src/main").collect {
+      case (name, code) if tempCall.findFirstIn(code).isDefined => name
+    }
+    assert(owners == Seq("TempDirs.scala"), owners)
+  }
+
   test("percentile gate: exact rank percentiles, sketch within bound") {
     val rows = graft.queries.AdvancedQueries
       .percentileBound(spark, "/root/testdata/sf0.001").collect()

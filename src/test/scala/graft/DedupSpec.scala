@@ -523,6 +523,28 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(run.value > 0)
   }
 
+  test("spread reads the partition count without a SQL execution of its own") {
+    val docs = Tables(spark, sf, "documents")
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val probe = SparkRun(spark)(Dedup.spread(docs))
+    assert(probe.plans.isEmpty && probe.jobs == 0, probe.plans.map(_.nodeName))
+    // the decision df.rdd's count would take
+    assert((probe.value eq docs) == (docs.rdd.getNumPartitions >= n))
+    // minhashPairs spreads its input: no executed plan is the count
+    // probe (a DeserializeToObject over the documents scan), and the
+    // pairs equal those of an input spread up front, where spread
+    // keeps the frame as it is
+    def pairs(df: org.apache.spark.sql.DataFrame) = SparkRun(spark) {
+      Dedup.minhashPairs(df, "doc_id", "text").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    }
+    val run = pairs(docs)
+    assert(!run.plans.exists(_.nodeName == "DeserializeToObject"),
+      run.plans.map(_.nodeName))
+    assert(run.value == pairs(docs.repartition(n)).value)
+    assert(run.value.nonEmpty)
+  }
+
   test("minhashPairs verify-join broadcast gate is result-invariant " +
       "(broadcast path == shuffle fallback)") {
     // r15: the verification joins broadcast the candidate side when it

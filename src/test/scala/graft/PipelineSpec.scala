@@ -23,7 +23,7 @@ class PipelineSpec extends AnyFunSuite {
     today = LocalDate.of(2019, 7, 1))
 
   test("end-to-end sync: source → window → conform → dedup → sink") {
-    val tmp = Files.createTempDirectory("graft-sync").toString
+    val tmp = TempDirs.create("graft-sync").toString
     val out = OutreachPipeline.sync(spark, cfg(tmp))
     assert(out.endsWith("outreach_prospects"))
     val loaded = spark.read.parquet(out)
@@ -38,7 +38,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("window re-run is idempotent (dynamic partition overwrite)") {
-    val tmp = Files.createTempDirectory("graft-sync2").toString
+    val tmp = TempDirs.create("graft-sync2").toString
     OutreachPipeline.sync(spark, cfg(tmp))
     val first = spark.read.parquet(s"$tmp/outreach_prospects").count()
     OutreachPipeline.sync(spark, cfg(tmp)) // re-pull same window
@@ -47,7 +47,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("previous_day window filters to the day's records only") {
-    val tmp = Files.createTempDirectory("graft-sync3").toString
+    val tmp = TempDirs.create("graft-sync3").toString
     // record 2 was updated 2019-06-03 → previous_day of 2019-06-04
     val c = cfg(tmp).copy(replicationType = "previous_day",
       today = LocalDate.of(2019, 6, 4))

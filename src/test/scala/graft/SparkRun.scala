@@ -59,7 +59,7 @@ object TestPages {
   type Rec = (Long, String, String, String)
 
   def write(pages: Seq[Seq[Rec]], count: Option[Int] = None): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pages")
+    val dir = TempDirs.create("graft-pages")
     val metaCount = count.getOrElse(pages.map(_.size).sum)
     pages.zipWithIndex.foreach { case (recs, i) =>
       val data = recs.map { case (id, tpe, ts, name) =>

@@ -881,10 +881,10 @@ class StreamingSpec extends AnyFunSuite {
     val label = "runner_throw_probe"
     val stage = IncrementalStream.stageSlices(
       (0 until 3).map(i => spark.range(i * 10L, i * 10L + 10L).toDF("id")))
-    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val tmpRoot = TempDirs.root.toFile
     def ckptDirs: Set[String] = tmpRoot.list().toSet
       .filter(_.startsWith(s"graft_ckpt_${label}_"))
-    val leftBefore = ckptDirs // a crashed earlier JVM may have left some
+    val leftBefore = ckptDirs // an earlier test in this JVM may have left some
     val callerValue = "org.apache.spark.sql.execution.streaming." +
       "checkpointing.FileContextBasedCheckpointFileManager"
     val confInRun = new java.util.concurrent.atomic.AtomicReference[Option[String]]
