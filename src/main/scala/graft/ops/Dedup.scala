@@ -17,9 +17,10 @@ import graft.functions.dsl._
   *    digest, single shuffle, no text comparison after the hash.
   *  - MinHash/SimHash signatures are computed per-row in whole-stage
   *    codegen (custom expressions, [[graft.functions]]): the 100 TB
-  *    corpus is never compared pairwise — candidate generation is an
-  *    equi-join on LSH band keys, so the shuffle carries (band, id)
-  *    pairs, not documents, and AQE handles hot buckets.
+  *    corpus is never compared pairwise — candidate generation is one
+  *    grouped aggregate on the LSH band key ([[Dedup.keyPairs]]), so the
+  *    shuffle carries (band, id) rows, not documents, and a hot bucket
+  *    can split into salted tiles.
   *  - Pair verification joins candidates back to the shingle sets by
   *    id (broadcast-able at the candidate side), never re-reading text.
   */
@@ -163,59 +164,79 @@ object Dedup {
     df.groupBy(md5(keyCol.cast("binary")).as("key_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** All `(id_a < id_b)` co-occurrence pairs from a self-equi-join of
-    * `rows` on `keys` — ONE output row per key match (callers then
-    * `distinct` or count matches per pair), with optional hot-bucket
-    * salting for skew.
+  /** The one grouped aggregate behind every key-pair set: one row per
+    * key of `rows` with its ids, sorted, as `ids`. A self-join on the
+    * key never pairs a NULL key, so those rows drop out before the
+    * aggregate; `collect_list` skips NULL ids, which never pair either.
+    * A bucket of more than `maxBucketSize` ids drops out whole (the
+    * O(bucket²) guard), and so does one too small to hold a pair.
+    */
+  private def buckets(rows: DataFrame, keys: Seq[String],
+                      maxBucketSize: Int): DataFrame =
+    rows.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(col("id"))).as("ids"))
+      .filter(size(col("ids")).between(2, maxBucketSize))
+
+  /** A tile: the pairs between the ids of `l` and those of `r`. On the
+    * diagonal `l` and `r` are the same sorted array and only the pairs
+    * (i < j) of it count. `carry` rides along to each pair. */
+  private def tile(l: Column, r: Column, diagonal: Boolean, carry: Column*): Column =
+    struct(Seq(l.as("l"), r.as("r"), lit(diagonal).as("diag")) ++ carry: _*)
+
+  /** The pair generator over a frame of tiles (`l`, `r`, `diag`, plus the
+    * `carry` columns): every (a, b) with a from `l` and b from `r`, or
+    * from after a on the diagonal, and a ≠ b, as (least, greatest). Two
+    * streaming explodes: the most a task holds is its tile's arrays and
+    * one slice of `r`, O(m) for a bucket of m ids, never the m²/2 pairs.
+    */
+  private def tilePairs(tiles: DataFrame, carry: String*): DataFrame = {
+    val kept = carry.map(col)
+    tiles.select(kept ++ Seq(col("r"), col("diag"),
+        posexplode(col("l")).as(Seq("__i", "__a"))): _*)
+      .select(kept ++ Seq(col("__a"), explode(slice(col("r"),
+        when(col("diag"), col("__i") + 2).otherwise(1), size(col("r")))).as("__b")): _*)
+      .filter(col("__a") =!= col("__b"))
+      .select(Seq(least(col("__a"), col("__b")).as("id_a"),
+        greatest(col("__a"), col("__b")).as("id_b")) ++ kept: _*)
+  }
+
+  /** All `(id_a < id_b)` pairs of ids that share a value of `keys` in
+    * `rows` — ONE output row per key match, exactly the multiset a
+    * self-equi-join on `keys` with `a.id < b.id` returns (callers then
+    * `distinct` or count matches per pair). Buckets of more than
+    * `maxBucketSize` ids are dropped.
     *
-    * The scale problem this solves: a bucket of m rows (shared
-    * boilerplate in LSH; a ubiquitous fingerprint) lands all m² pair
-    * work on the ONE reducer that owns its key. With `salt` = s,
-    * buckets larger than `hotThreshold` are split by a deterministic
-    * per-id salt into s groups and the self-join runs over the
-    * s·(s+1)/2 (lo, hi) grid cells — each row replicated s ways, each
-    * cell doing (m/s)² of the work on its own reducer. A pair whose
-    * salts are (α, β) meets in every shared cell, so the join keeps
-    * only the canonical cell (lo, hi) = (min(α,β), max(α,β)) — that
-    * filter is what makes salted output EXACTLY equal the plain join
-    * (one row per match, no replication echo), which DedupSpec pins.
+    * One grouped aggregate collects each bucket's ids once; a bucket is
+    * one diagonal tile that [[tilePairs]] expands, in O(m) memory. The
+    * scale problem salting solves: a bucket of m ids (shared
+    * boilerplate in LSH; a ubiquitous fingerprint) puts all m²/2 pair
+    * work in the ONE task that holds its row. With `salt` = s, a bucket
+    * of more than `hotThreshold` ids splits by a deterministic per-id
+    * salt into s groups and becomes the s·(s+1)/2 (lo, hi) tiles of
+    * those groups, which a round-robin exchange spreads over the
+    * session's tasks, each with (m/s)² of the work or less. A pair
+    * whose salts are (α, β) sits in tile (min, max) only, so the salted
+    * output EXACTLY equals the plain one, which DedupSpec pins.
     * Defaults leave salting off; production turns it on for the
     * boilerplate-heavy corpora SCALE.md names.
     */
-  /** `sizeCol`: name of a column on `rows` that ALREADY carries each
-    * row's bucket size (e.g. [[minhashPairs]] computes sizes once for
-    * its prune filter and threads them through) — skips the internal
-    * size aggregation + join, saving one shuffle over the full row set.
-    */
   def keyPairs(rows: DataFrame, keys: Seq[String],
                hotThreshold: Int = Int.MaxValue, salt: Int = 1,
-               sizeCol: String = ""): DataFrame = {
-    def eqOn(extra: Column): Column =
-      keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
-        col("a.id") < col("b.id") && extra
-    def plain(df: DataFrame): DataFrame =
-      df.as("a").join(df.as("b"), eqOn(lit(true)))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    if (salt <= 1 || hotThreshold == Int.MaxValue) plain(rows)
+               maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    val ids = col("ids")
+    val bucketed = buckets(rows, keys, maxBucketSize)
+    if (salt <= 1 || hotThreshold == Int.MaxValue)
+      tilePairs(bucketed.select(tile(ids, ids, diagonal = true).as("t")).select("t.*"))
     else {
-      val keyCols = keys.map(col)
-      val tagged =
-        if (sizeCol.nonEmpty) rows.withColumnRenamed(sizeCol, "__bn")
-        else rows.join(
-          rows.groupBy(keyCols: _*).agg(count(lit(1)).as("__bn")), keys)
-      val cold = tagged.filter(col("__bn") <= hotThreshold).drop("__bn")
-      val hot = tagged.filter(col("__bn") > hotThreshold).drop("__bn")
-        .withColumn("__salt", pmod(hash(col("id")), lit(salt)))
-      val cells = hot.select(col("*"), explode(expr(
-          s"transform(sequence(0, ${salt - 1}), " +
-            "j -> named_struct('lo', least(__salt, j), 'hi', greatest(__salt, j)))"))
-        .as("__cell"))
-      val hotPairs = cells.as("a")
-        .join(cells.as("b"), eqOn(col("a.__cell") === col("b.__cell")))
-        .filter(col("a.__cell.lo") === least(col("a.__salt"), col("b.__salt")) &&
-          col("a.__cell.hi") === greatest(col("a.__salt"), col("b.__salt")))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      plain(cold).unionByName(hotPairs)
+      val groups = bucketed.select(ids, when(size(ids) > hotThreshold,
+        transform(sequence(lit(0), lit(salt - 1)),
+          j => filter(ids, x => pmod(hash(x), lit(salt)) === j))).as("g"))
+      val grid = for (lo <- 0 until salt; hi <- lo until salt)
+        yield tile(col("g")(lo), col("g")(hi), lo == hi)
+      val tiles = groups.select(explode(when(col("g").isNotNull, array(grid: _*))
+        .otherwise(array(tile(ids, ids, diagonal = true)))).as("t")).select("t.*")
+      tilePairs(spreadEager(tiles))
     }
   }
 
@@ -242,30 +263,9 @@ object Dedup {
       .join(setsB, "id_b")
   }
 
-  /** MinHash + banded LSH near-duplicate pairs.
-    *
-    * numHashes = bands * rowsPerBand. Docs sharing ≥1 band bucket are
-    * candidates; candidates are verified with exact Jaccard over the
-    * shingle-hash sets and kept when ≥ `threshold`.
-    *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b, exact distinct.
-    */
-  /** `maxBucketSize` caps LSH bucket membership: a bucket with more
-    * than this many docs (shared boilerplate) would contribute
-    * O(bucket²) candidate pairs; production dedup drops or routes
-    * such buckets to a dedicated clustering pass. Default is high
-    * enough to be inactive on the test corpus.
-    *
-    * `hotBucketThreshold`/`hotBucketSalt` turn on [[keyPairs]]'s
-    * salted self-join for buckets UNDER the drop cap but big enough
-    * to pin one reducer (the documented escalation between "fine" and
-    * "drop the bucket"). Result-invariant vs the unsalted path
-    * (DedupSpec pins it); off by default.
-    */
   /** The (id, sh, sig) MinHash signature table — the shared first
-    * stage of [[minhashPairs]], [[minhashPairsIncremental]] and the
-    * salted-path engagement diagnostics ([[graft.queries.ScaleQueries
-    * .dedupSalted]]). Caller persists if it feeds >1 consumer.
+    * stage of [[minhashPairs]] and [[minhashPairsIncremental]]. Caller
+    * persists if it feeds >1 consumer.
     */
   private[graft] def signatureTable(df: DataFrame, idCol: String,
                                     textCol: String, shingleN: Int,
@@ -287,12 +287,33 @@ object Dedup {
         b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
         .as(Seq("band_idx", "band_hash")))
 
-  /** `requireHotEngagement`: when the salting escalation is enabled,
-    * assert (against the SAME persisted band rows the join reads —
-    * one signature computation total) that at least one bucket
-    * actually exceeds `hotBucketThreshold`, so a corpus regen that
-    * removes every hot bucket fails the salted query LOUDLY instead
-    * of silently degrading it to a plain-join test.
+  private val BandKeys = Seq("band_idx", "band_hash")
+
+  /** MinHash + banded LSH near-duplicate pairs.
+    *
+    * numHashes = bands * rowsPerBand. Docs sharing ≥1 band bucket are
+    * candidates; candidates are verified with exact Jaccard over the
+    * shingle-hash sets and kept when ≥ `threshold`. The candidates are
+    * [[keyPairs]] on (band_idx, band_hash): one grouped aggregate
+    * collects each bucket's ids, the bucket cap reads the array's
+    * length, and a streaming generator emits the pairs.
+    *
+    * `maxBucketSize` caps LSH bucket membership: a bucket with more
+    * than this many docs (shared boilerplate) would contribute
+    * O(bucket²) candidate pairs; production dedup drops or routes
+    * such buckets to a dedicated clustering pass. Default is high
+    * enough to be inactive on the test corpus.
+    *
+    * `hotBucketThreshold`/`hotBucketSalt` turn on [[keyPairs]]'s salted
+    * tiles for buckets UNDER the drop cap but big enough to pin one
+    * task (the documented escalation between "fine" and "drop the
+    * bucket"). Result-invariant vs the unsalted path (DedupSpec pins
+    * it); off by default. `requireHotEngagement`: when salting is on,
+    * assert that at least one bucket exceeds `hotBucketThreshold`, so a
+    * corpus regen that removes every hot bucket fails the salted query
+    * LOUDLY instead of silently degrading it to one tile per bucket.
+    *
+    * Returns (id_a, id_b, jaccard) with id_a < id_b, exact distinct.
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
@@ -309,41 +330,22 @@ object Dedup {
     // "materialize the signature table" step of any LSH pipeline.
     val base = signatureTable(df, idCol, textCol, shingleN, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val banded = bandRows(base, bands, rowsPerBand)
-    // ONE bucket-size aggregation serves all three consumers — the
-    // engagement check, the pathological-bucket prune, and the salted
-    // path's hot/cold split ([[keyPairs]] `sizeCol`). Cached: it is
-    // read 1-2× more and is band-row-sized, not corpus-text-sized.
-    // Before r8 each consumer re-aggregated (the engagement check was
-    // effectively a second LSH pass — VERDICT r7 named it the most
-    // expensive query in the suite).
-    val bucketSizes = banded
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("__bn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // unpersist in finally: ANY escaping failure (engagement throw,
-    // executor loss mid-materialize, analysis error) must release both
-    // cached frames — a leaked corpus-sized cache pins memory for the
+    // executor loss mid-materialize, analysis error) must release the
+    // cached frame — a leaked corpus-sized cache pins memory for the
     // whole session (the round-2 bench regression's failure mode)
     try {
-      if (requireHotEngagement && hotBucketThreshold != Int.MaxValue) {
-        val hot = bucketSizes
-          .filter(col("__bn") > hotBucketThreshold && col("__bn") <= maxBucketSize)
-          .count()
-        if (hot == 0)
-          throw new IllegalStateException(
-            s"salted minhashPairs expects at least one LSH bucket with > " +
-              s"$hotBucketThreshold docs (and <= $maxBucketSize); the corpus " +
-              s"has none — the escalation would go untested")
-      }
+      val banded = bandRows(base, bands, rowsPerBand)
+      if (requireHotEngagement && hotBucketThreshold != Int.MaxValue &&
+          buckets(banded, BandKeys, maxBucketSize)
+            .filter(size(col("ids")) > hotBucketThreshold).isEmpty)
+        throw new IllegalStateException(
+          s"salted minhashPairs expects at least one LSH bucket with > " +
+            s"$hotBucketThreshold docs (and <= $maxBucketSize); the corpus " +
+            s"has none — the escalation would go untested")
 
-      // prune pathological buckets before the self-join (O(bucket²) guard)
-      val pruned = banded.join(bucketSizes.filter(col("__bn") <= maxBucketSize),
-        Seq("band_idx", "band_hash"))
-
-      val candidates = keyPairs(pruned, Seq("band_idx", "band_hash"),
-          hotBucketThreshold, hotBucketSalt, sizeCol = "__bn")
+      val candidates = keyPairs(banded, BandKeys,
+          hotBucketThreshold, hotBucketSalt, maxBucketSize)
         .distinct()
 
       val sets = base.select(col("id"), col("sh"))
@@ -355,24 +357,28 @@ object Dedup {
       // corpus-sized signature cache — returning a plan that still
       // referenced `base` would leak it for the whole session
       materialize(pairs)
-    } finally {
-      base.unpersist(); bucketSizes.unpersist()
-    }
+    } finally base.unpersist()
   }
 
   /** INCREMENTAL MinHash-LSH index maintenance: the near-dup pair set
     * of a corpus that grows by append, maintained by probing the
-    * banded-signature INDEX with only the NEW documents — the
-    * base×base join never runs in the delta path. This is how an LSH
-    * index absorbs a daily increment at 100 TB: the stored index is
-    * the banded signature table bucketed by (band_idx, band_hash);
-    * the delta shingles once, probes matching buckets with an
-    * equi-join (cost ∝ |Δ| × average bucket occupancy, corpus size
-    * only enters through bucket width), and appends its own band rows
-    * for the next increment. Same algebra as
-    * [[graft.ops.Incremental]]'s join-view maintenance:
-    * pairs(base ∪ Δ) = pairs(base) ∪ probe(Δ, index) — the two legs
-    * are disjoint by construction (base pairs have no delta endpoint).
+    * banded-signature INDEX with only the NEW documents — no base×base
+    * pair comes from the delta leg. This is how an LSH index absorbs a
+    * daily increment at 100 TB: the stored index is the banded
+    * signature table bucketed by (band_idx, band_hash); the delta
+    * shingles once and pairs each new id of a bucket with the bucket's
+    * ids (cost ∝ |Δ| × average bucket occupancy, corpus size only
+    * enters through bucket width), and appends its own band rows for
+    * the next increment. Same algebra as [[graft.ops.Incremental]]'s
+    * join-view maintenance: pairs(base ∪ Δ) = pairs(base) ∪ probe(Δ,
+    * index) — the two legs are disjoint by construction (base pairs
+    * have no delta endpoint).
+    *
+    * Both legs are tiles of [[keyPairs]]' bucket aggregate, fed to the
+    * same generator: per bucket, the base tile is the diagonal of its
+    * old ids, the delta tile its new ids against all of its ids (a
+    * delta×delta pair arrives from both directions; the distinct
+    * folds it).
     *
     * `deltaOf` marks the newly arrived ids (the driver query uses
     * `id % 10 = 9` as a deterministic 10% increment). The base leg is
@@ -393,44 +399,21 @@ object Dedup {
                               shingleN: Int = 3, bands: Int = 16,
                               rowsPerBand: Int = 8, threshold: Double = 0.7,
                               maxBucketSize: Int = 10000): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val base = spread(df.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .select(col("id"), shingleHashes(col("__text"), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhash_sig(col("sh"), numHashes))
-      .withColumn("__new", deltaOf(col("id")))
+    val base = signatureTable(df, idCol, textCol, shingleN, bands * rowsPerBand)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = base.select(col("id"), col("__new"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
-          .as(Seq("band_idx", "band_hash")))
-    val bucketSizes = banded
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("__bn"))
-      .filter(col("__bn") <= maxBucketSize)
-      .drop("__bn")
-    val pruned = banded.join(bucketSizes, Seq("band_idx", "band_hash"))
-    // base leg: stands in for the stored pair set (see scaladoc)
-    val basePairs = keyPairs(pruned.filter(!col("__new")).drop("__new"),
-        Seq("band_idx", "band_hash"))
-      .distinct()
-      .withColumn("src", lit("base"))
-    // delta leg: new docs probe the FULL index (old + new band rows);
-    // a delta×delta pair arrives from both directions — distinct folds
-    // it; no base×base pair can arrive at all
-    val probe = pruned.filter(col("__new")).as("d")
-      .join(pruned.as("o"),
-        col("d.band_idx") === col("o.band_idx") &&
-          col("d.band_hash") === col("o.band_hash") &&
-          col("d.id") =!= col("o.id"))
-      .select(least(col("d.id"), col("o.id")).as("id_a"),
-        greatest(col("d.id"), col("o.id")).as("id_b"))
-      .distinct()
-      .withColumn("src", lit("delta"))
+    val ids = col("ids")
+    val oldIds = filter(ids, x => !deltaOf(x))
+    val legs = buckets(bandRows(base, bands, rowsPerBand), BandKeys, maxBucketSize)
+      .select(explode(array(
+        tile(oldIds, oldIds, diagonal = true, lit("base").as("src")),
+        tile(filter(ids, deltaOf), ids, diagonal = false, lit("delta").as("src"))))
+        .as("t"))
+      .select("t.*")
+    val candidates = tilePairs(legs, "src").distinct()
     val sets = base.select(col("id"), col("sh"))
     // same measured-count candidate broadcast as [[verifyJoin]] (the
     // src column rides through both joins unchanged)
-    val pairs = verifyJoin(basePairs.unionByName(probe), sets)
+    val pairs = verifyJoin(candidates, sets)
       .withColumn("jaccard", sorted_jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"), col("src"))

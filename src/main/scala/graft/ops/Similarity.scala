@@ -1417,36 +1417,26 @@ object Similarity {
     encoded.withColumn("sim",
       cosine_sim(col("v"), pqReconstructExpr(codebooks, col("code"))))
 
-  /** `maxDocsPerFp` drops fingerprints shared by more than that many
-    * documents before the self-join: a boilerplate k-gram appearing in
-    * thousands of docs contributes O(docs²) pairs while carrying no
-    * discrimination signal — the inverted-index stop-list, same idea
-    * as [[Dedup.minhashPairs]]'s bucket cap.
+  /** Document pairs that share at least `minShared` winnowing
+    * fingerprints, with the count as `n_shared`. `maxDocsPerFp` drops
+    * fingerprints shared by more than that many documents: a
+    * boilerplate k-gram appearing in thousands of docs contributes
+    * O(docs²) pairs while carrying no discrimination signal — the
+    * inverted-index stop-list, [[Dedup.keyPairs]]' bucket cap, as in
+    * [[Dedup.minhashPairs]].
     */
   def fingerprintPairs(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 8, w: Int = 4, minShared: Int = 5,
                        maxDocsPerFp: Int = 50,
                        hotFpThreshold: Int = Int.MaxValue,
-                       hotFpSalt: Int = 1): DataFrame = {
-    val fps = TextOps.winnowingFingerprints(df, idCol, textCol, k, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rare = fps.groupBy(col("fp"))
-      .agg(count(lit(1)).as("__docs"))
-      .filter(col("__docs") <= maxDocsPerFp)
-      .drop("__docs")
-    val pruned = fps.join(rare, Seq("fp"))
+                       hotFpSalt: Int = 1): DataFrame =
     // keyPairs emits one row per shared fingerprint (exactly once even
     // on the salted path), so the count below IS n_shared
-    val pairs = graft.ops.Dedup
-      .keyPairs(pruned, Seq("fp"), hotFpThreshold, hotFpSalt)
+    Dedup.keyPairs(TextOps.winnowingFingerprints(df, idCol, textCol, k, w),
+        Seq("fp"), hotFpThreshold, hotFpSalt, maxBucketSize = maxDocsPerFp)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    // pin the small pair set, release the corpus-sized fingerprint cache
-    val out = graft.ops.Dedup.materialize(pairs)
-    fps.unpersist()
-    out
-  }
 
   // ------------------------------------------------------------------
   // Scalar (int8) quantization — the vector-store "SQ8" baseline

@@ -1041,9 +1041,11 @@ object ReferenceQueries {
         .option("resource", "prospects")
         .options(server.sourceOptions)
         .load()
-      require(pages.rdd.getNumPartitions == 1,
-        "opaque cursor must plan ONE sequential chain partition, got " +
-          pages.rdd.getNumPartitions)
+      // toRdd: `pages.rdd` would run a SQL execution of its own just
+      // to report the count
+      val chains = pages.queryExecution.toRdd.getNumPartitions
+      require(chains == 1,
+        s"opaque cursor must plan ONE sequential chain partition, got $chains")
       val conformed = graft.ops.OutreachPipeline.conformedFrom(pages,
         graft.ops.OutreachPipeline.SyncConfig(
           resource = "prospects", pagesDir = "", outDir = "",

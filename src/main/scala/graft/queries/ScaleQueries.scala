@@ -72,17 +72,18 @@ object ScaleQueries {
 
   /** [[dedupMinhash]] with the hot-bucket salting escalation ENGAGED
     * (hotBucketThreshold = 2, salt = 4): every LSH bucket holding ≥ 3
-    * docs runs through [[Dedup.keyPairs]]'s salted (lo, hi)-cell
-    * self-join instead of landing its whole m² pair work on one
-    * reducer — the skew path between "AQE handles it" and "drop the
-    * bucket". Result-invariance vs the plain join is the operator's
+    * docs becomes [[Dedup.keyPairs]]'s salted (lo, hi) tiles instead
+    * of landing its whole m² pair work in one task — the skew path
+    * between "one task is fine" and "drop the bucket".
+    * Result-invariance vs the unsalted pairs is the operator's
     * contract (DedupSpec pins it unit-level); this query pins it
     * DRIVER-level: the oracle is the same all-pairs recompute
     * `dedup_minhash` hash-matches, so the salted candidate generation
     * must reproduce the identical verified pair set. The engagement
     * check is LOUD by design: if a corpus regen removed every hot
-    * bucket, the query fails instead of silently passing as a plain
-    * join (measured: 21/15/114 hot buckets at sf0.001/0.01/0.1).
+    * bucket, the query fails instead of silently passing with one
+    * tile per bucket (measured: 21/15/114 hot buckets at
+    * sf0.001/0.01/0.1).
     */
   def dedupSalted(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashPairs(t(s, dir, "documents"), "doc_id", "text",

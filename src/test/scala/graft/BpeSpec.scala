@@ -32,7 +32,7 @@ class BpeSpec extends AnyFunSuite {
   test("train-once memo is version-keyed: rewriting a dir's parquet " +
       "in place retrains instead of serving stale merges") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ver").toString
+    val dir = TempDirs.create("graft_ver").toString
     def write(texts: Seq[String]): Unit = {
       val tmp = s"$dir/__tmp"
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }

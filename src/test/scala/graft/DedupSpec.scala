@@ -68,6 +68,59 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(plain.length == 40 * 39 / 2 + 5 * 4 / 2 + 1)
   }
 
+  /** What a self-equi-join on `k` with `a.id < b.id` returns: one
+    * (id_a, id_b) per matching row pair, NULL keys and NULL ids never
+    * matching, over the buckets of at most `cap` non-NULL ids. */
+  private def referencePairs(rows: Seq[(Option[String], Option[Long])],
+                             cap: Int): Seq[(Long, Long)] = {
+    val live = rows.collect { case (Some(k), Some(id)) => (k, id) }
+    val kept = live.groupBy(_._1).filter(_._2.size <= cap)
+    kept.values.toSeq.flatMap { b =>
+      for ((_, a) <- b; (_, c) <- b if a < c) yield (a, c)
+    }.sorted
+  }
+
+  private def keyPairsOf(rows: Seq[(Option[String], Option[Long])],
+                         thr: Int, salt: Int, cap: Int): Seq[(Long, Long)] =
+    Dedup.keyPairs(rows.toDF("k", "id"), Seq("k"), thr, salt, cap).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+  test("keyPairs equals a brute-force self-join on hostile inputs, " +
+      "every salt and hot threshold") {
+    val rnd = new scala.util.Random(11)
+    def hostile: Seq[(Option[String], Option[Long])] =
+      (1 to 40).map(i => (Some("hot"), Some(i.toLong))) ++
+      (1 to 46).map(i => (Some("big"), Some(500L + i))) ++
+      // NULL keys: a groupBy would pair these, the self-join does not
+      (1 to 6).map(i => (None, Some(700L + i))) ++
+      // NULL ids inside a bucket, and a bucket of NULL ids only
+      Seq((Some("warm"), None), (Some("warm"), Some(101L)), (Some("warm"), Some(102L)),
+        (Some("warm"), None), (Some("nulls"), None), (Some("nulls"), None)) ++
+      // duplicate (id, key) rows: the self-join pairs each copy
+      Seq(901L, 901L, 903L, 902L).map(i => (Some("dup"), Some(i))) ++
+      Seq((Some("single"), Some(300L)))
+    def random(n: Int): Seq[(Option[String], Option[Long])] = Seq.fill(n) {
+      (if (rnd.nextInt(10) == 0) None else Some("k" + rnd.nextInt(6)),
+        if (rnd.nextInt(12) == 0) None else Some(rnd.nextInt(30).toLong))
+    }
+    val inputs = Seq("hostile" -> hostile,
+      "empty" -> Seq.empty[(Option[String], Option[Long])],
+      "random 60" -> random(60), "random 120" -> random(120))
+    for ((name, rows) <- inputs; cap <- Seq(45, Int.MaxValue)) {
+      val want = referencePairs(rows, cap)
+      for (salt <- Seq(1, 2, 3, 7); thr <- Seq(0, 4, 39))
+        assert(keyPairsOf(rows, thr, salt, cap) == want,
+          s"$name cap=$cap salt=$salt thr=$thr")
+    }
+    // the cap drops exactly the one bucket over it
+    val h = hostile
+    val bigPairs = referencePairs(h.filter(_._1.contains("big")), Int.MaxValue)
+    assert(bigPairs.length == 46 * 45 / 2)
+    assert(keyPairsOf(h, 4, 3, 45) ==
+      referencePairs(h, Int.MaxValue).diff(bigPairs))
+    assert(keyPairsOf(h, 0, 1, 45).count(_ == (901L, 902L)) == 2)
+  }
+
   test("minhashPairs: hot-bucket salting flag is result-invariant") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val base = Dedup.minhashPairs(docs, "doc_id", "text")

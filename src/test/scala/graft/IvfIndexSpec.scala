@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,8 +30,8 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("append+compact: merged content equals rebuild; untouched " +
       "lists' files are not rewritten; appended vectors are served") {
-    val base = Files.createTempDirectory("ivf_base").toString
-    val full = Files.createTempDirectory("ivf_full").toString
+    val base = TempDirs.create("ivf_base").toString
+    val full = TempDirs.create("ivf_full").toString
     val all = (0L until 40L)
     // codebook: one representative per axis cluster
     val codebook = Array(0L, 1L, 2L, 3L)
@@ -94,9 +93,9 @@ class IvfIndexSpec extends AnyFunSuite {
       "in EITHER window (before publish / mid-publish with a deleted " +
       "list) recovers to the rebuilt state by re-running publish, " +
       "which is idempotent") {
-    val base = Files.createTempDirectory("ivf_cc_base").toString
-    val full = Files.createTempDirectory("ivf_cc_full").toString
-    val staging = Files.createTempDirectory("ivf_cc_stage").toString + "/s"
+    val base = TempDirs.create("ivf_cc_base").toString
+    val full = TempDirs.create("ivf_cc_full").toString
+    val staging = TempDirs.create("ivf_cc_stage").toString + "/s"
     val all = (0L until 40L)
     val codebook = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
@@ -139,7 +138,7 @@ class IvfIndexSpec extends AnyFunSuite {
       "the ADC stage is partition-pruned to the probed lists and " +
       "reads nothing else") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("ivfpq_idx").toString
+    val dir = TempDirs.create("ivfpq_idx").toString
     val all = (0L until 40L)
     val coarse = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
@@ -183,8 +182,8 @@ class IvfIndexSpec extends AnyFunSuite {
       "untouched code lists' files are not rewritten; empty delta " +
       "is a byte-level no-op") {
     import org.apache.spark.sql.functions.col
-    val base = Files.createTempDirectory("ivfpq_d_base").toString
-    val full = Files.createTempDirectory("ivfpq_d_full").toString
+    val base = TempDirs.create("ivfpq_d_base").toString
+    val full = TempDirs.create("ivfpq_d_full").toString
     val all = (0L until 40L)
     val coarse = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
@@ -230,8 +229,8 @@ class IvfIndexSpec extends AnyFunSuite {
       "untouched lists' files are not rewritten; staging cleaned; " +
       "empty delta is a byte-level no-op") {
     import org.apache.spark.sql.functions.col
-    val base = Files.createTempDirectory("ivfsq_d_base").toString
-    val full = Files.createTempDirectory("ivfsq_d_full").toString
+    val base = TempDirs.create("ivfsq_d_base").toString
+    val full = TempDirs.create("ivfsq_d_full").toString
     val all = (0L until 40L)
     val coarse = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
@@ -276,8 +275,8 @@ class IvfIndexSpec extends AnyFunSuite {
   test("forget: content equals rebuild-from-survivors; untouched " +
       "lists' files not rewritten; an emptied list's directory is " +
       "removed; re-run is idempotent") {
-    val base = Files.createTempDirectory("ivf_fbase").toString
-    val rebuilt = Files.createTempDirectory("ivf_frebuilt").toString
+    val base = TempDirs.create("ivf_fbase").toString
+    val rebuilt = TempDirs.create("ivf_frebuilt").toString
     val all = (0L until 40L)
     val codebook = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))

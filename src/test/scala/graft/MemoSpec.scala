@@ -11,7 +11,7 @@ class MemoSpec extends AnyFunSuite {
 
   // every test keys on a dir of its own, so no entry leaks between tests
   private def withDataDir(body: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val dir = TempDirs.create("graft_memo").toString
     try { writeDocs(dir, 3); body(dir) }
     finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.LocalDate
 
 import org.apache.spark.sql.functions._
@@ -56,7 +55,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("partitioned sink layout enables partition pruning on read") {
-    val tmp = Files.createTempDirectory("graft-prune").toString
+    val tmp = TempDirs.create("graft-prune").toString
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
     ops.Sink.partitionedWindowLoad(events, "ts", s"$tmp/events")
     val back = spark.read.parquet(s"$tmp/events")
@@ -70,7 +69,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("append vs overwrite load semantics") {
-    val tmp = Files.createTempDirectory("graft-sink").toString
+    val tmp = TempDirs.create("graft-sink").toString
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     Sink.appendLoad(df, s"$tmp/t")
@@ -81,7 +80,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("compact collapses a small-files directory without changing data") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toFile
+    val tmp = TempDirs.create("graft-compact").toFile
     val out = s"$tmp/t"
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("user_id"), col("value"))
@@ -102,7 +101,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("compact preserves hive-partitioned layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-compact-p").toFile
+    val tmp = TempDirs.create("graft-compact-p").toFile
     val out = s"$tmp/t"
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("ts"), col("value"))
@@ -170,13 +169,13 @@ class PipelineSpec extends AnyFunSuite {
     val dir = TestPages.write(pages)
     val base = cfg("").copy(today = LocalDate.of(2020, 1, 1))
 
-    val fromFiles = Files.createTempDirectory("graft-eq-files").toString
+    val fromFiles = TempDirs.create("graft-eq-files").toString
     val filesPlan = SparkRun(spark) {
       OutreachPipeline.sync(spark, base.copy(pagesDir = dir, outDir = fromFiles))
     }
     graft.sources.JsonApiToken.clear()
     val server = new graft.sources.FixtureApiServer("prospects", dir)
-    val fromChain = Files.createTempDirectory("graft-eq-chain").toString
+    val fromChain = TempDirs.create("graft-eq-chain").toString
     val chainPlan = try SparkRun(spark) {
       val conformed = OutreachPipeline.conformedFrom(
         spark.read.format("graft.sources.JsonApiSource")

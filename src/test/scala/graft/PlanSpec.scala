@@ -436,19 +436,28 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
            dsPlan.contains("SortMergeJoin"), dsPlan.take(2000))
   }
 
-  test("keyPairs salted path: equi-join on (key, cell), no quadratic join") {
-    // the salting escalation must keep the self-join an EQUI-join —
-    // a salted plan that degraded to BNLJ/cartesian would recreate the
-    // hot-reducer problem it exists to solve, just wider
+  test("keyPairs salted path: one aggregate, no join, a hot bucket's " +
+      "tiles spread over the tasks") {
+    // the salting escalation must not bring back a join: a salted plan
+    // that degraded to BNLJ/cartesian would recreate the hot-task
+    // problem it exists to solve, just wider. Cold and hot buckets go
+    // through the one generator (no Union of two legs), and the hot
+    // bucket's s(s+1)/2 tiles run in as many tasks as the session has
     import spark.implicits._
-    val rows = (1 to 50).map(i => ("k" + (i % 3), i.toLong)).toDF("k", "id")
-    val plan = graft.ops.Dedup.keyPairs(rows, Seq("k"), 4, 4)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val rows = ((1 to 40).map(i => ("hot", i.toLong)) ++
+      (1 to 3).map(i => ("cold", 100L + i))).toDF("k", "id")
+    val pairs = graft.ops.Dedup.keyPairs(rows, Seq("k"), 4, 4)
+    val plan = pairs.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!plan.contains("CartesianProduct"), plan.take(1500))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1500))
-    // both legs present: plain join for cold buckets, grid join for hot
-    assert(plan.contains("Union"), plan.take(1500))
+    assert(!plan.contains("Join") && !plan.contains("Union"), plan.take(1500))
+    assert(plan.contains("HashAggregate"), plan.take(1500))
+    assert(plan.contains("RoundRobinPartitioning"), plan.take(1500))
+    val parts = pairs.filter($"id_b" <= 40L)
+      .select(org.apache.spark.sql.functions.spark_partition_id()).distinct().count()
+    val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(parts == math.min(4 * 5 / 2, tasks), s"hot pairs in $parts tasks")
   }
 
   test("join_incremental: delta date-splits push to the scans, joins broadcast") {
@@ -760,7 +769,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("CoalesceSinglePartitionScan: a previous_day sync over the opaque " +
       "cursor chain writes in ONE job with no Exchange") {
-    val out = java.nio.file.Files.createTempDirectory("graft-daily").toString
+    val out = TempDirs.create("graft-daily").toString
     val table = s"$out/outreach_prospects"
     val run = overChain { pages =>
       SparkRun(spark) {
@@ -944,7 +953,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (i, "prospect", f"2019-06-${i % 28 + 1}%02dT00:00:00Z", s"p$i"))
     val onePage = TestPages.write(Seq(recs))
     val threePages = TestPages.write(recs.grouped(14).toSeq)
-    val facts = java.nio.file.Files.createTempDirectory("graft-facts").toString
+    val facts = TempDirs.create("graft-facts").toString
     spark.range(1L, 20001L)
       .select(col("id"), sha2(col("id").cast("string"), 256).as("v"))
       .repartition(4).write.mode("overwrite").parquet(facts)

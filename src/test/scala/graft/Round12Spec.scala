@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,9 +35,9 @@ class Round12Spec extends AnyFunSuite {
 
   test("ivfIndexDerive: a filter-copy equals a from-raw build of the " +
       "same subset, row for row, and keeps the partitioned layout") {
-    val src = Files.createTempDirectory("ivf_dsrc").toString
-    val dst = Files.createTempDirectory("ivf_ddst").toString
-    val rebuilt = Files.createTempDirectory("ivf_dreb").toString
+    val src = TempDirs.create("ivf_dsrc").toString
+    val dst = TempDirs.create("ivf_ddst").toString
+    val rebuilt = TempDirs.create("ivf_dreb").toString
     val all = (0L until 40L)
     val codebook = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
@@ -56,7 +55,7 @@ class Round12Spec extends AnyFunSuite {
     assert(parts.nonEmpty && parts.forall(_.startsWith("centroid_id=")),
       s"derived index lost the by-list layout: $parts")
     // a keep-everything derive is a faithful copy
-    val copy = Files.createTempDirectory("ivf_dcopy").toString
+    val copy = TempDirs.create("ivf_dcopy").toString
     Similarity.ivfIndexDerive(spark, src, copy, lit(true))
     assert(content(copy) == content(src))
   }
@@ -64,8 +63,8 @@ class Round12Spec extends AnyFunSuite {
   test("ivfIndexForget: a corpus-proportional forget batch (the " +
       "anti-join path) and a zero-norm vector in the batch both " +
       "resolve to rebuild-from-survivors") {
-    val base = Files.createTempDirectory("ivf_f2base").toString
-    val rebuilt = Files.createTempDirectory("ivf_f2reb").toString
+    val base = TempDirs.create("ivf_f2base").toString
+    val rebuilt = TempDirs.create("ivf_f2reb").toString
     val all = (0L until 40L)
     val codebook = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -35,7 +34,7 @@ class Round13Spec extends AnyFunSuite {
 
   /** Split the events table into 3 deterministic single-file drops. */
   private def stageSplits(): Seq[java.io.File] = {
-    val tmp = Files.createTempDirectory("r13_stage")
+    val tmp = TempDirs.create("r13_stage")
     val ev = Tables(spark, sf, "events")
     (0 until 3).map { i =>
       val part = tmp.resolve(s"__p_$i")
@@ -72,7 +71,7 @@ class Round13Spec extends AnyFunSuite {
                              merged: String => Seq[Seq[Any]]): Unit = {
     val files = stageSplits()
     def mkIn(): java.io.File = {
-      val d = Files.createTempDirectory(s"r13_in_$name").toFile; d
+      val d = TempDirs.create(s"r13_in_$name").toFile; d
     }
     def copyIn(dir: java.io.File, fs: Seq[java.io.File]): Unit =
       fs.foreach(f => org.apache.commons.io.FileUtils
@@ -80,8 +79,8 @@ class Round13Spec extends AnyFunSuite {
 
     // uninterrupted reference: all 3 files, one run
     val inA = mkIn(); copyIn(inA, files)
-    val ckptA = Files.createTempDirectory(s"r13_ckA_$name").toString
-    val storeA = Files.createTempDirectory(s"r13_stA_$name").toString
+    val ckptA = TempDirs.create(s"r13_ckA_$name").toString
+    val storeA = TempDirs.create(s"r13_stA_$name").toString
     runCells(inA.toString, ckptA, storeA, cellsOf)
 
     // interrupted run: batches 1–2, then a kill. The restart resumes
@@ -90,8 +89,8 @@ class Round13Spec extends AnyFunSuite {
     // REPLAY (the crash window between sink write and commit): the
     // overwrite-by-batch-id sink must absorb it.
     val inB = mkIn(); copyIn(inB, files.take(2))
-    val ckptB = Files.createTempDirectory(s"r13_ckB_$name").toString
-    val storeB = Files.createTempDirectory(s"r13_stB_$name").toString
+    val ckptB = TempDirs.create(s"r13_ckB_$name").toString
+    val storeB = TempDirs.create(s"r13_stB_$name").toString
     runCells(inB.toString, ckptB, storeB, cellsOf)
     val commits = new java.io.File(ckptB, "commits").listFiles()
       .filter(_.getName.forall(_.isDigit))
@@ -198,7 +197,7 @@ class Round13Spec extends AnyFunSuite {
       "untouched (label, group) files unrewritten; fully-emptied " +
       "partitions' directories removed; staging cleaned") {
     val all = (0L until 40L)
-    val base = Files.createTempDirectory("lab_forget").toString
+    val base = TempDirs.create("lab_forget").toString
     Similarity.ivfIndexWriteLabeled(lemb(all), "vec_id", "label",
       "embedding", base, lcodebook)
     // partial forget first: ids ≡ 1 mod 8 live in list 1 (label 1,
@@ -210,7 +209,7 @@ class Round13Spec extends AnyFunSuite {
     for ((part, fs) <- before if !part.contains("label=1/list_grp=1"))
       assert(after(part) == fs, s"untouched partition $part rewritten")
     val survivors1 = all.filterNot(_ % 8 == 1)
-    val rebuilt1 = Files.createTempDirectory("lab_rebuild1").toString
+    val rebuilt1 = TempDirs.create("lab_rebuild1").toString
     Similarity.ivfIndexWriteLabeled(lemb(survivors1), "vec_id", "label",
       "embedding", rebuilt1, lcodebook)
     assert(lcontent(base) == lcontent(rebuilt1),
@@ -226,7 +225,7 @@ class Round13Spec extends AnyFunSuite {
       .filter(_.isDirectory).map(_.getName).toSet
     assert(dirs == Set("label=0"),
       s"emptied label-1 partitions must be removed, found $dirs")
-    val rebuilt0 = Files.createTempDirectory("lab_rebuild0").toString
+    val rebuilt0 = TempDirs.create("lab_rebuild0").toString
     Similarity.ivfIndexWriteLabeled(lemb(all.filter(_ % 2 == 0)),
       "vec_id", "label", "embedding", rebuilt0, lcodebook)
     assert(lcontent(base) == lcontent(rebuilt0),
@@ -266,7 +265,7 @@ class Round13Spec extends AnyFunSuite {
     // delta = ids ≡ 1 mod 8 → only partition (label 1, group 1) is
     // touched (list 1, rank 1 % 2 groups)
     val deltaIds = all.filter(_ % 8 == 1)
-    val base = Files.createTempDirectory("lab_delta_base").toString
+    val base = TempDirs.create("lab_delta_base").toString
     Similarity.ivfIndexWriteLabeled(lemb(all.filterNot(_ % 8 == 1)),
       "vec_id", "label", "embedding", base, lcodebook)
     val before = lfiles(base)
@@ -275,7 +274,7 @@ class Round13Spec extends AnyFunSuite {
     val after = lfiles(base)
     for ((part, fs) <- before if !part.contains("label=1/list_grp=1"))
       assert(after(part) == fs, s"untouched partition $part rewritten")
-    val full = Files.createTempDirectory("lab_delta_full").toString
+    val full = TempDirs.create("lab_delta_full").toString
     Similarity.ivfIndexWriteLabeled(lemb(all), "vec_id", "label",
       "embedding", full, lcodebook)
     assert(lcontent(base) == lcontent(full),
@@ -293,13 +292,13 @@ class Round13Spec extends AnyFunSuite {
   test("labeled derive: a filter-copy equals a forget of the " +
       "complement and keeps the (label, list_grp) layout") {
     val all = (0L until 40L)
-    val base = Files.createTempDirectory("lab_derive_base").toString
+    val base = TempDirs.create("lab_derive_base").toString
     Similarity.ivfIndexWriteLabeled(lemb(all), "vec_id", "label",
       "embedding", base, lcodebook)
-    val derived = Files.createTempDirectory("lab_derived").toString
+    val derived = TempDirs.create("lab_derived").toString
     Similarity.ivfIndexDeriveLabeled(spark, base, derived,
       col("cid") % 13 =!= 5)
-    val forgotten = Files.createTempDirectory("lab_forgot").toString
+    val forgotten = TempDirs.create("lab_forgot").toString
     Similarity.ivfIndexDeriveLabeled(spark, base, forgotten, lit(true))
     Similarity.ivfIndexForgetLabeled(spark, forgotten, lcodebook,
       lemb(all.filter(_ % 13 == 5)), "vec_id", "label", "embedding")
@@ -329,7 +328,7 @@ class Round13Spec extends AnyFunSuite {
     val stride = Similarity.sqrtStride(emb.count())
     val codebook = Similarity.sampledCodebook(
       emb, "vec_id", "embedding", stride)
-    val dir = Files.createTempDirectory("lab_cap").toString
+    val dir = TempDirs.create("lab_cap").toString
     Similarity.ivfIndexWriteLabeled(emb, "vec_id", "label", "embedding",
       dir, codebook)
     val labels = new java.io.File(dir).listFiles().filter(_.isDirectory)

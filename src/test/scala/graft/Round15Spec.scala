@@ -128,8 +128,7 @@ class Round15Spec extends AnyFunSuite {
       (3L, Some("b"), None),
       (4L, None, None)).toDF("k", "x", "y")
     val (nRef, ckRef) = graft.ops.Sink.tableChecksum(hostile)
-    val dir = java.nio.file.Files
-      .createTempDirectory("r15_obs_ck").toString
+    val dir = TempDirs.create("r15_obs_ck").toString
     val (nObs, ckObs) =
       graft.ops.Sink.overwriteLoadChecksummed(hostile, s"$dir/t")
     assert(nObs == nRef)

@@ -31,7 +31,7 @@ class RunLogSpec extends AnyFunSuite {
   }
 
   test("append sink + read round-trip preserves events") {
-    val dir = java.nio.file.Files.createTempDirectory("runlog").toString
+    val dir = TempDirs.create("runlog").toString
     val path = s"$dir/log"
     RunLog.appendTo(spark, path, RunLog.syncEvents("r1", "prospects", 500))
     RunLog.appendTo(spark, path, RunLog.syncEvents("r2", "mailings", 0))

@@ -58,7 +58,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("a -Dgraft.schemas.dir file enables an extension resource") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_schemas")
+    val dir = TempDirs.create("graft_schemas")
     java.nio.file.Files.writeString(dir.resolve("accounts_ext.json"),
       """{"id": "string", "attributes_name": "string",
          "attributes_employees": "integer"}""")
@@ -158,7 +158,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("topN pushdown respects null ordering (desc => nulls last)") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonapi-nulls").toFile
+    val dir = TempDirs.create("jsonapi-nulls").toFile
     java.nio.file.Files.writeString(new java.io.File(dir, "page1.json").toPath,
       """{"data": [
         |  {"id": 1, "type": "prospect", "attributes": {"firstName": "N"}},
@@ -412,5 +412,20 @@ class SourceSpec extends AnyFunSuite {
     val id1 = rows.find(_.getLong(0) == 1L).get
     assert(id1.getAs[String]("hist_0_0") == "2019-05-01")
     assert(id1.getAs[Long]("account_id") == 7L)
+  }
+
+  test("jsonapi_sync_chain reads its chain count without a SQL execution of its own") {
+    // the one-partition require reads the physical RDD's count; a
+    // `pages.rdd` there ran a DeserializeToObject execution just for it
+    val run = SparkRun(spark)(
+      graft.queries.ReferenceQueries.jsonapiSyncChain(spark, "unused").collect().toSeq)
+    assert(!run.plans.exists(_.nodeName == "DeserializeToObject"),
+      run.plans.map(_.nodeName))
+    // the result pin's checkpoint and the collect; a third was the count
+    assert(run.plans.size == 2, run.plans.map(_.nodeName))
+    // the chain walk over HTTP reads the same rows as the file pages
+    val files = graft.queries.ReferenceQueries.jsonapiSync(spark, "unused").collect().toSeq
+    assert(run.value == files)
+    assert(run.value.nonEmpty)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +12,7 @@ class StreamingSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("streaming dedup + daily counts match the batch equivalents") {
-    val tmp = Files.createTempDirectory("graft-stream").toFile
+    val tmp = TempDirs.create("graft-stream").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
 
     // stage the events table as an "arriving" file drop, with planted
@@ -64,7 +63,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming sessionization emits closed sessions with batch semantics") {
-    val tmp = Files.createTempDirectory("graft-sess").toFile
+    val tmp = TempDirs.create("graft-sess").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
 
     // base offset keeps event times off epoch 0: the initial watermark
@@ -107,7 +106,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("sessionization state and numbering survive real micro-batch " +
       "boundaries (timeout + gap-close both fire ACROSS batches)") {
-    val tmp = Files.createTempDirectory("graft-sess-mb").toFile
+    val tmp = TempDirs.create("graft-sess-mb").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val baseMs = 86400000L
     def ts(min: Long) = new java.sql.Timestamp(baseMs + min * 60000L)
@@ -156,7 +155,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join matches the batch interval join") {
-    val tmp = Files.createTempDirectory("graft-sjoin").toFile
+    val tmp = TempDirs.create("graft-sjoin").toFile
     val lDir = new java.io.File(tmp, "l"); lDir.mkdirs()
     val rDir = new java.io.File(tmp, "r"); rDir.mkdirs()
 
@@ -201,7 +200,7 @@ class StreamingSpec extends AnyFunSuite {
       "watermark eviction — a closed window emits, an open one stays " +
       "in state unemitted, and the watermark is the min across the " +
       "two branches") {
-    val tmp = Files.createTempDirectory("graft-sojoin").toFile
+    val tmp = TempDirs.create("graft-sojoin").toFile
     val lDir = new java.io.File(tmp, "l"); lDir.mkdirs()
     val rDir = new java.io.File(tmp, "r"); rDir.mkdirs()
     val baseMs = 86400000L
@@ -256,7 +255,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming canonical dedup keeps the batch representative (min id)") {
-    val tmp = Files.createTempDirectory("graft-cdedup").toFile
+    val tmp = TempDirs.create("graft-cdedup").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
 
     // documents with planted duplicate content prefixes; write the
@@ -294,7 +293,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("keyed dedup state survives batch boundaries and EVICTS at the " +
       "watermark (re-arrival after eviction re-emits)") {
-    val tmp = Files.createTempDirectory("graft-kdedup").toFile
+    val tmp = TempDirs.create("graft-kdedup").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val baseMs = 86400000L // off epoch 0: the initial watermark IS 0
     def ts(min: Long) = new java.sql.Timestamp(baseMs + min * 60000L)
@@ -350,7 +349,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("checkpoint recovery: a REBUILT query resumes offsets and session " +
       "state, and its output equals the uninterrupted run") {
-    val tmp = Files.createTempDirectory("graft-ckpt").toFile
+    val tmp = TempDirs.create("graft-ckpt").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
     val out = new java.io.File(tmp, "out").getAbsolutePath
@@ -417,7 +416,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint recovery: keyed-dedup STATE reloads across an " +
       "incarnation rebuild (post-restart dup drops; output equals the " +
       "uninterrupted run)") {
-    val tmp = Files.createTempDirectory("graft-ckpt-kd").toFile
+    val tmp = TempDirs.create("graft-ckpt-kd").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
     val out = new java.io.File(tmp, "out").getAbsolutePath
@@ -478,7 +477,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint recovery: windowed-aggregation state reloads across " +
       "an incarnation rebuild (counts from before the crash survive " +
       "into the post-restart emission)") {
-    val tmp = Files.createTempDirectory("graft-ckpt-agg").toFile
+    val tmp = TempDirs.create("graft-ckpt-agg").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
     val out = new java.io.File(tmp, "out").getAbsolutePath
@@ -528,7 +527,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint recovery: the WATERMARK reloads across an " +
       "incarnation rebuild — a late row arriving after restart is " +
       "dropped against the reloaded value, not a reset one") {
-    val tmp = Files.createTempDirectory("graft-ckpt-wm").toFile
+    val tmp = TempDirs.create("graft-ckpt-wm").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
     val out = new java.io.File(tmp, "out").getAbsolutePath
@@ -576,7 +575,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint recovery: the EMA's NUMERIC state (rn, ema) reloads " +
       "across an incarnation rebuild — the post-restart step continues " +
       "the recurrence instead of restarting it") {
-    val tmp = Files.createTempDirectory("graft-ckpt-ema").toFile
+    val tmp = TempDirs.create("graft-ckpt-ema").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
     import spark.implicits._
@@ -631,7 +630,7 @@ class StreamingSpec extends AnyFunSuite {
       "rebuilt with an ADDED input column resumes the keyed (rn, ema) " +
       "state — upstream adding a field must not invalidate the state " +
       "store") {
-    val tmp = Files.createTempDirectory("graft-ckpt-evo").toFile
+    val tmp = TempDirs.create("graft-ckpt-evo").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
     import spark.implicits._
@@ -688,7 +687,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint recovery: the anomaly flagger's (rn, ema, dev) " +
       "state reloads across an incarnation rebuild — post-restart " +
       "FLAG DECISIONS are made against the pre-crash deviation state") {
-    val tmp = Files.createTempDirectory("graft-ckpt-anom").toFile
+    val tmp = TempDirs.create("graft-ckpt-anom").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
     import spark.implicits._
@@ -740,7 +739,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint recovery: stream-stream JOIN state reloads across " +
       "an incarnation rebuild — a click buffered before the crash " +
       "matches a purchase that arrives after it") {
-    val tmp = Files.createTempDirectory("graft-ckpt-sjoin").toFile
+    val tmp = TempDirs.create("graft-ckpt-sjoin").toFile
     val lDir = new java.io.File(tmp, "l"); lDir.mkdirs()
     val rDir = new java.io.File(tmp, "r"); rDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -797,7 +796,7 @@ class StreamingSpec extends AnyFunSuite {
       "incarnation rebuild (persisted cell store, idempotent on batch " +
       "replay; merged manifest equals the batch recompute)") {
     import graft.ops.Manifest
-    val tmp = Files.createTempDirectory("graft-ckpt-mf").toFile
+    val tmp = TempDirs.create("graft-ckpt-mf").toFile
     val inDir = new java.io.File(tmp, "in"); inDir.mkdirs()
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
     val store = new java.io.File(tmp, "store").getAbsolutePath

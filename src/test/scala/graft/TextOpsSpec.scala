@@ -145,7 +145,7 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("htmlExtract: boilerplate blocks removed, payload round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_html").toString
+    val dir = TempDirs.create("graft_html").toString
     Seq((2L, "hello   world"), (4L, "x")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     val got = graft.queries.TextQueries.htmlExtract(spark, dir).collect()
@@ -162,7 +162,7 @@ class TextOpsSpec extends AnyFunSuite {
   test("knBigram: hand-computed interpolated-KN table, mass sums to 1") {
     // corpus: "a b a b" + "b c" \u2192 types (a,b):2 (b,a):1 (b,c):1, NT=3
     // context a: c_v=2 n1=1; context b: c_v=2 n1=2; all n1_w = 1
-    val dir = java.nio.file.Files.createTempDirectory("graft_kn").toString
+    val dir = TempDirs.create("graft_kn").toString
     Seq((1L, "a b a b"), (2L, "b c")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     val got = graft.queries.TextQueries.knBigram(spark, dir).collect()
