@@ -436,8 +436,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
            dsPlan.contains("SortMergeJoin"), dsPlan.take(2000))
   }
 
-  test("keyPairs salted path: one aggregate, no join, a hot bucket's " +
-      "tiles spread over the tasks") {
+  test("keyPairs salted path: one aggregate, no join, hot tiles spread over tasks") {
     // the salting escalation must not bring back a join: a salted plan
     // that degraded to BNLJ/cartesian would recreate the hot-task
     // problem it exists to solve, just wider. Cold and hot buckets go
