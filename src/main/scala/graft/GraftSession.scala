@@ -19,6 +19,12 @@ object GraftSession {
     *    per-task overhead at bench scale; AQE derives the count from
     *    the data instead, at any scale;
     *  - the Spark UI off;
+    *  - `spark.hadoop.fs.file.impl` = [[LocalFs]]: `file:` paths set
+    *    file modes through java.nio, so sink loads, parquet staging,
+    *    index dirs, stream checkpoints and state-store commits run no
+    *    `chmod` process per file and dir. Hadoop caches a filesystem
+    *    per scheme and user, so this holds when the session is the
+    *    first in the JVM to open a `file:` path;
     *  - session time zone UTC and [[Tables.requiredConf]] (nanos
     *    handling), which the testdata needs;
     *  - [[GraftExtensions]]: the graft SQL functions, the optimizer
@@ -39,6 +45,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
       .withExtensions(new GraftExtensions) // SQL fns + broadcast safety net
     val spark = Tables.requiredConf.foldLeft(
       b.config("spark.sql.session.timeZone", "UTC")

@@ -422,45 +422,46 @@ object Dedup {
     out
   }
 
-  /** SimHash near-duplicate pairs: 64-bit signature, pigeonhole-banded
-    * candidate generation (maxHamming+1 bands ⇒ every pair with
-    * Hamming distance ≤ maxHamming shares at least one exact band, so
-    * candidate generation is complete for the requested radius),
-    * verified with `bit_count(xor) <= maxHamming`.
+  /** SimHash near-duplicate pairs: the 64-bit SimHash of each text's
+    * tokens, paired by [[hammingPairs]] within `maxHamming`.
+    * Returns distinct (id_a, id_b, hamming) with id_a < id_b.
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame = {
-    val base = spread(df.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .select(col("id"), simhash64(token_hashes(col("__text"))).as("sig"))
+                   maxHamming: Int = 3): DataFrame =
+    hammingPairs(
+      spread(df.select(col(idCol).as("id"), col(textCol).as("__text")))
+        .select(col("id"), simhash64(token_hashes(col("__text"))).as("sig")),
+      maxHamming)
 
-    // pigeonhole: maxHamming+1 bands guarantee any pair with Hamming
-    // distance ≤ maxHamming agrees on at least one full band; band
-    // widths split the 64 bits as evenly as possible
+  /** All pairs of `sigs` (`id`, 64-bit `sig`) within Hamming distance
+    * `maxHamming`, as distinct (id_a, id_b, hamming) with id_a < id_b.
+    * Candidates come from the pigeonhole bands: the 64 bits split as
+    * evenly as possible into maxHamming+1 bands, and a pair within the
+    * radius agrees on at least one whole band, so [[keyPairs]] on
+    * (band_idx, band_val) is complete. Both signatures then attach to
+    * the distinct candidates for the `bit_count(xor)` verify. A NULL
+    * id or signature never pairs.
+    */
+  private[graft] def hammingPairs(sigs: DataFrame, maxHamming: Int): DataFrame = {
     val nBands = maxHamming + 1
-    require(nBands <= 64, "maxHamming must be < 64")
+    require(maxHamming >= 0 && nBands <= 64, s"maxHamming must be in 0..63, got $maxHamming")
     val widths = Array.tabulate(nBands)(b => 64 / nBands +
       (if (b < 64 % nBands) 1 else 0))
     val offsets = widths.scanLeft(0)(_ + _)
-    val bandStructs = array((0 until nBands).map { b =>
+    val bandVals = (0 until nBands).map { b =>
       val mask = if (widths(b) == 64) -1L else (1L << widths(b)) - 1
-      struct(lit(b).as("band_idx"),
-        shiftrightunsigned(col("sig"), offsets(b)).bitwiseAND(lit(mask))
-          .as("band_val"))
-    }: _*)
-    val banded = base
-      .select(col("id"), col("sig"), explode(bandStructs).as("band"))
-      .select(col("id"), col("sig"),
-        col("band.band_idx").as("band_idx"), col("band.band_val").as("band_val"))
-
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-      .distinct()
+      shiftrightunsigned(col("sig"), offsets(b)).bitwiseAND(lit(mask))
+    }
+    val banded = sigs.select(col("id"),
+      posexplode(array(bandVals: _*)).as(Seq("band_idx", "band_val")))
+    val sig = (side: String) =>
+      sigs.select(col("id").as(s"id_$side"), col("sig").as(s"sig_$side"))
+    keyPairs(banded, Seq("band_idx", "band_val")).distinct()
+      .join(sig("a"), "id_a").join(sig("b"), "id_b")
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
+      .distinct()
   }
 
   /** Connected components over a near-duplicate pair set — the

@@ -205,48 +205,23 @@ object Multimodal {
   }
 
   /** Perceptual near-duplicate pairs: all (id_a < id_b) with dHash
-    * Hamming distance ≤ `maxHamming` — the IMAGE member of the
-    * near-dup family (minhash/simhash cover text; this covers the
-    * binary columns). Candidate generation is the SimHash pigeonhole
-    * applied to the 64-bit signature: split into 4 × 16-bit bands —
-    * Hamming ≤ 3 < 4 forces at least one band to match exactly — and
-    * equi-join on (band index, band value); the corpus is never
-    * compared all-pairs, and the shuffle carries (band, id) pairs,
-    * never payloads. Verification is two XOR popcounts over the
-    * candidate set. Degenerate all-zero signatures (empty or flat
-    * bodies — no gradient structure) are excluded up front: every
-    * such row would otherwise collide in all four bands and the
-    * bucket would go quadratic in their count. Hot-band escalation at
-    * production scale rides [[Dedup.keyPairs]]' salting, exactly as
-    * for text LSH buckets.
+    * Hamming distance ≤ `maxHamming`, distinct — the IMAGE member of
+    * the near-dup family (minhash/simhash cover text; this covers the
+    * binary columns). The two halves form one 64-bit signature, paired
+    * by the SimHash pigeonhole bands of [[Dedup.hammingPairs]]: the
+    * corpus is never compared all-pairs, and the shuffle carries
+    * (band, id) pairs, never payloads. Degenerate all-zero signatures
+    * (empty or flat bodies — no gradient structure) are excluded up
+    * front: every such row would otherwise collide in every band and
+    * the bucket would go quadratic in their count.
     */
-  def dhashNearDupPairs(media: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-band pigeonhole is only complete for Hamming <= 3, got $maxHamming")
-    // pinned: four consumers (two band legs, two verification legs)
-    // would otherwise each re-run the dHash kernel over the payloads
-    val sigs = Dedup.materialize(
-      Dedup.spread(perceptualDhash(media))
-        .filter(!(col("hi") === 0 && col("lo") === 0)))
-    val bands = sigs.select(col("media_id"),
-      posexplode(array(
-        expr("hi DIV 65536"), expr("hi % 65536"),
-        expr("lo DIV 65536"), expr("lo % 65536"))).as(Seq("bidx", "bval")))
-    val cand = bands.select(col("media_id").as("id_a"),
-        col("bidx"), col("bval"))
-      .join(bands.select(col("media_id").as("id_b"),
-        col("bidx"), col("bval")), Seq("bidx", "bval"))
-      .filter(col("id_b") > col("id_a"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val sa = sigs.select(col("media_id").as("id_a"),
-      col("hi").as("hi_a"), col("lo").as("lo_a"))
-    val sb = sigs.select(col("media_id").as("id_b"),
-      col("hi").as("hi_b"), col("lo").as("lo_b"))
-    cand.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-      .withColumn("hamming",
-        (bit_count(expr("hi_a ^ hi_b")) +
-          bit_count(expr("lo_a ^ lo_b"))).cast(IntegerType))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
+  def dhashNearDupPairs(media: DataFrame, maxHamming: Int = 3): DataFrame =
+    Dedup.hammingPairs(
+      // pinned: three consumers (the bands and both verify legs) would
+      // otherwise each re-run the dHash kernel over the payloads
+      Dedup.materialize(Dedup.spread(perceptualDhash(media))
+        .filter(!(col("hi") === 0 && col("lo") === 0))
+        .select(col("media_id").as("id"),
+          shiftleft(col("hi"), 32).bitwiseOR(col("lo")).as("sig"))),
+      maxHamming)
 }

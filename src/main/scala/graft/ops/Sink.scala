@@ -171,6 +171,21 @@ object Sink {
       .partitionBy("ds")
       .parquet(path)
 
+  /** Every file under `path`, at any depth, whose name does not start
+    * with `_` (`_SUCCESS`, `_committed_*`), by `listStatus` recursion.
+    * `FileSystem.listFiles(path, true)` would build a
+    * `LocatedFileStatus` per file, whose constructor reads the file's
+    * owner and permission: one `ls -ld` process per file on a local
+    * filesystem without libhadoop.
+    */
+  def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                path: org.apache.hadoop.fs.Path): Set[String] =
+    fs.listStatus(path).iterator.flatMap { st =>
+      if (st.isDirectory) dataFiles(fs, st.getPath)
+      else if (st.getPath.getName.startsWith("_")) Nil
+      else Seq(st.getPath.toString)
+    }.toSet
+
   /** Compact a parquet directory to ~`targetBytes` output files — the
     * small-files remedy every incremental sink needs at scale (each
     * AvailableNow tick / window re-pull appends task-count files; a
@@ -202,16 +217,6 @@ object Sink {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    def dataFiles(p: Path): Set[String] = {
-      val it = fs.listFiles(p, true)
-      val out = scala.collection.mutable.Set.empty[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_")) out += f.getPath.toString
-      }
-      out.toSet
-    }
-
     // hive partition columns, read off the `name=value` directory
     // levels (no catalog needed for a path-based sink)
     def partitionCols(p: Path): Seq[String] = {
@@ -224,7 +229,7 @@ object Sink {
       }
     }
 
-    val snapshot = dataFiles(hPath)
+    val snapshot = dataFiles(fs, hPath)
     val bytes = fs.getContentSummary(hPath).getLength
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val parts = partitionCols(hPath)
@@ -238,7 +243,7 @@ object Sink {
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .parquet(tmp.toString)
 
-    require(dataFiles(hPath) == snapshot,
+    require(dataFiles(fs, hPath) == snapshot,
       s"aborting compaction of $path: directory changed during rewrite " +
         "(concurrent writer?) — compacted copy left at " + tmp)
     val aside = new Path(hPath.getParent, hPath.getName + "__precompact")

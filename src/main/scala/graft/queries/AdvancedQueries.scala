@@ -2285,14 +2285,7 @@ object AdvancedQueries {
         .repartition(64).write.parquet(staged)
       val hPath = new Path(staged)
       val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      def nDataFiles: Int = {
-        val it = fs.listFiles(hPath, true)
-        var n = 0
-        while (it.hasNext) {
-          if (!it.next().getPath.getName.startsWith("_")) n += 1
-        }
-        n
-      }
+      def nDataFiles: Int = graft.ops.Sink.dataFiles(fs, hPath).size
       val filesBefore = nDataFiles
       graft.ops.Sink.compact(s, staged)
       val filesAfter = nDataFiles

@@ -411,20 +411,24 @@ object IncrementalStream {
     * query or `body` throws, the query is stopped, the checkpoint is
     * deleted and the session's checkpoint-manager conf is restored.
     *
-    * The run uses the FileSystem-based checkpoint file manager.
-    * Motivation (measured, r14): the default FileContext-based
-    * manager's rename path on a local filesystem goes through Hadoop's
+    * The run uses the FileSystem-based checkpoint file manager, which
+    * opens checkpoint files through `fs.file.impl`: the session's
+    * [[graft.LocalFs]], whose `mkdirs` and `create` set modes without a
+    * `chmod` process. The default FileContext-based manager does not
+    * go through `fs.file.impl`. Its local filesystem is Hadoop's own
+    * `RawLocalFs`, whose rename path calls
     * `RawLocalFileSystem.getFileLinkStatus`, which FORKS A SHELL
-    * (`readlink`) per renamed checkpoint file — and a micro-batch of a
-    * stream-stream join renames dozens of files (offset log, commit
-    * log, 4 state stores × state partitions). Thread dumps showed the
-    * stream execution thread and every state-store task parked in
-    * `Shell.runCommand`; switching managers cut stream_join from
-    * ~4.2-5.1 s to ~2.7-3.6 s steady-state. Both managers write
-    * temp-file + rename and local-FS rename is atomic at the OS level,
-    * so recovery semantics for these throwaway local checkpoints are
-    * unchanged. The switch is scoped to the run (set before `start`,
-    * the caller's value or its absence restored after): a DURABLE
+    * (`stat`, `readlink`) per renamed checkpoint file — and a
+    * micro-batch of a stream-stream join renames dozens of files
+    * (offset log, commit log, 4 state stores × state partitions).
+    * Thread dumps (r14) showed the stream execution thread and every
+    * state-store task parked in `Shell.runCommand`; switching managers
+    * cut stream_join from ~4.2-5.1 s to ~2.7-3.6 s steady-state. Both
+    * managers write temp-file + rename and local-FS rename is atomic at
+    * the OS level, so recovery semantics for these throwaway local
+    * checkpoints are unchanged. The switch is scoped to the run (set
+    * before `start`, the caller's value or its absence restored
+    * after): a DURABLE
     * checkpoint on HDFS/S3 started later in the same session keeps
     * Spark's default manager, whose stricter rename-with-options
     * semantics matter there.

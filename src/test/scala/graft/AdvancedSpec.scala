@@ -304,6 +304,19 @@ class AdvancedSpec extends AnyFunSuite {
     assert(owners("src/test") == Seq("AdvancedSpec.scala"), owners("src/test"))
   }
 
+  test("no source lists files through Hadoop's located-status listing") {
+    // FileSystem.listFiles(path, recursive) and listLocatedStatus build
+    // a LocatedFileStatus per file, which reads its owner and mode: one
+    // `ls -ld` process per file without libhadoop. Sink.dataFiles lists
+    // through listStatus. java.io.File.listFiles (no or one argument)
+    // stays allowed.
+    val located = """\blistFiles\s*\([^()]*,|\blistLocatedStatus\b""".r
+    val users = sourcesUnder("src/main").collect {
+      case (name, code) if located.findFirstIn(code).isDefined => name
+    }
+    assert(users.isEmpty, users)
+  }
+
   test("percentile gate: exact rank percentiles, sketch within bound") {
     val rows = graft.queries.AdvancedQueries
       .percentileBound(spark, "/root/testdata/sf0.001").collect()

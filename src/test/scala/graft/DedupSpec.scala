@@ -145,6 +145,95 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(pairs.exists { case (a, b, h) => a == 1L && b == 2L && h == 0 })
   }
 
+  /** What an all-pairs Hamming filter returns over (id, sig) rows:
+    * each distinct (a < b, distance) within `maxHamming`, NULL ids and
+    * NULL signatures never pairing. */
+  private def hammingReference(rows: Seq[(Option[Long], Option[Long])],
+                               maxHamming: Int): Seq[(Long, Long, Int)] = {
+    val live = rows.collect { case (Some(id), Some(sig)) => (id, sig) }.distinct
+    (for ((a, sa) <- live; (b, sb) <- live if a < b;
+          d = java.lang.Long.bitCount(sa ^ sb) if d <= maxHamming)
+      yield (a, b, d)).distinct.sorted
+  }
+
+  private def hammingRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+
+  test("simhashPairs and dhashNearDupPairs equal a brute-force Hamming " +
+      "filter on hostile inputs") {
+    import graft.functions.Kernels
+    import graft.ops.Multimodal
+    val rnd = new scala.util.Random(23)
+    val words = Vector.tabulate(40)(i => s"w$i")
+    def text(n: Int) = Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" ")
+    // one hot band: 40 one-word edits of a 60-word text share most of
+    // their SimHash bits, so they crowd the same band buckets
+    val base = text(60).split(" ")
+    val hot = (0 until 40).map { i =>
+      val t = base.clone(); t(rnd.nextInt(60)) = words(rnd.nextInt(words.size))
+      (Option(1000L + i), Option(t.mkString(" ")))
+    }
+    val texts = hot ++ (0 until 30).map(i => (Option(2000L + i), Option(text(12)))) ++
+      Seq((None, Option(base.mkString(" "))),             // NULL id
+        (Option(3000L), None), (Option(3001L), None),     // NULL text
+        (Option(3002L), Option("")), (Option(3003L), Option(""))) ++
+      hot.take(3) ++ hot.take(1)                          // duplicate rows
+    val docs = texts.toDF("id", "text")
+    val sigs = docs.select(col("id"), simhash64(token_hashes(col("text"))))
+      .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        Option(r.get(1)).map(_.asInstanceOf[Long]))).toSeq
+    val hotBucket = sigs.take(40).groupBy(_._2.map(_ & 0xffffL)).values.map(_.size).max
+    assert(hotBucket >= 20, s"the hot band holds only $hotBucket ids")
+    for (h <- Seq(0, 3, 10)) {
+      val want = hammingReference(sigs, h)
+      assert(hammingRows(Dedup.simhashPairs(docs, "id", "text", h)) == want,
+        s"simhash maxHamming=$h")
+      if (h == 10) assert(want.size > 40, "the fixture must hold live pairs")
+    }
+
+    // dHash: bits 32..47 (the lowest 16-bit band of hi << 32 | lo) read
+    // body bytes 72..107 of a 144-byte body, so bodies that share those
+    // bytes share that band
+    val shared = Array.fill(36)((rnd.nextInt(26) + 'a').toByte)
+    def body(hotBand: Boolean): Array[Byte] = {
+      val b = Array.fill(144)((rnd.nextInt(26) + 'a').toByte)
+      if (hotBand) System.arraycopy(shared, 0, b, 72, 36)
+      b
+    }
+    def png(b: Array[Byte]) = Kernels.makeMediaHeader(1, 8, 8) ++ b
+    val hotBodies = Seq.fill(40)(body(hotBand = true))
+    val media: Seq[(Option[Long], Option[Array[Byte]])] =
+      hotBodies.zipWithIndex.map { case (b, i) => (Option(i.toLong), Option(png(b))) } ++
+      // light edits of hot bodies: small nonzero distances
+      hotBodies.take(10).zipWithIndex.map { case (b, i) =>
+        val e = b.clone(); e(7) = 'z'.toByte; (Option(100L + i), Option(png(e))) } ++
+      (0 until 20).map(i => (Option(200L + i), Option(png(body(hotBand = false))))) ++
+      // all-zero signatures: flat and empty bodies would pair at 0
+      (0 until 4).map(i => (Option(300L + i), Option(png(Array.fill(144)('q'.toByte))))) ++
+      Seq((Option(304L), Option(png(Array.empty[Byte]))),
+        (Option(305L), None),                              // NULL payload
+        (None, Option(png(hotBodies(0))))) ++              // NULL id
+      Seq(0, 0, 1).map(i => (Option(i.toLong), Option(png(hotBodies(i))))) // duplicates
+    val mediaDf = media.map { case (id, p) => (id, "image", p) }
+      .toDF("media_id", "kind", "payload")
+    val dsigs = Multimodal.perceptualDhash(mediaDf).collect().map { r =>
+      val sig = for (hi <- Option(r.get(1)); lo <- Option(r.get(2)))
+        yield (hi.asInstanceOf[Long] << 32) | lo.asInstanceOf[Long]
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), sig)
+    }.toSeq
+    val zeros = dsigs.collect { case (Some(id), Some(0L)) => id }.toSet
+    assert(zeros == Set(300L, 301L, 302L, 303L, 304L))
+    assert(dsigs.take(40).map(_._2.map(_ & 0xffffL)).distinct.size == 1,
+      "the hot bodies must share one band")
+    for (h <- Seq(0, 3)) {
+      val want = hammingReference(dsigs.filterNot(_._2.contains(0L)), h)
+      val got = hammingRows(Multimodal.dhashNearDupPairs(mediaDf, h))
+      assert(got == want, s"dhash maxHamming=$h")
+      assert(!got.exists(p => zeros(p._1) || zeros(p._2)))
+      if (h == 3) assert(want.nonEmpty, "the fixture must hold live pairs")
+    }
+  }
+
   test("minhash finds the corpus's planted near-dups (jaccard ≥ 0.9)") {
     val docs = Tables(spark, sf, "documents")
     val pairs = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.9)
