@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -46,21 +46,6 @@ object Conform {
   def renameReplace(df: DataFrame, target: String,
                     replacement: String = ""): DataFrame =
     df.toDF(df.columns.map(_.replace(target, replacement)).toSeq: _*)
-
-  /** Drop columns if present (reference: outreach_etl.py:105-107 pops
-    * bodyHtml/bodyText from mailings pages). With parquet + column
-    * pruning the dropped columns are never even read.
-    */
-  def dropColumns(df: DataFrame, names: String*): DataFrame =
-    df.drop(names: _*)
-
-  /** Empty relation with exactly the declared columns
-    * (reference: create_dF_from_schema, etl_tools.py:37-43). Only
-    * needed when reproducing union-accumulation; a multi-partition
-    * source makes it unnecessary (SURVEY.md §2.2 P4).
-    */
-  def seedEmpty(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Vertical union by column name, missing columns → NULL, duplicates
     * kept (reference: pd.concat at outreach_etl.py:154,183,212).

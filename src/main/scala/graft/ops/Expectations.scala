@@ -39,10 +39,6 @@ object Expectations {
       when(col(column).isNotNull && !col(column).isin(values: _*), 1L)
         .otherwise(0L))
 
-  /** Rows matching `pred` (free-form SQL-expression check). */
-  def satisfiesNot(name: String, column: String, pred: Column): Check =
-    Check(name, column, when(pred, 1L).otherwise(0L))
-
   /** Evaluate row-level checks plus optional uniqueness checks in a
     * single aggregate: every row-level check becomes one
     * conditional-sum column; each uniqueness check adds a

@@ -18,13 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Incremental {
 
-  /** Closed date/timestamp range filter on `tsCol` — the reference's
-    * `filter[updatedAt]=lo..hi` pushed to the source
-    * (reference: outreach_etl.py:115-117,164-166).
-    */
-  def windowFilter(df: DataFrame, tsCol: String, lo: Column, hi: Column): DataFrame =
-    df.filter(col(tsCol).between(lo, hi))
-
   /** Range filter on an event-time column in whatever PHYSICAL form
     * the scan produced (see [[graft.Tables.raw]]): the bounds are
     * converted to literals of the column's own type so the comparison

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.dsl._
@@ -33,11 +34,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(col("sim"), 4).as("sim_r"))
   }
 
-  /** Documents sharing at least `minShared` winnowing fingerprints —
-    * the collision join a fingerprint index exists for. Shuffle
-    * carries (fp, id) pairs; hot fingerprints (boilerplate) are the
-    * AQE-skew / salting case.
-    */
   /** IVF-style approximate nearest neighbors: a deterministic coarse
     * quantizer (every `centroidEvery`-th vector serves as a centroid —
     * a training-free stand-in for k-means that keeps the pipeline
@@ -146,33 +142,22 @@ object Similarity {
   def ivfTopKWithCodebook(emb: DataFrame, idCol: String, vecCol: String,
                           queryPred: Column, k: Int, nprobe: Int,
                           codebook: Array[(Long, Seq[Float])]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    def nearest(v: Column, n: Int): Column =
-      nearest_centroids(v, centsLit, idsLit, n)
-
     val lists = Dedup.spread(
         emb.select(col(idCol).as("cid"), col(vecCol).as("cv")))
-      .withColumn("centroid_id", try_element_at(nearest(col("cv"), 1), lit(1)))
+      .withColumn("centroid_id",
+        try_element_at(nearestLists(codebook, col("cv"), 1), lit(1)))
     val probes = emb.filter(queryPred)
       .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .withColumn("centroid_id", explode(nearest(col("qv"), nprobe)))
-
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim_r").desc, col("cid"))
+      .withColumn("centroid_id",
+        explode(nearestLists(codebook, col("qv"), nprobe)))
     // spreadBy(qid): satisfies the ranking window's distribution with
     // a non-AQE-coalescible exchange — the candidate scoring+ranking
     // stage otherwise lands on the 1-2 tasks byte-based coalescing
     // allots the small candidate rows (measured 0.6 s / 2 tasks,
     // cpu-bound, in ann_autotune)
-    Dedup.spreadBy(
-        lists.join(Hints.maybeBroadcast(probes), Seq("centroid_id"))
-          .filter(col("qid") =!= col("cid")), col("qid"))
-      .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("sim_r"), col("rnk"))
+    rankBatch(Dedup.spreadBy(
+      lists.join(Hints.maybeBroadcast(probes), Seq("centroid_id"))
+        .filter(col("qid") =!= col("cid")), col("qid")), k)
   }
 
   /** ONE max-probe search serving a whole recall-vs-nprobe tuning
@@ -189,18 +174,14 @@ object Similarity {
   def ivfProbeCandidates(emb: DataFrame, idCol: String, vecCol: String,
                          queryPred: Column, nprobeMax: Int,
                          codebook: Array[(Long, Seq[Float])]): DataFrame = {
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    def nearest(v: Column, n: Int): Column =
-      nearest_centroids(v, centsLit, idsLit, n)
     val lists = Dedup.spread(
         emb.select(col(idCol).as("cid"), col(vecCol).as("cv")))
       .withColumn("centroid_id",
-        try_element_at(nearest(col("cv"), 1), lit(1)))
+        try_element_at(nearestLists(codebook, col("cv"), 1), lit(1)))
     val probes = emb.filter(queryPred)
       .select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .select(col("qid"), col("qv"),
-        posexplode(nearest(col("qv"), nprobeMax))
+        posexplode(nearestLists(codebook, col("qv"), nprobeMax))
           .as(Seq("p0", "centroid_id")))
       .withColumn("probe_rank", (col("p0") + 1).cast("int"))
       .drop("p0")
@@ -214,268 +195,286 @@ object Similarity {
         max(col("sim_r")).as("sim_r"))
   }
 
-  /** PERSIST an IVF index as a partitioned table: (cid, cv) rows
-    * written under `indexDir` partitioned BY LIST ID, so a search
-    * that probes `nprobe` lists reads exactly `nprobe` directory
-    * partitions — partition PRUNING at the storage layer, the
-    * mechanism that makes a disk-resident ANN index sublinear (the
-    * in-plan equi-join variant is [[ivfTopK]]; this is the
-    * index-build-once / search-many shape a serving tier uses).
-    * Returns the sampled codebook the searches must share.
-    *
-    * `centroidEvery` ≤ 0 (the default) derives the stride from a
-    * cheap corpus COUNT via [[sqrtStride]], so nlist tracks 4·√n and
-    * the build stays O(n^1.5) — a fixed stride makes nlist ∝ n and
-    * the build quadratic.
+  /** What a persisted list index stores per vector: the raw vector
+    * (`cv`), a PQ code or an SQ8 code (`code`). The coarse quantizer
+    * always assigns on the raw vector, so every codec puts a row in
+    * the same list, and a search's only per-codec step is [[decode]].
     */
-  def ivfIndexWrite(emb: DataFrame, idCol: String, vecCol: String,
-                    indexDir: String, centroidEvery: Int = 0,
-                    maxCentroids: Int = 1 << 14)
-      : Array[(Long, Seq[Float])] = {
-    val stride =
-      if (centroidEvery > 0) centroidEvery else sqrtStride(emb.count())
-    val codebook = sampledCodebook(emb, idCol, vecCol, stride, maxCentroids)
-    ivfIndexWriteWithCodebook(emb, idCol, vecCol, indexDir, codebook)
-    codebook
+  sealed trait ListCodec {
+    /** The stored column, named, for the `array<float>` vector `v`. */
+    def encode(v: Column): Column
+    /** The stored column back as the `array<float>` the ADC stage
+      * ranks on ([[pqReconstructExpr]] / [[sqDecodeExpr]]).
+      */
+    def decode: Column
+  }
+  object ListCodec {
+    case object Flat extends ListCodec {
+      def encode(v: Column): Column = v.as("cv")
+      def decode: Column = col("cv")
+    }
+    /** PQ codes (Jégou et al. TPAMI 2011) under FIT-ONCE
+      * sub-codebooks: retraining on arrival would silently re-key the
+      * whole index, exactly like refitting the coarse codebook.
+      */
+    final case class Pq(codebooks: Array[Array[Array[Float]]])
+        extends ListCodec {
+      def encode(v: Column): Column = pqCodeExpr(codebooks, v).as("code")
+      def decode: Column = pqReconstructExpr(codebooks, col("code"))
+    }
+    /** SQ8 codes under FIT-ONCE per-dimension stats: re-deriving them
+      * from base ∪ delta would re-code every stored row. SQ8 has no
+      * trained state beyond those 2·d doubles, so an SQ index's whole
+      * lifecycle replays in the DuckDB oracle.
+      */
+    final case class Sq(mns: Array[Double], mxs: Array[Double])
+        extends ListCodec {
+      def encode(v: Column): Column =
+        sqCodeExpr(v.cast("array<double>"), mns, mxs).as("code")
+      def decode: Column =
+        sqDecodeExpr(col("code"), mns, mxs).cast("array<float>")
+    }
   }
 
-  /** [[ivfIndexWrite]] with a caller-supplied coarse quantizer — the
-    * shape index MAINTENANCE needs: base build and every later delta
-    * batch must assign under the SAME codebook or list membership
-    * drifts between the stored lists and the probe computation.
+  /** Where a persisted list index puts its rows.
+    *  - `ByList`: one partition dir per list (`centroid_id=C/`), so a
+    *    search probing `nprobe` lists reads exactly `nprobe` dirs —
+    *    partition PRUNING at the storage layer, the mechanism that
+    *    makes a disk-resident ANN index sublinear.
+    *  - `ByLabelGroup`: `label=L/list_grp=G/` (G = [[listGroupOf]]),
+    *    each file sorted on `centroid_id`: a search constrained to
+    *    label L prunes to that label's probed GROUPS by directory and
+    *    to the probed lists inside each file by the row-group sort
+    *    (pushed data filter), with the file count capped at
+    *    |labels| × ⌈√nlist⌉ instead of |labels| × nlist. The partition
+    *    columns MUST prefix the sort: the partitioned writer inserts
+    *    its OWN local sort on (label, list_grp) when the incoming
+    *    order doesn't match, silently discarding the centroid_id order
+    *    (Round13Spec's per-file order check caught exactly this).
+    * The source frame of a `ByLabelGroup` index carries a `label`
+    * column; labels never change assignment.
     */
-  def ivfIndexWriteWithCodebook(emb: DataFrame, idCol: String,
-                                vecCol: String, indexDir: String,
-                                codebook: Array[(Long, Seq[Float])])
-      : Unit = {
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    // repartition BY LIST between assignment and the partitioned
-    // write: without it every writer task holds rows of ~every list
-    // and the job creates O(tasks × nlist) tiny files — at nlist ≈
-    // 4√n that file-open/footer overhead dominated the whole build
-    // (measured 10×: 212 s → 9 s for the ann_ivf_delta double build).
-    // One shuffle keyed on the list id makes each list one file, the
-    // layout the nprobe-pruned reads want anyway. A pathologically
-    // hot list (skewed corpus) would serialize into one task — the
-    // salting escalation (repartition on (list, salt)) is the knob,
-    // deliberately not paid here.
-    Dedup.spread(emb.select(col(idCol).cast("long").as("cid"),
-        col(vecCol).cast("array<float>").as("cv")))
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("cv"), centsLit, idsLit, 1), lit(1)))
-      // a zero-norm vector has NaN cosine to every centroid → null
-      // assignment; without this filter it would persist under the
-      // default-partition dir where [[ivfIndexForget]]'s same-skip
-      // could never delete it (a silent right-to-be-forgotten gap) —
-      // un-assignable vectors are not index residents, by contract
-      .filter(col("centroid_id").isNotNull)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(indexDir)
+  sealed abstract class ListLayout(val parts: Seq[String],
+                                   val fileOrder: Seq[String])
+  object ListLayout {
+    case object ByList extends ListLayout(Seq("centroid_id"), Nil)
+    case object ByLabelGroup extends ListLayout(Seq("label", "list_grp"),
+      Seq("label", "list_grp", "centroid_id", "cid"))
   }
+
+  private def nearestLists(codebook: Array[(Long, Seq[Float])],
+                           v: Column, n: Int): Column =
+    nearest_centroids(v, typedLit(codebook.map(_._2).toSeq),
+      typedLit(codebook.map(_._1).toSeq), n)
+
+  /** THE list assignment of every persisted index — build, delta and
+    * forget alike: (cid, stored column, [label,] centroid_id
+    * [, list_grp]) under the SHARED coarse codebook, a scan-stage
+    * argmax with zero shuffle. WHERE a row lives depends only on
+    * (vector, codebook), so when it arrived cannot move it, and a
+    * forget batch knows its touched lists without scanning the index.
+    */
+  private def listRows(src: DataFrame, idCol: String, vecCol: String,
+                       codebook: Array[(Long, Seq[Float])],
+                       codec: ListCodec, layout: ListLayout): DataFrame = {
+    val labeled = layout == ListLayout.ByLabelGroup
+    val assigned = src
+      .select(Seq(col(idCol).cast("long").as("cid"),
+          col(vecCol).cast("array<float>").as("__v")) ++
+        (if (labeled) Seq(col("label").cast("long").as("label")) else Nil): _*)
+      .withColumn("centroid_id",
+        try_element_at(nearestLists(codebook, col("__v"), 1), lit(1)))
+      // a zero-norm vector has NaN cosine to every centroid → null
+      // list, and a null id is never matched by the forget anti-join:
+      // neither is an index resident, so no write, delta or forget
+      // ever sees one (a null list would land in the default
+      // partition dir, beyond any forget — and break the touched
+      // collect of a delta)
+      .filter(col("centroid_id").isNotNull && col("cid").isNotNull)
+    // rank-derived group: array_position over the codebook id literal
+    // IS listGroupOf as a scan-stage expression (1-based, hence −1)
+    val keyed = if (!labeled) assigned else assigned.withColumn("list_grp",
+      pmod(array_position(typedLit(codebook.map(_._1).toSeq),
+        col("centroid_id")) - 1, lit(listGroupCount(codebook.length).toLong)))
+    keyed.select((col("cid") +: codec.encode(col("__v")) +:
+      keyed.columns.toSeq.filterNot(Set("cid", "__v")).map(col)): _*)
+  }
+
+  /** The one list writer: one shuffle keyed on the layout's partition
+    * columns makes each partition one file (without it every writer
+    * task holds rows of ~every list and the job creates
+    * O(tasks × nlist) tiny files — measured 10×: 212 s → 9 s for the
+    * ann_ivf_delta double build). A pathologically hot list would
+    * serialize into one task; the salting escalation (repartition on
+    * (list, salt)) is the knob, deliberately not paid here. `publish`
+    * overwrites only the partitions `rows` hold (dynamic partition
+    * overwrite); otherwise `dir` is replaced whole.
+    */
+  private def writeLists(rows: DataFrame, layout: ListLayout, dir: String,
+                         publish: Boolean): Unit = {
+    val placed = rows.repartition(layout.parts.map(col): _*)
+    val ordered =
+      if (layout.fileOrder.isEmpty) placed
+      else placed.sortWithinPartitions(layout.fileOrder.map(col): _*)
+    val w = ordered.write.mode("overwrite")
+    (if (publish) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy(layout.parts: _*).parquet(dir)
+  }
+
+  /** PERSIST a list index built under `codebook` — the
+    * index-build-once / search-many shape a serving tier uses (the
+    * in-plan equi-join variant is [[ivfTopK]]). Base build and every
+    * later merge must assign under the SAME codebook or list
+    * membership drifts between the stored lists and the probe
+    * computation. Assignment runs in `emb`'s own partitioning: a
+    * caller whose corpus arrives as one parquet partition spreads it
+    * first ([[Dedup.spread]]). Size the codebook with
+    * [[sampledCodebook]] at [[sqrtStride]] of a corpus COUNT, so nlist
+    * tracks 4·√n and the build stays O(n^1.5) — a fixed stride makes
+    * nlist ∝ n and the build quadratic.
+    */
+  def ivfIndexWrite(emb: DataFrame, idCol: String, vecCol: String,
+                    indexDir: String, codebook: Array[(Long, Seq[Float])],
+                    codec: ListCodec, layout: ListLayout): Unit =
+    writeLists(listRows(emb, idCol, vecCol, codebook, codec, layout),
+      layout, indexDir, publish = false)
 
   /** DERIVE a persisted index from an EXISTING one by restricting its
     * stored rows — the cheap way to stand up a second index instance
-    * over the same corpus (a forget/delta test bed, a tenant subset,
-    * a staging copy): list membership depends only on (vector,
-    * codebook), so filtering the stored rows of an index produces
-    * bit-identical content to re-encoding + re-assigning the same
-    * subset from raw vectors, WITHOUT paying the assignment argmax
-    * (O(n·nlist·d)) or any encode again. One pass over the stored
-    * rows (codes or vectors — layout-agnostic: whatever columns the
-    * list rows hold are carried), repartitioned by list id so the
-    * derived index keeps the one-file-per-list layout. At 100 TB this
-    * is the difference between a parquet filter-copy and a full
-    * index rebuild.
+    * over the same corpus (a forget/delta test bed, a tenant subset, a
+    * staging copy): list membership depends only on (vector,
+    * codebook), so filtering the stored rows produces bit-identical
+    * content to re-encoding + re-assigning the same subset from raw
+    * vectors, WITHOUT the assignment argmax (O(n·nlist·d)) or any
+    * encode. Whatever columns the list rows hold are carried. At
+    * 100 TB this is a parquet filter-copy instead of a rebuild.
     */
   def ivfIndexDerive(spark: org.apache.spark.sql.SparkSession,
-                     srcDir: String, dstDir: String,
-                     keep: Column): Unit =
-    spark.read.parquet(srcDir)
-      .filter(keep)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(dstDir)
+                     srcDir: String, dstDir: String, keep: Column,
+                     layout: ListLayout): Unit =
+    writeLists(spark.read.parquet(srcDir).filter(keep), layout, dstDir,
+      publish = false)
 
-  /** APPEND a delta batch to a persisted [[ivfIndexWrite]] index and
-    * COMPACT the touched lists in one motion — the maintenance loop a
-    * serving tier runs nightly instead of rebuilding from history
-    * (the `minhash_incremental` incremental-index precedent at the
-    * storage layer). Delta vectors are assigned under the SHARED
-    * codebook (scan-stage argmax, zero shuffle), then each touched
-    * list is rewritten as existing-rows ∪ delta — untouched lists'
-    * files are never read or rewritten, so the cost is O(|delta| +
-    * rows in touched lists), independent of index size. Merge
-    * consistency — search(base ∪ Δ) ≡ search(rebuilt-from-everything)
-    * — is what `ann_ivf_delta` hash-checks: assignment depends only
-    * on (vector, codebook), so WHEN a row arrived cannot change WHERE
-    * it lives.
+  /** MERGE a batch into a persisted index: append it (`forget` =
+    * false) or delete its ids (`forget` = true) — the maintenance loop
+    * a serving tier runs instead of rebuilding from history (the
+    * `minhash_incremental` precedent at the storage layer; the
+    * right-to-be-forgotten path at the index layer). The batch is
+    * assigned by [[listRows]], so the touched partitions are known
+    * without scanning the index; each is rewritten as existing rows
+    * ∪ batch, or existing rows ANTI-JOIN batch ids. Cost O(|batch| +
+    * rows in touched partitions); untouched partitions' files are
+    * never read or rewritten. An empty batch (or one of zero-norm
+    * vectors only) touches nothing and leaves the index bit-untouched.
     *
-    * CRASH CONSISTENCY (stage → publish → clean): the merged lists
-    * are first written to `stagingDir` — RELIABLE storage, not
-    * executor-local checkpoint blocks, which an executor loss during
-    * the overwrite would drop while the only durable copy of the
-    * touched lists is already half-replaced — and only then published
-    * into the index by [[ivfIndexPublishStaged]] (dynamic partition
-    * overwrite reading the staging dir, never the index). A crash
-    * before publish leaves the index bit-identical to the old state;
-    * a crash DURING publish can leave a touched list old, merged, or
-    * momentarily absent (Spark's dynamic-overwrite commit deletes a
+    * CRASH CONSISTENCY (stage → publish → clean): [[ivfIndexStage]]
+    * writes the merged partitions to `<indexDir>.staging` — RELIABLE
+    * storage, not executor-local checkpoint blocks, which an executor
+    * loss during the overwrite would drop while the touched lists are
+    * already half-replaced — and only reads the index; then
+    * [[ivfIndexPublish]] overwrites them into the index. A crash
+    * before publish leaves the index bit-identical to the old state; a
+    * crash DURING publish can leave a touched partition old, merged,
+    * or momentarily absent (Spark's dynamic-overwrite commit deletes a
     * partition dir before renaming its replacement in), but the
-    * staged copy survives, and because publish is IDEMPOTENT —
-    * re-running it rewrites exactly the staged lists — recovery is
-    * "re-run [[ivfIndexPublishStaged]] until it succeeds, then delete
-    * the staging dir". The staging dir is deleted ONLY after a
-    * successful publish; `IvfIndexSpec` injects both crash windows
-    * and pins old-state equality / recovery-to-rebuild equality.
+    * staged copy survives and publish is IDEMPOTENT, so recovery is
+    * "re-run publish until it succeeds, then delete the staging dir" —
+    * or re-run the merge itself. The staging dir is deleted ONLY after
+    * a successful publish; `IvfIndexSpec` injects both crash windows.
+    *
+    * The coarse quantizer (and a PQ codec's sub-codebooks) retain any
+    * sampled vector VALUES they were fit on; refreshing them is a
+    * rebuild-time decision (re-keying every list), not a per-delete
+    * one — the privacy boundary of forget, made explicit.
     */
-  def ivfIndexAppendDelta(spark: org.apache.spark.sql.SparkSession,
-                          indexDir: String,
-                          codebook: Array[(Long, Seq[Float])],
-                          delta: DataFrame, idCol: String,
-                          vecCol: String,
-                          stagingDirOpt: Option[String] = None): Unit = {
-    val staging = stagingDirOpt.getOrElse(
-      indexDir.stripSuffix("/") + ".staging")
-    val touched = ivfIndexStageDelta(spark, indexDir, staging, codebook,
-      delta, idCol, vecCol)
-    // an empty delta stages nothing: return before the publish (an
-    // empty staged frame would also rewrite zero lists, but making
-    // the no-op explicit keeps the index bit-untouched)
-    if (touched.isEmpty) return
-    ivfIndexPublishStaged(spark, indexDir, staging)
-    deleteDir(spark, staging) // only after a successful publish
+  def ivfIndexMerge(spark: org.apache.spark.sql.SparkSession,
+                    indexDir: String,
+                    codebook: Array[(Long, Seq[Float])], codec: ListCodec,
+                    layout: ListLayout, batch: DataFrame, idCol: String,
+                    vecCol: String, forget: Boolean): Unit = {
+    val staging = indexDir.stripSuffix("/") + ".staging"
+    val touched = ivfIndexStage(spark, indexDir, staging, codebook, codec,
+      layout, batch, idCol, vecCol, forget)
+    if (touched.nonEmpty) {
+      ivfIndexPublish(spark, indexDir, staging, layout, touched)
+      deleteDir(spark, staging) // only after a successful publish
+    }
   }
 
-  /** Stage half of the maintenance loop: write the MERGED form
-    * (existing rows ∪ assigned delta) of every list the delta touches
-    * to `stagingDir` as a durable parquet table partitioned by list
-    * id. The index itself is only READ — a crash anywhere in here
-    * leaves it bit-identical to the old state. Returns the touched
-    * list ids (empty ⇒ nothing staged).
+  /** Stage half of [[ivfIndexMerge]]: write the MERGED form of every
+    * partition the batch touches to `stagingDir`, a durable parquet
+    * table in the index's layout. The index is only READ — a crash
+    * anywhere in here leaves it bit-identical. Returns the touched
+    * partitions' values (layout order; empty ⇒ nothing staged). The
+    * forget ids stay distributed: the anti-join broadcasts them only
+    * while their ESTIMATE fits the bound ([[Hints.maybeBroadcast]]), so
+    * a corpus-sized forget batch falls back to a shuffled join rather
+    * than an inlined In-list on the driver.
     */
-  def ivfIndexStageDelta(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String, stagingDir: String,
-                         codebook: Array[(Long, Seq[Float])],
-                         delta: DataFrame, idCol: String,
-                         vecCol: String): Array[Long] = {
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    val assigned = delta
-      .select(col(idCol).cast("long").as("cid"),
-        col(vecCol).cast("array<float>").as("cv"))
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("cv"), centsLit, idsLit, 1), lit(1)))
-    // bounded collect: one id per touched list, ≤ |codebook| by design
-    val touched = assigned.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return touched
-    spark.read.parquet(indexDir)
-      .filter(col("centroid_id").isin(touched: _*))
-      .unionByName(assigned)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(stagingDir)
+  def ivfIndexStage(spark: org.apache.spark.sql.SparkSession,
+                    indexDir: String, stagingDir: String,
+                    codebook: Array[(Long, Seq[Float])], codec: ListCodec,
+                    layout: ListLayout, batch: DataFrame, idCol: String,
+                    vecCol: String, forget: Boolean): Seq[Seq[Long]] = {
+    val rows = listRows(batch, idCol, vecCol, codebook, codec, layout)
+    // the only driver collect: one row per touched partition —
+    // ≤ |codebook|, or ≤ |labels| × ⌈√nlist⌉, by construction
+    val touched = rows.select(layout.parts.map(col): _*).distinct()
+      .collect().map(r => layout.parts.indices.map(r.getLong)).toSeq
+    if (touched.nonEmpty) {
+      val lists = spark.read.parquet(indexDir).filter(layout.parts match {
+        case Seq(p) => col(p).isin(touched.map(_.head): _*)
+        case parts => touched.map(vs => parts.zip(vs)
+          .map { case (p, v) => col(p) === v }.reduce(_ && _)).reduce(_ || _)
+      })
+      val merged =
+        if (forget) lists.join(Hints.maybeBroadcast(rows.select(col("cid"))),
+          Seq("cid"), "left_anti")
+        else lists.unionByName(rows)
+      writeLists(merged, layout, stagingDir, publish = false)
+    }
     touched
   }
 
-  /** FORGET rows from a persisted [[ivfIndexWrite]] index — the
-    * right-to-be-forgotten path at the index layer (the table-layer
-    * twin is the forget-user operator): the ids to delete are
-    * assigned under the SHARED codebook (scan-stage argmax — WHERE a
-    * row lives depends only on (vector, codebook), so the touched
-    * lists are knowable without scanning the index), each touched
-    * list is rewritten as existing-rows ANTI-JOIN forget-ids through
-    * the same durable-staging → idempotent-publish crash contract as
-    * [[ivfIndexAppendDelta]], and lists left EMPTY by the deletion —
-    * which dynamic partition overwrite cannot express (no staged rows
-    * ⇒ the partition is never rewritten) — have their directories
-    * deleted explicitly AFTER the publish. Cost O(|forget| + rows in
-    * touched lists); untouched lists' files never read or rewritten.
-    *
-    * Recovery: re-run until success — staging is durable, publish is
-    * idempotent, and the empty-list deletes are idempotent (deleting
-    * a missing dir is a no-op). The coarse quantizer itself retains
-    * any sampled vector VALUES it was fit on; refreshing the
-    * quantizer is a rebuild-time decision (re-keying every list), not
-    * a per-delete one — documented so the privacy boundary is
-    * explicit.
+  /** Publish half of [[ivfIndexMerge]]: dynamic partition overwrite of
+    * the staged partitions into the index, reading ONLY the staging
+    * dir (the index is never both read and overwritten in one job).
+    * A touched partition absent from staging was emptied by a forget,
+    * which dynamic overwrite cannot express: its dir, and a parent dir
+    * it leaves empty (a `label=L` with no group), are deleted after
+    * the overwrite. IDEMPOTENT — re-running converges to the same
+    * index after any partial failure.
     */
-  def ivfIndexForget(spark: org.apache.spark.sql.SparkSession,
-                     indexDir: String,
-                     codebook: Array[(Long, Seq[Float])],
-                     forget: DataFrame, idCol: String, vecCol: String,
-                     stagingDirOpt: Option[String] = None): Unit = {
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    val assigned = forget
-      .select(col(idCol).cast("long").as("cid"),
-        col(vecCol).cast("array<float>").as("cv"))
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("cv"), centsLit, idsLit, 1), lit(1)))
-      // a zero-norm forget vector yields NaN cosines everywhere →
-      // null centroid_id; such a vector was never written to any list
-      // (every index write path filters null assignments), so it
-      // touches nothing
-      .filter(col("centroid_id").isNotNull && col("cid").isNotNull)
-    // the ONLY driver collect: one id per touched list, ≤ |codebook|
-    // by design. The forget ids themselves stay distributed — the
-    // batch is corpus-proportional in the worst case, so an inlined
-    // In-list would be a driver-memory / expression-size hazard, and
-    // the anti-join below broadcasts the id set only while its
-    // ESTIMATE fits the bound (maybeBroadcast) — a corpus-sized
-    // forget batch falls back to a shuffled left_anti join.
-    val touched = assigned.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val staging = stagingDirOpt.getOrElse(
-      indexDir.stripSuffix("/") + ".staging")
-    val survivors = spark.read.parquet(indexDir)
-      .filter(col("centroid_id").isin(touched: _*))
-      .join(Hints.maybeBroadcast(assigned.select(col("cid"))),
-        Seq("cid"), "left_anti")
-    if (survivors.isEmpty) {
-      // every touched list emptied: nothing to stage or publish —
-      // the deletion IS the directory removal
-      touched.foreach { listId =>
-        deleteDir(spark,
-          indexDir.stripSuffix("/") + s"/centroid_id=$listId")
+  def ivfIndexPublish(spark: org.apache.spark.sql.SparkSession,
+                      indexDir: String, stagingDir: String,
+                      layout: ListLayout, touched: Seq[Seq[Long]]): Unit = {
+    val root = new org.apache.hadoop.fs.Path(stagingDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def partDirs(p: org.apache.hadoop.fs.Path, depth: Int): Seq[String] =
+      fs.listStatus(p).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        .flatMap { s =>
+          val name = s.getPath.getName
+          if (depth == 1) Seq(name)
+          else partDirs(s.getPath, depth - 1).map(rest => s"$name/$rest")
+        }
+    val staged = partDirs(root, layout.parts.size).toSet
+    if (staged.nonEmpty)
+      writeLists(spark.read.parquet(stagingDir), layout, indexDir,
+        publish = true)
+    val index = new org.apache.hadoop.fs.Path(indexDir)
+    touched.map(vs => layout.parts.zip(vs)
+        .map { case (p, v) => s"$p=$v" }.mkString("/"))
+      .filterNot(staged).foreach { rel =>
+        var dir = new org.apache.hadoop.fs.Path(index, rel)
+        fs.delete(dir, true)
+        dir = dir.getParent
+        while (dir != index && fs.exists(dir) && fs.listStatus(dir).isEmpty) {
+          fs.delete(dir, true)
+          dir = dir.getParent
+        }
       }
-      return
-    }
-    survivors
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(staging)
-    // lists the deletion emptied: present in `touched`, absent from
-    // the staged survivors — their partition dirs must go explicitly
-    val survivedLists = spark.read.parquet(staging)
-      .select(col("centroid_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    ivfIndexPublishStaged(spark, indexDir, staging)
-    touched.filterNot(survivedLists).foreach { listId =>
-      deleteDir(spark,
-        indexDir.stripSuffix("/") + s"/centroid_id=$listId")
-    }
-    deleteDir(spark, staging) // only after a successful publish
   }
-
-  /** Publish half of the maintenance loop: dynamic partition
-    * overwrite of the staged lists into the index, reading ONLY the
-    * staging dir (the index is never both read and overwritten in
-    * one job). IDEMPOTENT — the staged table already holds each
-    * touched list's complete merged content, so re-running after any
-    * partial failure converges to the same final index; see
-    * [[ivfIndexAppendDelta]] for the recovery contract.
-    */
-  def ivfIndexPublishStaged(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String, stagingDir: String): Unit =
-    spark.read.parquet(stagingDir)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("centroid_id").parquet(indexDir)
 
   private def deleteDir(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Unit = {
@@ -483,13 +482,6 @@ object Similarity {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  /** Single-query search over a persisted [[ivfIndexWrite]] index:
-    * the query's `nprobe` list ids are computed from the shared
-    * codebook (driver-side, k·d floats), inlined as an IN filter, and
-    * the scan therefore reads ONLY those list partitions —
-    * `PartitionFilters` in the plan, pinned by PlanSpec. Exact cosine
-    * re-rank of the probed lists to top-`k`.
-    */
   /** Files per label in the labeled index layout: ⌈√nlist⌉ list
     * GROUPS, each holding ~√nlist consecutive-rank lists in one file —
     * the r13 compaction of the one-dir-per-(label, list) layout whose
@@ -520,513 +512,167 @@ object Similarity {
     (rank % listGroupCount(codebook.length)).toLong
   }
 
-  /** PERSIST a LABEL-PARTITIONED IVF index — the layout knob the
-    * filtered-search scaladoc names: rows land under
-    * `label=L/list_grp=G/` (G = [[listGroupOf]] the assigned list) so
-    * a search constrained to label L probing `nprobe` lists prunes to
-    * that label's probed GROUPS at the directory layer and to the
-    * probed lists inside each file via the parquet row-group sort on
-    * `centroid_id` (pushed data filter) — two-level pruning with the
-    * file count capped at |labels| × ⌈√nlist⌉ instead of
-    * |labels| × nlist (the r13 compaction; `centroid_id` rides as a
-    * DATA column now, partition-pruned by group, row-group-pruned by
-    * the sort). Same scan-stage assignment + one shuffle on
-    * (label, group) for the one-file-per-(label, group) layout.
+  /** The query's `nprobe` list ids: the assignment kernel evaluated
+    * on a 1-row frame (driver-side, k·d floats).
     */
-  def ivfIndexWriteLabeled(emb: DataFrame, idCol: String,
-                           labelCol: String, vecCol: String,
-                           indexDir: String,
-                           codebook: Array[(Long, Seq[Float])]): Unit = {
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    val groups = listGroupCount(codebook.length)
-    Dedup.spread(emb.select(col(idCol).cast("long").as("cid"),
-        col(labelCol).cast("long").as("label"),
-        col(vecCol).cast("array<float>").as("cv")))
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("cv"), centsLit, idsLit, 1), lit(1)))
-      // null (zero-norm) assignments never become index residents —
-      // the forget loop's same-skip contract (see ivfIndexWriteWithCodebook)
-      .filter(col("centroid_id").isNotNull)
-      // rank-derived group: array_position over the codebook id
-      // literal IS listGroupOf as a scan-stage expression (1-based,
-      // hence the −1)
-      .withColumn("list_grp", pmod(
-        array_position(idsLit, col("centroid_id")) - 1,
-        lit(groups.toLong)))
-      .repartition(col("label"), col("list_grp"))
-      // row-group stats on centroid_id make the pushed probe filter
-      // skip non-probed lists WITHIN each group file. The partition
-      // columns MUST prefix the sort: the partitioned writer requires
-      // rows grouped by partition values and inserts its OWN local
-      // sort on just (label, list_grp) when the incoming order
-      // doesn't — silently discarding the centroid_id order
-      // (Round13Spec's per-file order check caught exactly this)
-      .sortWithinPartitions(col("label"), col("list_grp"),
-        col("centroid_id"), col("cid"))
-      .write.mode("overwrite").partitionBy("label", "list_grp")
-      .parquet(indexDir)
-  }
-
-  /** DERIVE a labeled index instance by restricting an existing one —
-    * [[ivfIndexDerive]] for the (label, list_grp) layout: one
-    * filter-copy pass, never a re-assignment.
-    */
-  def ivfIndexDeriveLabeled(spark: org.apache.spark.sql.SparkSession,
-                            srcDir: String, dstDir: String,
-                            keep: Column): Unit =
-    spark.read.parquet(srcDir)
-      .filter(keep)
-      .repartition(col("label"), col("list_grp"))
-      .sortWithinPartitions(col("label"), col("list_grp"),
-        col("centroid_id"), col("cid"))
-      .write.mode("overwrite").partitionBy("label", "list_grp")
-      .parquet(dstDir)
-
-  /** Single filtered query over a [[ivfIndexWriteLabeled]] index: the
-    * label equality AND the probed lists' GROUPS are partition
-    * filters (the scan reads only the query label's probed group
-    * files — ≤ min(nprobe, √nlist) of them), while the probed list
-    * ids ride as a PUSHED data filter that the row-group sort on
-    * `centroid_id` turns into parquet page skipping — the
-    * storage-layer face of filtered ANN under the compacted layout
-    * (PlanSpec pins both levels).
-    */
-  def ivfIndexedSearchLabeled(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String,
-                              codebook: Array[(Long, Seq[Float])],
-                              qid: Long, qlabel: Long, qv: Seq[Float],
-                              nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    val probes = spark.range(1).select(
-        nearest_centroids(typedLit(qv), centsLit, idsLit, nprobe).as("p"))
+  private def probeIds(spark: org.apache.spark.sql.SparkSession,
+                       codebook: Array[(Long, Seq[Float])],
+                       qv: Seq[Float], nprobe: Int): Seq[Long] =
+    spark.range(1).select(nearestLists(codebook, typedLit(qv), nprobe))
       .head().getSeq[Long](0)
-    val grps = probes.map(listGroupOf(codebook, _)).distinct
-    // unpartitioned window audit (r15): the rnk <= k filter below
-    // compiles to WindowGroupLimit, so each scan partition forwards at
-    // most k rows to the single-partition sort — bounded by k·|scan
-    // partitions| at any corpus size, never by list occupancy
-    val w = Window.orderBy(col("sim_r").desc, col("cid"))
-    spark.read.parquet(indexDir)
-      .filter(col("label") === qlabel &&
-        col("list_grp").isin(grps: _*) &&
-        col("centroid_id").isin(probes: _*))
-      .filter(col("cid") =!= qid)
-      .withColumn("sim_r", round(cosine_sim(typedLit(qv), col("cv")), 4))
-      .withColumn("rnk", row_number().over(w))
+
+  /** Exact top-`k` of ONE query over candidate (cid, cv) rows. The
+    * unpartitioned window (r15 audit): the rnk <= k filter compiles
+    * to WindowGroupLimit, so each scan partition forwards at most k
+    * rows to the single-partition sort — bounded by k·|scan
+    * partitions| at any corpus size, never by list occupancy.
+    */
+  private def rankOne(rows: DataFrame, qid: Long, qv: Seq[Float],
+                      k: Int): DataFrame =
+    rows.withColumn("sim_r", round(cosine_sim(typedLit(qv), col("cv")), 4))
+      .withColumn("rnk",
+        row_number().over(Window.orderBy(col("sim_r").desc, col("cid"))))
       .filter(col("rnk") <= k)
       .select(lit(qid).as("qid"), col("cid"), col("sim_r"), col("rnk"))
+
+  /** Exact top-`k` per query over (qid, qv, cid, cv) candidates. */
+  private def rankBatch(cands: DataFrame, k: Int): DataFrame =
+    cands.withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
+      .withColumn("rnk", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("sim_r").desc, col("cid"))))
+      .filter(col("rnk") <= k)
+      .select(col("qid"), col("cid"), col("sim_r"), col("rnk"))
+
+  /** Single-query EXACT search over a `Flat` list index: the query's
+    * `nprobe` list ids are inlined as an IN filter, so the scan reads
+    * ONLY those partitions (`PartitionFilters`, PlanSpec-pinned), then
+    * the probed rows re-rank exactly to top-`k`. On a `ByLabelGroup`
+    * index, `qlabel` = Some(L) makes the label and the probed lists'
+    * GROUPS partition filters too (the scan opens ≤ min(nprobe,
+    * √nlist) group files of the query's label) while the list ids ride
+    * as the pushed data filter the row-group sort turns into page
+    * skipping — filtered ANN's storage-layer face.
+    */
+  def ivfIndexedSearch(spark: org.apache.spark.sql.SparkSession,
+                       indexDir: String,
+                       codebook: Array[(Long, Seq[Float])],
+                       qid: Long, qlabel: Option[Long], qv: Seq[Float],
+                       nprobe: Int, k: Int): DataFrame = {
+    val probes = probeIds(spark, codebook, qv, nprobe)
+    val lists = col("centroid_id").isin(probes: _*)
+    val scope = qlabel.fold(lists)(l => col("label") === l &&
+      col("list_grp").isin(probes.map(listGroupOf(codebook, _)).distinct: _*) &&
+      lists)
+    rankOne(spark.read.parquet(indexDir).filter(scope)
+      .filter(col("cid") =!= qid), qid, qv, k)
   }
 
-  /** BATCH (query-fleet) filtered search over a
-    * [[ivfIndexWriteLabeled]] index: every query probes under ITS OWN
-    * label in one plan — probe rows are (qid, qlabel, probed list)
-    * keys and the stored lists join on (label, centroid_id), so the
-    * label predicate rides the equi-join exactly as in the in-plan
-    * operator. A fleet spanning every label reads every label's
-    * partitions (pruning is the POINT-query win — [[
-    * ivfIndexedSearchLabeled]]); what the batch mode buys is one scan
-    * + one join for the whole fleet instead of |Q| pruned jobs, the
-    * same trade the PQ/SQ batch searches make.
+  /** BATCH (query-fleet) filtered search over a `Flat` `ByLabelGroup`
+    * index: every query probes under ITS OWN label in one plan — probe
+    * rows are (qid, qlabel, probed list) keys and the stored lists
+    * join on (label, centroid_id), so the label predicate rides the
+    * equi-join exactly as in the in-plan operator. A fleet spanning
+    * every label reads every label's partitions (pruning is the
+    * point-query win); what the batch buys is one scan + one join for
+    * the whole fleet instead of |Q| pruned jobs.
     */
   def ivfIndexedBatchSearchLabeled(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String, codebook: Array[(Long, Seq[Float])],
       queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
     val probes = queries
       .select(col("qid"), col("qlabel").cast("long").as("label"),
         col("qv"))
       .withColumn("centroid_id",
-        explode(nearest_centroids(col("qv"), centsLit, idsLit, nprobe)))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim_r").desc, col("cid"))
-    spark.read.parquet(indexDir)
+        explode(nearestLists(codebook, col("qv"), nprobe)))
+    rankBatch(spark.read.parquet(indexDir)
       .select(col("cid"), col("cv"), col("label").cast("long"),
         col("centroid_id").cast("long"))
       .join(Hints.maybeBroadcast(probes), Seq("label", "centroid_id"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("sim_r"), col("rnk"))
+      .filter(col("qid") =!= col("cid")), k)
   }
 
-  /** APPEND a delta batch to a persisted [[ivfIndexWriteLabeled]]
-    * index — the labeled twin of [[ivfIndexAppendDelta]], completing
-    * the labeled instance's build → DELTA → forget triad: delta
-    * vectors are assigned under the SHARED codebook (labels never
-    * change assignment), grouped by the SAME rank rule, and only the
-    * touched (label, list_grp) partitions are merged
-    * (existing rows ∪ delta) through the durable-staging →
-    * idempotent-publish crash contract. Cost O(|delta| + rows in
-    * touched partitions); untouched partition files never read or
-    * rewritten.
+  /** The ADC stage of [[ivfAdcSearch]] as a frame (shortlist cids,
+    * ranked on cosine(query, decoded code)): a TakeOrdered over the
+    * probed code partitions with the same tie order as the batch
+    * window (sim DESC, cid). Split out so `IvfIndexSpec` can pin the
+    * plan — the probed list ids must land in the scan's
+    * `PartitionFilters`, and the stage touches no raw vectors.
     */
-  def ivfIndexAppendDeltaLabeled(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, codebook: Array[(Long, Seq[Float])],
-      delta: DataFrame, idCol: String, labelCol: String,
-      vecCol: String, stagingDirOpt: Option[String] = None): Unit = {
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    val groups = listGroupCount(codebook.length)
-    val assigned = delta
-      .select(col(idCol).cast("long").as("cid"),
-        col(labelCol).cast("long").as("label"),
-        col(vecCol).cast("array<float>").as("cv"))
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("cv"), centsLit, idsLit, 1), lit(1)))
-      .filter(col("centroid_id").isNotNull)
-      .withColumn("list_grp", pmod(
-        array_position(idsLit, col("centroid_id")) - 1,
-        lit(groups.toLong)))
-    // bounded collect: ≤ |labels| × ⌈√nlist⌉ touched partitions
-    val touched = assigned.select(col("label"), col("list_grp"))
-      .distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    if (touched.isEmpty) return
-    val touchedPred: Column = touched.map { case (l, g) =>
-      col("label") === l && col("list_grp") === g
-    }.reduce(_ || _)
-    val staging = stagingDirOpt.getOrElse(
-      indexDir.stripSuffix("/") + ".staging")
-    spark.read.parquet(indexDir)
-      .filter(touchedPred)
-      .select(col("cid"), col("cv"), col("label").cast("long"),
-        col("centroid_id").cast("long"), col("list_grp").cast("long"))
-      .unionByName(assigned
-        .select(col("cid"), col("cv"), col("label"),
-          col("centroid_id"), col("list_grp")))
-      .repartition(col("label"), col("list_grp"))
-      .sortWithinPartitions(col("label"), col("list_grp"),
-        col("centroid_id"), col("cid"))
-      .write.mode("overwrite")
-      .partitionBy("label", "list_grp").parquet(staging)
-    spark.read.parquet(staging)
-      .repartition(col("label"), col("list_grp"))
-      // re-sort after the publish shuffle: the pushed probe-id filter
-      // prunes ROW GROUPS via the centroid_id sort, and a maintenance
-      // pass must not silently strip the layout's second pruning level
-      .sortWithinPartitions(col("label"), col("list_grp"),
-        col("centroid_id"), col("cid"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("label", "list_grp").parquet(indexDir)
-    deleteDir(spark, staging) // only after a successful publish
-  }
-
-  /** FORGET rows from a persisted [[ivfIndexWriteLabeled]] index —
-    * [[ivfIndexForget]]'s loop on the (label, list_grp) layout,
-    * completing the labeled instance's maintenance story: forget
-    * vectors are assigned under the SHARED codebook and their
-    * (label, group) partitions — knowable without scanning the
-    * index — are the only ones read, anti-joined on `cid`, staged
-    * durably, and republished via the same idempotent dynamic
-    * partition overwrite; partitions left EMPTY by the deletion have
-    * their directories removed explicitly after publish. Cost
-    * O(|forget| + rows in touched (label, group) files); untouched
-    * partitions never read or rewritten. Same crash contract as the
-    * unlabeled triad: staging is durable, publish re-runnable,
-    * empty-dir deletes idempotent.
-    */
-  def ivfIndexForgetLabeled(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String,
-                            codebook: Array[(Long, Seq[Float])],
-                            forget: DataFrame, idCol: String,
-                            labelCol: String, vecCol: String,
-                            stagingDirOpt: Option[String] = None): Unit = {
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    val groups = listGroupCount(codebook.length)
-    val assigned = forget
-      .select(col(idCol).cast("long").as("cid"),
-        col(labelCol).cast("long").as("label"),
-        col(vecCol).cast("array<float>").as("cv"))
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("cv"), centsLit, idsLit, 1), lit(1)))
-      .filter(col("centroid_id").isNotNull && col("cid").isNotNull)
-      .withColumn("list_grp", pmod(
-        array_position(idsLit, col("centroid_id")) - 1,
-        lit(groups.toLong)))
-    // bounded collect: one row per touched (label, group) partition —
-    // ≤ |labels| × ⌈√nlist⌉ by the layout's construction
-    val touched = assigned.select(col("label"), col("list_grp"))
-      .distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    if (touched.isEmpty) return
-    def touchedPred: Column = touched.map { case (l, g) =>
-      col("label") === l && col("list_grp") === g
-    }.reduce(_ || _)
-    val staging = stagingDirOpt.getOrElse(
-      indexDir.stripSuffix("/") + ".staging")
-    val survivors = spark.read.parquet(indexDir)
-      .filter(touchedPred)
-      .join(Hints.maybeBroadcast(assigned.select(col("cid"))),
-        Seq("cid"), "left_anti")
-    def partDir(l: Long, g: Long): String =
-      indexDir.stripSuffix("/") + s"/label=$l/list_grp=$g"
-    // a label whose every group was deleted leaves an empty label=L
-    // parent dir — remove it so the partition discovery never lists a
-    // label with no data (idempotent: deleting a missing dir is a
-    // no-op)
-    def cleanEmptyLabels(labels: Seq[Long]): Unit = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      labels.distinct.foreach { l =>
-        val p = new org.apache.hadoop.fs.Path(
-          indexDir.stripSuffix("/") + s"/label=$l")
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p) && fs.listStatus(p).isEmpty) fs.delete(p, true)
-      }
-    }
-    if (survivors.isEmpty) {
-      touched.foreach { case (l, g) => deleteDir(spark, partDir(l, g)) }
-      cleanEmptyLabels(touched.map(_._1).toSeq)
-      return
-    }
-    survivors
-      .repartition(col("label"), col("list_grp"))
-      .sortWithinPartitions(col("label"), col("list_grp"),
-        col("centroid_id"), col("cid"))
-      .write.mode("overwrite")
-      .partitionBy("label", "list_grp").parquet(staging)
-    val survivedParts = spark.read.parquet(staging)
-      .select(col("label").cast("long"), col("list_grp").cast("long"))
-      .distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.read.parquet(staging)
-      .repartition(col("label"), col("list_grp"))
-      // re-sort after the publish shuffle (see the delta twin): the
-      // row-group sort IS the layout's second pruning level
-      .sortWithinPartitions(col("label"), col("list_grp"),
-        col("centroid_id"), col("cid"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("label", "list_grp").parquet(indexDir)
-    val emptied = touched.filterNot(survivedParts)
-    emptied.foreach { case (l, g) => deleteDir(spark, partDir(l, g)) }
-    cleanEmptyLabels(emptied.map(_._1).toSeq)
-    deleteDir(spark, staging) // only after a successful publish
-  }
-
-  def ivfIndexedSearch(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String,
-                       codebook: Array[(Long, Seq[Float])],
-                       qid: Long, qv: Seq[Float],
-                       nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    // probe ids via the same argmax kernel, evaluated on a 1-row frame
-    val probes = spark.range(1).select(
-        nearest_centroids(typedLit(qv), centsLit, idsLit, nprobe).as("p"))
-      .head().getSeq[Long](0)
-    // unpartitioned window audit (r15): the rnk <= k filter below
-    // compiles to WindowGroupLimit, so each scan partition forwards at
-    // most k rows to the single-partition sort — bounded by k·|scan
-    // partitions| at any corpus size, never by list occupancy
-    val w = Window.orderBy(col("sim_r").desc, col("cid"))
+  def ivfAdcFrame(spark: org.apache.spark.sql.SparkSession,
+                  indexDir: String, codec: ListCodec,
+                  qid: Long, qv: Seq[Float],
+                  probes: Seq[Long], rerank: Int): DataFrame =
     spark.read.parquet(indexDir)
       .filter(col("centroid_id").isin(probes: _*))
       .filter(col("cid") =!= qid)
-      .withColumn("sim_r", round(cosine_sim(typedLit(qv), col("cv")), 4))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(lit(qid).as("qid"), col("cid"), col("sim_r"), col("rnk"))
-  }
-
-  /** PERSIST an IVF-PQ index (Jégou et al. TPAMI 2011 IVFADC): the
-    * searchable corpus state is (cid, m-byte code) partitioned BY
-    * LIST ID — no raw vectors. At m=16 one-byte codes over 64-d
-    * float vectors that is a 16× smaller table than the vectors it
-    * stands for (the scaladoc promise [[ivfpqTopK]] makes, landed at
-    * the storage layer): the index tier a serving fleet keeps hot
-    * while the raw vectors stay cold in parquet. Codes are computed
-    * by [[pqEncode]] under the supplied (pre-trained) sub-codebooks;
-    * list assignment is the scan-stage argmax under the shared coarse
-    * quantizer — one corpus scan, zero shuffle before the
-    * partitioned write.
-    */
-  def ivfpqIndexWrite(emb: DataFrame, idCol: String, vecCol: String,
-                      indexDir: String,
-                      coarseCodebook: Array[(Long, Seq[Float])],
-                      pqCodebooks: Array[Array[Array[Float]]]): Unit = {
-    val centsLit = typedLit(coarseCodebook.map(_._2).toSeq)
-    val idsLit = typedLit(coarseCodebook.map(_._1).toSeq)
-    val (encoded, _) = pqEncode(emb, idCol, vecCol,
-      m = pqCodebooks.length, k = pqCodebooks.head.length, iters = 0,
-      codebooksOpt = Some(pqCodebooks))
-    encoded
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("v"), centsLit, idsLit, 1), lit(1)))
-      // null (zero-norm) assignments never become index residents —
-      // the forget loop's same-skip contract (see ivfIndexWriteWithCodebook)
-      .filter(col("centroid_id").isNotNull)
-      .select(col("id").as("cid"), col("code"), col("centroid_id"))
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(indexDir)
-  }
-
-  /** Single-query search over a persisted [[ivfpqIndexWrite]] index —
-    * IVFADC+R against STORED codes: the query's `nprobe` list ids are
-    * computed driver-side from the shared coarse codebook and inlined
-    * as an IN filter, so the code scan reads ONLY those list
-    * partitions (`PartitionFilters`, pinned by PlanSpec); ADC ranks
-    * the probed codes on cosine(query, reconstruct(code)) to a
-    * `rerank`-deep shortlist (bounded driver collect, ≤ rerank ids);
-    * and the exact re-rank reads raw vectors through an
-    * `isin(shortlist)` filter PUSHED INTO the vector scan — raw
-    * vectors beyond the shortlist are never deserialized
-    * (`IvfIndexSpec` pins the PushedFilters). `rawVectors` must carry
-    * (cid, cv) for the same corpus the index was built from.
-    */
-  def ivfpqIndexedSearch(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String,
-                         coarseCodebook: Array[(Long, Seq[Float])],
-                         pqCodebooks: Array[Array[Array[Float]]],
-                         rawVectors: DataFrame,
-                         qid: Long, qv: Seq[Float],
-                         nprobe: Int, k: Int, rerank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(coarseCodebook.map(_._2).toSeq)
-    val idsLit = typedLit(coarseCodebook.map(_._1).toSeq)
-    val probes = spark.range(1).select(
-        nearest_centroids(typedLit(qv), centsLit, idsLit, nprobe).as("p"))
-      .head().getSeq[Long](0)
-    val shortlist = ivfpqAdcFrame(spark, indexDir, pqCodebooks, qid, qv,
-        probes, rerank)
-      .collect().map(_.getLong(0)) // bounded by design: ≤ rerank ids
-    // unpartitioned window audit (r15): input is the shortlist-filtered
-    // raw vectors — ≤ rerank rows by construction, corpus-size-free
-    val w = Window.orderBy(col("sim_r").desc, col("cid"))
-    rawVectors
-      .filter(col("cid").isin(shortlist: _*))
-      .withColumn("sim_r", round(cosine_sim(typedLit(qv), col("cv")), 4))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(lit(qid).as("qid"), col("cid"), col("sim_r"), col("rnk"))
-  }
-
-  /** BATCH (query-fleet) search over a persisted [[ivfpqIndexWrite]]
-    * index — the mode a serving tier runs between single-query point
-    * lookups and full rebuilds: ALL queries served in ONE plan
-    * against the stored (cid, code) lists. Probe lists are computed
-    * in-plan (scan-stage `nearest_centroids` explode over the shared
-    * coarse-codebook literals), candidates are an EQUI-join on list
-    * id against the code table read from disk — raw vectors never
-    * touch the ADC stage — and the per-query `rerank` shortlist joins
-    * the vector table for the exact re-rank, exactly [[ivfpqTopK]]'s
-    * two-stage shape with the encode step replaced by the index read.
-    * `queries` = (qid, qv float[]); `rawVectors` = (cid, cv float[]).
-    */
-  def ivfpqIndexedBatchSearch(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String,
-                              coarseCodebook: Array[(Long, Seq[Float])],
-                              pqCodebooks: Array[Array[Array[Float]]],
-                              queries: DataFrame, rawVectors: DataFrame,
-                              nprobe: Int, k: Int, rerank: Int)
-      : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(coarseCodebook.map(_._2).toSeq)
-    val idsLit = typedLit(coarseCodebook.map(_._1).toSeq)
-    val probes = queries.withColumn("centroid_id",
-      explode(nearest_centroids(col("qv"), centsLit, idsLit, nprobe)))
-    // partition-dir inference reads the list id back as INT —
-    // normalize for the equi-join against the long probe ids
-    val lists = spark.read.parquet(indexDir)
-      .select(col("cid"), col("code"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val recon = pqReconstructExpr(pqCodebooks, col("code"))
-    val wApprox = Window.partitionBy(col("qid"))
-      .orderBy(col("__sim_adc").desc, col("cid"))
-    val shortlist = lists.join(Hints.maybeBroadcast(probes),
-        Seq("centroid_id"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("__sim_adc", cosine_sim(col("qv"), recon))
-      .withColumn("__arnk", row_number().over(wApprox))
-      .filter(col("__arnk") <= rerank)
-      .select(col("qid"), col("qv"), col("cid"))
-    val wExact = Window.partitionBy(col("qid"))
-      .orderBy(col("sim_r").desc, col("cid"))
-    shortlist.join(rawVectors, Seq("cid"))
-      .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("sim_r"), col("rnk"))
-  }
-
-  /** APPEND a delta batch to a persisted [[ivfpqIndexWrite]] index —
-    * the PQ twin of [[ivfIndexAppendDelta]], sharing its
-    * crash-consistency contract verbatim (durable staging →
-    * idempotent [[ivfIndexPublishStaged]] → staging deleted only
-    * after success): delta vectors are ENCODED under the SHARED
-    * sub-codebooks and assigned under the SHARED coarse quantizer
-    * (retraining on arrival would silently re-key the whole index —
-    * the codebooks are fit-once state, exactly like the IVF
-    * codebook), then only the touched code lists are merged and
-    * republished. Cost O(|delta| + rows in touched lists); untouched
-    * lists' files never read or rewritten.
-    */
-  def ivfpqIndexAppendDelta(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String,
-                            coarseCodebook: Array[(Long, Seq[Float])],
-                            pqCodebooks: Array[Array[Array[Float]]],
-                            delta: DataFrame, idCol: String,
-                            vecCol: String,
-                            stagingDirOpt: Option[String] = None): Unit = {
-    // pqEncode reads the dimension from the frame — probe emptiness
-    // first so an empty delta is an explicit bit-level no-op
-    if (delta.isEmpty) return
-    val centsLit = typedLit(coarseCodebook.map(_._2).toSeq)
-    val idsLit = typedLit(coarseCodebook.map(_._1).toSeq)
-    val (encoded, _) = pqEncode(delta, idCol, vecCol,
-      m = pqCodebooks.length, k = pqCodebooks.head.length, iters = 0,
-      codebooksOpt = Some(pqCodebooks))
-    val assigned = encoded
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("v"), centsLit, idsLit, 1), lit(1)))
-      .select(col("id").as("cid"), col("code"), col("centroid_id"))
-    // bounded collect: one id per touched list, ≤ |codebook| by design
-    val touched = assigned.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val staging = stagingDirOpt.getOrElse(
-      indexDir.stripSuffix("/") + ".staging")
-    spark.read.parquet(indexDir)
-      .filter(col("centroid_id").isin(touched: _*))
-      .unionByName(assigned)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(staging)
-    ivfIndexPublishStaged(spark, indexDir, staging)
-    deleteDir(spark, staging) // only after a successful publish
-  }
-
-  /** The ADC stage of [[ivfpqIndexedSearch]] as a frame (shortlist
-    * cids, ADC-ranked): a TakeOrdered over the probed code partitions
-    * with the same tie order as [[ivfpqTopK]]'s window (quantized sim
-    * DESC, cid). Split out so `IvfIndexSpec` can pin the plan — the
-    * probed list ids must land in the scan's `PartitionFilters`
-    * (storage-layer pruning), and the stage touches no raw vectors.
-    */
-  def ivfpqAdcFrame(spark: org.apache.spark.sql.SparkSession,
-                    indexDir: String,
-                    pqCodebooks: Array[Array[Array[Float]]],
-                    qid: Long, qv: Seq[Float],
-                    probes: Seq[Long], rerank: Int): DataFrame = {
-    val recon = pqReconstructExpr(pqCodebooks, col("code"))
-    spark.read.parquet(indexDir)
-      .filter(col("centroid_id").isin(probes: _*))
-      .filter(col("cid") =!= qid)
-      .withColumn("__sim_adc", cosine_sim(typedLit(qv), recon))
+      .withColumn("__sim_adc", cosine_sim(typedLit(qv), codec.decode))
       .orderBy(col("__sim_adc").desc, col("cid"))
       .limit(rerank)
       .select(col("cid"))
+
+  /** Single-query search over a PQ or SQ list index — IVFADC+R
+    * against STORED codes: partition-pruned ADC over the probed lists
+    * ([[ivfAdcFrame]]) to a `rerank`-deep shortlist (bounded driver
+    * collect), then the exact re-rank reads raw vectors through an
+    * `isin(shortlist)` filter PUSHED INTO the vector scan — raw
+    * vectors beyond the shortlist are never deserialized (PlanSpec
+    * pins the PushedFilters). `rawVectors` = (cid, cv) of the corpus
+    * the index was built from.
+    */
+  def ivfAdcSearch(spark: org.apache.spark.sql.SparkSession,
+                   indexDir: String, coarse: Array[(Long, Seq[Float])],
+                   codec: ListCodec, rawVectors: DataFrame,
+                   qid: Long, qv: Seq[Float],
+                   nprobe: Int, k: Int, rerank: Int): DataFrame = {
+    val shortlist = ivfAdcFrame(spark, indexDir, codec, qid, qv,
+        probeIds(spark, coarse, qv, nprobe), rerank)
+      .collect().map(_.getLong(0)).toSeq // bounded: ≤ rerank ids
+    rankOne(rawVectors.filter(col("cid").isin(shortlist: _*)), qid, qv, k)
+  }
+
+  /** BATCH (query-fleet) search over a PQ or SQ list index — the mode
+    * a serving tier runs between point lookups and rebuilds: ALL
+    * queries in ONE plan, probe lists exploded in-plan over the coarse
+    * codebook literals, candidates an EQUI-join on list id against the
+    * code table read from disk, and only the per-query `rerank`
+    * shortlist joins `rawVectors` — [[ivfpqTopK]]'s two-stage shape
+    * with the encode step replaced by the index read.
+    * `queries` = (qid, qv float[]); `rawVectors` = (cid, cv float[]).
+    */
+  def ivfAdcBatchSearch(spark: org.apache.spark.sql.SparkSession,
+                        indexDir: String,
+                        coarse: Array[(Long, Seq[Float])], codec: ListCodec,
+                        queries: DataFrame, rawVectors: DataFrame,
+                        nprobe: Int, k: Int, rerank: Int): DataFrame =
+    adcTopK(
+      // partition-dir inference reads the list id back as INT —
+      // normalize for the equi-join against the long probe ids
+      spark.read.parquet(indexDir)
+        .withColumn("centroid_id", col("centroid_id").cast("long")),
+      queries.withColumn("centroid_id",
+        explode(nearestLists(coarse, col("qv"), nprobe))),
+      codec.decode, rawVectors, k, rerank)
+
+  /** IVFADC+R over (cid, code, centroid_id) `lists` and (qid, qv,
+    * centroid_id) `probes`: stage 1 ranks the probed lists on the
+    * decoded codes — corpus vectors never touched; stage 2 (+R,
+    * Jégou et al. §V) fetches raw vectors for the |Q|·rerank shortlist
+    * ONLY and ranks those exactly, so the recall lost to quantization
+    * noise comes back without scanning full-precision vectors beyond
+    * the shortlist join.
+    */
+  private def adcTopK(lists: DataFrame, probes: DataFrame, decode: Column,
+                      raw: DataFrame, k: Int, rerank: Int): DataFrame = {
+    val shortlist = lists.join(Hints.maybeBroadcast(probes),
+        Seq("centroid_id"))
+      .filter(col("qid") =!= col("cid"))
+      .withColumn("__sim_adc", cosine_sim(col("qv"), decode))
+      .withColumn("__arnk", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("__sim_adc").desc, col("cid"))))
+      .filter(col("__arnk") <= rerank)
+      .select(col("qid"), col("qv"), col("cid"))
+    rankBatch(shortlist.join(raw, Seq("cid")), k)
   }
 
   /** Spherical k-means training (Lloyd iterations) — the "train the
@@ -1308,7 +954,6 @@ object Similarity {
     val dim = emb.select(size(col(vecCol).cast("array<float>")))
       .head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val sub = dim / m
     // fused training: all m sub-codebooks advance in lock-step with
     // ONE corpus scan per Lloyd action (KmeansMultiSpec pins the
     // result to m independent trainings) — at 100 TB this replaces
@@ -1318,14 +963,21 @@ object Similarity {
       kmeansTrainMulti(emb, idCol, vecCol, m, k, iters)._1)
     val base = Dedup.spread(emb.select(col(idCol).as("id"),
       col(vecCol).cast("array<float>").as("v")))
-    val codes = (0 until m).map { j =>
-      val centsLit = typedLit(codebooks(j).map(_.toSeq).toSeq)
-      val idsLit = typedLit(codebooks(j).indices.map(_.toLong))
-      try_element_at(
-        nearest_centroids(slice(col("v"), j * sub + 1, sub),
-          centsLit, idsLit, 1), lit(1))
-    }
-    (base.withColumn("code", array(codes: _*)), codebooks)
+    (base.withColumn("code", pqCodeExpr(codebooks, col("v"))), codebooks)
+  }
+
+  /** PQ encode expression: each subspace slice's nearest sub-centroid
+    * index (codebooks ride as literals) — the ONE definition of
+    * vector→code shared by [[pqEncode]] and the PQ list index.
+    */
+  private def pqCodeExpr(codebooks: Array[Array[Array[Float]]],
+                         v: Column): Column = {
+    val sub = codebooks.head.head.length
+    array(codebooks.indices.map { j =>
+      try_element_at(nearest_centroids(slice(v, j * sub + 1, sub),
+        typedLit(codebooks(j).map(_.toSeq).toSeq),
+        typedLit(codebooks(j).indices.map(_.toLong)), 1), lit(1))
+    }: _*)
   }
 
   /** IVF-PQ search (Jégou et al. TPAMI 2011 §IV: the IVFADC scheme):
@@ -1347,57 +999,30 @@ object Similarity {
                 maxCentroids: Int = 1 << 14,
                 pqCodebooksOpt: Option[Array[Array[Array[Float]]]] = None)
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val codebook = emb.filter(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).cast("long").as("centroid_id"),
-        col(vecCol).cast("array<float>").as("centroid_v"))
-      .orderBy(col("centroid_id")).limit(maxCentroids)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val centsLit = typedLit(codebook.map(_._2).toSeq)
-    val idsLit = typedLit(codebook.map(_._1).toSeq)
-    def nearest(v: Column, n: Int): Column =
-      nearest_centroids(v, centsLit, idsLit, n)
+    val codebook = sampledCodebook(emb, idCol, vecCol, centroidEvery,
+      maxCentroids)
     val (encoded, cbs) =
       pqEncode(emb, idCol, vecCol, m, kSub, pqIters, pqCodebooksOpt)
     // the searchable index: ids, list assignment, codes — NO vectors
     val lists = encoded
-      .withColumn("centroid_id", try_element_at(nearest(col("v"), 1), lit(1)))
+      .withColumn("centroid_id",
+        try_element_at(nearestLists(codebook, col("v"), 1), lit(1)))
       .select(col("id").as("cid"), col("code"), col("centroid_id"))
-    val recon = pqReconstructExpr(cbs, col("code"))
     val probes = emb.filter(queryPred)
       .select(col(idCol).as("qid"), col(vecCol).cast("array<float>").as("qv"))
-      .withColumn("centroid_id", explode(nearest(col("qv"), nprobe)))
-    // stage 1 (ADC): rank the probed lists on quantized similarity —
-    // corpus vectors never touched
-    val wApprox = Window.partitionBy(col("qid"))
-      .orderBy(col("__sim_adc").desc, col("cid"))
-    val shortlist = lists.join(Hints.maybeBroadcast(probes), Seq("centroid_id"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("__sim_adc", cosine_sim(col("qv"), recon))
-      .withColumn("__arnk", row_number().over(wApprox))
-      .filter(col("__arnk") <= rerank)
-      .select(col("qid"), col("qv"), col("cid"))
-    // stage 2 (+R re-rank, Jégou et al. §V): fetch raw vectors for the
-    // |Q|·rerank shortlist ONLY and rank those exactly — the recall
-    // lost to quantization noise comes back without ever scanning
-    // full-precision vectors beyond the shortlist join
-    val raw = emb.select(col(idCol).as("cid"),
-      col(vecCol).cast("array<float>").as("cv"))
-    val wExact = Window.partitionBy(col("qid"))
-      .orderBy(col("sim_r").desc, col("cid"))
-    shortlist.join(raw, Seq("cid"))
-      .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("sim_r"), col("rnk"))
+      .withColumn("centroid_id",
+        explode(nearestLists(codebook, col("qv"), nprobe)))
+    adcTopK(lists, probes, pqReconstructExpr(cbs, col("code")),
+      emb.select(col(idCol).as("cid"),
+        col(vecCol).cast("array<float>").as("cv")), k, rerank)
   }
 
   /** PQ decode expression: concatenate each code cell's chosen
     * sub-centroid (codebooks ride as literals). The ONE definition of
-    * code→vector shared by [[pqReconstructionSim]] and [[ivfpqTopK]]'s
-    * ADC stage — two copies could silently diverge (e.g. the +1 index
-    * bias) and make ranking reconstruct different vectors than the
-    * quality gate measures.
+    * code→vector shared by [[pqReconstructionSim]] and every PQ ADC
+    * stage ([[ivfpqTopK]], [[ListCodec.Pq]]) — two copies could
+    * silently diverge (e.g. the +1 index bias) and make ranking
+    * reconstruct different vectors than the quality gate measures.
     */
   private def pqReconstructExpr(codebooks: Array[Array[Array[Float]]],
                                 codeCol: Column): Column =
@@ -1477,18 +1102,25 @@ object Similarity {
   def sqEncode(emb: DataFrame, idCol: String, vecCol: String,
                mns: Array[Double], mxs: Array[Double]): DataFrame = {
     require(mns.length == mxs.length && mns.nonEmpty, "empty SQ8 stats")
-    val mnLit = typedLit(mns.toSeq)
-    val mxLit = typedLit(mxs.toSeq)
     emb.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
-      .withColumn("code",
-        transform(col("v"), (x, i) => {
-          val mn = element_at(mnLit, (i + 1).cast("int"))
-          val mx = element_at(mxLit, (i + 1).cast("int"))
-          when(mx === mn, lit(0L)).otherwise(
-            least(lit(255L), greatest(lit(0L),
-              floor(((x - mn) * lit(255.0)) / (mx - mn) + lit(0.5)))))
-        }))
+      .withColumn("code", sqCodeExpr(col("v"), mns, mxs))
+  }
+
+  /** The ONE definition of SQ8 vector (`array<double>`) → code,
+    * shared by [[sqEncode]] and the SQ list index.
+    */
+  private def sqCodeExpr(v: Column, mns: Array[Double],
+                         mxs: Array[Double]): Column = {
+    val mnLit = typedLit(mns.toSeq)
+    val mxLit = typedLit(mxs.toSeq)
+    transform(v, (x, i) => {
+      val mn = element_at(mnLit, (i + 1).cast("int"))
+      val mx = element_at(mxLit, (i + 1).cast("int"))
+      when(mx === mn, lit(0L)).otherwise(
+        least(lit(255L), greatest(lit(0L),
+          floor(((x - mn) * lit(255.0)) / (mx - mn) + lit(0.5)))))
+    })
   }
 
   /** SQ8 dequantization x̂_i = mn_i + q_i·(mx_i − mn_i)/255 — the
@@ -1499,7 +1131,7 @@ object Similarity {
     encoded.withColumn("v_hat", sqDecodeExpr(col("code"), mns, mxs))
 
   /** The ONE definition of SQ8 code → vector, shared by [[sqDecode]],
-    * [[sqTopK]]'s ADC leg, and [[ivfsqIndexedSearch]] — two copies
+    * [[sqTopK]]'s ADC leg, and [[ListCodec.Sq]] — two copies
     * could silently diverge in operation order and make ranking
     * reconstruct different vectors than the quality gate measures
     * (the [[pqReconstructExpr]] rule applied to SQ).
@@ -1533,170 +1165,9 @@ object Similarity {
     * reconstructions → both rank stages and hash-matches the values,
     * where PQ's oracle must unroll Lloyd trainings to do the same.
     */
-  /** PERSIST an IVF-SQ index: (cid, 64-byte SQ8 code) partitioned BY
-    * LIST ID — the third member of the persisted-index family
-    * ([[ivfIndexWrite]] raw vectors, [[ivfpqIndexWrite]] PQ codes),
-    * and the one whose ENTIRE lifecycle hash-replays: SQ8 has no
-    * trained state (stats are min/max aggregates, codes fixed-order
-    * double math), so stats → codes → list assignment → search all
-    * recompute in the oracle, where the PQ index's replay must
-    * unroll Lloyd trainings. 4× smaller searchable state than raw
-    * vectors at reconstruction error ≤ step/2 per dimension.
-    */
-  def ivfsqIndexWrite(emb: DataFrame, idCol: String, vecCol: String,
-                      indexDir: String,
-                      coarseCodebook: Array[(Long, Seq[Float])],
-                      mns: Array[Double], mxs: Array[Double]): Unit = {
-    val centsLit = typedLit(coarseCodebook.map(_._2).toSeq)
-    val idsLit = typedLit(coarseCodebook.map(_._1).toSeq)
-    sqEncode(emb, idCol, vecCol, mns, mxs)
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("v").cast("array<float>"), centsLit,
-          idsLit, 1), lit(1)))
-      // null (zero-norm) assignments never become index residents —
-      // the forget loop's same-skip contract (see ivfIndexWriteWithCodebook)
-      .filter(col("centroid_id").isNotNull)
-      .select(col("id").as("cid"), col("code"), col("centroid_id"))
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(indexDir)
-  }
-
-  /** Single-query search over a persisted [[ivfsqIndexWrite]] index —
-    * same serving shape as [[ivfpqIndexedSearch]]: driver-computed
-    * probe ids → partition-pruned code scan → ADC TakeOrdered on
-    * cosine(query, float-rounded [[sqDecodeExpr]](code)) → exact
-    * re-rank through the pushed shortlist filter on `rawVectors`.
-    */
-  def ivfsqIndexedSearch(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String,
-                         coarseCodebook: Array[(Long, Seq[Float])],
-                         mns: Array[Double], mxs: Array[Double],
-                         rawVectors: DataFrame,
-                         qid: Long, qv: Seq[Float],
-                         nprobe: Int, k: Int, rerank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(coarseCodebook.map(_._2).toSeq)
-    val idsLit = typedLit(coarseCodebook.map(_._1).toSeq)
-    val probes = spark.range(1).select(
-        nearest_centroids(typedLit(qv), centsLit, idsLit, nprobe).as("p"))
-      .head().getSeq[Long](0)
-    val recon = sqDecodeExpr(col("code"), mns, mxs).cast("array<float>")
-    val shortlist = spark.read.parquet(indexDir)
-      .filter(col("centroid_id").isin(probes: _*))
-      .filter(col("cid") =!= qid)
-      .withColumn("__sim_adc", cosine_sim(typedLit(qv), recon))
-      .orderBy(col("__sim_adc").desc, col("cid"))
-      .limit(rerank)
-      .select(col("cid"))
-      .collect().map(_.getLong(0)) // bounded by design: ≤ rerank ids
-    // unpartitioned window audit (r15): input is the shortlist-filtered
-    // raw vectors — ≤ rerank rows by construction, corpus-size-free
-    val w = Window.orderBy(col("sim_r").desc, col("cid"))
-    rawVectors
-      .filter(col("cid").isin(shortlist: _*))
-      .withColumn("sim_r", round(cosine_sim(typedLit(qv), col("cv")), 4))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(lit(qid).as("qid"), col("cid"), col("sim_r"), col("rnk"))
-  }
-
-  /** BATCH (query-fleet) search over a persisted [[ivfsqIndexWrite]]
-    * index — [[ivfpqIndexedBatchSearch]]'s shape with the SQ decode
-    * in the ADC stage: all queries in ONE plan, in-plan probe explode
-    * over the coarse-codebook literals, equi-join on list id against
-    * the (cid, SQ8 code) table read from disk (raw vectors never
-    * touch the ADC stage), per-query shortlist joins the vector table
-    * for the exact re-rank. Fully oracle-replayable end to end — SQ8
-    * has no trained state.
-    */
-  def ivfsqIndexedBatchSearch(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String,
-                              coarseCodebook: Array[(Long, Seq[Float])],
-                              mns: Array[Double], mxs: Array[Double],
-                              queries: DataFrame, rawVectors: DataFrame,
-                              nprobe: Int, k: Int, rerank: Int)
-      : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = typedLit(coarseCodebook.map(_._2).toSeq)
-    val idsLit = typedLit(coarseCodebook.map(_._1).toSeq)
-    val probes = queries.withColumn("centroid_id",
-      explode(nearest_centroids(col("qv"), centsLit, idsLit, nprobe)))
-    val lists = spark.read.parquet(indexDir)
-      .select(col("cid"), col("code"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val recon = sqDecodeExpr(col("code"), mns, mxs).cast("array<float>")
-    val wApprox = Window.partitionBy(col("qid"))
-      .orderBy(col("__sim_adc").desc, col("cid"))
-    val shortlist = lists.join(Hints.maybeBroadcast(probes),
-        Seq("centroid_id"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("__sim_adc", cosine_sim(col("qv"), recon))
-      .withColumn("__arnk", row_number().over(wApprox))
-      .filter(col("__arnk") <= rerank)
-      .select(col("qid"), col("qv"), col("cid"))
-    val wExact = Window.partitionBy(col("qid"))
-      .orderBy(col("sim_r").desc, col("cid"))
-    shortlist.join(rawVectors, Seq("cid"))
-      .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("sim_r"), col("rnk"))
-  }
-
-  /** APPEND a delta batch to a persisted [[ivfsqIndexWrite]] index —
-    * the third member of the maintenance family
-    * ([[ivfIndexAppendDelta]] raw vectors, [[ivfpqIndexAppendDelta]]
-    * PQ codes), sharing the crash-consistency contract verbatim
-    * (durable staging → idempotent [[ivfIndexPublishStaged]] →
-    * staging deleted only after success). Delta vectors are encoded
-    * under the SHARED per-dimension stats and assigned under the
-    * SHARED coarse quantizer — both are fit-once state: re-deriving
-    * stats from base∪delta would silently re-code every stored row
-    * (an affine shift in every reconstruction), exactly the re-keying
-    * hazard the PQ twin documents for its codebooks. Because SQ8 has
-    * no trained state beyond those 2·d doubles, the maintained index
-    * remains FULLY oracle-replayable: stats, delta codes, list
-    * assignment, and the served search all recompute in SQL. Cost
-    * O(|delta| + rows in touched lists); untouched lists' files are
-    * never read or rewritten.
-    */
-  def ivfsqIndexAppendDelta(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String,
-                            coarseCodebook: Array[(Long, Seq[Float])],
-                            mns: Array[Double], mxs: Array[Double],
-                            delta: DataFrame, idCol: String,
-                            vecCol: String,
-                            stagingDirOpt: Option[String] = None): Unit = {
-    // probe emptiness first so an empty delta is a bit-level no-op
-    if (delta.isEmpty) return
-    val centsLit = typedLit(coarseCodebook.map(_._2).toSeq)
-    val idsLit = typedLit(coarseCodebook.map(_._1).toSeq)
-    val assigned = sqEncode(delta, idCol, vecCol, mns, mxs)
-      .withColumn("centroid_id", try_element_at(
-        nearest_centroids(col("v").cast("array<float>"), centsLit,
-          idsLit, 1), lit(1)))
-      .select(col("id").as("cid"), col("code"), col("centroid_id"))
-    // bounded collect: one id per touched list, ≤ |codebook| by design
-    val touched = assigned.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val staging = stagingDirOpt.getOrElse(
-      indexDir.stripSuffix("/") + ".staging")
-    spark.read.parquet(indexDir)
-      .filter(col("centroid_id").isin(touched: _*))
-      .unionByName(assigned)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(staging)
-    ivfIndexPublishStaged(spark, indexDir, staging)
-    deleteDir(spark, staging) // only after a successful publish
-  }
-
   def sqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int, rerank: Int,
              mns: Array[Double], mxs: Array[Double]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val decoded = sqDecode(sqEncode(emb, idCol, vecCol, mns, mxs), mns, mxs)
       .select(col("id").as("cid"),
         col("v_hat").cast("array<float>").as("rv"))
@@ -1711,14 +1182,7 @@ object Similarity {
       .withColumn("__arnk", row_number().over(wAdc))
       .filter(col("__arnk") <= rerank)
       .select(col("qid"), col("qv"), col("cid"))
-    val raw = emb.select(col(idCol).as("cid"),
-      col(vecCol).cast("array<float>").as("cv"))
-    val wExact = Window.partitionBy(col("qid"))
-      .orderBy(col("sim_r").desc, col("cid"))
-    shortlist.join(raw, Seq("cid"))
-      .withColumn("sim_r", round(cosine_sim(col("qv"), col("cv")), 4))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("sim_r"), col("rnk"))
+    rankBatch(shortlist.join(emb.select(col(idCol).as("cid"),
+      col(vecCol).cast("array<float>").as("cv")), Seq("cid")), k)
   }
 }

@@ -49,14 +49,8 @@ object Sink {
     * ~10¹⁸ rows (38 digits vs 19-digit terms).
     */
   def tableChecksum(df: DataFrame): (Long, java.math.BigDecimal) = {
-    val row = df.select(
-      rowDigest(df.columns.sorted.toSeq)
-        .cast("decimal(38,0)").as("h"))
-    val r = row.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.col("h"))).head()
+    val aggs = checksumAggs(df)
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
     (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO
       else r.getDecimal(1))
   }

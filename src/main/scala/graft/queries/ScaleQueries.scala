@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.dsl._
 import graft.ops.{Dedup, Similarity}
+import graft.ops.Similarity.{ListCodec, ListLayout}
 
 /** Queries for the large-scale training-data-pipeline operators
   * (BASELINE.json north star): dedup family + similarity search over
@@ -789,7 +790,7 @@ object ScaleQueries {
     * sub-vector ANN candidate generation (the PLAID decomposition:
     * probe the IVF index once per query sub-vector, union candidates,
     * exact-MaxSim re-rank only the shortlist — the `ann_ivf` +
-    * `ivfpqIndexedBatchSearch` machinery composes directly). Fully
+    * `ivfAdcBatchSearch` machinery composes directly). Fully
     * oracle-replayable: sub-slices are the same floats widened to
     * double, the 4 maxima and their left-assoc sum are identical IEEE
     * on both engines, ranked at 4 dp with id tie-breaks.
@@ -1022,10 +1023,10 @@ object ScaleQueries {
   }
 
   /** The filtered search SERVED FROM STORAGE — the label-partitioned
-    * persisted index [[Similarity.ivfIndexWriteLabeled]] built once
+    * persisted index [[Similarity.ivfIndexWrite]] built once
     * per dir (under `fullIvfIndex`'s shared √n codebook — labels
     * never change assignment), then ONE query (vec 0, its own label)
-    * served by [[Similarity.ivfIndexedSearchLabeled]]: the scan reads
+    * served by [[Similarity.ivfIndexedSearch]]: the scan reads
     * ONLY the query label's probed list GROUPS (label + list_grp in
     * `PartitionFilters`, the probed list ids as a pushed data filter
     * over the row-group sort — PlanSpec-pinned; the r13 compacted
@@ -1047,8 +1048,8 @@ object ScaleQueries {
     val (_, codebook) = fullIvfIndex(s, dir)
     graft.Memo.value(dir, "ivf-labeled") {
       val p = graft.TempDirs.create("graft_ivf_labeled").toString
-      Similarity.ivfIndexWriteLabeled(emb, "vec_id", "label",
-        "embedding", p, codebook)
+      Similarity.ivfIndexWrite(Dedup.spread(emb), "vec_id", "embedding",
+        p, codebook, ListCodec.Flat, ListLayout.ByLabelGroup)
       p
     }
   }
@@ -1061,8 +1062,8 @@ object ScaleQueries {
       .select(col("label").cast("long"),
         col("embedding").cast("array<float>"))
       .head()
-    Similarity.ivfIndexedSearchLabeled(s, path, codebook,
-        qid = 0L, qlabel = q0.getLong(0), qv = q0.getSeq[Float](1),
+    Similarity.ivfIndexedSearch(s, path, codebook,
+        qid = 0L, qlabel = Some(q0.getLong(0)), qv = q0.getSeq[Float](1),
         nprobe = Similarity.filteredNprobe(codebook.length), k = 3)
       .orderBy(col("rnk"))
   }
@@ -1089,11 +1090,11 @@ object ScaleQueries {
   }
 
   /** RIGHT-TO-BE-FORGOTTEN on the LABELED filtered index
-    * ([[Similarity.ivfIndexForgetLabeled]]) — the maintenance stage
+    * ([[Similarity.ivfIndexMerge]]) — the maintenance stage
     * the labeled instance was missing (the unlabeled triad has
     * build → delta → forget; `ann_filtered_indexed` had build only):
     * a full instance is DERIVED from the shared labeled index (a
-    * filter-copy — [[Similarity.ivfIndexDeriveLabeled]], never a
+    * filter-copy — [[Similarity.ivfIndexDerive]], never a
     * second assignment argmax), every vec_id ≡ 5 mod 13 is deleted
     * through the (label, group)-scoped staging → idempotent-publish
     * loop, and the whole query fleet is served FILTERED from the
@@ -1110,10 +1111,11 @@ object ScaleQueries {
     val path =
       graft.Memo.value(dir, "ivf-labeled-forget") {
         val p = graft.TempDirs.create("graft_ivf_labeled_forget").toString
-        Similarity.ivfIndexDeriveLabeled(s, basePath, p, lit(true))
-        Similarity.ivfIndexForgetLabeled(s, p, codebook,
-          emb.filter(col("vec_id") % 13 === 5),
-          "vec_id", "label", "embedding")
+        Similarity.ivfIndexDerive(s, basePath, p, lit(true),
+          ListLayout.ByLabelGroup)
+        Similarity.ivfIndexMerge(s, p, codebook, ListCodec.Flat,
+          ListLayout.ByLabelGroup, emb.filter(col("vec_id") % 13 === 5),
+          "vec_id", "embedding", forget = true)
         p
       }
     Similarity.ivfIndexedBatchSearchLabeled(s, path, codebook,
@@ -1125,7 +1127,7 @@ object ScaleQueries {
   }
 
   /** INCREMENTAL maintenance of the LABELED filtered index
-    * ([[Similarity.ivfIndexAppendDeltaLabeled]]) — the missing middle
+    * ([[Similarity.ivfIndexMerge]]) — the missing middle
     * of the labeled triad (build `ann_filtered_indexed` → DELTA →
     * forget `ann_filtered_forget`): the base instance holds 6/7 of
     * the corpus (a filter-copy derive from the shared labeled index),
@@ -1146,11 +1148,11 @@ object ScaleQueries {
     val path =
       graft.Memo.value(dir, "ivf-labeled-delta") {
         val p = graft.TempDirs.create("graft_ivf_labeled_delta").toString
-        Similarity.ivfIndexDeriveLabeled(s, basePath, p,
-          col("cid") % 7 =!= 0)
-        Similarity.ivfIndexAppendDeltaLabeled(s, p, codebook,
-          emb.filter(col("vec_id") % 7 === 0),
-          "vec_id", "label", "embedding")
+        Similarity.ivfIndexDerive(s, basePath, p, col("cid") % 7 =!= 0,
+          ListLayout.ByLabelGroup)
+        Similarity.ivfIndexMerge(s, p, codebook, ListCodec.Flat,
+          ListLayout.ByLabelGroup, emb.filter(col("vec_id") % 7 === 0),
+          "vec_id", "embedding", forget = false)
         p
       }
     val fleet = emb.filter(col("vec_id") % 20 === 0)
@@ -1914,9 +1916,12 @@ object ScaleQueries {
   private def fullIvfIndex(s: SparkSession, dir: String)
       : (String, Array[(Long, Seq[Float])]) =
     graft.Memo.value(dir, "ivf-index") {
+      val emb = t(s, dir, "embeddings")
+      val cb = Similarity.sampledCodebook(emb, "vec_id", "embedding",
+        Similarity.sqrtStride(emb.count()))
       val p = graft.TempDirs.create("graft_ivf_index").toString
-      val cb = Similarity.ivfIndexWrite(t(s, dir, "embeddings"),
-        "vec_id", "embedding", p)
+      Similarity.ivfIndexWrite(Dedup.spread(emb), "vec_id", "embedding", p,
+        cb, ListCodec.Flat, ListLayout.ByList)
       (p, cb)
     }
 
@@ -1927,13 +1932,13 @@ object ScaleQueries {
       .select(col("embedding").cast("array<float>"))
       .head().getSeq[Float](0)
     Similarity.ivfIndexedSearch(s, path, codebook,
-        qid = 0L, qv = qv,
+        qid = 0L, qlabel = None, qv = qv,
         nprobe = Similarity.derivedNprobe(codebook.length), k = 3)
       .orderBy(col("rnk"))
   }
 
   /** INCREMENTAL IVF index maintenance driven end to end
-    * ([[graft.ops.Similarity.ivfIndexAppendDelta]]): the base index
+    * ([[graft.ops.Similarity.ivfIndexMerge]]): the base index
     * holds 6/7 of the corpus (derived by restriction from the
     * memoized full index — content-identical to a from-raw build),
     * the remaining 1/7 — including
@@ -1969,9 +1974,11 @@ object ScaleQueries {
     graft.Memo.value(dir, "ivf-delta") {
       val emb = t(s, dir, "embeddings")
       val p = graft.TempDirs.create("graft_ivf_delta").toString
-      Similarity.ivfIndexDerive(s, fullPath, p, col("cid") % 7 =!= 0)
-      Similarity.ivfIndexAppendDelta(s, p, codebook,
-        emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding")
+      Similarity.ivfIndexDerive(s, fullPath, p, col("cid") % 7 =!= 0,
+        ListLayout.ByList)
+      Similarity.ivfIndexMerge(s, p, codebook, ListCodec.Flat,
+        ListLayout.ByList, emb.filter(col("vec_id") % 7 === 0),
+        "vec_id", "embedding", forget = false)
       p
     }
 
@@ -1984,7 +1991,7 @@ object ScaleQueries {
       .head().getSeq[Float](0)
     def search(path: String) =
       Similarity.ivfIndexedSearch(s, path, codebook,
-        qid = 0L, qv = qv,
+        qid = 0L, qlabel = None, qv = qv,
         nprobe = Similarity.derivedNprobe(codebook.length), k = 3)
     val served = search(deltaPath)
     val rebuilt = search(fullPath)
@@ -1995,7 +2002,7 @@ object ScaleQueries {
   }
 
   /** RIGHT-TO-BE-FORGOTTEN propagated to the persisted ANN index
-    * ([[graft.ops.Similarity.ivfIndexForget]]) — the lifecycle stage
+    * ([[graft.ops.Similarity.ivfIndexMerge]]) — the lifecycle stage
     * `forget_user` covers at the table layer, completing the index's
     * maintenance family: build (`ann_ivf_indexed`) → delta append
     * (`ann_ivf_delta`) → FORGET → manifest (`ann_index_manifest`).
@@ -2017,16 +2024,17 @@ object ScaleQueries {
     val (fullPath, codebook) = fullIvfIndex(s, dir)
     val path = graft.Memo.value(dir, "ivf-forget") {
       val p = graft.TempDirs.create("graft_ivf_forget").toString
-      Similarity.ivfIndexDerive(s, fullPath, p, lit(true))
-      Similarity.ivfIndexForget(s, p, codebook,
-        emb.filter(col("vec_id") % 13 === 5), "vec_id", "embedding")
+      Similarity.ivfIndexDerive(s, fullPath, p, lit(true), ListLayout.ByList)
+      Similarity.ivfIndexMerge(s, p, codebook, ListCodec.Flat,
+        ListLayout.ByList, emb.filter(col("vec_id") % 13 === 5),
+        "vec_id", "embedding", forget = true)
       p
     }
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<float>"))
       .head().getSeq[Float](0)
     Similarity.ivfIndexedSearch(s, path, codebook,
-        qid = 0L, qv = qv,
+        qid = 0L, qlabel = None, qv = qv,
         nprobe = Similarity.derivedNprobe(codebook.length), k = 3)
       .orderBy(col("rnk"))
   }
@@ -2042,7 +2050,7 @@ object ScaleQueries {
     * reconciliation, not just a served search's top-k); the
     * occupancy distribution is also the operator a maintenance loop
     * reads to trigger the hot-list salting escalation
-    * ([[Similarity.ivfIndexWriteWithCodebook]]'s documented knob) —
+    * ([[Similarity.ivfIndexWrite]]'s documented knob) —
     * list skew is invisible in search results until it is a straggler.
     *
     * Scale shape: one scan of the index's (partition-pruned-capable)
@@ -2062,13 +2070,13 @@ object ScaleQueries {
   /** The persisted IVF-PQ index + the two codebooks its searches
     * share (memoized per dir): the searchable state is (cid, 16-byte
     * code) partitioned by list id — 16× smaller than the raw vectors,
-    * NO vector column ([[Similarity.ivfpqIndexWrite]]). PQ
+    * NO vector column ([[Similarity.ivfIndexWrite]]). PQ
     * sub-codebooks come from the SAME train-once memo `ann_ivfpq`
     * uses; the coarse quantizer is the count-derived √n-stride sample
     * (the `fullIvfIndex` honesty rule).
     */
   private def fullIvfpqIndex(s: SparkSession, dir: String)
-      : (String, Array[(Long, Seq[Float])], Array[Array[Array[Float]]]) =
+      : (String, Array[(Long, Seq[Float])], ListCodec) =
     graft.Memo.value(dir, "ivfpq-index") {
       val emb = t(s, dir, "embeddings")
       val cbs = graft.Memo.value(dir, "pq:16:16:2") {
@@ -2078,11 +2086,12 @@ object ScaleQueries {
       val coarse = Similarity.sampledCodebook(emb, "vec_id", "embedding",
         Similarity.sqrtStride(emb.count()))
       val p = graft.TempDirs.create("graft_ivfpq_index").toString
-      Similarity.ivfpqIndexWrite(emb, "vec_id", "embedding", p, coarse, cbs)
-      (p, coarse, cbs)
+      Similarity.ivfIndexWrite(Dedup.spread(emb), "vec_id", "embedding", p,
+        coarse, ListCodec.Pq(cbs), ListLayout.ByList)
+      (p, coarse, ListCodec.Pq(cbs))
     }
 
-  /** [[Similarity.ivfpqIndexWrite]] + [[Similarity.ivfpqIndexedSearch]]
+  /** [[Similarity.ivfIndexWrite]] + [[Similarity.ivfAdcSearch]]
     * driven end-to-end — the serving shape `ivfpqTopK`'s scaladoc
     * promises: one query (vec_id 0) served by reading its probed CODE
     * partitions only (partition-pruned scan, PlanSpec-pinned), ADC
@@ -2095,11 +2104,11 @@ object ScaleQueries {
     */
   def annIvfpqIndexed(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (path, coarse, cbs) = fullIvfpqIndex(s, dir)
+    val (path, coarse, codec) = fullIvfpqIndex(s, dir)
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<float>"))
       .head().getSeq[Float](0)
-    Similarity.ivfpqIndexedSearch(s, path, coarse, cbs,
+    Similarity.ivfAdcSearch(s, path, coarse, codec,
         emb.select(col("vec_id").as("cid"),
           col("embedding").cast("array<float>").as("cv")),
         qid = 0L, qv = qv,
@@ -2109,7 +2118,7 @@ object ScaleQueries {
   }
 
   /** INCREMENTAL IVF-PQ index maintenance driven end to end — the PQ
-    * twin of [[annIvfDelta]] ([[Similarity.ivfpqIndexAppendDelta]]):
+    * twin of [[annIvfDelta]] ([[Similarity.ivfIndexMerge]]):
     * the base CODE index holds 6/7 of the corpus (derived by
     * restriction from the memoized full index — content-identical
     * to a from-raw build), the
@@ -2124,16 +2133,18 @@ object ScaleQueries {
     */
   def annIvfpqDelta(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (fullPath, coarse, cbs) = fullIvfpqIndex(s, dir)
+    val (fullPath, coarse, codec) = fullIvfpqIndex(s, dir)
     val deltaPath =
       graft.Memo.value(dir, "ivfpq-delta") {
         val p = graft.TempDirs.create("graft_ivfpq_delta").toString
         // base = filter-copy of the memoized full code index (codes
         // depend only on (vector, codebooks) — re-encoding 6/7 of the
         // corpus would reproduce these rows bit-identically)
-        Similarity.ivfIndexDerive(s, fullPath, p, col("cid") % 7 =!= 0)
-        Similarity.ivfpqIndexAppendDelta(s, p, coarse, cbs,
-          emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding")
+        Similarity.ivfIndexDerive(s, fullPath, p, col("cid") % 7 =!= 0,
+          ListLayout.ByList)
+        Similarity.ivfIndexMerge(s, p, coarse, codec, ListLayout.ByList,
+          emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding",
+          forget = false)
         p
       }
     val qv = emb.filter(col("vec_id") === 0)
@@ -2142,7 +2153,7 @@ object ScaleQueries {
     val raw = emb.select(col("vec_id").as("cid"),
       col("embedding").cast("array<float>").as("cv"))
     def search(path: String) =
-      Similarity.ivfpqIndexedSearch(s, path, coarse, cbs, raw,
+      Similarity.ivfAdcSearch(s, path, coarse, codec, raw,
         qid = 0L, qv = qv,
         nprobe = Similarity.derivedNprobe(coarse.length), k = 3,
         rerank = 128)
@@ -2155,7 +2166,7 @@ object ScaleQueries {
   }
 
   /** RIGHT-TO-BE-FORGOTTEN on the persisted IVF-PQ CODE index — the
-    * third layout under [[graft.ops.Similarity.ivfIndexForget]]'s
+    * third layout under [[graft.ops.Similarity.ivfIndexMerge]]'s
     * layout-agnostic loop (raw vectors: `ann_index_forget`; SQ codes:
     * `ann_ivfsq_forget`; PQ codes: this), completing forget across
     * every persisted index family. The forget VECTORS are assigned
@@ -2170,21 +2181,23 @@ object ScaleQueries {
     */
   def annIvfpqForget(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (fullPath, coarse, cbs) = fullIvfpqIndex(s, dir)
+    val (fullPath, coarse, codec) = fullIvfpqIndex(s, dir)
     val path =
       graft.Memo.value(dir, "ivfpq-forget") {
         val p = graft.TempDirs.create("graft_ivfpq_forget").toString
         // filter-copy of the memoized full code index — see
         // annIndexForget; the forget loop under test is unchanged
-        Similarity.ivfIndexDerive(s, fullPath, p, lit(true))
-        Similarity.ivfIndexForget(s, p, coarse,
-          emb.filter(col("vec_id") % 13 === 5), "vec_id", "embedding")
+        Similarity.ivfIndexDerive(s, fullPath, p, lit(true),
+          ListLayout.ByList)
+        Similarity.ivfIndexMerge(s, p, coarse, codec, ListLayout.ByList,
+          emb.filter(col("vec_id") % 13 === 5), "vec_id", "embedding",
+          forget = true)
         p
       }
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<float>"))
       .head().getSeq[Float](0)
-    Similarity.ivfpqIndexedSearch(s, path, coarse, cbs,
+    Similarity.ivfAdcSearch(s, path, coarse, codec,
         emb.select(col("vec_id").as("cid"),
           col("embedding").cast("array<float>").as("cv")),
         qid = 0L, qv = qv,
@@ -2194,7 +2207,7 @@ object ScaleQueries {
   }
 
   /** BATCH (query-fleet) search over the persisted IVF-PQ code index
-    * ([[Similarity.ivfpqIndexedBatchSearch]]): every 20th vector
+    * ([[Similarity.ivfAdcBatchSearch]]): every 20th vector
     * served in ONE plan against the stored (cid, code) lists — the
     * ADC stage reads CODES from disk and never touches raw vectors;
     * only the |Q|·rerank shortlist joins the vector table. The oracle
@@ -2203,8 +2216,8 @@ object ScaleQueries {
     */
   def annIvfpqBatch(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (path, coarse, cbs) = fullIvfpqIndex(s, dir)
-    Similarity.ivfpqIndexedBatchSearch(s, path, coarse, cbs,
+    val (path, coarse, codec) = fullIvfpqIndex(s, dir)
+    Similarity.ivfAdcBatchSearch(s, path, coarse, codec,
         queries = emb.filter(col("vec_id") % 20 === 0)
           .select(col("vec_id").as("qid"),
             col("embedding").cast("array<float>").as("qv")),
@@ -2232,20 +2245,20 @@ object ScaleQueries {
     * anywhere in its lifecycle, so build AND search replay fully.
     */
   private def fullIvfsqIndex(s: SparkSession, dir: String)
-      : (String, Array[(Long, Seq[Float])],
-         (Array[Double], Array[Double])) =
+      : (String, Array[(Long, Seq[Float])], ListCodec) =
     graft.Memo.value(dir, "ivfsq-index") {
       val emb = t(s, dir, "embeddings")
       val coarse = Similarity.sampledCodebook(emb, "vec_id", "embedding",
         Similarity.sqrtStride(emb.count()))
       val stats = sqStatsMemo(s, dir)
       val p = graft.TempDirs.create("graft_ivfsq_index").toString
-      Similarity.ivfsqIndexWrite(emb, "vec_id", "embedding", p, coarse,
-        stats._1, stats._2)
-      (p, coarse, stats)
+      val codec = ListCodec.Sq(stats._1, stats._2)
+      Similarity.ivfIndexWrite(emb, "vec_id", "embedding", p, coarse, codec,
+        ListLayout.ByList)
+      (p, coarse, codec)
     }
 
-  /** [[Similarity.ivfsqIndexWrite]] + [[Similarity.ivfsqIndexedSearch]]
+  /** [[Similarity.ivfIndexWrite]] + [[Similarity.ivfAdcSearch]]
     * driven end to end — the FULLY-REPLAYABLE persisted ANN index:
     * unlike `ann_ivfpq_indexed` (whose oracle must unroll 16 Lloyd
     * trainings to reproduce the codes), every stage here — per-dim
@@ -2256,11 +2269,11 @@ object ScaleQueries {
     */
   def annIvfsqIndexed(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (path, coarse, (mns, mxs)) = fullIvfsqIndex(s, dir)
+    val (path, coarse, codec) = fullIvfsqIndex(s, dir)
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<float>"))
       .head().getSeq[Float](0)
-    Similarity.ivfsqIndexedSearch(s, path, coarse, mns, mxs,
+    Similarity.ivfAdcSearch(s, path, coarse, codec,
         emb.select(col("vec_id").as("cid"),
           col("embedding").cast("array<float>").as("cv")),
         qid = 0L, qv = qv,
@@ -2272,7 +2285,7 @@ object ScaleQueries {
   /** INCREMENTAL IVF-SQ index maintenance driven end to end — the
     * third member of the maintenance family, and the one whose
     * maintained lifecycle replays FULLY
-    * ([[Similarity.ivfsqIndexAppendDelta]]): the base SQ-code index
+    * ([[Similarity.ivfIndexMerge]]): the base SQ-code index
     * holds 6/7 of the corpus (derived by restriction from the
     * memoized full index — content-identical to a from-raw build),
     * the remaining 1/7 — including
@@ -2289,16 +2302,18 @@ object ScaleQueries {
     */
   def annIvfsqDelta(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (fullPath, coarse, (mns, mxs)) = fullIvfsqIndex(s, dir)
+    val (fullPath, coarse, codec) = fullIvfsqIndex(s, dir)
     val deltaPath =
       graft.Memo.value(dir, "ivfsq-delta") {
         val p = graft.TempDirs.create("graft_ivfsq_delta").toString
         // base = filter-copy of the memoized full SQ code index
         // (codes are fit-once affine arithmetic — a 6/7 re-encode
         // reproduces these rows bit-identically)
-        Similarity.ivfIndexDerive(s, fullPath, p, col("cid") % 7 =!= 0)
-        Similarity.ivfsqIndexAppendDelta(s, p, coarse, mns, mxs,
-          emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding")
+        Similarity.ivfIndexDerive(s, fullPath, p, col("cid") % 7 =!= 0,
+          ListLayout.ByList)
+        Similarity.ivfIndexMerge(s, p, coarse, codec, ListLayout.ByList,
+          emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding",
+          forget = false)
         p
       }
     val qv = emb.filter(col("vec_id") === 0)
@@ -2307,7 +2322,7 @@ object ScaleQueries {
     val raw = emb.select(col("vec_id").as("cid"),
       col("embedding").cast("array<float>").as("cv"))
     def search(path: String) =
-      Similarity.ivfsqIndexedSearch(s, path, coarse, mns, mxs, raw,
+      Similarity.ivfAdcSearch(s, path, coarse, codec, raw,
         qid = 0L, qv = qv,
         nprobe = Similarity.derivedNprobe(coarse.length), k = 3,
         rerank = 32)
@@ -2322,7 +2337,7 @@ object ScaleQueries {
   /** RIGHT-TO-BE-FORGOTTEN on the persisted IVF-SQ CODE index —
     * [[annIndexForget]]'s twin on the code-table layout, and the one
     * whose forgotten lifecycle replays FULLY (no trained state):
-    * [[graft.ops.Similarity.ivfIndexForget]] is layout-agnostic (it
+    * [[graft.ops.Similarity.ivfIndexMerge]] is layout-agnostic (it
     * assigns the forget VECTORS under the shared quantizer and
     * anti-joins the touched lists by cid, carrying whatever columns
     * the list rows hold — here the SQ8 codes), so the same
@@ -2335,21 +2350,23 @@ object ScaleQueries {
     */
   def annIvfsqForget(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (fullPath, coarse, (mns, mxs)) = fullIvfsqIndex(s, dir)
+    val (fullPath, coarse, codec) = fullIvfsqIndex(s, dir)
     val path =
       graft.Memo.value(dir, "ivfsq-forget") {
         val p = graft.TempDirs.create("graft_ivfsq_forget").toString
         // filter-copy of the memoized full code index — see
         // annIndexForget; the forget loop under test is unchanged
-        Similarity.ivfIndexDerive(s, fullPath, p, lit(true))
-        Similarity.ivfIndexForget(s, p, coarse,
-          emb.filter(col("vec_id") % 13 === 5), "vec_id", "embedding")
+        Similarity.ivfIndexDerive(s, fullPath, p, lit(true),
+          ListLayout.ByList)
+        Similarity.ivfIndexMerge(s, p, coarse, codec, ListLayout.ByList,
+          emb.filter(col("vec_id") % 13 === 5), "vec_id", "embedding",
+          forget = true)
         p
       }
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<float>"))
       .head().getSeq[Float](0)
-    Similarity.ivfsqIndexedSearch(s, path, coarse, mns, mxs,
+    Similarity.ivfAdcSearch(s, path, coarse, codec,
         emb.select(col("vec_id").as("cid"),
           col("embedding").cast("array<float>").as("cv")),
         qid = 0L, qv = qv,
@@ -2359,7 +2376,7 @@ object ScaleQueries {
   }
 
   /** BATCH (query-fleet) search over the persisted IVF-SQ code index
-    * ([[Similarity.ivfsqIndexedBatchSearch]]): every 20th vector
+    * ([[Similarity.ivfAdcBatchSearch]]): every 20th vector
     * served in ONE plan against the stored (cid, SQ8 code) lists —
     * `ann_ivfpq_batch`'s serving mode on the FULLY-replayable index,
     * so the oracle recomputes the whole fleet's results (stats,
@@ -2368,8 +2385,8 @@ object ScaleQueries {
     */
   def annIvfsqBatch(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (path, coarse, (mns, mxs)) = fullIvfsqIndex(s, dir)
-    Similarity.ivfsqIndexedBatchSearch(s, path, coarse, mns, mxs,
+    val (path, coarse, codec) = fullIvfsqIndex(s, dir)
+    Similarity.ivfAdcBatchSearch(s, path, coarse, codec,
         queries = emb.filter(col("vec_id") % 20 === 0)
           .select(col("vec_id").as("qid"),
             col("embedding").cast("array<float>").as("qv")),

@@ -762,8 +762,9 @@ object ScaleProbe {
         graft.TempDirs.using(s"graft_labels_$nLabels") { dirPath =>
           val dir = dirPath.toString
           val tBuild = timeOnce {
-            Similarity.ivfIndexWriteLabeled(relabeled, "vec_id", "label",
-              "embedding", dir, cb); 0L
+            Similarity.ivfIndexWrite(graft.ops.Dedup.spread(relabeled),
+              "vec_id", "embedding", dir, cb, Similarity.ListCodec.Flat,
+              Similarity.ListLayout.ByLabelGroup); 0L
           }
           val files = leafFiles(dir)
           val fleet = relabeled.filter(col("vec_id") % 20 === 0)

@@ -304,6 +304,18 @@ class AdvancedSpec extends AnyFunSuite {
     assert(owners("src/test") == Seq("AdvancedSpec.scala"), owners("src/test"))
   }
 
+  test("Similarity.scala holds exactly one partitionOverwriteMode publish") {
+    // every persisted list index (flat, PQ, SQ; by list or by label
+    // group) merges through one stage → publish writer: a second
+    // dynamic overwrite is a copied maintenance path whose layout and
+    // crash contract will drift
+    val publishes = sourcesUnder("src/main/scala/graft/ops").collect {
+      case ("Similarity.scala", code) =>
+        "partitionOverwriteMode".r.findAllIn(code).size
+    }
+    assert(publishes == Seq(1), publishes)
+  }
+
   test("no source lists files through Hadoop's located-status listing") {
     // FileSystem.listFiles(path, recursive) and listLocatedStatus build
     // a LocatedFileStatus per file, which reads its owner and mode: one

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Similarity
+import graft.ops.Similarity.ListCodec.{Flat, Pq, Sq}
+import graft.ops.Similarity.ListLayout.{ByLabelGroup, ByList}
 
-/** [[graft.ops.Similarity.ivfIndexAppendDelta]] — the storage-layer
+/** [[graft.ops.Similarity.ivfIndexMerge]] — the storage-layer
   * properties the driver query (`ann_ivf_delta`, set-equality of
   * served search results) cannot see: untouched lists' FILES are not
   * rewritten (the compaction is local to delta lists), and the merged
@@ -38,17 +40,17 @@ class IvfIndexSpec extends AnyFunSuite {
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
     // delta = the ids ≡ 1 mod 4 → ONLY list 1 is touched
     val deltaIds = all.filter(_ % 4 == 1)
-    Similarity.ivfIndexWriteWithCodebook(
-      emb(all.filterNot(_ % 4 == 1)), "vec_id", "embedding", base, codebook)
-    Similarity.ivfIndexWriteWithCodebook(
-      emb(all), "vec_id", "embedding", full, codebook)
+    Similarity.ivfIndexWrite(emb(all.filterNot(_ % 4 == 1)), "vec_id",
+      "embedding", base, codebook, Flat, ByList)
+    Similarity.ivfIndexWrite(
+      emb(all), "vec_id", "embedding", full, codebook, Flat, ByList)
     def files(dir: String): Map[String, Set[String]] =
       new java.io.File(dir).listFiles().filter(_.isDirectory)
         .map(d => d.getName -> d.listFiles().map(_.getName)
           .filter(_.endsWith(".parquet")).toSet).toMap
     val before = files(base)
-    Similarity.ivfIndexAppendDelta(spark, base, codebook,
-      emb(deltaIds), "vec_id", "embedding")
+    Similarity.ivfIndexMerge(spark, base, codebook, Flat, ByList,
+      emb(deltaIds), "vec_id", "embedding", forget = false)
     val after = files(base)
     // untouched lists: identical file sets (not rewritten)
     for ((part, fs) <- before if part != "centroid_id=1")
@@ -67,14 +69,14 @@ class IvfIndexSpec extends AnyFunSuite {
       "maintained index content must equal the rebuild")
     // a freshly appended vector is served by the maintained index
     val got = Similarity.ivfIndexedSearch(spark, base, codebook,
-        qid = -1L, qv = vec(1, 0f), nprobe = 1, k = 3)
+        qid = -1L, qlabel = None, qv = vec(1, 0f), nprobe = 1, k = 3)
       .select(col("cid")).collect().map(_.getLong(0)).toSet
     assert(got.exists(_ % 4 == 1) && got.subsetOf(all.toSet),
       s"expected list-1 members (incl. appended), got $got")
     // an EMPTY delta is a byte-level no-op — no list rewritten
     val preEmpty = files(base)
-    Similarity.ivfIndexAppendDelta(spark, base, codebook,
-      emb(Seq.empty), "vec_id", "embedding")
+    Similarity.ivfIndexMerge(spark, base, codebook, Flat, ByList,
+      emb(Seq.empty), "vec_id", "embedding", forget = false)
     assert(files(base) == preEmpty,
       "empty delta must not rewrite any list")
     // the successful append cleaned its default staging dir
@@ -102,21 +104,22 @@ class IvfIndexSpec extends AnyFunSuite {
     // delta touches list 1 (absent in base: a NEW partition) and
     // list 2 (existing: a rewritten partition) — both commit shapes
     val deltaIds = Seq(41L, 42L, 45L)
-    Similarity.ivfIndexWriteWithCodebook(
-      emb(all.filterNot(_ % 4 == 1)), "vec_id", "embedding", base, codebook)
-    Similarity.ivfIndexWriteWithCodebook(
+    Similarity.ivfIndexWrite(emb(all.filterNot(_ % 4 == 1)), "vec_id",
+      "embedding", base, codebook, Flat, ByList)
+    Similarity.ivfIndexWrite(
       emb(all.filterNot(_ % 4 == 1) ++ deltaIds), "vec_id", "embedding",
-      full, codebook)
+      full, codebook, Flat, ByList)
     val oldContent = content(base)
     // CRASH WINDOW 1: stage completes, publish never runs — the index
     // must be bit-identical to the old state (stage only READS it)
-    val touched = Similarity.ivfIndexStageDelta(spark, base, staging,
-      codebook, emb(deltaIds), "vec_id", "embedding")
-    assert(touched.toSet == Set(1L, 2L), s"touched=${touched.toSet}")
+    val touched = Similarity.ivfIndexStage(spark, base, staging,
+      codebook, Flat, ByList, emb(deltaIds), "vec_id", "embedding",
+      forget = false)
+    assert(touched.toSet == Set(Seq(1L), Seq(2L)), s"touched=${touched.toSet}")
     assert(content(base) == oldContent,
       "staging must not modify the index")
     // recovery from window 1 = run publish
-    Similarity.ivfIndexPublishStaged(spark, base, staging)
+    Similarity.ivfIndexPublish(spark, base, staging, ByList, touched)
     assert(content(base) == content(full),
       "published index must equal the rebuild")
     // CRASH WINDOW 2: Spark's dynamic-overwrite commit deletes a
@@ -126,11 +129,11 @@ class IvfIndexSpec extends AnyFunSuite {
       .deleteDirectory(new java.io.File(s"$base/centroid_id=2"))
     assert(content(base) != content(full), "simulated crash state")
     // recovery = re-run publish from the surviving staged copy
-    Similarity.ivfIndexPublishStaged(spark, base, staging)
+    Similarity.ivfIndexPublish(spark, base, staging, ByList, touched)
     assert(content(base) == content(full),
       "re-running publish must restore the merged state")
     // idempotence: publishing a third time changes nothing
-    Similarity.ivfIndexPublishStaged(spark, base, staging)
+    Similarity.ivfIndexPublish(spark, base, staging, ByList, touched)
     assert(content(base) == content(full), "publish must be idempotent")
   }
 
@@ -146,15 +149,15 @@ class IvfIndexSpec extends AnyFunSuite {
     val pqCbs: Array[Array[Array[Float]]] = Array(
       Array(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f)),
       Array(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f)))
-    Similarity.ivfpqIndexWrite(emb(all), "vec_id", "embedding", dir,
-      coarse, pqCbs)
+    Similarity.ivfIndexWrite(emb(all), "vec_id", "embedding", dir,
+      coarse, Pq(pqCbs), ByList)
     // the persisted schema carries codes, never vectors
     val fields = spark.read.parquet(dir).schema.fieldNames.toSet
     assert(fields == Set("cid", "code", "centroid_id"),
       s"index must store (cid, code) partitioned by list, got $fields")
     // ADC stage plan: probed lists land in PartitionFilters (storage-
     // layer pruning) and the ONLY scan is the code index
-    val adc = Similarity.ivfpqAdcFrame(spark, dir, pqCbs,
+    val adc = Similarity.ivfAdcFrame(spark, dir, Pq(pqCbs),
       qid = -1L, qv = vec(1, 0f), probes = Seq(1L), rerank = 8)
     val plan = adc.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -168,7 +171,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // re-rank exactly (list 1 = ids ≡ 1 mod 4)
     val raw = emb(all).select(col("vec_id").as("cid"),
       col("embedding").cast("array<float>").as("cv"))
-    val got = Similarity.ivfpqIndexedSearch(spark, dir, coarse, pqCbs,
+    val got = Similarity.ivfAdcSearch(spark, dir, coarse, Pq(pqCbs),
         raw, qid = -1L, qv = vec(1, 0f), nprobe = 1, k = 3, rerank = 8)
       .collect()
     assert(got.length == 3)
@@ -191,17 +194,17 @@ class IvfIndexSpec extends AnyFunSuite {
       Array(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f)),
       Array(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f)))
     val deltaIds = all.filter(_ % 4 == 1)
-    Similarity.ivfpqIndexWrite(emb(all.filterNot(_ % 4 == 1)),
-      "vec_id", "embedding", base, coarse, pqCbs)
-    Similarity.ivfpqIndexWrite(emb(all), "vec_id", "embedding", full,
-      coarse, pqCbs)
+    Similarity.ivfIndexWrite(emb(all.filterNot(_ % 4 == 1)),
+      "vec_id", "embedding", base, coarse, Pq(pqCbs), ByList)
+    Similarity.ivfIndexWrite(emb(all), "vec_id", "embedding", full,
+      coarse, Pq(pqCbs), ByList)
     def files(dir: String): Map[String, Set[String]] =
       new java.io.File(dir).listFiles().filter(_.isDirectory)
         .map(d => d.getName -> d.listFiles().map(_.getName)
           .filter(_.endsWith(".parquet")).toSet).toMap
     val before = files(base)
-    Similarity.ivfpqIndexAppendDelta(spark, base, coarse, pqCbs,
-      emb(deltaIds), "vec_id", "embedding")
+    Similarity.ivfIndexMerge(spark, base, coarse, Pq(pqCbs), ByList,
+      emb(deltaIds), "vec_id", "embedding", forget = false)
     val after = files(base)
     for ((part, fs) <- before if part != "centroid_id=1")
       assert(after(part) == fs,
@@ -219,8 +222,8 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(!new java.io.File(base.stripSuffix("/") + ".staging").exists(),
       "staging dir must be deleted after a successful publish")
     val preEmpty = files(base)
-    Similarity.ivfpqIndexAppendDelta(spark, base, coarse, pqCbs,
-      emb(Seq.empty), "vec_id", "embedding")
+    Similarity.ivfIndexMerge(spark, base, coarse, Pq(pqCbs), ByList,
+      emb(Seq.empty), "vec_id", "embedding", forget = false)
     assert(files(base) == preEmpty,
       "empty delta must not rewrite any code list")
   }
@@ -238,17 +241,17 @@ class IvfIndexSpec extends AnyFunSuite {
     // the contract the scaladoc documents
     val (mns, mxs) = Similarity.sqStats(emb(all), "embedding")
     val deltaIds = all.filter(_ % 4 == 1)
-    Similarity.ivfsqIndexWrite(emb(all.filterNot(_ % 4 == 1)),
-      "vec_id", "embedding", base, coarse, mns, mxs)
-    Similarity.ivfsqIndexWrite(emb(all), "vec_id", "embedding", full,
-      coarse, mns, mxs)
+    Similarity.ivfIndexWrite(emb(all.filterNot(_ % 4 == 1)),
+      "vec_id", "embedding", base, coarse, Sq(mns, mxs), ByList)
+    Similarity.ivfIndexWrite(emb(all), "vec_id", "embedding", full,
+      coarse, Sq(mns, mxs), ByList)
     def files(dir: String): Map[String, Set[String]] =
       new java.io.File(dir).listFiles().filter(_.isDirectory)
         .map(d => d.getName -> d.listFiles().map(_.getName)
           .filter(_.endsWith(".parquet")).toSet).toMap
     val before = files(base)
-    Similarity.ivfsqIndexAppendDelta(spark, base, coarse, mns, mxs,
-      emb(deltaIds), "vec_id", "embedding")
+    Similarity.ivfIndexMerge(spark, base, coarse, Sq(mns, mxs), ByList,
+      emb(deltaIds), "vec_id", "embedding", forget = false)
     val after = files(base)
     for ((part, fs) <- before if part != "centroid_id=1")
       assert(after(part) == fs,
@@ -266,10 +269,59 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(!new java.io.File(base.stripSuffix("/") + ".staging").exists(),
       "staging dir must be deleted after a successful publish")
     val preEmpty = files(base)
-    Similarity.ivfsqIndexAppendDelta(spark, base, coarse, mns, mxs,
-      emb(Seq.empty), "vec_id", "embedding")
+    Similarity.ivfIndexMerge(spark, base, coarse, Sq(mns, mxs), ByList,
+      emb(Seq.empty), "vec_id", "embedding", forget = false)
     assert(files(base) == preEmpty,
       "empty delta must not rewrite any SQ list")
+  }
+
+  test("a zero-norm vector in a delta is skipped under every codec: " +
+      "flat, PQ and SQ content equals a rebuild from the non-zero rows " +
+      "(the labeled delta is the control)") {
+    import spark.implicits._
+    val all = (0L until 40L)
+    val coarse = Array(0L, 1L, 2L, 3L)
+      .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
+    val pqCbs: Array[Array[Array[Float]]] = Array(
+      Array(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f)),
+      Array(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f)))
+    val (mns, mxs) = Similarity.sqStats(emb(all), "embedding")
+    // NaN cosine to every centroid → no list: the vector is no index
+    // resident, and must not reach the delta's touched-list collect
+    val zero = Seq((999L, Seq(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    val delta = emb(all.filter(_ % 4 == 1)).unionByName(zero)
+    def content(dir: String, stored: String): Set[(Long, Long, String)] =
+      spark.read.parquet(dir)
+        .select(col("cid"), col("centroid_id").cast("long"),
+          col(stored).cast("string"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+        .toSet
+    for ((codec, stored) <- Seq(Flat -> "cv", Pq(pqCbs) -> "code",
+        Sq(mns, mxs) -> "code")) {
+      val base = TempDirs.create("ivf_zero_base").toString
+      val full = TempDirs.create("ivf_zero_full").toString
+      Similarity.ivfIndexWrite(emb(all.filterNot(_ % 4 == 1)), "vec_id",
+        "embedding", base, coarse, codec, ByList)
+      Similarity.ivfIndexWrite(emb(all), "vec_id", "embedding", full,
+        coarse, codec, ByList)
+      Similarity.ivfIndexMerge(spark, base, coarse, codec, ByList, delta,
+        "vec_id", "embedding", forget = false)
+      assert(content(base, stored) == content(full, stored),
+        s"$codec: maintained index must equal the non-zero rebuild")
+    }
+    // control: the labeled delta already skipped the vector
+    def labeled(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("label", col("vec_id") % 2)
+    val base = TempDirs.create("ivf_zero_lbase").toString
+    val full = TempDirs.create("ivf_zero_lfull").toString
+    Similarity.ivfIndexWrite(labeled(emb(all.filterNot(_ % 4 == 1))),
+      "vec_id", "embedding", base, coarse, Flat, ByLabelGroup)
+    Similarity.ivfIndexWrite(labeled(emb(all)), "vec_id", "embedding", full,
+      coarse, Flat, ByLabelGroup)
+    Similarity.ivfIndexMerge(spark, base, coarse, Flat, ByLabelGroup,
+      labeled(delta), "vec_id", "embedding", forget = false)
+    assert(content(base, "cv") == content(full, "cv"),
+      "labeled control: maintained index must equal the non-zero rebuild")
   }
 
   test("forget: content equals rebuild-from-survivors; untouched " +
@@ -280,8 +332,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val all = (0L until 40L)
     val codebook = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
-    Similarity.ivfIndexWriteWithCodebook(
-      emb(all), "vec_id", "embedding", base, codebook)
+    Similarity.ivfIndexWrite(
+      emb(all), "vec_id", "embedding", base, codebook, Flat, ByList)
     def files(dir: String): Map[String, Set[String]] =
       new java.io.File(dir).listFiles().filter(_.isDirectory)
         .map(d => d.getName -> d.listFiles().map(_.getName)
@@ -290,11 +342,11 @@ class IvfIndexSpec extends AnyFunSuite {
     // forget ALL of list 2 plus half of list 1: list 2's directory
     // must vanish, list 1 is rewritten, lists 0 and 3 untouched
     val forgetIds = all.filter(i => i % 4 == 2 || (i % 4 == 1 && i < 20))
-    Similarity.ivfIndexForget(spark, base, codebook,
-      emb(forgetIds), "vec_id", "embedding")
-    Similarity.ivfIndexWriteWithCodebook(
+    Similarity.ivfIndexMerge(spark, base, codebook, Flat, ByList,
+      emb(forgetIds), "vec_id", "embedding", forget = true)
+    Similarity.ivfIndexWrite(
       emb(all.filterNot(forgetIds.contains)), "vec_id", "embedding",
-      rebuilt, codebook)
+      rebuilt, codebook, Flat, ByList)
     val after = files(base)
     assert(!after.contains("centroid_id=2"),
       "fully-forgotten list's directory must be removed")
@@ -307,7 +359,7 @@ class IvfIndexSpec extends AnyFunSuite {
       "forgotten index content must equal a rebuild from survivors")
     // no forgotten id is served, survivors still are
     val got = Similarity.ivfIndexedSearch(spark, base, codebook,
-        qid = -1L, qv = vec(1, 0f), nprobe = 4, k = 20)
+        qid = -1L, qlabel = None, qv = vec(1, 0f), nprobe = 4, k = 20)
       .select(col("cid")).collect().map(_.getLong(0)).toSet
     assert(got.intersect(forgetIds.toSet).isEmpty,
       s"forgotten ids served: ${got.intersect(forgetIds.toSet)}")
@@ -315,8 +367,8 @@ class IvfIndexSpec extends AnyFunSuite {
     // recovery contract: re-running the same forget converges (the
     // touched lists are re-staged from already-clean survivors)
     val once = content(base)
-    Similarity.ivfIndexForget(spark, base, codebook,
-      emb(forgetIds), "vec_id", "embedding")
+    Similarity.ivfIndexMerge(spark, base, codebook, Flat, ByList,
+      emb(forgetIds), "vec_id", "embedding", forget = true)
     assert(content(base) == once, "forget must be idempotent")
     assert(!new java.io.File(base.stripSuffix("/") + ".staging").exists(),
       "staging dir must be deleted after a successful publish")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Similarity
+import graft.ops.Similarity.ListCodec.Flat
+import graft.ops.Similarity.ListLayout.ByList
 
 /** Round-12 closers: the derived-index filter-copy, the forget loop's
   * distributed anti-join + zero-norm guard, the LSH-prefiltered
@@ -41,12 +43,12 @@ class Round12Spec extends AnyFunSuite {
     val all = (0L until 40L)
     val codebook = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
-    Similarity.ivfIndexWriteWithCodebook(
-      emb(all), "vec_id", "embedding", src, codebook)
-    Similarity.ivfIndexDerive(spark, src, dst, col("cid") % 7 =!= 0)
-    Similarity.ivfIndexWriteWithCodebook(
+    Similarity.ivfIndexWrite(
+      emb(all), "vec_id", "embedding", src, codebook, Flat, ByList)
+    Similarity.ivfIndexDerive(spark, src, dst, col("cid") % 7 =!= 0, ByList)
+    Similarity.ivfIndexWrite(
       emb(all.filter(_ % 7 != 0)), "vec_id", "embedding", rebuilt,
-      codebook)
+      codebook, Flat, ByList)
     assert(content(dst) == content(rebuilt),
       "derived subset must equal a from-raw build of the same subset")
     // layout: still partitioned by list id (the pruned-read contract)
@@ -56,7 +58,7 @@ class Round12Spec extends AnyFunSuite {
       s"derived index lost the by-list layout: $parts")
     // a keep-everything derive is a faithful copy
     val copy = TempDirs.create("ivf_dcopy").toString
-    Similarity.ivfIndexDerive(spark, src, copy, lit(true))
+    Similarity.ivfIndexDerive(spark, src, copy, lit(true), ByList)
     assert(content(copy) == content(src))
   }
 
@@ -68,8 +70,8 @@ class Round12Spec extends AnyFunSuite {
     val all = (0L until 40L)
     val codebook = Array(0L, 1L, 2L, 3L)
       .map(i => (i, vec((i % 4).toInt, 0.01f * (i % 3))))
-    Similarity.ivfIndexWriteWithCodebook(
-      emb(all), "vec_id", "embedding", base, codebook)
+    Similarity.ivfIndexWrite(
+      emb(all), "vec_id", "embedding", base, codebook, Flat, ByList)
     // ~25% of the corpus — the scale the inlined In-list was a driver
     // hazard for — PLUS a zero-norm vector (NaN cosine to every
     // centroid → null assignment; it lives in no list, so it must be
@@ -78,11 +80,11 @@ class Round12Spec extends AnyFunSuite {
     val forget = emb(all.filter(_ % 4 == 1))
       .unionByName(Seq((999L, Seq(0f, 0f, 0f, 0f)))
         .toDF("vec_id", "embedding"))
-    Similarity.ivfIndexForget(spark, base, codebook,
-      forget, "vec_id", "embedding")
-    Similarity.ivfIndexWriteWithCodebook(
+    Similarity.ivfIndexMerge(spark, base, codebook, Flat, ByList,
+      forget, "vec_id", "embedding", forget = true)
+    Similarity.ivfIndexWrite(
       emb(all.filter(_ % 4 != 1)), "vec_id", "embedding", rebuilt,
-      codebook)
+      codebook, Flat, ByList)
     assert(content(base) == content(rebuilt),
       "forgotten index must equal a rebuild from survivors")
   }

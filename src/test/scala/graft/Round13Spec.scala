@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Similarity
+import graft.ops.Similarity.ListCodec.Flat
+import graft.ops.Similarity.ListLayout.ByLabelGroup
 
 /** Round-13 contracts the driver queries cannot see directly:
   * restart recovery for the stateful 3-batch stream shapes (the cell
@@ -198,20 +200,20 @@ class Round13Spec extends AnyFunSuite {
       "partitions' directories removed; staging cleaned") {
     val all = (0L until 40L)
     val base = TempDirs.create("lab_forget").toString
-    Similarity.ivfIndexWriteLabeled(lemb(all), "vec_id", "label",
-      "embedding", base, lcodebook)
+    Similarity.ivfIndexWrite(lemb(all), "vec_id", "embedding", base,
+      lcodebook, Flat, ByLabelGroup)
     // partial forget first: ids ≡ 1 mod 8 live in list 1 (label 1,
     // group rank(1) % 2 = 1) — only partition (1, 1) is touched
     val before = lfiles(base)
-    Similarity.ivfIndexForgetLabeled(spark, base, lcodebook,
-      lemb(all.filter(_ % 8 == 1)), "vec_id", "label", "embedding")
+    Similarity.ivfIndexMerge(spark, base, lcodebook, Flat, ByLabelGroup,
+      lemb(all.filter(_ % 8 == 1)), "vec_id", "embedding", forget = true)
     val after = lfiles(base)
     for ((part, fs) <- before if !part.contains("label=1/list_grp=1"))
       assert(after(part) == fs, s"untouched partition $part rewritten")
     val survivors1 = all.filterNot(_ % 8 == 1)
     val rebuilt1 = TempDirs.create("lab_rebuild1").toString
-    Similarity.ivfIndexWriteLabeled(lemb(survivors1), "vec_id", "label",
-      "embedding", rebuilt1, lcodebook)
+    Similarity.ivfIndexWrite(lemb(survivors1), "vec_id", "embedding",
+      rebuilt1, lcodebook, Flat, ByLabelGroup)
     assert(lcontent(base) == lcontent(rebuilt1),
       "forget content must equal a rebuild from survivors")
     assertRowGroupSorted(base)
@@ -219,21 +221,22 @@ class Round13Spec extends AnyFunSuite {
       "staging dir must be deleted after a successful publish")
     // total forget of every odd id empties BOTH label-1 partitions:
     // their directories must be gone, label-0 untouched
-    Similarity.ivfIndexForgetLabeled(spark, base, lcodebook,
-      lemb(survivors1.filter(_ % 2 == 1)), "vec_id", "label", "embedding")
+    Similarity.ivfIndexMerge(spark, base, lcodebook, Flat, ByLabelGroup,
+      lemb(survivors1.filter(_ % 2 == 1)), "vec_id", "embedding",
+      forget = true)
     val dirs = new java.io.File(base).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(dirs == Set("label=0"),
       s"emptied label-1 partitions must be removed, found $dirs")
     val rebuilt0 = TempDirs.create("lab_rebuild0").toString
-    Similarity.ivfIndexWriteLabeled(lemb(all.filter(_ % 2 == 0)),
-      "vec_id", "label", "embedding", rebuilt0, lcodebook)
+    Similarity.ivfIndexWrite(lemb(all.filter(_ % 2 == 0)),
+      "vec_id", "embedding", rebuilt0, lcodebook, Flat, ByLabelGroup)
     assert(lcontent(base) == lcontent(rebuilt0),
       "post-forget content must equal the even-id rebuild")
     // forgetting already-absent ids is a no-op on files
     val pre = lfiles(base)
-    Similarity.ivfIndexForgetLabeled(spark, base, lcodebook,
-      lemb(Seq(1L)), "vec_id", "label", "embedding")
+    Similarity.ivfIndexMerge(spark, base, lcodebook, Flat, ByLabelGroup,
+      lemb(Seq(1L)), "vec_id", "embedding", forget = true)
     // the touched partition is rewritten (same content) — content is
     // the contract, not file identity, for a non-empty touched part
     assert(lcontent(base) == lcontent(rebuilt0),
@@ -266,17 +269,17 @@ class Round13Spec extends AnyFunSuite {
     // touched (list 1, rank 1 % 2 groups)
     val deltaIds = all.filter(_ % 8 == 1)
     val base = TempDirs.create("lab_delta_base").toString
-    Similarity.ivfIndexWriteLabeled(lemb(all.filterNot(_ % 8 == 1)),
-      "vec_id", "label", "embedding", base, lcodebook)
+    Similarity.ivfIndexWrite(lemb(all.filterNot(_ % 8 == 1)),
+      "vec_id", "embedding", base, lcodebook, Flat, ByLabelGroup)
     val before = lfiles(base)
-    Similarity.ivfIndexAppendDeltaLabeled(spark, base, lcodebook,
-      lemb(deltaIds), "vec_id", "label", "embedding")
+    Similarity.ivfIndexMerge(spark, base, lcodebook, Flat, ByLabelGroup,
+      lemb(deltaIds), "vec_id", "embedding", forget = false)
     val after = lfiles(base)
     for ((part, fs) <- before if !part.contains("label=1/list_grp=1"))
       assert(after(part) == fs, s"untouched partition $part rewritten")
     val full = TempDirs.create("lab_delta_full").toString
-    Similarity.ivfIndexWriteLabeled(lemb(all), "vec_id", "label",
-      "embedding", full, lcodebook)
+    Similarity.ivfIndexWrite(lemb(all), "vec_id", "embedding", full,
+      lcodebook, Flat, ByLabelGroup)
     assert(lcontent(base) == lcontent(full),
       "maintained labeled index content must equal the rebuild")
     assertRowGroupSorted(base)
@@ -284,8 +287,8 @@ class Round13Spec extends AnyFunSuite {
       "staging dir must be deleted after a successful publish")
     // empty delta: bit-level no-op
     val pre = lfiles(base)
-    Similarity.ivfIndexAppendDeltaLabeled(spark, base, lcodebook,
-      lemb(Seq.empty), "vec_id", "label", "embedding")
+    Similarity.ivfIndexMerge(spark, base, lcodebook, Flat, ByLabelGroup,
+      lemb(Seq.empty), "vec_id", "embedding", forget = false)
     assert(lfiles(base) == pre, "empty delta must not rewrite files")
   }
 
@@ -293,15 +296,15 @@ class Round13Spec extends AnyFunSuite {
       "complement and keeps the (label, list_grp) layout") {
     val all = (0L until 40L)
     val base = TempDirs.create("lab_derive_base").toString
-    Similarity.ivfIndexWriteLabeled(lemb(all), "vec_id", "label",
-      "embedding", base, lcodebook)
+    Similarity.ivfIndexWrite(lemb(all), "vec_id", "embedding", base,
+      lcodebook, Flat, ByLabelGroup)
     val derived = TempDirs.create("lab_derived").toString
-    Similarity.ivfIndexDeriveLabeled(spark, base, derived,
-      col("cid") % 13 =!= 5)
+    Similarity.ivfIndexDerive(spark, base, derived,
+      col("cid") % 13 =!= 5, ByLabelGroup)
     val forgotten = TempDirs.create("lab_forgot").toString
-    Similarity.ivfIndexDeriveLabeled(spark, base, forgotten, lit(true))
-    Similarity.ivfIndexForgetLabeled(spark, forgotten, lcodebook,
-      lemb(all.filter(_ % 13 == 5)), "vec_id", "label", "embedding")
+    Similarity.ivfIndexDerive(spark, base, forgotten, lit(true), ByLabelGroup)
+    Similarity.ivfIndexMerge(spark, forgotten, lcodebook, Flat, ByLabelGroup,
+      lemb(all.filter(_ % 13 == 5)), "vec_id", "embedding", forget = true)
     assert(lcontent(derived) == lcontent(forgotten),
       "derive(keep) must equal forget(complement)")
     assert(lfiles(derived).keySet.forall(_.contains("list_grp=")),
@@ -329,8 +332,8 @@ class Round13Spec extends AnyFunSuite {
     val codebook = Similarity.sampledCodebook(
       emb, "vec_id", "embedding", stride)
     val dir = TempDirs.create("lab_cap").toString
-    Similarity.ivfIndexWriteLabeled(emb, "vec_id", "label", "embedding",
-      dir, codebook)
+    Similarity.ivfIndexWrite(emb, "vec_id", "embedding",
+      dir, codebook, Flat, ByLabelGroup)
     val labels = new java.io.File(dir).listFiles().filter(_.isDirectory)
     val cap = Similarity.listGroupCount(codebook.length)
     labels.foreach { l =>
